@@ -9,7 +9,7 @@ import graft.operators.LakeTable
 
 /** Manual lake-layer scale probes (not part of the driver contract).
   *
-  * 1. N-WRITER CONTENTION: N concurrent `mergeWithRetry` writers upsert
+  * 1. N-WRITER CONTENTION: N concurrent `merge` writers upsert
   *    disjoint key ranges of one table. Prints wall time, the landed
   *    version range, and verifies (a) versions are dense (every writer's
   *    commit landed exactly once), (b) the final state equals the
@@ -48,7 +48,7 @@ object LakeProbe {
       val th = new Thread { // one JVM thread per writer, shared session
         var stats: LakeTable.MergeStats = null
         override def run(): Unit =
-          stats = LakeTable.mergeWithRetry(spark, root, batch(i), Seq("k"), "p",
+          stats = LakeTable.merge(spark, root, batch(i), Seq("k"), "p",
             maxRetries = nWriters * 2)
       }
       th.start(); th
@@ -67,7 +67,7 @@ object LakeProbe {
     require(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "final state != sequential application")
     val probed = LakeTable.snapshot(spark, root).entries.size
-    println(f"[lake] $nWriters concurrent mergeWithRetry writers: $wall%.1f s wall, " +
+    println(f"[lake] $nWriters concurrent merge writers: $wall%.1f s wall, " +
       s"versions 2..${s1.version} dense, state == sequential application, $probed files live")
 
     // ---- 2. manifest scale -----------------------------------------
@@ -204,14 +204,14 @@ object LakeProbe {
     // the writer's repartition(PartDirCol) collapses each partition
     // value to one file, so file count == partition count by design
     val (_, tMorInit) = time(
-      LakeTable.init(spark, morRoot, mdf, "k", partitionFn = "bucket:10240"))
+      LakeTable.init(spark, morRoot, mdf, "k", partitionFn = "bucket:10240", deleteMode = "mor"))
     val nMorFiles = LakeTable.snapshot(spark, morRoot).entries.size
     require(nMorFiles >= 10000, s"probe needs >=10^4 files, got $nMorFiles")
     val rt = Runtime.getRuntime
     def usedHeap(): Long = { System.gc(); rt.totalMemory - rt.freeMemory }
     val h0 = usedHeap()
     val (morStats, tMor) = time(
-      LakeTable.deleteMor(spark, morRoot, col("k") % 97 === 0, "k"))
+      LakeTable.delete(spark, morRoot, col("k") % 97 === 0, "k"))
     val heapMb = (usedHeap() - h0) / 1048576.0
     val expectDead = (0L until 2560000L).count(_ % 97 == 0).toLong
     val liveCnt = LakeTable.read(spark, morRoot).count()

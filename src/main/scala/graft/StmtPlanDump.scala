@@ -16,6 +16,7 @@ object StmtPlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("plans/r22")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val spark = SparkEngine.session(master = "local[32]", appName = "graft-stmt-plan",
       shufflePartitions = 32)
     spark.conf.set("spark.sql.catalog.graft.warehouse",

@@ -74,6 +74,16 @@ import org.apache.spark.sql.types.{NumericType, StructType}
   * nothing from the filesystem beyond atomic same-dir rename — the same
   * contract HDFS/local give and object-store committers emulate.
   */
+/** A lost optimistic-concurrency race: another writer committed the
+  * version this statement meant to publish, and the metadata-only rebase
+  * could not absorb the difference. The statement's own writes are
+  * invisible orphans (vacuum reclaims them); re-running it on the
+  * winner's snapshot is always safe — [[LakeTable.retryOnConflict]] does
+  * exactly that. A typed failure, the way Delta's optimistic protocol
+  * raises typed conflict exceptions, so no caller matches message text.
+  */
+final class CommitConflict(msg: String) extends RuntimeException(msg)
+
 object LakeTable {
 
   /** Hive's directory name for a NULL partition value; a literal string
@@ -247,7 +257,7 @@ object LakeTable {
     * functions only, reads only non-generated columns); COMPUTING it is
     * the connector's job — [[writeBatch]] fills the column where the
     * incoming row has NULL and refuses rows whose provided value breaks
-    * the `g <=> expr` invariant, and [[update]]/[[updateMor]] recompute
+    * the `g <=> expr` invariant, and [[update]] recomputes
     * it after SET so a change to a referenced column cannot leave a
     * stale value behind.
     */
@@ -1102,6 +1112,36 @@ object LakeTable {
     publishAtomic(f, tmp, new Path(dir, s"v$v.manifest"))
   }
 
+  /** Run `attempt` until it lands. A [[CommitConflict]] — a lost race
+    * the rebase could not absorb — re-runs the whole attempt, which
+    * re-reads the snapshot and so recomputes against the winner's rows,
+    * up to `maxRetries` more times; then the last conflict is rethrown.
+    * Any other failure propagates at once. The bound keeps a livelocked
+    * writer from spinning forever under contention.
+    */
+  @annotation.tailrec
+  def retryOnConflict[A](maxRetries: Int)(attempt: => A): A = {
+    val landed = try Some(attempt) catch { case _: CommitConflict if maxRetries > 0 => None }
+    landed match {
+      case Some(a) => a
+      case None => retryOnConflict(maxRetries - 1)(attempt)
+    }
+  }
+
+  /** [[commit]] version `v`, or throw the [[CommitConflict]] that
+    * [[retryOnConflict]] retries. Returns `v`.
+    */
+  private def commitOrConflict(
+      spark: SparkSession,
+      root: String,
+      verb: String,
+      v: Long,
+      meta: TableMeta,
+      entries: Seq[Entry]): Long =
+    if (commit(spark, root, v, meta, entries)) v
+    else throw new CommitConflict(
+      s"LakeTable.$verb: concurrent commit at $root (retries exhausted)")
+
   // ---- write path ----------------------------------------------------
 
   /** Persist `df` for the duration of one statement UNLESS the caller
@@ -1329,22 +1369,21 @@ object LakeTable {
     * point); values of rows deleted since then become allocatable
     * again, exactly as in Delta. Returns (column, new mark) pairs.
     */
-  def syncIdentity(spark: SparkSession, root: String, maxRetries: Int = 3): Seq[(String, Long)] = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.syncIdentity: no committed snapshot at $root")
-    val meta = s0.meta.get
-    val marks = identityOf(meta.schema).map { case (c, start, step, _) =>
-      c -> identityDataBound(spark, root, meta, s0.entries, c, step).getOrElse(start - step)
+  def syncIdentity(spark: SparkSession, root: String, maxRetries: Int = 3): Seq[(String, Long)] =
+    retryOnConflict(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.syncIdentity: no committed snapshot at $root")
+      val meta = s0.meta.get
+      val marks = identityOf(meta.schema).map { case (c, start, step, _) =>
+        c -> identityDataBound(spark, root, meta, s0.entries, c, step).getOrElse(start - step)
+      }
+      if (marks.nonEmpty) {
+        val props = meta.props ++ marks.map { case (c, v) => s"identity.hw.$c" -> v.toString }
+        commitOrConflict(spark, root, "syncIdentity", s0.version + 1,
+          meta.copy(props = props), s0.entries)
+      }
+      marks
     }
-    if (marks.isEmpty) return Nil
-    val props = meta.props ++ marks.map { case (c, v) => s"identity.hw.$c" -> v.toString }
-    if (commit(spark, root, s0.version + 1, meta.copy(props = props), s0.entries)) marks
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.syncIdentity: concurrent commit at $root (retries exhausted)")
-      syncIdentity(spark, root, maxRetries - 1)
-    }
-  }
 
   /** Meta for an insert commit with the identity high-water marks
     * advanced to cover the just-written batch (from its file stats) —
@@ -1935,8 +1974,8 @@ object LakeTable {
       deleteMode = deleteMode, partitionFn = partitionFn, props = props)
     requireNoExplicitIdentity(df, meta, "init")
     val entries = writeBatch(spark, root, df, meta)
-    require(commit(spark, root, 1, advanceIdentityHw(meta, entries), entries),
-      s"LakeTable.init: concurrent commit at $root")
+    if (!commit(spark, root, 1, advanceIdentityHw(meta, entries), entries))
+      throw new CommitConflict(s"LakeTable.init: concurrent commit at $root")
   }
 
   /** Metadata-only ALTER: commit a new version whose schema gains
@@ -2025,7 +2064,8 @@ object LakeTable {
       // columns (transform/bucket spaces are type-bound) and
       // generated-column inputs (the stored generated value was
       // computed under the old arithmetic type) are refused.
-      widenColumns: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): Long = {
+      widenColumns: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
+      : Long = retryOnConflict(maxRetries) {
     deleteMode.foreach(m => require(m == "cow" || m == "mor",
       s"LakeTable.alterTable: deleteMode must be cow or mor, got $m"))
     addColumns.foreach(f => require(
@@ -2220,14 +2260,7 @@ object LakeTable {
         } else (None: Option[String], None: Option[String])
       })
     }
-    if (commit(spark, root, s0.version + 1, newMeta, entries)) s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.alterTable: concurrent commit at $root (retries exhausted)")
-      alterTable(spark, root, addColumns, statsCols, bloomCols, renameColumns,
-        dropColumns, addChecks, dropChecks, maxRetries - 1, deleteMode,
-        setProps, unsetProps, setDefaults, widenColumns)
-    }
+    commitOrConflict(spark, root, "alterTable", s0.version + 1, newMeta, entries)
   }
 
   /** PARTITION SPEC EVOLUTION (`ALTER TABLE ... SET PARTITIONING`, the
@@ -2244,7 +2277,7 @@ object LakeTable {
       root: String,
       partitionCol: String,
       partitionFn: String = PartitionFn.Identity,
-      maxRetries: Int = 3): Long = {
+      maxRetries: Int = 3): Long = retryOnConflict(maxRetries) {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.setPartitioning: no committed snapshot at $root")
     val meta = s0.meta.get
@@ -2252,15 +2285,11 @@ object LakeTable {
       s"LakeTable.setPartitioning: column $partitionCol not in table schema")
     PartitionFn.validate(partitionFn, meta.schema(partitionCol).dataType)
     if (partitionCol == meta.partitionCol && partitionFn == meta.partitionFn)
-      return s0.version // already the current spec — no empty commit
-    val newMeta = meta.copy(partitionCol = partitionCol, partitionFn = partitionFn,
-      priorSpecs = meta.priorSpecs :+ ((meta.partitionCol, meta.partitionFn)))
-    if (commit(spark, root, s0.version + 1, newMeta, s0.entries)) s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.setPartitioning: concurrent commit at $root (retries exhausted)")
-      setPartitioning(spark, root, partitionCol, partitionFn, maxRetries - 1)
-    }
+      s0.version // already the current spec — no empty commit
+    else commitOrConflict(spark, root, "setPartitioning", s0.version + 1,
+      meta.copy(partitionCol = partitionCol, partitionFn = partitionFn,
+        priorSpecs = meta.priorSpecs :+ ((meta.partitionCol, meta.partitionFn))),
+      s0.entries)
   }
 
   /** Metadata-only property commit (optimistic, retried): merges `kv`
@@ -2272,17 +2301,12 @@ object LakeTable {
       spark: SparkSession,
       root: String,
       kv: Map[String, String],
-      maxRetries: Int = 3): Long = {
+      maxRetries: Int = 3): Long = retryOnConflict(maxRetries) {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.setProps: no committed snapshot at $root")
     val meta = s0.meta.get
-    if (commit(spark, root, s0.version + 1, meta.copy(props = meta.props ++ kv), s0.entries))
-      s0.version + 1
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.setProps: concurrent commit at $root (retries exhausted)")
-      setProps(spark, root, kv, maxRetries - 1)
-    }
+    commitOrConflict(spark, root, "setProps", s0.version + 1,
+      meta.copy(props = meta.props ++ kv), s0.entries)
   }
 
   // ---- read path -----------------------------------------------------
@@ -2472,19 +2496,16 @@ object LakeTable {
     * rollback, or a replayed post-restore micro-batch would
     * double-insert.
     */
-  def restore(spark: SparkSession, root: String, version: Long, maxRetries: Int = 3): Long = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.restore: no committed snapshot at $root")
-    require(version <= s0.version,
-      s"LakeTable.restore: v$version is not in history (head is v${s0.version})")
-    val target = snapshotAt(spark, root, version) // incl. the vacuumed-files refusal
-    val meta = target.meta.get.copy(txns = s0.meta.get.txns)
-    if (commit(spark, root, s0.version + 1, meta, target.entries)) s0.version + 1
-    else {
-      require(maxRetries > 0, s"LakeTable.restore: concurrent commit at $root (retries exhausted)")
-      restore(spark, root, version, maxRetries - 1)
+  def restore(spark: SparkSession, root: String, version: Long, maxRetries: Int = 3): Long =
+    retryOnConflict(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.restore: no committed snapshot at $root")
+      require(version <= s0.version,
+        s"LakeTable.restore: v$version is not in history (head is v${s0.version})")
+      val target = snapshotAt(spark, root, version) // incl. the vacuumed-files refusal
+      commitOrConflict(spark, root, "restore", s0.version + 1,
+        target.meta.get.copy(txns = s0.meta.get.txns), target.entries)
     }
-  }
 
   /** Time travel: the table exactly as committed at `version` — its own
     * schema, its own file list. Every manifest and every data file is
@@ -3164,8 +3185,8 @@ object LakeTable {
     * table lacks evolve the schema like merge's. No key-uniqueness check
     * is made (a blind insert of an existing key duplicates it — use
     * merge when keys can repeat).
-    */
-  /** `txnAppId`/`txnVersion` make the append IDEMPOTENT (the
+    *
+    * `txnAppId`/`txnVersion` make the append IDEMPOTENT (the
     * transactional-writer pattern): the manifest records the highest
     * txnVersion committed per appId, and an append whose (appId, version)
     * is already at-or-below that watermark is a no-op — so a replayed
@@ -3180,35 +3201,29 @@ object LakeTable {
       maxRetries: Int = 3,
       txnAppId: Option[String] = None,
       txnVersion: Long = -1L): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.append: no committed snapshot at $root")
-    val meta = s0.meta.get
     txnAppId.foreach { _ =>
       require(txnVersion >= 0, "LakeTable.append: txnAppId requires txnVersion >= 0")
     }
-    // plain if/else, no early return: a non-local `return` here compiles
-    // to a thrown NonLocalReturnControl, which any catch-Throwable wrapper
-    // up-stack would swallow (and Scala 3 rejects outright)
-    if (txnAppId.exists(app => meta.txns.get(app).exists(_ >= txnVersion)))
-      // this (appId, version) already committed — replay, not new data
-      MergeStats(s0.version, 0, 0, s0.entries.size, 0)
-    else {
-      val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
-      val newMeta = meta.copy(
-        schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)),
-        txns = txnAppId.fold(meta.txns)(app => meta.txns + (app -> txnVersion)))
-      requireNoExplicitIdentity(df, meta, "append")
-      val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
-      if (commit(spark, root, s0.version + 1,
-          advanceIdentityHw(newMeta, written), s0.entries ++ written))
-        MergeStats(s0.version + 1, 0, 0, s0.entries.size, written.size)
+    // a lost race orphans the batch (vacuum reclaims it) and recomputes
+    // against the winner's snapshot — the txn watermark is re-checked
+    // there, so a racing replay still cannot double-commit
+    retryOnConflict(maxRetries) {
+      val s0 = snapshot(spark, root)
+      require(s0.version > 0, s"LakeTable.append: no committed snapshot at $root")
+      val meta = s0.meta.get
+      if (txnAppId.exists(app => meta.txns.get(app).exists(_ >= txnVersion)))
+        // this (appId, version) already committed — replay, not new data
+        unchanged(s0, -1)
       else {
-        // lost the race: the batch is orphaned (vacuum reclaims it);
-        // recompute against the winner's snapshot (the txn watermark is
-        // re-checked there, so a racing replay still cannot double-commit)
-        require(maxRetries > 0,
-          s"LakeTable.append: concurrent commit at $root (retries exhausted)")
-        append(spark, root, df, maxRetries - 1, txnAppId, txnVersion)
+        val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
+        val newMeta = meta.copy(
+          schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)),
+          txns = txnAppId.fold(meta.txns)(app => meta.txns + (app -> txnVersion)))
+        requireNoExplicitIdentity(df, meta, "append")
+        val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
+        MergeStats(commitOrConflict(spark, root, "append", s0.version + 1,
+          advanceIdentityHw(newMeta, written), s0.entries ++ written),
+          0, 0, s0.entries.size, written.size)
       }
     }
   }
@@ -3243,18 +3258,13 @@ object LakeTable {
     if (s0.meta.get.checks.nonEmpty && entries.nonEmpty)
       requireChecks(spark, readEntries(spark, root, s0.meta.get.schema, entries),
         s0.meta.get, "toTable epoch")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val s = if (attempt == 0) s0 else snapshot(spark, root)
+    // a lost race re-commits the same files on the winner's snapshot
+    val heads = Iterator(s0) ++ Iterator.continually(snapshot(spark, root))
+    retryOnConflict(maxRetries) {
+      val s = heads.next()
       val meta = s.meta.get
-      val newMeta = meta.copy(txns = meta.txns + (appId -> epochId))
-      done = commit(spark, root, s.version + 1, newMeta, s.entries ++ entries)
-      if (!done) {
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"LakeTable.appendStreamEpoch: concurrent commit at $root (retries exhausted)")
-      }
+      commitOrConflict(spark, root, "appendStreamEpoch", s.version + 1,
+        meta.copy(txns = meta.txns + (appId -> epochId)), s.entries ++ entries)
     }
   }
 
@@ -3269,143 +3279,54 @@ object LakeTable {
       spark: SparkSession,
       root: String,
       df: DataFrame,
-      maxRetries: Int = 3): MergeStats = {
+      maxRetries: Int = 3): MergeStats = retryOnConflict(maxRetries) {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.overwrite: no committed snapshot at $root")
     val meta = s0.meta.get
     val newFields = df.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
     val newMeta = meta.copy(schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)))
     requireNoExplicitIdentity(df, meta, "overwrite")
+    // a lost race orphans the batch (vacuum reclaims it)
     val written = writeBatch(spark, root, align(df, newMeta.schema), newMeta)
-    if (commit(spark, root, s0.version + 1, advanceIdentityHw(newMeta, written), written))
-      MergeStats(s0.version + 1, 0, 0, 0, written.size)
-    else {
-      require(maxRetries > 0,
-        s"LakeTable.overwrite: concurrent commit at $root (retries exhausted)")
-      overwrite(spark, root, df, maxRetries - 1)
-    }
+    MergeStats(commitOrConflict(spark, root, "overwrite", s0.version + 1,
+      advanceIdentityHw(newMeta, written), written), 0, 0, 0, written.size)
   }
 
-  /** MERGE INTO: rows of `source` matching target rows on `keyCols`
-    * replace them (source wins); unmatched source rows are inserted.
-    * Copy-on-write rewrites ONLY files that can hold a matched key:
-    * partitions with no match carry whole (insert-only partitions get
-    * the new rows appended as a new file, never a rewrite), and inside
-    * matched partitions, files whose recorded key min/max is disjoint
-    * from the source's key range carry too (stats-pruned COW, available
-    * when the stats column IS the merge key). Atomic commit. Source
-    * columns the table lacks evolve the schema (see class doc).
-    */
-  def merge(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      partitionCol: String): MergeStats =
-    mergeImpl(spark, root, source, keyCols, partitionCol, () => ())
+  // ---- row-level DML ---------------------------------------------------
+  //
+  // One public entry per verb — [[delete]], [[update]], [[merge]] (key
+  // upsert) and [[mergeClauses]] — and one shape under all four: pruned
+  // probe → row fates → write → commit or rebase. The write strategy
+  // comes from the table, never the caller: each attempt reads
+  // `deleteMode` from the snapshot it starts on and either REWRITES the
+  // files holding a touched row (`cow`) or tombstones the touched rows
+  // into deletion-vector sidecars and appends their postimages (`mor`).
+  // Every verb retries a lost race through [[retryOnConflict]] — the
+  // recompute is REQUIRED for correctness, not just convenience: the
+  // predicate / key probe re-evaluates against the winner's rows, so
+  // sequential equivalence holds whichever writer lands first.
 
-  /** [[merge]] with a pre-commit hook — the deterministic injection point
-    * LakeTableSpec uses to steal the version number mid-merge and prove
-    * the conflict is detected (a real race hits the same rename).
+  /** The preamble every row-level verb shares: the snapshot the attempt
+    * starts from and its metadata, refusing a table with no commit yet or
+    * a caller that names the wrong partition column.
     */
-  private[graft] def mergeImpl(
+  private def dmlSnapshot(
       spark: SparkSession,
       root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
+      verb: String,
+      partitionCol: String): (Snapshot, TableMeta) = {
     val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.merge: no committed snapshot at $root")
+    require(s0.version > 0, s"LakeTable.$verb: no committed snapshot at $root")
     val meta = s0.meta.get
     require(meta.partitionCol == partitionCol,
-      s"LakeTable.merge: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    // schema evolution: columns only the source has widen the table
-    val newFields = source.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
-    val outSchema = extendSchema(meta.schema, newFields.toSeq, highWater(meta))
-    // the source feeds the key probe, the affected-partition probe AND
-    // the merged write below — persist it for this statement (batch-
-    // sized), so an expensive upsert source computes once
-    val (src, releaseSrc) = persistForStatement(source)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    try {
-
-    // stats/bloom-informed probe: when the manifest records min/max (or
-    // Bloom sidecars) on the key columns, files whose bounds cannot
-    // intersect — or whose blooms exclude every batch key — are pruned
-    // from the probe scan BEFORE any data file is opened: a narrow
-    // upsert batch against a 100 TB table probes the few files that can
-    // hold its keys, not the corpus, even on an unclustered key layout
-    val mayMatch = keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src))
-    val probeEntries = s0.entries.filter(mayMatch)
-
-    // partitions holding a matched key (one probe of the surviving files
-    // against the broadcast source keys) ∪ partitions receiving source
-    // rows; NULL partition values go through the same sentinel the
-    // directory listing produces, so a null-keyed partition is rewritten.
-    // Under spec evolution each entry is classified in ITS OWN spec
-    // space (partitionMatcher maps the same rows through every spec).
-    val matchedRows =
-      if (probeEntries.isEmpty) None
-      else Some(readEntries(spark, root, meta.schema, probeEntries)
-        .join(broadcast(srcKeys), keyCols, "left_semi"))
-    val affectedRows = matchedRows
-      .map(m => align(m, outSchema).unionByName(align(src, outSchema)))
-      .getOrElse(align(src, outSchema))
-    val (inAffected, affectedCount) = partitionMatcher(meta, affectedRows)
-
-    // file-level COW: inside affected partitions, files whose key stats
-    // are disjoint from the source bounds cannot hold a matched row —
-    // they carry by path (their rows would pass the survivor anti-join
-    // unchanged, so skipping the rewrite is result-identical)
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
-    // survivors of the affected slice: target rows there whose key has no
-    // source match — read ONLY the rewritten files, not the table
-    val survivors =
-      if (rewrite.isEmpty) None
-      else Some(
-        readEntries(spark, root, meta.schema, rewrite)
-          .join(broadcast(srcKeys), keyCols, "left_anti"))
-    val merged = survivors.fold(align(src, outSchema))(s =>
-      align(src, outSchema).unionByName(align(s, outSchema)))
-    val newMeta = meta.copy(schema = outSchema)
-    // upsert source rows are an insert funnel: GENERATED ALWAYS AS
-    // IDENTITY values may not arrive from outside (matched rows are
-    // replaced wholesale, so their identity values re-allocate)
-    requireNoExplicitIdentity(src, newMeta, "merge")
-    val written = writeBatch(spark, root, merged, newMeta)
-    preCommit()
-    val finalMeta = advanceIdentityHw(newMeta, written)
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, finalMeta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, finalMeta, rewrite, written, mayMatch)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.merge: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(
-      version = landed,
-      matchedPartitions = affectedCount,
-      filesRewritten = rewrite.size,
-      filesCarried = carry.size,
-      filesWritten = written.size,
-      filesProbed = probeEntries.size)
-    } finally releaseSrc()
+      s"LakeTable.$verb: table is partitioned by ${meta.partitionCol}, not $partitionCol")
+    (s0, meta)
   }
 
-  /** Transactional COW DELETE: remove every row where `predicate` is
-    * TRUE (SQL DELETE semantics — NULL-predicate rows are KEPT). The
-    * compliance face of the lake path: opt-out and contamination
-    * removals on a training corpus must actually rewrite the bytes, not
-    * just filter at read time. Same shape as [[merge]]: only files in
-    * partitions CONTAINING a match are rewritten (one probe pass, itself
-    * manifest-pruned — bounds implied by the predicate's conjunctive
-    * attr-vs-literal comparisons skip files whose recorded min/max
-    * provably hold no match, and those files also carry by path inside
-    * affected partitions), everything else carries by path; atomic
-    * manifest commit; a
-    * re-issued delete is a no-op commit (idempotent). A delete that
-    * removes every row commits a legitimately-empty snapshot — the
-    * manifest's recorded schema keeps the table readable and mergeable.
-    */
+  /** A verb that found nothing to change: no commit, head unchanged. */
+  private def unchanged(s0: Snapshot, probed: Int): MergeStats =
+    MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probed)
+
   /** File-level pruner for a row predicate (shared by [[delete]] and
     * [[update]]): TRUE = the file may hold a matching row.
     *
@@ -3439,97 +3360,81 @@ object LakeTable {
         bloomPts.forall { case (h, blooms) => blooms.get(e.rel).forall(_.mightContainLong(h)) }
   }
 
-  def delete(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String): MergeStats =
-    deleteImpl(spark, root, predicate, partitionCol, () => ())
-
-  private[graft] def deleteImpl(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.delete: no committed snapshot at $root")
-    val meta = s0.meta.get
-    val mayDelete = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayDelete)
-    val (inAffected, affectedCount) =
-      if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-      else partitionMatcher(meta,
-        readEntries(spark, root, meta.schema, probeEntries).where(predicate))
-    // file-level COW: stats-disjoint files in affected partitions hold no
-    // row the predicate deletes — carry them by path
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayDelete(e))
-    val written =
-      if (rewrite.isEmpty) Nil
-      else writeBatch(
-        spark, root,
-        // DV-aware read: a COW rewrite of a MOR-deleted file also
-        // MATERIALIZES its deletion vector (the rewritten entry is
-        // dv-free)
-        readEntries(spark, root, meta.schema, rewrite)
-          .where(!coalesce(predicate, lit(false))),
-        meta,
-        // surviving rows keep their partition value — the rewrite is
-        // already partition-aligned, skip the write shuffle. Only sound
-        // when every rewritten file already carries the CURRENT spec: a
-        // pre-evolution file re-partitions under the new spec, where the
-        // scan layout means nothing (one old file would scatter across
-        // many new values as task-sized fragments).
-        preserveLayout = rewrite.forall(_.spec == meta.currentSpec))
-    // a lost race first tries the metadata-only rebase (same conditions
-    // as merge: untouched read set, winner's new files provably hold no
-    // predicate match) before the caller recomputes
-    preCommit()
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta, rewrite, written, mayDelete)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.delete: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
-      filesProbed = probeEntries.size)
+  /** The COW rewrite set: files in partitions holding a matched row (one
+    * probe pass over `matchedRows`; None = nothing can match) that the
+    * file pruner keeps — stats-disjoint files inside affected partitions
+    * hold no matched row and carry by path. NULL partition values go
+    * through the same sentinel the directory listing produces, and under
+    * spec evolution each entry is classified in ITS OWN spec space (see
+    * [[partitionMatcher]]). Returns the set and the affected-partition
+    * count.
+    */
+  private def rewriteSet(
+      s0: Snapshot,
+      meta: TableMeta,
+      matchedRows: Option[DataFrame],
+      mayMatch: Entry => Boolean): (Seq[Entry], Int) = {
+    val (inAffected, affected) =
+      matchedRows.fold(((_: Entry) => false, 0))(partitionMatcher(meta, _))
+    (s0.entries.filter(e => inAffected(e) && mayMatch(e)), affected)
   }
 
-  /** MERGE-ON-READ DELETE via deletion vectors: rows matching
-    * `predicate` are recorded as dead POSITIONS in per-file [[Dv]]
-    * bitmap sidecars — no data file is read-rewritten-rewritten, so a
-    * sparse delete over a 100 TB table commits in O(matched rows)
-    * instead of O(touched gigabytes). The position bitmaps build
-    * DISTRIBUTEDLY ([[PosBitmapAgg]]: partial bitmaps per scan task,
-    * bitmap-OR merge, one compressed row per touched file crosses the
-    * shuffle) and the SIDECARS publish from executor tasks too
-    * ([[publishDvSidecars]]); the driver sees only (file, rel,
-    * cardinality) triples and commits the manifest swap. A file whose every
-    * row is dead drops from the manifest entirely (no tombstone chains);
-    * stats/Bloom pruning still gates which files are probed at all.
-    * Same optimistic-concurrency contract as [[delete]].
+  /** The MOR probe: the live rows of `es` with their scan position —
+    * `__file` (the RAW url-encoded path; tasks decode it to the
+    * manifest's suffix key when publishing) and `__pos` (the row index).
+    * Files are read directly, not via readEntries (the position metadata
+    * must be requested on the scan itself), with existing DVs applied
+    * through the same keep filter — already-dead positions never reach a
+    * fate, so re-deleting is naturally idempotent. None when `es` is
+    * empty.
     */
-  /** Distributed DV sidecar publication: one TASK-side write per
-    * touched file — the driver receives only (file-key, sidecar rel,
-    * dead cardinality) triples, never bitmap bytes, so a mass MOR
-    * delete touching millions of files holds driver memory flat (the
-    * round-16 watch-point: collect()ing per-file bitmap blobs put the
-    * whole delete's bitmaps on the driver before any sidecar write).
-    * Each task unions the file's new dead positions with its existing
-    * vector (rel paths broadcast — metadata-sized) and publishes an
-    * immutable sidecar via [[Dv.writeFrom]]'s temp-rename commit;
-    * failed/speculative attempts leave only unreferenced orphans for
-    * vacuum's `dv/` sweep.
+  private def positionalScan(
+      spark: SparkSession,
+      root: String,
+      meta: TableMeta,
+      es: Seq[Entry]): Option[DataFrame] = {
+    val (dvd, clean) = es.partition(_.dv.isDefined)
+    def withPos(files: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
+      if (files.isEmpty) None
+      else {
+        val df = spark.read.schema(meta.schema)
+          .parquet(files.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
+        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, files)) else df
+        Some(kept
+          .withColumn("__file", col("_metadata.file_path"))
+          .withColumn("__pos", col("_metadata.row_index")))
+      }
+    (withPos(clean, applyDv = false).toSeq ++ withPos(dvd, applyDv = true).toSeq)
+      .reduceOption(_.unionByName(_))
+  }
+
+  /** Distributed DV sidecar publication for the positional rows `hits`
+    * (`__file`, `__pos`): the positions aggregate DISTRIBUTEDLY into one
+    * bitmap per file ([[PosBitmapAgg]]: partial bitmaps per scan task,
+    * bitmap-OR merge, one compressed row per touched file crosses the
+    * shuffle), and each file's sidecar is written by a TASK — the driver
+    * receives only (file-key, sidecar rel, dead cardinality) triples,
+    * never bitmap bytes, so a mass MOR delete touching millions of files
+    * holds driver memory flat. Each task unions the file's new dead
+    * positions with its existing vector (rel paths broadcast — metadata-
+    * sized) and publishes an immutable sidecar via [[Dv.writeFrom]]'s
+    * temp-rename commit; failed/speculative attempts leave only
+    * unreferenced orphans for vacuum's `dv/` sweep.
     */
   private def publishDvSidecars(
       spark: SparkSession,
       root: String,
-      hits: DataFrame, // __file (url-encoded scan path), __bm (serialized bitmap)
-      existingByKey: Map[String, String]): Array[(String, String, Long)] = {
+      hits: DataFrame,
+      probeEntries: Seq[Entry]): Array[(String, String, Long)] = {
     import spark.implicits._
+    val posAgg = GraftColumnBridge.column(
+      PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val bEx = spark.sparkContext.broadcast(existingByKey)
-    try hits.select(col("__file"), col("__bm")).as[(String, Array[Byte])]
+    val bEx = spark.sparkContext.broadcast(
+      probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
+    try hits.groupBy(col("__file")).agg(posAgg.as("__bm"))
+      .select(col("__file"), col("__bm")).as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (file, bytes) =>
           val key = Dv.suffixKey(Dv.decodeUrlPath(file))
@@ -3541,354 +3446,334 @@ object LakeTable {
     finally bEx.destroy()
   }
 
-  def deleteMor(
+  /** The tail every row-level verb shares: commit `s0` minus `removed`
+    * plus `written` as version s0+1 — a `kept` entry (a MOR file with its
+    * grown deletion vector) takes its original's place in the manifest.
+    * A lost race first tries the metadata-only [[rebaseCommit]]; when
+    * that is unsound the attempt throws [[CommitConflict]] and
+    * [[retryOnConflict]] recomputes it on the winner's snapshot.
+    * `preCommit` runs just before the commit — the deterministic
+    * injection point the specs use to land a rival writer mid-statement
+    * (a real race hits the same rename).
+    */
+  private def landDml(
       spark: SparkSession,
       root: String,
-      predicate: Column,
-      partitionCol: String,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.deleteMor: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.deleteMor: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    val mayDelete = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayDelete)
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    // one distributed pass over the PRUNED files: matched LIVE rows
-    // (already-dead positions are filtered by the scan's own DV
-    // application, so re-deleting is naturally idempotent) aggregate to
-    // one position bitmap per file
-    val sidecars: Array[(String, String, Long)] =
-      if (probeEntries.isEmpty) Array.empty
-      else {
-        val posAgg = GraftColumnBridge.column(
-          PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
-        // probe files directly (not via readEntries — the position
-        // metadata must be requested on the scan itself), applying
-        // existing DVs through the same keep filter
-        val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-        def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-          if (es.isEmpty) None
-          else {
-            val df = spark.read.schema(meta.schema)
-              .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-            val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-            // group on the RAW url-encoded path; tasks decode it to the
-            // manifest's suffix key when publishing
-            Some(kept
-              .withColumn("__file", col("_metadata.file_path"))
-              .withColumn("__pos", col("_metadata.row_index")))
-          }
-        val probed = (withPos(clean, applyDv = false).toSeq ++
-          withPos(dvd, applyDv = true).toSeq).reduce(_.unionByName(_))
-        publishDvSidecars(spark, root,
-          probed.where(predicate).groupBy(col("__file")).agg(posAgg.as("__bm")),
-          probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
-      }
-    if (sidecars.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probeEntries.size)
-    val updated: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
-      val e = byKey(key)
-      val entry =
-        // every row dead -> drop the file (its just-published sidecar is
-        // an unreferenced orphan, reclaimed by vacuum's dv/ sweep)
-        if (e.rows.contains(card)) None
-        else Some(e.copy(dv = Some(DvRef(rel, card))))
-      e.rel -> entry
-    }.collect { case (r, e) => r -> e.orNull }.toMap
-    val newEntries = s0.entries.flatMap { e =>
-      if (!updated.contains(e.rel)) Some(e) else Option(updated(e.rel))
-    }
-    // lost race → metadata-only rebase: a DV change is remove(old
-    // entry) + write(DV'd entry), so the same conditions as the COW
-    // verbs apply (our touched entries byte-identical at head, the
-    // winner's new files provably predicate-free)
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      removed: Seq[Entry],
+      kept: Seq[Entry],
+      written: Seq[Entry],
+      matchedParts: Long,
+      probed: Long,
+      mayMatch: Entry => Boolean,
+      dvMerge: Boolean,
+      preCommit: () => Unit): MergeStats = {
+    val keptByRel = kept.map(e => e.rel -> e).toMap
+    val removedRels = removed.map(_.rel).toSet
+    val entries = s0.entries.flatMap(e =>
+      keptByRel.get(e.rel).orElse(if (removedRels.contains(e.rel)) None else Some(e))) ++ written
     preCommit()
     val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, newEntries)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta,
-        removed = s0.entries.filter(e => updated.contains(e.rel)),
-        written = updated.values.filter(_ != null).toSeq,
-        mayMatch = mayDelete, dvMerge = true)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.deleteMor: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed,
-      matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-      // "rewritten" here = files that gained/extended a DV (metadata
-      // only — zero data bytes moved); fully-dead files simply drop
-      filesRewritten = updated.size,
-      filesCarried = s0.entries.size - updated.size,
-      filesWritten = 0,
-      filesProbed = probeEntries.size)
+      if (commit(spark, root, s0.version + 1, meta, entries)) s0.version + 1
+      else rebaseCommit(spark, root, s0, meta, removed, kept ++ written, mayMatch,
+        dvMerge = dvMerge)
+        .getOrElse(throw new CommitConflict(
+          s"LakeTable.$verb: concurrent commit at $root (retry on a fresh snapshot)"))
+    MergeStats(landed, matchedParts, removed.size, s0.entries.size - removed.size,
+      written.size, filesProbed = probed)
   }
 
-  /** MERGE-ON-READ UPDATE: matched LIVE rows are tombstoned by position
-    * ([[Dv]] sidecars, exactly [[deleteMor]]'s shape) and their updated
-    * copies append as a NEW batch — one commit swaps both in, so the
-    * write cost is O(matched rows), not O(touched files). Unmatched
-    * rows of a touched file are never rewritten (the Delta DV-update
-    * shape); semantics match [[update]] bit-for-bit: pre-update
-    * assignment evaluation (`SET a = b, b = a` swaps), NULL predicates
-    * update nothing, assignments cast to declared types, partition-
-    * column assignment moves rows (the appended batch re-partitions),
-    * and CHECK constraints validate the updated rows before anything
-    * commits.
+  /** The MOR tail: every file `sidecars` names gains (or extends) its
+    * deletion vector — a file whose every row is dead drops from the
+    * manifest instead (no tombstone chains; its just-published sidecar is
+    * an unreferenced orphan for vacuum's `dv/` sweep) — and `written`
+    * appends, in one [[landDml]] commit. "Rewritten" in the stats counts
+    * the files that gained a vector: metadata only, zero data bytes moved.
     */
-  def updateMor(
+  private def landTombstones(
       spark: SparkSession,
       root: String,
-      predicate: Column,
-      set: Map[String, Column],
-      partitionCol: String,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.updateMor: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.updateMor: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    set.keys.foreach(c => require(meta.schema.fieldNames.contains(c),
-      s"LakeTable.updateMor: SET column $c not in table schema"))
-    requireNoIdentitySet(meta, set.keys, "updateMor")
-    val mayMatch = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayMatch)
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      probeEntries: Seq[Entry],
+      sidecars: Array[(String, String, Long)],
+      written: Seq[Entry],
+      mayMatch: Entry => Boolean,
+      dvMerge: Boolean,
+      preCommit: () => Unit): MergeStats = {
     val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    if (probeEntries.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = 0)
-    val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-    def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val df = spark.read.schema(meta.schema)
-          .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-        Some(kept
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index")))
-      }
-    val matched = (withPos(clean, applyDv = false).toSeq ++
-      withPos(dvd, applyDv = true).toSeq).reduce(_.unionByName(_))
-      .where(coalesce(predicate, lit(false)))
-      .persist()
-    try {
-      val posAgg = GraftColumnBridge.column(
-        PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
-      val sidecars = publishDvSidecars(spark, root,
-        matched.groupBy(col("__file")).agg(posAgg.as("__bm")),
-        probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
-      if (sidecars.isEmpty)
-        return MergeStats(s0.version, 0, 0, s0.entries.size, 0,
-          filesProbed = probeEntries.size)
-      // updated copies: assignments evaluate against the PRE-update row
-      val updatedRows = matched.select(meta.schema.map { fld =>
-        set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
-          .getOrElse(col(s"`${fld.name}`"))
-      }.toSeq: _*)
-      val written = writeBatch(spark, root, regenerate(updatedRows, meta, set.keySet), meta)
-      val tombstoned: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
-        val e = byKey(key)
-        val entry =
-          if (e.rows.contains(card)) None // every row moved out -> drop
-          else Some(e.copy(dv = Some(DvRef(rel, card))))
-        e.rel -> entry.orNull
-      }.toMap
-      val newEntries = s0.entries.flatMap { e =>
-        if (!tombstoned.contains(e.rel)) Some(e) else Option(tombstoned(e.rel))
-      } ++ written
-      // lost race → metadata-only rebase (see deleteMor)
-      preCommit()
-      val landed: Long =
-        if (commit(spark, root, s0.version + 1, meta, newEntries)) s0.version + 1
-        else rebaseCommit(spark, root, s0, meta,
-          removed = s0.entries.filter(e => tombstoned.contains(e.rel)),
-          written = tombstoned.values.filter(_ != null).toSeq ++ written,
-          mayMatch = mayMatch, dvMerge = true)
-          .getOrElse(throw new IllegalArgumentException(
-            s"LakeTable.updateMor: concurrent commit at $root (retry on a fresh snapshot)"))
-      MergeStats(landed,
-        matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-        filesRewritten = tombstoned.size,
-        filesCarried = s0.entries.size - tombstoned.size,
-        filesWritten = written.size,
-        filesProbed = probeEntries.size)
-    } finally matched.unpersist()
+    val dvd: Map[String, Option[Entry]] = sidecars.iterator.map { case (key, rel, card) =>
+      val e = byKey(key)
+      e.rel -> (if (e.rows.contains(card)) None else Some(e.copy(dv = Some(DvRef(rel, card)))))
+    }.toMap
+    val removed = s0.entries.filter(e => dvd.contains(e.rel))
+    landDml(spark, root, verb, s0, meta, removed, removed.flatMap(e => dvd(e.rel)), written,
+      removed.map(_.part).distinct.size, probeEntries.size, mayMatch, dvMerge, preCommit)
   }
 
-  /** [[updateMor]] with the optimistic-retry loop of [[updateWithRetry]]. */
-  def updateMorWithRetry(
+  /** Transactional DELETE: remove every row where `predicate` is TRUE
+    * (SQL DELETE semantics — NULL-predicate rows are KEPT). The
+    * compliance face of the lake path: opt-out and contamination
+    * removals on a training corpus must actually remove the bytes, not
+    * just filter at read time (a `mor` delete's bytes go at the next
+    * OPTIMIZE). The probe is manifest-pruned (bounds
+    * implied by the predicate's conjunctive attr-vs-literal comparisons
+    * skip files whose recorded min/max provably hold no match), then:
+    *
+    *   - `cow`: only files in partitions CONTAINING a match are
+    *     rewritten, minus the stats-disjoint ones, which carry by path
+    *     like everything else. A re-issued delete is a no-op commit
+    *     (idempotent); a delete that removes every row commits a
+    *     legitimately-empty snapshot — the manifest's recorded schema
+    *     keeps the table readable and mergeable.
+    *   - `mor`: matched rows are recorded as dead POSITIONS in per-file
+    *     [[Dv]] bitmap sidecars — no data file is read-rewritten, so a
+    *     sparse delete over a 100 TB table commits in O(matched rows)
+    *     instead of O(touched gigabytes) (see [[publishDvSidecars]]). A
+    *     delete that matches nothing commits nothing.
+    */
+  def delete(
       spark: SparkSession,
       root: String,
       predicate: Column,
-      set: Map[String, Column],
       partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(updateMor(spark, root, predicate, set, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    retryOnConflict(maxRetries) {
+      val (s0, meta) = dmlSnapshot(spark, root, "delete", partitionCol)
+      val mayDelete = predicateFilePruner(spark, root, meta, predicate)
+      val probeEntries = s0.entries.filter(mayDelete)
+      if (meta.deleteMode == "mor") {
+        val sidecars = positionalScan(spark, root, meta, probeEntries)
+          .fold(Array.empty[(String, String, Long)])(p =>
+            publishDvSidecars(spark, root, p.where(predicate), probeEntries))
+        if (sidecars.isEmpty) unchanged(s0, probeEntries.size)
+        else landTombstones(spark, root, "delete", s0, meta, probeEntries, sidecars, Nil,
+          mayDelete, dvMerge = true, preCommit)
+      } else {
+        val (rewrite, affected) = rewriteSet(s0, meta,
+          if (probeEntries.isEmpty) None
+          else Some(readEntries(spark, root, meta.schema, probeEntries).where(predicate)),
+          mayDelete)
+        val written =
+          if (rewrite.isEmpty) Nil
+          else writeBatch(
+            spark, root,
+            // DV-aware read: a COW rewrite of a MOR-deleted file also
+            // MATERIALIZES its deletion vector (the rewritten entry is
+            // dv-free)
+            readEntries(spark, root, meta.schema, rewrite)
+              .where(!coalesce(predicate, lit(false))),
+            meta,
+            // surviving rows keep their partition value — the rewrite is
+            // already partition-aligned, skip the write shuffle. Only sound
+            // when every rewritten file already carries the CURRENT spec: a
+            // pre-evolution file re-partitions under the new spec, where the
+            // scan layout means nothing (one old file would scatter across
+            // many new values as task-sized fragments).
+            preserveLayout = rewrite.forall(_.spec == meta.currentSpec))
+        landDml(spark, root, "delete", s0, meta, rewrite, Nil, written, affected,
+          probeEntries.size, mayDelete, dvMerge = false, preCommit)
+      }
+    }
 
-  /** [[deleteMor]] with the optimistic-retry loop of [[deleteWithRetry]]. */
-  def deleteMorWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(deleteMor(spark, root, predicate, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  /** Transactional COW UPDATE: rows where `predicate` is TRUE get the
-    * `set` assignments applied (SQL UPDATE semantics — NULL-predicate
-    * rows keep their values; all assignments evaluate against the
-    * PRE-update row, so `SET a = b, b = a` swaps). Same shape and
-    * pruning as [[delete]]: the probe and the rewrite set are
-    * stats/bloom-pruned by the predicate's implied bounds, files that
-    * provably hold no match carry by path, and the rewrite commits
-    * atomically — one commit, unlike a delete+append emulation, so a
-    * crash can never lose the updated rows. Assigning the partition
-    * column moves rows between partitions correctly (affected files are
-    * rewritten wholesale and the write path re-partitions them).
-    * Assignment values are cast to the column's declared type.
+  /** Transactional UPDATE: rows where `predicate` is TRUE get the `set`
+    * assignments applied (SQL UPDATE semantics — NULL-predicate rows
+    * keep their values; all assignments evaluate against the PRE-update
+    * row, so `SET a = b, b = a` swaps). Assignment values are cast to
+    * the column's declared type, GENERATED columns recompute, and CHECK
+    * constraints validate the updated rows before anything commits. The
+    * probe is pruned like [[delete]]'s, then:
+    *
+    *   - `cow`: files that may hold a match in affected partitions are
+    *     rewritten and committed atomically — one commit, unlike a
+    *     delete+append emulation, so a crash can never lose the updated
+    *     rows. Assigning the partition column moves rows between
+    *     partitions (affected files are rewritten wholesale and the write
+    *     path re-partitions them).
+    *   - `mor`: matched LIVE rows are tombstoned by position (DV
+    *     sidecars, [[delete]]'s shape) and their updated copies append
+    *     as a NEW batch in the same commit, so the write cost is
+    *     O(matched rows), not O(touched files) — unmatched rows of a
+    *     touched file are never rewritten (the Delta DV-update shape).
     */
   def update(
       spark: SparkSession,
       root: String,
       predicate: Column,
       set: Map[String, Column],
-      partitionCol: String): MergeStats =
-    updateImpl(spark, root, predicate, set, partitionCol, () => ())
-
-  private[graft] def updateImpl(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      set: Map[String, Column],
       partitionCol: String,
-      preCommit: () => Unit): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.update: no committed snapshot at $root")
-    val meta = s0.meta.get
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.update: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    set.keys.foreach(c => require(meta.schema.fieldNames.contains(c),
-      s"LakeTable.update: SET column $c not in table schema"))
-    requireNoIdentitySet(meta, set.keys, "update")
-    val mayMatch = predicateFilePruner(spark, root, meta, predicate)
-    val probeEntries = s0.entries.filter(mayMatch)
-    val (inAffected, affectedCount) =
-      if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-      else partitionMatcher(meta,
-        readEntries(spark, root, meta.schema, probeEntries).where(predicate))
-    val (rewrite, carry) = s0.entries.partition(e => inAffected(e) && mayMatch(e))
-    val written =
-      if (rewrite.isEmpty) Nil
-      else {
-        val hit = coalesce(predicate, lit(false))
-        val updated = readEntries(spark, root, meta.schema, rewrite)
-          .select(meta.schema.map { fld =>
-            set.get(fld.name)
-              .map(v => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name))
-              .getOrElse(col(fld.name))
-          }.toSeq: _*)
-        // rows keep their partition value unless the SET (or a
-        // regeneration it triggers) can touch the partition source
-        // column — then the rewrite is partition-aligned as read and
-        // needs no write shuffle
-        val layoutStable = !set.keySet.contains(meta.partitionCol) &&
-          generatedOf(meta.schema).forall(_._1 != meta.partitionCol) &&
-          rewrite.forall(_.spec == meta.currentSpec)
-        writeBatch(spark, root, regenerate(updated, meta, set.keySet), meta,
-          preserveLayout = layoutStable)
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    retryOnConflict(maxRetries) {
+      val (s0, meta) = dmlSnapshot(spark, root, "update", partitionCol)
+      set.keys.foreach(c => require(meta.schema.fieldNames.contains(c),
+        s"LakeTable.update: SET column $c not in table schema"))
+      requireNoIdentitySet(meta, set.keys, "update")
+      val mayMatch = predicateFilePruner(spark, root, meta, predicate)
+      val probeEntries = s0.entries.filter(mayMatch)
+      if (meta.deleteMode == "mor") positionalScan(spark, root, meta, probeEntries) match {
+        case None => unchanged(s0, 0)
+        case Some(probed) =>
+          val matched = probed.where(coalesce(predicate, lit(false))).persist()
+          try {
+            val sidecars = publishDvSidecars(spark, root, matched, probeEntries)
+            if (sidecars.isEmpty) unchanged(s0, probeEntries.size)
+            else {
+              // updated copies: assignments evaluate against the PRE-update row
+              val updatedRows = matched.select(meta.schema.map { fld =>
+                set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
+                  .getOrElse(col(s"`${fld.name}`"))
+              }.toSeq: _*)
+              val written = writeBatch(spark, root, regenerate(updatedRows, meta, set.keySet), meta)
+              landTombstones(spark, root, "update", s0, meta, probeEntries, sidecars, written,
+                mayMatch, dvMerge = true, preCommit)
+            }
+          } finally matched.unpersist()
       }
-    // lost race → metadata-only rebase when sound (see delete), else
-    // the retry wrapper recomputes against the winner's snapshot
-    preCommit()
-    val landed: Long =
-      if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
-      else rebaseCommit(spark, root, s0, meta, rewrite, written, mayMatch)
-        .getOrElse(throw new IllegalArgumentException(
-          s"LakeTable.update: concurrent commit at $root (retry on a fresh snapshot)"))
-    MergeStats(landed, affectedCount, rewrite.size, carry.size, written.size,
-      filesProbed = probeEntries.size)
-  }
-
-  /** [[update]]/[[delete]] with the same optimistic-concurrency retry
-    * loop as [[mergeWithRetry]]: the SQL DML path routes through these,
-    * so a statement that loses a commit race recomputes against the
-    * winner's snapshot instead of surfacing a "concurrent commit" error
-    * to the user. The recompute is REQUIRED for correctness, not just
-    * convenience: the predicate re-evaluates against the winner's rows,
-    * so sequential-equivalence holds whichever writer lands first.
-    */
-  def updateWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      set: Map[String, Column],
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(update(spark, root, predicate, set, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  def deleteWithRetry(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(delete(spark, root, predicate, partitionCol))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  @annotation.tailrec
-  private def withCommitRetry(retries: Int)(attempt: Int => Option[MergeStats]): MergeStats =
-    attempt(retries) match {
-      case Some(stats) => stats
-      case None => withCommitRetry(retries - 1)(attempt)
+      else {
+        val (rewrite, affected) = rewriteSet(s0, meta,
+          if (probeEntries.isEmpty) None
+          else Some(readEntries(spark, root, meta.schema, probeEntries).where(predicate)),
+          mayMatch)
+        val written =
+          if (rewrite.isEmpty) Nil
+          else {
+            val hit = coalesce(predicate, lit(false))
+            val updated = readEntries(spark, root, meta.schema, rewrite)
+              .select(meta.schema.map { fld =>
+                set.get(fld.name)
+                  .map(v => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name))
+                  .getOrElse(col(fld.name))
+              }.toSeq: _*)
+            // rows keep their partition value unless the SET (or a
+            // regeneration it triggers) can touch the partition source
+            // column — then the rewrite is partition-aligned as read and
+            // needs no write shuffle
+            val layoutStable = !set.keySet.contains(meta.partitionCol) &&
+              generatedOf(meta.schema).forall(_._1 != meta.partitionCol) &&
+              rewrite.forall(_.spec == meta.currentSpec)
+            writeBatch(spark, root, regenerate(updated, meta, set.keySet), meta,
+              preserveLayout = layoutStable)
+          }
+        landDml(spark, root, "update", s0, meta, rewrite, Nil, written, affected,
+          probeEntries.size, mayMatch, dvMerge = false, preCommit)
+      }
     }
 
-  /** [[merge]] with optimistic-concurrency retries: a writer that loses
-    * the commit race recomputes against the WINNER's snapshot and tries
-    * again (its orphaned copy-on-write batch is reclaimed by the next
-    * `vacuum`). This is the standard lakehouse-log loop; bounded retries
-    * keep a livelocked writer from spinning forever under contention.
+  /** MERGE INTO: rows of `source` matching target rows on `keyCols`
+    * replace them (source wins); unmatched source rows are inserted.
+    * Source columns the table lacks evolve the schema (see class doc).
+    *
+    *   - `cow` rewrites ONLY files that can hold a matched key:
+    *     partitions with no match carry whole (insert-only partitions
+    *     get the new rows appended as a new file, never a rewrite), and
+    *     inside matched partitions, files whose recorded key min/max (or
+    *     Bloom sidecar) excludes every source key carry too.
+    *   - `mor` runs the upsert as one unconditional matched-UPDATE +
+    *     insert clause pair over the MOR arm of [[mergeClauses]]:
+    *     matched rows tombstone and re-append, files without a match
+    *     stay byte-identical. A matched row keeps its identity values.
     */
-  def mergeWithRetry(
+  def merge(
       spark: SparkSession,
       root: String,
       source: DataFrame,
       keyCols: Seq[String],
       partitionCol: String,
-      maxRetries: Int = 3): MergeStats =
-    mergeWithRetryImpl(spark, root, source, keyCols, partitionCol, maxRetries, () => ())
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    retryOnConflict(maxRetries) {
+      val (s0, meta) = dmlSnapshot(spark, root, "merge", partitionCol)
+      // schema evolution: columns only the source has widen the table
+      val newFields = source.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
+      val outMeta = meta.copy(schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)))
+      if (meta.deleteMode == "mor") {
+        requireNoExplicitIdentity(source, outMeta, "merge")
+        val withS = source.columns.foldLeft(source)((d, c) => d.withColumn("__s_" + c, col(c)))
+        def assign(c: String) = c ->
+          (if (source.columns.contains(c)) col("__s_" + c) else lit(null))
+        // identity columns: a matched row keeps its value (SET on them is
+        // refused); an insert takes a BY DEFAULT value the source carries
+        // and otherwise leaves the cell NULL for writeBatch to allocate
+        val idents = identityOf(outMeta.schema).map(_._1).toSet
+        val plain = outMeta.schema.fieldNames.filterNot(idents.contains)
+        val byDefault = identityOf(outMeta.schema).filter(_._4).map(_._1)
+          .filter(source.columns.contains)
+        val matched = Seq(MergeBranch(None, Some(plain.map(assign).toMap)))
+        val inserted = Seq(MergeBranch(None, Some((plain ++ byDefault).map(assign).toMap)))
+        clausesTombstone(spark, root, "merge", s0, outMeta, withS, keyCols,
+          matched, inserted, Nil, nullSafeKeys = false, preCommit)
+      } else upsertRewrite(spark, root, s0, meta, outMeta, source, keyCols, preCommit)
+    }
 
-  @annotation.tailrec
+  /** The `cow` fate step of [[merge]]; `outMeta` carries the evolved schema. */
+  private def upsertRewrite(
+      spark: SparkSession,
+      root: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      outMeta: TableMeta,
+      source: DataFrame,
+      keyCols: Seq[String],
+      preCommit: () => Unit): MergeStats = {
+    val outSchema = outMeta.schema
+    // the source feeds the key probe, the affected-partition probe AND
+    // the merged write below — persist it for this statement (batch-
+    // sized), so an expensive upsert source computes once
+    val (src, releaseSrc) = persistForStatement(source)
+    val srcKeys = src.select(keyCols.map(col): _*).distinct()
+    try {
+      // stats/bloom-informed probe: when the manifest records min/max (or
+      // Bloom sidecars) on the key columns, files whose bounds cannot
+      // intersect — or whose blooms exclude every batch key — are pruned
+      // from the probe scan BEFORE any data file is opened: a narrow
+      // upsert batch against a 100 TB table probes the few files that can
+      // hold its keys, not the corpus, even on an unclustered key layout
+      val mayMatch = keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src))
+      val probeEntries = s0.entries.filter(mayMatch)
+      // partitions holding a matched key (one probe of the surviving files
+      // against the broadcast source keys) ∪ partitions receiving source
+      // rows
+      val matchedRows =
+        if (probeEntries.isEmpty) None
+        else Some(readEntries(spark, root, meta.schema, probeEntries)
+          .join(broadcast(srcKeys), keyCols, "left_semi"))
+      val affectedRows = matchedRows
+        .map(m => align(m, outSchema).unionByName(align(src, outSchema)))
+        .getOrElse(align(src, outSchema))
+      val (rewrite, affected) = rewriteSet(s0, meta, Some(affectedRows), mayMatch)
+      // survivors of the affected slice: target rows there whose key has no
+      // source match — read ONLY the rewritten files, not the table
+      val survivors =
+        if (rewrite.isEmpty) None
+        else Some(
+          readEntries(spark, root, meta.schema, rewrite)
+            .join(broadcast(srcKeys), keyCols, "left_anti"))
+      val merged = survivors.fold(align(src, outSchema))(s =>
+        align(src, outSchema).unionByName(align(s, outSchema)))
+      // upsert source rows are an insert funnel: GENERATED ALWAYS AS
+      // IDENTITY values may not arrive from outside (matched rows are
+      // replaced wholesale, so their identity values re-allocate)
+      requireNoExplicitIdentity(src, outMeta, "merge")
+      val written = writeBatch(spark, root, merged, outMeta)
+      landDml(spark, root, "merge", s0, advanceIdentityHw(outMeta, written), rewrite, Nil,
+        written, affected, probeEntries.size, mayMatch, dvMerge = false, preCommit)
+    } finally releaseSrc()
+  }
+
   /** Merges that landed via the lost-commit REBASE fast path (spec
     * observability: the contention case asserts zero recomputes).
     */
   private[graft] val mergeRebases = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** File-level CONFLICT DETECTION for a lost merge commit (the
-    * Delta-style logical check): instead of recomputing the whole
-    * merge against the winner's snapshot, re-commit this merge's entry
-    * delta ON TOP of it when sequential equivalence provably holds —
+  /** File-level CONFLICT DETECTION for a lost commit (the Delta-style
+    * logical check): instead of recomputing the whole statement against
+    * the winner's snapshot, re-commit its entry delta ON TOP of it when
+    * sequential equivalence provably holds —
     *
     *   1. table METADATA is untouched on both sides (our op changed
     *      none; the winner changed none),
@@ -3903,8 +3788,8 @@ object LakeTable {
     * correctness-required path — the winner's rows must then re-enter
     * the probe). Under real disjoint-writer contention this turns N
     * serialized recomputes into N-1 metadata-only re-commits.
-    */
-  /** `dvMerge` (MOR verbs only) relaxes condition 2 at ROW granularity:
+    *
+    * `dvMerge` (MOR verbs only) relaxes condition 2 at ROW granularity:
     * when the winner touched one of our files but ONLY its deletion
     * vector, and the two ops' NEW tombstone position sets are DISJOINT,
     * sequential equivalence still holds — the loser re-commits with
@@ -3990,29 +3875,6 @@ object LakeTable {
     None
   }
 
-  private[graft] def mergeWithRetryImpl(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      partitionCol: String,
-      maxRetries: Int,
-      preCommit: () => Unit): MergeStats = {
-    val attempt =
-      try Right(mergeImpl(spark, root, source, keyCols, partitionCol, preCommit))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              maxRetries > 0 =>
-          Left(e)
-      }
-    attempt match {
-      case Right(stats) => stats
-      case Left(_) =>
-        mergeWithRetryImpl(spark, root, source, keyCols, partitionCol, maxRetries - 1, preCommit)
-    }
-  }
-
   /** One WHEN clause of a general MERGE: `condition` (None =
     * unconditional) over the joined row — target columns under their
     * plain names, source columns under `__s_<name>` — and `values`
@@ -4068,6 +3930,15 @@ object LakeTable {
     }
   }
 
+  /** The key-match condition between the target (`t`) and source (`s`)
+    * aliases: SQL `=` by default, `<=>` for a null-safe merge.
+    */
+  private def keyMatch(keyCols: Seq[String], nullSafeKeys: Boolean, t: String, s: String): Column =
+    keyCols.map { k =>
+      if (nullSafeKeys) col(s"$t.`$k`") <=> col(s"$s.`$k`")
+      else col(s"$t.`$k`") === col(s"$s.`$k`")
+    }.reduce(_ && _)
+
   /** General MERGE with Delta-semantics clause lists (first matching
     * clause wins; a row matching no clause of its family is kept
     * unchanged if it is a target row and dropped if it is an unmatched
@@ -4077,19 +3948,27 @@ object LakeTable {
     *
     * `source` must carry every source column renamed `__s_<name>` plus,
     * for each target key column `k`, a plain column `k` holding the ON
-    * expression's value (the join/probe key).
+    * expression's value (the join/probe key). SQL NULL semantics
+    * throughout: `=` join keys never match NULL, a NULL clause condition
+    * does not fire, and later clauses are then consulted.
     *
-    * Execution shape: the same stats/Bloom-pruned file-level COW as
-    * [[merge]] — files that provably hold no source key carry by path —
-    * with ONE full-outer join between the rewritten files' rows and the
-    * source deciding every row's fate in a single pass. With
-    * NOT-MATCHED-BY-SOURCE clauses present every target row's fate
-    * depends on the join, so the whole table is rewritten (the clause
-    * semantics require it; Delta does the same).
-    *
-    * SQL NULL semantics throughout: `=` join keys never match NULL, a
-    * NULL clause condition does not fire, and later clauses are then
-    * consulted.
+    *   - `cow`: the same stats/Bloom-pruned file-level COW as [[merge]]
+    *     — files that provably hold no source key carry by path — with
+    *     ONE full-outer join between the rewritten files' rows and the
+    *     source deciding every row's fate in a single pass. With
+    *     NOT-MATCHED-BY-SOURCE clauses every target row's fate depends
+    *     on the join, so the whole table is rewritten (Delta does the
+    *     same).
+    *   - `mor`: matched rows a clause touches TOMBSTONE into DV sidecars
+    *     ([[delete]]'s shape) and their postimages plus the NOT MATCHED
+    *     inserts APPEND as a new batch, all in ONE commit — a CDC-apply
+    *     MERGE touching 0.1% of the rows per file writes O(matched)
+    *     bytes instead of rewriting every file holding a match.
+    *     Matched-but-unfired and unmatched target rows never move.
+    *     By-source clauses make the READ a full scan, but the write stays
+    *     O(fired rows): a nightly full-sync CDC apply (upsert + delete-
+    *     the-rest) on a 100 TB table writes only the day's churn.
+    *     OPTIMIZE later materializes the vectors away.
     */
   def mergeClauses(
       spark: SparkSession,
@@ -4098,29 +3977,49 @@ object LakeTable {
       keyCols: Seq[String],
       matched: Seq[MergeBranch],
       notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch],
+      notMatchedBySource: Seq[MergeBranch] = Nil,
       partitionCol: String,
       // committed ATOMICALLY with the data change — a derived-table
       // refresh records the source version it applied in the same
       // manifest swap, so a crash can never leave the delta applied
-      // but unrecorded (or vice versa)
+      // but unrecorded (or vice versa); re-run on every retry snapshot
       metaUpdate: TableMeta => TableMeta = identity,
       // `<=>` key matching: a NULL key matches a NULL key (GROUP BY
       // semantics — NULL is a real group). Required by MatView, whose
       // group keys may be NULL; the default stays SQL MERGE's `=`.
-      nullSafeKeys: Boolean = false): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.mergeClauses: no committed snapshot at $root")
-    val meta = metaUpdate(s0.meta.get)
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.mergeClauses: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    notMatched.foreach(b => require(b.values.isDefined,
-      "LakeTable.mergeClauses: NOT MATCHED clauses must INSERT"))
-    // identity invariants: UPDATE branches may never SET an identity
-    // column, and INSERT branches may assign a GENERATED ALWAYS AS
-    // IDENTITY column never (BY DEFAULT may) — same gates as
-    // update()/append(), enforced statically on the clause shapes
-    requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
+      nullSafeKeys: Boolean = false,
+      maxRetries: Int = 3,
+      preCommit: () => Unit = () => ()): MergeStats =
+    retryOnConflict(maxRetries) {
+      val (s0, meta0) = dmlSnapshot(spark, root, "mergeClauses", partitionCol)
+      val meta = metaUpdate(meta0)
+      notMatched.foreach(b => require(b.values.isDefined,
+        "LakeTable.mergeClauses: NOT MATCHED clauses must INSERT"))
+      // identity invariants: UPDATE branches may never SET an identity
+      // column, and INSERT branches may assign a GENERATED ALWAYS AS
+      // IDENTITY column never (BY DEFAULT may) — same gates as
+      // update()/append(), enforced statically on the clause shapes
+      requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
+      if (meta.deleteMode == "mor")
+        clausesTombstone(spark, root, "mergeClauses", s0, meta, source, keyCols,
+          matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit)
+      else clausesRewrite(spark, root, s0, meta, source, keyCols,
+        matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit)
+    }
+
+  /** The `cow` fate step of [[mergeClauses]]. */
+  private def clausesRewrite(
+      spark: SparkSession,
+      root: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      source: DataFrame,
+      keyCols: Seq[String],
+      matched: Seq[MergeBranch],
+      notMatched: Seq[MergeBranch],
+      notMatchedBySource: Seq[MergeBranch],
+      nullSafeKeys: Boolean,
+      preCommit: () => Unit): MergeStats = {
     // the source is evaluated several times below (null-key probe, key
     // distinct for the file probe, and the full-outer merge join) — for
     // an expensive source (a matview refresh's signed-delta aggregate)
@@ -4130,154 +4029,94 @@ object LakeTable {
     val (src, releaseSrc) = persistForStatement(source)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
     try {
+      // rewrite set: with by-source clauses every target row's fate
+      // depends on the join — no file can carry, and any file a rival
+      // writer adds may match; otherwise identical to merge()
+      val (rewrite, probed, affectedParts, mayMatch) =
+        if (notMatchedBySource.nonEmpty)
+          (s0.entries, s0.entries.size, s0.entries.map(_.part).distinct.size,
+            (_: Entry) => true)
+        else {
+          // stats/Bloom pruning is sound only for non-null keys (NULL is
+          // outside every min/max bound) — a null-safe merge whose batch
+          // carries a NULL key must probe every entry. Null presence and
+          // the probe's min/max bounds come from ONE fold over the
+          // persisted source.
+          val keyDts = keyCols.map(k => src.schema(k).dataType)
+          val (foldBounds, keyHasNull) =
+            foldKeyInfo(src.select(keyCols.map(col): _*), keyDts)
+          val srcHasNullKey = nullSafeKeys && keyHasNull.exists(identity)
+          val mayMatch =
+            if (srcHasNullKey) (_: Entry) => true
+            else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src),
+              Some(keyCols.zip(foldBounds).toMap))
+          val probeEntries = s0.entries.filter(mayMatch)
+          val (rw, matchedCount) = rewriteSet(s0, meta,
+            if (probeEntries.isEmpty) None
+            else Some(readEntries(spark, root, meta.schema, probeEntries).as("t")
+              .join(broadcast(srcKeys).as("k"), keyMatch(keyCols, nullSafeKeys, "t", "k"),
+                "left_semi")),
+            mayMatch)
+          (rw, probeEntries.size, matchedCount, mayMatch)
+        }
 
-    // rewrite set: with by-source clauses every target row's fate depends
-    // on the join — no file can carry; otherwise identical to merge()
-    val (rewrite, carry, probed, affectedParts) =
-      if (notMatchedBySource.nonEmpty)
-        (s0.entries, Seq.empty[Entry], s0.entries.size,
-          s0.entries.map(_.part).distinct.size)
-      else {
-        // stats/Bloom pruning is sound only for non-null keys (NULL is
-        // outside every min/max bound) — a null-safe merge whose batch
-        // carries a NULL key must probe every entry. Null presence and
-        // the probe's min/max bounds come from ONE fold over the
-        // persisted source (previously a separate isEmpty probe + a
-        // two-stage aggregate).
-        val keyDts = keyCols.map(k => src.schema(k).dataType)
-        val (foldBounds, keyHasNull) =
-          foldKeyInfo(src.select(keyCols.map(col): _*), keyDts)
-        val srcHasNullKey = nullSafeKeys && keyHasNull.exists(identity)
-        val mayMatch =
-          if (srcHasNullKey) (_: Entry) => true
-          else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src),
-            Some(keyCols.zip(foldBounds).toMap))
-        val probeEntries = s0.entries.filter(mayMatch)
-        val semiCond = (t: String, k: String) =>
-          keyCols.map { c =>
-            if (nullSafeKeys) col(s"$t.`$c`") <=> col(s"$k.`$c`")
-            else col(s"$t.`$c`") === col(s"$k.`$c`")
-          }.reduce(_ && _)
-        val (inMatched, matchedCount) =
-          if (probeEntries.isEmpty) ((_: Entry) => false, 0)
-          else partitionMatcher(meta,
-            readEntries(spark, root, meta.schema, probeEntries).as("t")
-              .join(broadcast(srcKeys).as("k"), semiCond("t", "k"), "left_semi"))
-        val (rw, cy) =
-          s0.entries.partition(e => inMatched(e) && mayMatch(e))
-        (rw, cy, probeEntries.size, matchedCount)
-      }
+      val joined = readEntries(spark, root, meta.schema, rewrite)
+        .withColumn("__thit", lit(true)).as("t")
+        .join(
+          src.withColumn("__shit", lit(true)).as("s"),
+          keyMatch(keyCols, nullSafeKeys, "t", "s"),
+          "full_outer")
+      val base = joined.select(
+        meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
+          src.columns.filter(_.startsWith("__s_")).toSeq.map(c => col(s"s.`$c`")) ++
+          Seq(
+            coalesce(col("t.__thit"), lit(false)).as("__thit"),
+            coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
 
-    val joined = readEntries(spark, root, meta.schema, rewrite)
-      .withColumn("__thit", lit(true)).as("t")
-      .join(
-        src.withColumn("__shit", lit(true)).as("s"),
-        keyCols.map { k =>
-          if (nullSafeKeys) col(s"t.`$k`") <=> col(s"s.`$k`")
-          else col(s"t.`$k`") === col(s"s.`$k`")
-        }.reduce(_ && _),
-        "full_outer")
-    val base = joined.select(
-      meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
-        src.columns.filter(_.startsWith("__s_")).toSeq.map(c => col(s"s.`$c`")) ++
-        Seq(
-          coalesce(col("t.__thit"), lit(false)).as("__thit"),
-          coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
+      val isM = col("__thit") && col("__shit")
+      val isS = !col("__thit") && col("__shit")
+      val result = base
+        .withColumn("__keep",
+          when(isM, keepChain(matched, lit(true)))
+            .when(isS, keepChain(notMatched, lit(false)))
+            .otherwise(keepChain(notMatchedBySource, lit(true))))
+        .where(col("__keep"))
+        .select(meta.schema.map { f =>
+          val nul = lit(null).cast(f.dataType)
+          when(isM, valueChain(matched, f.name, col(f.name), col(f.name)))
+            .when(isS, valueChain(notMatched, f.name, nul, nul))
+            .otherwise(valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
+            .cast(f.dataType).as(f.name)
+        }.toSeq: _*)
 
-    val isM = col("__thit") && col("__shit")
-    val isS = !col("__thit") && col("__shit")
-    val result = base
-      .withColumn("__keep",
-        when(isM, keepChain(matched, lit(true)))
-          .when(isS, keepChain(notMatched, lit(false)))
-          .otherwise(keepChain(notMatchedBySource, lit(true))))
-      .where(col("__keep"))
-      .select(meta.schema.map { f =>
-        val nul = lit(null).cast(f.dataType)
-        when(isM, valueChain(matched, f.name, col(f.name), col(f.name)))
-          .when(isS, valueChain(notMatched, f.name, nul, nul))
-          .otherwise(valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
-          .cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-
-    // GENERATED ALWAYS AS: recompute any generated column a branch did
-    // not assign explicitly — an UPDATE of a referenced column must not
-    // leave the stale generated value (mirrors update/updateMor)
-    val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
-      .flatMap(_.values).flatMap(_.keys).toSet
-    val written = writeBatch(spark, root, regenerate(result, meta, explicitGen), meta)
-    require(
-      commit(spark, root, s0.version + 1, advanceIdentityHw(meta, written), carry ++ written),
-      s"LakeTable.mergeClauses: concurrent commit at $root (retry on a fresh snapshot)")
-    MergeStats(s0.version + 1, affectedParts, rewrite.size, carry.size, written.size,
-      filesProbed = probed)
+      // GENERATED ALWAYS AS: recompute any generated column a branch did
+      // not assign explicitly — an UPDATE of a referenced column must not
+      // leave the stale generated value (mirrors update)
+      val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
+        .flatMap(_.values).flatMap(_.keys).toSet
+      val written = writeBatch(spark, root, regenerate(result, meta, explicitGen), meta)
+      // a lost race rebases like merge's (an identity high-water advance
+      // or a metaUpdate changes meta, which the rebase refuses — those
+      // statements recompute)
+      landDml(spark, root, "mergeClauses", s0, advanceIdentityHw(meta, written), rewrite, Nil,
+        written, affectedParts, probed, mayMatch, dvMerge = false, preCommit)
     } finally releaseSrc()
   }
 
-  /** [[mergeClauses]] with the standard optimistic-concurrency retry
-    * loop (see [[mergeWithRetry]]).
-    */
-  def mergeClausesWithRetry(
+  /** The `mor` fate step of [[mergeClauses]] (and of [[merge]]'s upsert). */
+  private def clausesTombstone(
       spark: SparkSession,
       root: String,
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
       source: DataFrame,
       keyCols: Seq[String],
       matched: Seq[MergeBranch],
       notMatched: Seq[MergeBranch],
       notMatchedBySource: Seq[MergeBranch],
-      partitionCol: String,
-      maxRetries: Int = 3,
-      metaUpdate: TableMeta => TableMeta = identity,
-      nullSafeKeys: Boolean = false): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(mergeClauses(spark, root, source, keyCols, matched, notMatched,
-        notMatchedBySource, partitionCol, metaUpdate, nullSafeKeys))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
-
-  /** Merge-on-read clause MERGE: the `deleteMode=mor` arm of
-    * [[mergeClauses]]. Matched rows a clause touches TOMBSTONE into
-    * deletion-vector sidecars (position bitmaps, published from
-    * executors — exactly [[deleteMor]]'s shape) and their post-update
-    * images plus the NOT MATCHED inserts APPEND as a new batch, all in
-    * ONE manifest commit. A CDC-apply MERGE touching 0.1% of the rows
-    * per file writes O(matched) bytes instead of rewriting every file
-    * holding a match — the write amplification DVs exist to kill.
-    * Matched-but-unfired and unmatched target rows never move: their
-    * files stay byte-identical in the manifest. OPTIMIZE later
-    * materializes the vectors away, like any MOR delete/update.
-    *
-    * NOT MATCHED BY SOURCE clauses make every target row's fate
-    * join-dependent, so the READ side is a full scan (the clause
-    * semantics require it; Delta does the same) — but the WRITE side
-    * stays O(fired): fired by-source rows tombstone like fired matched
-    * rows, their UPDATE postimages ride the same append, and files
-    * where nothing fires carry byte-identical. A nightly full-sync CDC
-    * apply (upsert + delete-the-rest) on a 100 TB table writes only
-    * the day's churn.
-    */
-  def mergeClausesMor(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      matched: Seq[MergeBranch],
-      notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch] = Nil,
-      partitionCol: String,
-      metaUpdate: TableMeta => TableMeta = identity,
-      preCommit: () => Unit = () => ()): MergeStats = {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.mergeClausesMor: no committed snapshot at $root")
-    val meta = metaUpdate(s0.meta.get)
-    require(meta.partitionCol == partitionCol,
-      s"LakeTable.mergeClausesMor: table is partitioned by ${meta.partitionCol}, not $partitionCol")
-    notMatched.foreach(b => require(b.values.isDefined,
-      "LakeTable.mergeClausesMor: NOT MATCHED clauses must INSERT"))
-    requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClausesMor")
+      nullSafeKeys: Boolean,
+      preCommit: () => Unit): MergeStats = {
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
 
     // candidate files: the stats/Bloom probe is conservative-COMPLETE
@@ -4286,34 +4125,28 @@ object LakeTable {
     // whole table — the NOT MATCHED classification needs no full scan.
     // By-source clauses invert the question (which TARGET rows have no
     // source match?): every live row must reach the join, so the probe
-    // widens to all files — the read is table-sized, the write is not
+    // widens to all files — the read is table-sized, the write is not.
+    // A null-safe NULL key lies outside every min/max bound, so a
+    // null-safe merge whose source carries one probes every file too
+    // (as in the COW arm, one fold yields null presence and the bounds).
     val mayMatch =
       if (notMatchedBySource.nonEmpty) (_: Entry) => true
-      else keyProbeFilter(spark, root, meta, keyCols, srcKeys)
+      else if (nullSafeKeys) {
+        val (foldBounds, keyHasNull) = foldKeyInfo(
+          source.select(keyCols.map(col): _*), keyCols.map(k => source.schema(k).dataType))
+        if (keyHasNull.exists(identity)) (_: Entry) => true
+        else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(source),
+          Some(keyCols.zip(foldBounds).toMap))
+      } else keyProbeFilter(spark, root, meta, keyCols, srcKeys)
     val probeEntries = s0.entries.filter(mayMatch)
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    val (dvd, clean) = probeEntries.partition(_.dv.isDefined)
-    def withPos(es: Seq[Entry], applyDv: Boolean): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val df = spark.read.schema(meta.schema)
-          .parquet(es.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
-        val kept = if (applyDv) df.where(dvKeepColumn(spark, root, es)) else df
-        Some(kept
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index")))
-      }
-    val target: Option[DataFrame] =
-      (withPos(clean, applyDv = false).toSeq ++ withPos(dvd, applyDv = true).toSeq)
-        .reduceOption(_.unionByName(_))
 
     val srcCols = source.columns.filter(_.startsWith("__s_")).toSeq
-    val base = target match {
+    val base = positionalScan(spark, root, meta, probeEntries) match {
       case Some(tdf) =>
         tdf.withColumn("__thit", lit(true)).as("t")
           .join(
             source.withColumn("__shit", lit(true)).as("s"),
-            keyCols.map(k => col(s"t.`$k`") === col(s"s.`$k`")).reduce(_ && _),
+            keyMatch(keyCols, nullSafeKeys, "t", "s"),
             "full_outer")
           .select(
             meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
@@ -4346,12 +4179,8 @@ object LakeTable {
       .where(col("__mfire") || col("__bfire") || col("__ins"))
       .persist()
     try {
-      val posAgg = GraftColumnBridge.column(
-        PosBitmapAgg(exprOf(col("__pos"))).toAggregateExpression())
       val sidecars = publishDvSidecars(spark, root,
-        work.where(col("__mfire") || col("__bfire"))
-          .groupBy(col("__file")).agg(posAgg.as("__bm")),
-        probeEntries.flatMap(e => e.dv.map(d => Dv.suffixKey(e.rel) -> d.rel)).toMap)
+        work.where(col("__mfire") || col("__bfire")), probeEntries)
       val post = work
         .where((col("__mfire") && col("__mkeep")) ||
           (col("__bfire") && col("__bkeep")) || col("__ins"))
@@ -4368,63 +4197,18 @@ object LakeTable {
       val written =
         if (post.isEmpty) Nil
         else writeBatch(spark, root, regenerate(post, meta, explicitGen), meta)
-      val tombstoned: Map[String, Entry] = sidecars.iterator.map { case (key, rel, card) =>
-        val e = byKey(key)
-        val entry =
-          if (e.rows.contains(card)) None // every row moved out -> drop the file
-          else Some(e.copy(dv = Some(DvRef(rel, card))))
-        e.rel -> entry.orNull
-      }.toMap
-      val newEntries = s0.entries.flatMap { e =>
-        if (!tombstoned.contains(e.rel)) Some(e) else Option(tombstoned(e.rel))
-      } ++ written
-      // lost race → metadata-only rebase (see deleteMor); an identity
-      // high-water advance changes meta, which condition 1 refuses —
-      // those tables keep the recompute. dvMerge only WITHOUT insert
-      // clauses: a winner's tombstone on a target row we matched but
-      // did not fire flips that source row's sequential classification
-      // to NOT MATCHED — our fate join decided "no insert" against
-      // state the winner changed, and position disjointness cannot see
-      // it (we hold no position for an unfired row)
-      preCommit()
-      val finalMeta = advanceIdentityHw(meta, written)
-      val landed: Long =
-        if (commit(spark, root, s0.version + 1, finalMeta, newEntries)) s0.version + 1
-        else rebaseCommit(spark, root, s0, finalMeta,
-          removed = s0.entries.filter(e => tombstoned.contains(e.rel)),
-          written = tombstoned.values.filter(_ != null).toSeq ++ written,
-          mayMatch = mayMatch, dvMerge = notMatched.isEmpty)
-          .getOrElse(throw new IllegalArgumentException(
-            s"LakeTable.mergeClausesMor: concurrent commit at $root (retry on a fresh snapshot)"))
-      MergeStats(landed,
-        matchedPartitions = sidecars.map(h => byKey(h._1).part).distinct.length,
-        filesRewritten = tombstoned.size,
-        filesCarried = s0.entries.size - tombstoned.size,
-        filesWritten = written.size,
-        filesProbed = probeEntries.size)
+      // lost race → metadata-only rebase; an identity high-water advance
+      // changes meta, which condition 1 refuses — those tables keep the
+      // recompute. dvMerge only WITHOUT insert clauses: a winner's
+      // tombstone on a target row we matched but did not fire flips that
+      // source row's sequential classification to NOT MATCHED — our fate
+      // join decided "no insert" against state the winner changed, and
+      // position disjointness cannot see it (we hold no position for an
+      // unfired row)
+      landTombstones(spark, root, verb, s0, advanceIdentityHw(meta, written), probeEntries,
+        sidecars, written, mayMatch, dvMerge = notMatched.isEmpty, preCommit)
     } finally work.unpersist()
   }
-
-  /** [[mergeClausesMor]] with the standard optimistic-retry loop. */
-  def mergeClausesMorWithRetry(
-      spark: SparkSession,
-      root: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      matched: Seq[MergeBranch],
-      notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch] = Nil,
-      partitionCol: String,
-      maxRetries: Int = 3,
-      metaUpdate: TableMeta => TableMeta = identity): MergeStats =
-    withCommitRetry(maxRetries)(retriesLeft =>
-      try Some(mergeClausesMor(spark, root, source, keyCols, matched, notMatched,
-        notMatchedBySource, partitionCol, metaUpdate))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("concurrent commit") &&
-              retriesLeft > 0 => None
-      })
 
   // ---- OPTIMIZE (compaction) -----------------------------------------
 
@@ -4467,21 +4251,8 @@ object LakeTable {
       // compacts the hot partitions. Conservative by construction: an
       // unprunable predicate shape keeps groups in (compacting more
       // than asked is content-preserving; losing a group is not).
-      where: Option[String] = None): MergeStats =
-    optimizeImpl(spark, root, minFilesPerPartition, maxRecordsPerFile, maxRetries, () => (),
-      sortCols, zorderCols, where)
-
-  @annotation.tailrec
-  private[graft] def optimizeImpl(
-      spark: SparkSession,
-      root: String,
-      minFilesPerPartition: Int,
-      maxRecordsPerFile: Long,
-      maxRetries: Int,
-      preCommit: () => Unit,
-      sortCols: Seq[String] = Nil,
-      zorderCols: Seq[String] = Nil,
-      where: Option[String] = None): MergeStats = {
+      where: Option[String] = None,
+      preCommit: () => Unit = () => ()): MergeStats = retryOnConflict(maxRetries) {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.optimize: no committed snapshot at $root")
     val meta = s0.meta.get
@@ -4531,55 +4302,29 @@ object LakeTable {
         compactParts0 & scoped
       }
     }
-    if (compactParts.isEmpty)
-      return MergeStats(s0.version, 0, 0, s0.entries.size, 0)
-    val (rewrite, carry) = s0.entries.partition(e => compactParts.contains((e.spec, e.part)))
-    val df = readEntries(spark, root, meta.schema, rewrite)
-    // already-validated rows being compacted — no CHECK re-validation
-    val written = writeBatch(spark, root, df, meta, maxRecordsPerFile, sortCols, zorderCols,
-      enforceChecks = false)
-    preCommit()
-    val ok = commit(spark, root, s0.version + 1, meta, carry ++ written)
-    if (ok)
-      MergeStats(s0.version + 1, compactParts.size, rewrite.size, carry.size, written.size)
+    if (compactParts.isEmpty) unchanged(s0, -1)
     else {
+      val (rewrite, carry) = s0.entries.partition(e => compactParts.contains((e.spec, e.part)))
+      val df = readEntries(spark, root, meta.schema, rewrite)
+      // already-validated rows being compacted — no CHECK re-validation
+      val written = writeBatch(spark, root, df, meta, maxRecordsPerFile, sortCols, zorderCols,
+        enforceChecks = false)
+      preCommit()
       // lost race → metadata-only rebase: compaction never needs the
       // winner's new files (compacting fewer groups than a fresh run is
       // content-preserving), so the only conditions are untouched
       // metadata and a byte-identical rewrite set at head
-      rebaseCommit(spark, root, s0, meta, rewrite, written, _ => false) match {
-        case Some(v) =>
-          MergeStats(v, compactParts.size, rewrite.size, carry.size, written.size)
-        case None =>
-          require(maxRetries > 0,
-            s"LakeTable.optimize: concurrent commit at $root (retries exhausted)")
-          optimizeImpl(spark, root, minFilesPerPartition, maxRecordsPerFile, maxRetries - 1,
-            preCommit, sortCols, zorderCols, where)
-      }
+      val landed =
+        if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
+        else rebaseCommit(spark, root, s0, meta, rewrite, written, _ => false).getOrElse(
+          throw new CommitConflict(
+            s"LakeTable.optimize: concurrent commit at $root (retries exhausted)"))
+      MergeStats(landed, compactParts.size, rewrite.size, carry.size, written.size)
     }
   }
 
   // ---- CDC -----------------------------------------------------------
 
-  /** Row-level change-data feed between two committed versions, derived
-    * from the manifests alone: files present in both versions changed
-    * nothing (COW never edits a file in place), so only `vFrom`-only
-    * files (pre-images) and `vTo`-only files (post-images) are read.
-    * Joining the two slices on `keyCols` classifies each key:
-    *
-    *   - key only in the new slice          → `insert`
-    *   - key only in the old slice          → `delete`
-    *   - both, any column changed           → `update_preimage` +
-    *                                          `update_postimage`
-    *   - both, row identical (the file was rewritten for a NEIGHBOR in
-    *     its partition — COW granularity)   → suppressed
-    *
-    * Output columns are `vTo`'s schema (pre-images padded with NULL for
-    * since-added columns) plus `_change_type` — the feed a downstream
-    * incremental consumer replays. Requires `keyCols` to be unique per
-    * version, which MERGE maintains. Cost scales with the CHANGED slice,
-    * never the table.
-    */
   /** The raw signed row-multiset diff between two versions: every row
     * that LEFT the table in `(vFrom, vTo]` carries `_sign = -1`, every
     * row that ENTERED carries `_sign = +1` — computed file-wise
@@ -4632,6 +4377,25 @@ object LakeTable {
       case _ => c
     }
 
+  /** Row-level change-data feed between two committed versions, derived
+    * from the manifests alone: files present in both versions changed
+    * nothing (COW never edits a file in place), so only `vFrom`-only
+    * files (pre-images) and `vTo`-only files (post-images) are read.
+    * Joining the two slices on `keyCols` classifies each key:
+    *
+    *   - key only in the new slice          → `insert`
+    *   - key only in the old slice          → `delete`
+    *   - both, any column changed           → `update_preimage` +
+    *                                          `update_postimage`
+    *   - both, row identical (the file was rewritten for a NEIGHBOR in
+    *     its partition — COW granularity)   → suppressed
+    *
+    * Output columns are `vTo`'s schema (pre-images padded with NULL for
+    * since-added columns) plus `_change_type` — the feed a downstream
+    * incremental consumer replays. Requires `keyCols` to be unique per
+    * version, which MERGE maintains. Cost scales with the CHANGED slice,
+    * never the table.
+    */
   def tableChanges(
       spark: SparkSession,
       root: String,
@@ -4976,8 +4740,9 @@ object LakeTable {
       s"LakeTable.fastForward: main is at v${m0.version} but branch '$name' forked " +
         s"at v$base — main has advanced, the branch is not a linear descendant " +
         "(rebase the branch or merge manually)")
-    require(commit(spark, r, m0.version + 1, bs.meta.get, bs.entries),
-      s"LakeTable.fastForward: concurrent commit at $r (retry on a fresh snapshot)")
+    if (!commit(spark, r, m0.version + 1, bs.meta.get, bs.entries))
+      throw new CommitConflict(
+        s"LakeTable.fastForward: concurrent commit at $r (retry on a fresh snapshot)")
     writeBranchBase(spark, r, name, m0.version + 1, replace = true)
     m0.version + 1
   }

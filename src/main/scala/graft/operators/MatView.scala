@@ -78,6 +78,12 @@ object MatView {
   // same way mv.where commutes with the fact diff
   private val PropDimWhere = "mv.dimWhere"
 
+  /** A refresh whose watermark went stale under it: a concurrent refresh
+    * already applied (at least) this window, so the refresh restarts
+    * from the new watermark instead of double-applying its delta.
+    */
+  private final class StaleRefresh(msg: String) extends RuntimeException(msg)
+
   def parseAggs(s: String): Seq[Agg] = s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map {
     case "cnt" => Agg("cnt", "")
     case a => a.split(":") match {
@@ -384,8 +390,9 @@ object MatView {
     // mergeClauses re-runs metaUpdate on every retry snapshot, so the
     // check rides the same atomic commit.
     val stamp = (m: LakeTable.TableMeta) => {
-      require(m.props.get(PropVersion).contains(last.toString),
-        s"MatView.refresh: stale refresh watermark (view advanced past $last concurrently)")
+      if (!m.props.get(PropVersion).contains(last.toString))
+        throw new StaleRefresh(
+          s"MatView.refresh: stale refresh watermark (view advanced past $last concurrently)")
       m.copy(props = m.props + (PropVersion -> head.toString))
     }
     val deltaOnly = aggs.forall(a => Set("cnt", "sum", "avg")(a.fn))
@@ -411,13 +418,12 @@ object MatView {
     try {
       // nullSafeKeys: GROUP BY treats NULL as a real group — the view
       // merge must match it, or every refresh re-inserts the NULL group
-      LakeTable.mergeClausesWithRetry(
+      LakeTable.mergeClauses(
         spark, mvRoot, source, keys, matched, notMatched, Nil,
         partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
       head
     } catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null && e.getMessage.contains("stale refresh watermark") =>
+      case _: StaleRefresh =>
         // a concurrent refresh covered our window — restart from its
         // watermark (terminates: the watermark strictly advances)
         refresh(spark, mvRoot)
@@ -462,9 +468,10 @@ object MatView {
     val changes = (term1.toSeq ++ term2.toSeq).reduce(_.unionByName(_))
 
     val stamp = (m: LakeTable.TableMeta) => {
-      require(m.props.get(PropVersion).contains(lastF.toString) &&
-        m.props.get(PropDimVersion).contains(lastD.toString),
-        s"MatView.refresh: stale refresh watermark (view advanced past $lastF/$lastD concurrently)")
+      if (!m.props.get(PropVersion).contains(lastF.toString) ||
+          !m.props.get(PropDimVersion).contains(lastD.toString))
+        throw new StaleRefresh(
+          s"MatView.refresh: stale refresh watermark (view advanced past $lastF/$lastD concurrently)")
       m.copy(props = m.props +
         (PropVersion -> headF.toString) + (PropDimVersion -> headD.toString))
     }
@@ -484,13 +491,12 @@ object MatView {
         (keys.map(k => k -> col(s"__s_$k")) ++
           stored.map(c => c -> insertValue(deltaOnly, c))).toMap)))
     try {
-      LakeTable.mergeClausesWithRetry(
+      LakeTable.mergeClauses(
         spark, mvRoot, source, keys, matched, notMatched, Nil,
         partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
       headF
     } catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null && e.getMessage.contains("stale refresh watermark") =>
+      case _: StaleRefresh =>
         refresh(spark, mvRoot)
     }
   }

@@ -102,14 +102,9 @@ object LakeDmlStrategy extends SparkStrategy {
       val condExpr = byNameExpr(condition, "DELETE", target = Some(tgt))
       LakeDmlExec("delete", () => {
         val spark = SparkSession.active
+        // the table's deleteMode picks the strategy inside the verb
         withSubqueryMaterializer(spark) { toCol =>
-          // deleteMode=mor records deletion vectors instead of rewriting
-          // files (same result, O(matched) commit) — the table property
-          // picks the strategy, the SQL face is identical
-          if (t.meta.deleteMode == "mor")
-            LakeTable.deleteMorWithRetry(spark, t.root, toCol(condExpr), t.meta.partitionCol)
-          else
-            LakeTable.deleteWithRetry(spark, t.root, toCol(condExpr), t.meta.partitionCol)
+          LakeTable.delete(spark, t.root, toCol(condExpr), t.meta.partitionCol)
         }
       }) :: Nil
     case _ => Nil
@@ -590,19 +585,7 @@ object LakeDmlStrategy extends SparkStrategy {
       val spark = SparkSession.active
       val src = GraftColumnBridge.ofRows(spark, projected)
       cardinalityCheck(src, keyCols)
-      if (t.meta.deleteMode == "mor") {
-        // source-wins on a MOR table: express the upsert as one
-        // unconditional matched-UPDATE + insert clause pair over the
-        // MOR clause merge — matched rows tombstone + re-append, files
-        // without matches stay byte-identical
-        import org.apache.spark.sql.functions.col
-        val withS = src.columns.foldLeft(src)((d, c) => d.withColumn("__s_" + c, col(c)))
-        val values = Some(targetCols.map(c => c -> col("__s_" + c)).toMap)
-        LakeTable.mergeClausesMorWithRetry(spark, t.root, withS, keyCols,
-          Seq(LakeTable.MergeBranch(None, values)),
-          Seq(LakeTable.MergeBranch(None, values)),
-          partitionCol = t.meta.partitionCol)
-      } else LakeTable.mergeWithRetry(spark, t.root, src, keyCols, t.meta.partitionCol)
+      LakeTable.merge(spark, t.root, src, keyCols, t.meta.partitionCol)
     })
   }
 
@@ -724,19 +707,9 @@ object LakeDmlStrategy extends SparkStrategy {
         // rows (Delta permits dup UNMATCHED inserts; we trade that corner
         // for a crisp refusal instead of corruption)
         cardinalityCheck(src, keyCols)
-        // deleteMode=mor: fired matched AND by-source rows tombstone
-        // into DV sidecars; postimages/inserts append — one commit, no
-        // file rewrite. A by-source clause makes the READ a full scan
-        // (every target row's fate is join-dependent) but the write
-        // stays O(fired rows).
-        if (t.meta.deleteMode == "mor")
-          LakeTable.mergeClausesMorWithRetry(
-            spark, t.root, src, keyCols, mBr.map(mk), nBr.map(mk), sBr.map(mk),
-            t.meta.partitionCol)
-        else
-          LakeTable.mergeClausesWithRetry(
-            spark, t.root, src, keyCols, mBr.map(mk), nBr.map(mk), sBr.map(mk),
-            t.meta.partitionCol)
+        LakeTable.mergeClauses(
+          spark, t.root, src, keyCols, mBr.map(mk), nBr.map(mk), sBr.map(mk),
+          t.meta.partitionCol)
       }
     })
   }
@@ -765,10 +738,7 @@ object LakeDmlStrategy extends SparkStrategy {
       withSubqueryMaterializer(spark) { toCol =>
         val cond = condExpr.map(toCol).getOrElse(org.apache.spark.sql.functions.lit(true))
         val setCols = set.map { case (k, v) => k -> toCol(v) }
-        if (t.meta.deleteMode == "mor")
-          LakeTable.updateMorWithRetry(spark, t.root, cond, setCols, t.meta.partitionCol)
-        else
-          LakeTable.updateWithRetry(spark, t.root, cond, setCols, t.meta.partitionCol)
+        LakeTable.update(spark, t.root, cond, setCols, t.meta.partitionCol)
       }
     })
   }

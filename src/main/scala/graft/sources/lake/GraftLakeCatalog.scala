@@ -845,10 +845,7 @@ class GraftLakeV2Table(
         "(canDeleteWhere must gate this call)")
     val cond = filters.flatMap(GraftLakeCatalog.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (meta.deleteMode == "mor")
-      LakeTable.deleteMorWithRetry(spark, root, cond, meta.partitionCol)
-    else
-      LakeTable.deleteWithRetry(spark, root, cond, meta.partitionCol)
+    LakeTable.delete(spark, root, cond, meta.partitionCol)
   }
 }
 

@@ -615,7 +615,7 @@ object StreamOps {
             max_by(struct(valueCols.map(col): _*), struct(col(orderCol) +: keyCols.map(col): _*))
               .as("__latest"))
           .select(keyCols.map(col) ++ valueCols.map(c => col(s"__latest.$c")): _*)
-        graft.operators.LakeTable.mergeWithRetry(
+        graft.operators.LakeTable.merge(
           batch.sparkSession, root, latest, keyCols, partitionCol)
         ()
       }

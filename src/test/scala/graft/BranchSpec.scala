@@ -213,13 +213,13 @@ class BranchSpec extends SparkSpec {
 
   test("mergeBranch OR-merges disjoint deletion vectors of a shared file") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p", statsCol = Some("k"))
+    LakeTable.init(spark, root, baseDf, "p", statsCol = Some("k"), deleteMode = "mor")
     LakeTable.branch(spark, root, "dev")
     val ref = LakeTable.branchRef(root, "dev")
     // branch and main MOR-delete DISJOINT rows of the SAME files — the
     // file-level merge alone would refuse this as an overlapping rewrite
-    LakeTable.deleteMor(spark, ref, col("k") % 10 === 3, "p")
-    LakeTable.deleteMor(spark, root, col("k") % 10 === 7, "p")
+    LakeTable.delete(spark, ref, col("k") % 10 === 3, "p")
+    LakeTable.delete(spark, root, col("k") % 10 === 7, "p")
     val bdir = java.nio.file.Paths.get(root, "_manifests", "branches", "dev")
     val saved = Files.createTempDirectory("graft-dvb-save").resolve("dev")
     copyTree(bdir, saved)
@@ -241,8 +241,8 @@ class BranchSpec extends SparkSpec {
     // are idempotent — the union IS the sequential composition)
     LakeTable.branch(spark, root, "dev2")
     val ref2 = LakeTable.branchRef(root, "dev2")
-    LakeTable.deleteMor(spark, ref2, col("k") % 10 === 4, "p")
-    LakeTable.deleteMor(spark, root, col("k") === 4, "p")
+    LakeTable.delete(spark, ref2, col("k") % 10 === 4, "p")
+    LakeTable.delete(spark, root, col("k") === 4, "p")
     LakeTable.mergeBranch(spark, root, "dev2")
     val after = LakeTable.read(spark, root)
     assert(after.count() === 42 && after.where(col("k") % 10 === 4).isEmpty)
@@ -251,8 +251,8 @@ class BranchSpec extends SparkSpec {
     // were derived from rows main killed
     LakeTable.branch(spark, root, "dev3")
     val ref3 = LakeTable.branchRef(root, "dev3")
-    LakeTable.updateMor(spark, ref3, col("k") % 10 === 5, Map("v" -> lit(1L)), "p")
-    LakeTable.deleteMor(spark, root, col("k") === 5, "p")
+    LakeTable.update(spark, ref3, col("k") % 10 === 5, Map("v" -> lit(1L)), "p")
+    LakeTable.delete(spark, root, col("k") === 5, "p")
     val e = intercept[IllegalStateException](LakeTable.mergeBranch(spark, root, "dev3"))
     assert(e.getMessage.contains("OVERLAPPING"), e.getMessage)
   }
@@ -266,7 +266,7 @@ class BranchSpec extends SparkSpec {
     // written — the delta has no landed-merge anchor
     LakeTable.delete(spark, ref, col("p") === "0", "p")
     // main concurrently rewrites rows INSIDE that read set
-    LakeTable.updateWithRetry(spark, root,
+    LakeTable.update(spark, root,
       col("p") === "0" && col("k") < 10, Map("v" -> lit(0L)), "p")
     val e = intercept[IllegalStateException](LakeTable.mergeBranch(spark, root, "dev"))
     assert(e.getMessage.contains("OVERLAPPING"), e.getMessage)

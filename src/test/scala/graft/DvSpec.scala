@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dv, LakeTable}
+import graft.operators.{CommitConflict, Dv, LakeTable}
 
 /** Deletion vectors (merge-on-read deletes): the write-fast delete path.
   * Pins the properties the oracle can't see — data files UNTOUCHED by a
@@ -33,10 +33,10 @@ class DvSpec extends SparkSpec {
 
   test("MOR delete: rows vanish from reads while data files stay untouched") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
     val relsBefore = LakeTable.snapshot(spark, root).entries.map(_.rel).toSet
 
-    val stats = LakeTable.deleteMor(spark, root, col("k") % 10 === 7, "p")
+    val stats = LakeTable.delete(spark, root, col("k") % 10 === 7, "p")
     assert(stats.version === 2)
     assert(stats.filesWritten === 0, "a MOR delete writes no data rows")
 
@@ -76,7 +76,7 @@ class DvSpec extends SparkSpec {
       .unionByName(spark.range(1000, 1005).select(
         col("id").as("k"), lit("9").as("p"), (col("id") * 10).as("v")))
     val withS = src.columns.foldLeft(src)((d, c) => d.withColumn("__s_" + c, col(c)))
-    val stats = LakeTable.mergeClausesMor(spark, root, withS, Seq("k"),
+    val stats = LakeTable.mergeClauses(spark, root, withS, Seq("k"),
       matched = Seq(LakeTable.MergeBranch(Some(col("v") =!= col("__s_v")),
         Some(Map("v" -> col("__s_v"))))),
       notMatched = Seq(LakeTable.MergeBranch(None, Some(
@@ -118,10 +118,10 @@ class DvSpec extends SparkSpec {
     val interloper = spark.range(5000, 5010).select(
       col("id").as("k"), lit("9").as("p"), lit(1L).as("v"))
 
-    // deleteMor loses to a stats-disjoint append → metadata rebase
+    // a MOR delete loses to a stats-disjoint append → metadata rebase
     val r0 = LakeTable.mergeRebases.get()
     var fired = 0
-    val del = LakeTable.deleteMor(spark, root, col("k") < 10, "p", preCommit = () => {
+    val del = LakeTable.delete(spark, root, col("k") < 10, "p", preCommit = () => {
       fired += 1
       if (fired == 1) LakeTable.append(spark, root, interloper)
     })
@@ -135,10 +135,10 @@ class DvSpec extends SparkSpec {
     assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined),
       "the rebased delete still lands as deletion vectors")
 
-    // updateMor loses to another disjoint append → rebase again
+    // a MOR update loses to another disjoint append → rebase again
     val r1 = LakeTable.mergeRebases.get()
     var fired2 = 0
-    LakeTable.updateMor(spark, root, col("k") >= 290 && col("k") < 300,
+    LakeTable.update(spark, root, col("k") >= 290 && col("k") < 300,
       Map("v" -> lit(777L)), "p", preCommit = () => {
         fired2 += 1
         if (fired2 == 1) LakeTable.append(spark, root,
@@ -151,11 +151,11 @@ class DvSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).count() === 305)
 
     // a winner whose new file MAY match the predicate → rebase refuses,
-    // the crisp concurrent-commit error surfaces for the retry wrapper
+    // the typed conflict surfaces for the retry loop (one attempt here)
     val r2 = LakeTable.mergeRebases.get()
     var fired3 = 0
-    val e = intercept[IllegalArgumentException](
-      LakeTable.deleteMor(spark, root, col("k") === 50, "p", preCommit = () => {
+    val e = intercept[CommitConflict](
+      LakeTable.delete(spark, root, col("k") === 50, "p", maxRetries = 0, preCommit = () => {
         fired3 += 1
         if (fired3 == 1) LakeTable.append(spark, root,
           Seq((50L, "9", 5L)).toDF("k", "p", "v"))
@@ -172,10 +172,10 @@ class DvSpec extends SparkSpec {
     // force the loser into a full recompute
     val r0 = LakeTable.mergeRebases.get()
     var fired = 0
-    val del = LakeTable.deleteMor(spark, root, col("k") % 10 === 3, "p",
+    val del = LakeTable.delete(spark, root, col("k") % 10 === 3, "p",
       preCommit = () => {
         fired += 1
-        if (fired == 1) LakeTable.deleteMor(spark, root, col("k") % 10 === 7, "p")
+        if (fired == 1) LakeTable.delete(spark, root, col("k") % 10 === 7, "p")
       })
     assert(fired === 1, "the loser must land via DV-merge rebase, not recompute")
     assert(LakeTable.mergeRebases.get() === r0 + 1)
@@ -187,13 +187,13 @@ class DvSpec extends SparkSpec {
     assert(LakeTable.snapshot(spark, root).entries.flatMap(_.dv).map(_.card).sum === 60,
       "one OR-merged vector per file carries both ops' tombstones")
 
-    // disjoint updateMor vs deleteMor on the same files also merges
+    // a disjoint MOR update vs MOR delete on the same files also merges
     val r1 = LakeTable.mergeRebases.get()
     var fired2 = 0
-    LakeTable.updateMor(spark, root, col("k") % 10 === 1, Map("v" -> lit(999L)), "p",
+    LakeTable.update(spark, root, col("k") % 10 === 1, Map("v" -> lit(999L)), "p",
       preCommit = () => {
         fired2 += 1
-        if (fired2 == 1) LakeTable.deleteMor(spark, root, col("k") % 10 === 9, "p")
+        if (fired2 == 1) LakeTable.delete(spark, root, col("k") % 10 === 9, "p")
       })
     assert(fired2 === 1 && LakeTable.mergeRebases.get() === r1 + 1)
     val after = LakeTable.read(spark, root)
@@ -205,11 +205,11 @@ class DvSpec extends SparkSpec {
     // postimages were computed against rows the winner killed
     val r2 = LakeTable.mergeRebases.get()
     var fired3 = 0
-    val e = intercept[IllegalArgumentException](
-      LakeTable.updateMor(spark, root, col("k") % 10 === 2, Map("v" -> lit(1L)), "p",
-        preCommit = () => {
+    val e = intercept[CommitConflict](
+      LakeTable.update(spark, root, col("k") % 10 === 2, Map("v" -> lit(1L)), "p",
+        maxRetries = 0, preCommit = () => {
           fired3 += 1
-          if (fired3 == 1) LakeTable.deleteMor(spark, root, col("k") === 2, "p")
+          if (fired3 == 1) LakeTable.delete(spark, root, col("k") === 2, "p")
         }))
     assert(e.getMessage.contains("concurrent commit"))
     assert(LakeTable.mergeRebases.get() === r2, "overlap must recompute, not merge")
@@ -221,18 +221,18 @@ class DvSpec extends SparkSpec {
     def withS(df: org.apache.spark.sql.DataFrame) =
       df.columns.foldLeft(df)((d, c) => d.withColumn("__s_" + c, col(c)))
 
-    // a delete-only clause family racing a DISJOINT deleteMor on the
+    // a delete-only clause family racing a DISJOINT MOR delete on the
     // same files -> DV-merge rebase (no postimages, no classification
     // to flip)
     val r0 = LakeTable.mergeRebases.get()
     var fired = 0
-    LakeTable.mergeClausesMor(spark, root,
+    LakeTable.mergeClauses(spark, root,
       withS(baseDf.where(col("k") % 10 === 0)), Seq("k"),
       matched = Seq(LakeTable.MergeBranch(None, None)), // MATCHED DELETE
       notMatched = Nil, notMatchedBySource = Nil, partitionCol = "p",
       preCommit = () => {
         fired += 1
-        if (fired == 1) LakeTable.deleteMor(spark, root, col("k") % 10 === 7, "p")
+        if (fired == 1) LakeTable.delete(spark, root, col("k") % 10 === 7, "p")
       })
     assert(fired === 1 && LakeTable.mergeRebases.get() === r0 + 1)
     val got = LakeTable.read(spark, root)
@@ -244,16 +244,16 @@ class DvSpec extends SparkSpec {
     // source row's sequential classification to NOT MATCHED
     val r1 = LakeTable.mergeRebases.get()
     var fired2 = 0
-    val e = intercept[IllegalArgumentException](
-      LakeTable.mergeClausesMor(spark, root,
+    val e = intercept[CommitConflict](
+      LakeTable.mergeClauses(spark, root,
         withS(baseDf.where(col("k") % 10 === 1)), Seq("k"),
         matched = Seq(LakeTable.MergeBranch(None, None)),
         notMatched = Seq(LakeTable.MergeBranch(None, Some(Map(
           "k" -> col("__s_k"), "p" -> col("__s_p"), "v" -> col("__s_v"))))),
         notMatchedBySource = Nil, partitionCol = "p",
-        preCommit = () => {
+        maxRetries = 0, preCommit = () => {
           fired2 += 1
-          if (fired2 == 1) LakeTable.deleteMor(spark, root, col("k") % 10 === 9, "p")
+          if (fired2 == 1) LakeTable.delete(spark, root, col("k") % 10 === 9, "p")
         }))
     assert(e.getMessage.contains("concurrent commit"), e.getMessage)
     assert(LakeTable.mergeRebases.get() === r1, "insert clauses must not DV-merge")
@@ -267,9 +267,9 @@ class DvSpec extends SparkSpec {
     // re-deleting dead rows is idempotent — no recompute, no new rows
     val r0 = LakeTable.mergeRebases.get()
     var fired = 0
-    LakeTable.deleteMor(spark, root, col("k") % 10 === 3, "p", preCommit = () => {
+    LakeTable.delete(spark, root, col("k") % 10 === 3, "p", preCommit = () => {
       fired += 1
-      if (fired == 1) LakeTable.deleteMor(spark, root, col("k") % 5 === 3, "p")
+      if (fired == 1) LakeTable.delete(spark, root, col("k") % 5 === 3, "p")
     })
     assert(fired === 1 && LakeTable.mergeRebases.get() === r0 + 1)
     val got = LakeTable.read(spark, root)
@@ -279,23 +279,23 @@ class DvSpec extends SparkSpec {
 
   test("overlapping second delete unions vectors; re-delete of dead rows commits nothing") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
-    LakeTable.deleteMor(spark, root, col("k") < 50, "p")
-    val s2 = LakeTable.deleteMor(spark, root, col("k") < 80, "p") // overlaps [0,50)
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
+    LakeTable.delete(spark, root, col("k") < 50, "p")
+    val s2 = LakeTable.delete(spark, root, col("k") < 80, "p") // overlaps [0,50)
     assert(s2.version === 3)
     assert(LakeTable.read(spark, root).count() === 220)
     assert(LakeTable.snapshot(spark, root).entries.flatMap(_.dv).map(_.card).sum === 80)
     // every matching row is already dead -> no live hit, NO new commit
-    val s3 = LakeTable.deleteMor(spark, root, col("k") < 80, "p")
+    val s3 = LakeTable.delete(spark, root, col("k") < 80, "p")
     assert(s3.version === 3, "an all-dead re-delete must not commit a version")
   }
 
   test("a file whose every row dies drops from the manifest entirely") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
     val filesBefore = LakeTable.snapshot(spark, root).entries.size
     // partition "1" holds exactly the k % 3 == 1 rows: kill them all
-    LakeTable.deleteMor(spark, root, col("p") === "1", "p")
+    LakeTable.delete(spark, root, col("p") === "1", "p")
     val snap = LakeTable.snapshot(spark, root)
     assert(!snap.entries.exists(_.part == "1"), "fully-dead files drop, no tombstones")
     assert(snap.entries.size < filesBefore)
@@ -305,8 +305,8 @@ class DvSpec extends SparkSpec {
 
   test("time travel reads across a DV commit; RESTORE resurrects") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
-    LakeTable.deleteMor(spark, root, col("k") >= 200, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
+    LakeTable.delete(spark, root, col("k") >= 200, "p")
     assert(LakeTable.readVersion(spark, root, 1).count() === 300,
       "the pre-delete snapshot must still read every row")
     assert(LakeTable.readVersion(spark, root, 2).count() === 200)
@@ -321,14 +321,15 @@ class DvSpec extends SparkSpec {
 
   test("CDC classifies a DV delete; COW update and OPTIMIZE materialize vectors") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
-    LakeTable.deleteMor(spark, root, col("k") % 10 === 3, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
+    LakeTable.delete(spark, root, col("k") % 10 === 3, "p")
     val feed = LakeTable.tableChanges(spark, root, 1, 2, Seq("k"))
     assert(feed.where(col("_change_type") === "delete").count() === 30)
     assert(feed.where(col("_change_type") =!= "delete").isEmpty)
     assert(feed.where(col("k") % 10 =!= 3).isEmpty, "only the killed rows appear")
 
     // a COW UPDATE over DV'd files applies the vector and materializes it
+    LakeTable.alterTable(spark, root, deleteMode = Some("cow"))
     LakeTable.update(spark, root, col("k") % 10 === 4, Map("v" -> lit(-1L)), "p")
     val afterUpdate = LakeTable.snapshot(spark, root)
     assert(afterUpdate.entries.forall(_.dv.isEmpty),
@@ -338,7 +339,8 @@ class DvSpec extends SparkSpec {
     assert(got.where(col("v") === -1L).count() === 30)
 
     // OPTIMIZE materializes remaining vectors even in 1-file partitions
-    LakeTable.deleteMor(spark, root, col("k") % 10 === 5, "p")
+    LakeTable.alterTable(spark, root, deleteMode = Some("mor"))
+    LakeTable.delete(spark, root, col("k") % 10 === 5, "p")
     LakeTable.optimize(spark, root, minFilesPerPartition = 1000000)
     val afterOpt = LakeTable.snapshot(spark, root)
     assert(afterOpt.entries.forall(_.dv.isEmpty))
@@ -348,12 +350,12 @@ class DvSpec extends SparkSpec {
 
   test("vacuum reclaims superseded vectors, keeps live ones; manifest claims format 3 only with a DV") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
     val v1Text = new String(Files.readAllBytes(
       java.nio.file.Paths.get(root, "_manifests", "v1.manifest")), "UTF-8")
     assert(v1Text.startsWith("#format=1"), "a DV-free table stays format 1")
 
-    LakeTable.deleteMor(spark, root, col("k") % 2 === 0, "p")
+    LakeTable.delete(spark, root, col("k") % 2 === 0, "p")
     val v2Text = new String(Files.readAllBytes(
       java.nio.file.Paths.get(root, "_manifests", "v2.manifest")), "UTF-8")
     assert(v2Text.startsWith("#format=3"), "a DV'd manifest must gate old readers")
@@ -370,7 +372,7 @@ class DvSpec extends SparkSpec {
     assert(left.isEmpty, s"superseded vectors must be reclaimed, found ${left.toSeq}")
 
     // and a LIVE vector survives a vacuum
-    LakeTable.deleteMor(spark, root, col("k") === 1, "p")
+    LakeTable.delete(spark, root, col("k") === 1, "p")
     LakeTable.vacuum(spark, root, retainMillis = 0L, keepVersions = 1)
     val liveNow = LakeTable.snapshot(spark, root).entries.flatMap(_.dv).map(_.rel)
     assert(liveNow.size === 1)
@@ -380,10 +382,10 @@ class DvSpec extends SparkSpec {
 
   test("MOR update: tombstone + append in one commit; COW semantics preserved") {
     val root = freshRoot()
-    LakeTable.init(spark, root, baseDf, "p")
+    LakeTable.init(spark, root, baseDf, "p", deleteMode = "mor")
     val relsBefore = LakeTable.snapshot(spark, root).entries.map(_.rel).toSet
 
-    val stats = LakeTable.updateMor(spark, root, col("k") % 10 === 7,
+    val stats = LakeTable.update(spark, root, col("k") % 10 === 7,
       Map("v" -> (col("v") + 1L)), "p")
     assert(stats.version === 2)
     assert(stats.filesWritten > 0, "updated copies append as a new batch")
@@ -399,13 +401,13 @@ class DvSpec extends SparkSpec {
     assert(LakeTable.countRows(spark, root) === Some(300L))
 
     // swap semantics: assignments read the PRE-update row
-    LakeTable.updateMor(spark, root, col("k") === 0,
+    LakeTable.update(spark, root, col("k") === 0,
       Map("v" -> col("k"), "k" -> col("v")), "p")
     assert(LakeTable.read(spark, root).where(col("v") === 0L).select("k").head.getLong(0) === 0L)
 
     // partition-moving assignment: the appended copy lands in the new
     // partition, the tombstoned original stays put
-    LakeTable.updateMor(spark, root, col("k") === 5, Map("p" -> lit("9")), "p")
+    LakeTable.update(spark, root, col("k") === 5, Map("p" -> lit("9")), "p")
     val moved = LakeTable.read(spark, root).where(col("k") === 5)
     assert(moved.count() === 1 && moved.select("p").head.getString(0) === "9")
     assert(LakeTable.countByPartition(spark, root).get("9") === 1L)
@@ -421,11 +423,43 @@ class DvSpec extends SparkSpec {
     // RANGED partitions (p = k / 100) so per-file k stats are tight
     // non-overlapping intervals the pruner can act on
     val ranged = baseDf.withColumn("p", (col("k") / 100).cast("long").cast("string"))
-    LakeTable.init(spark, root, ranged, "p", statsCols = Seq("k"))
+    LakeTable.init(spark, root, ranged, "p", statsCols = Seq("k"), deleteMode = "mor")
     val total = LakeTable.snapshot(spark, root).entries.size
-    val stats = LakeTable.deleteMor(spark, root, col("k") === 5, "p")
+    val stats = LakeTable.delete(spark, root, col("k") === 5, "p")
     assert(stats.filesProbed < total,
       s"point delete must probe a pruned subset (probed ${stats.filesProbed} of $total)")
     assert(LakeTable.read(spark, root).count() === 299)
+  }
+
+  test("null-safe MOR clause merge prunes by key stats unless the source carries a NULL key") {
+    val root = freshRoot()
+    import spark.implicits._
+    val ranged = baseDf.select(
+      col("k").cast("string").as("g"),
+      (col("k") / 100).cast("long").cast("string").as("p"), col("v"))
+      .union(Seq((Option.empty[String], "0", -1L)).toDF("g", "p", "v"))
+    LakeTable.init(spark, root, ranged, "p", statsCols = Seq("g"), deleteMode = "mor")
+    val total = LakeTable.snapshot(spark, root).entries.size
+    val bump = Seq(LakeTable.MergeBranch(None, Some(Map("v" -> (col("__s_v") + 1L)))))
+    def src(keys: Option[String]*) = keys.map(k => (k, 0L)).toDF("g", "v")
+      .withColumn("__s_g", col("g")).withColumn("__s_v", col("v"))
+
+    // no NULL key in the batch: the stats probe still prunes
+    val s1 = LakeTable.mergeClauses(spark, root, src(Some("5")), Seq("g"),
+      matched = bump, notMatched = Nil, partitionCol = "p", nullSafeKeys = true)
+    assert(s1.filesProbed < total,
+      s"a NULL-free batch must probe a pruned subset (probed ${s1.filesProbed} of $total)")
+    // a NULL key lies outside every bound: every file is probed, and the
+    // NULL group matches (<=>) instead of being skipped
+    val live = LakeTable.snapshot(spark, root).entries.size
+    val s2 = LakeTable.mergeClauses(spark, root, src(None), Seq("g"),
+      matched = bump, notMatched = Nil, partitionCol = "p", nullSafeKeys = true)
+    assert(s2.filesProbed === live)
+    val got = LakeTable.read(spark, root)
+    assert(got.count() === 301)
+    assert(got.where(col("g") === "5").head.getAs[Long]("v") === 1L)
+    assert(got.where(col("g").isNull).head.getAs[Long]("v") === 1L)
+    assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined),
+      "the merges must have taken the MOR arm")
   }
 }

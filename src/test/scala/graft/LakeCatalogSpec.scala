@@ -604,6 +604,36 @@ class LakeCatalogSpec extends SparkSpec {
     assert(e3 != null)
   }
 
+  test("key-upsert merge on a mor table keeps matched IDENTITY values, allocates inserted ones") {
+    n += 1
+    val t = s"graft.db.t$n"
+    val _ = wh
+    val root = s"$wh/db/t$n"
+    spark.sql(s"CREATE TABLE $t (k BIGINT, p STRING, v BIGINT, " +
+      "id BIGINT GENERATED ALWAYS AS IDENTITY) PARTITIONED BY (p) " +
+      "TBLPROPERTIES (statsCols 'k', deleteMode 'mor')")
+    spark.sql(s"INSERT INTO $t (k, p, v) SELECT id, cast(id % 3 AS string), id FROM range(30)")
+    def rows(): Map[Long, (Long, Long)] = spark.sql(s"SELECT k, v, id FROM $t").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val before = rows()
+
+    import spark.implicits._
+    LakeTable.merge(spark, root,
+      Seq((5L, "2", 500L), (100L, "1", 1000L)).toDF("k", "p", "v"), Seq("k"), "p")
+    assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined),
+      "the merge must have taken the MOR arm")
+    val after = rows()
+    assert(after.size === 31)
+    assert(after(5L) === ((500L, before(5L)._2)), "a matched row keeps its identity value")
+    assert(after(100L)._2 > before.values.map(_._2).max, "an insert allocates beyond the mark")
+    assert(after.values.map(_._2).toSet.size === 31, "identity values stay unique")
+
+    // GENERATED ALWAYS: explicit source values refuse, as on the COW arm
+    val e = intercept[IllegalArgumentException](LakeTable.merge(spark, root,
+      Seq((6L, "0", 1L, 7L)).toDF("k", "p", "v", "id"), Seq("k"), "p"))
+    assert(e.getMessage.contains("IDENTITY"))
+  }
+
   test("ALTER COLUMN SET/DROP DEFAULT is metadata-only; exists-default stays frozen") {
     val t = mkTable() // k=0..29, p=k%3, v=k*10
     val root = s"$wh/db/${t.split('.').last}"
@@ -1153,6 +1183,29 @@ class LakeCatalogSpec extends SparkSpec {
       when(col("k") < 5, lit(null).cast("boolean")).otherwise(col("k") === 5L),
       Map("v" -> lit(-1L)), "p")
     assert(LakeTable.read(spark, root).where(col("v") === -1L).count() === 1)
+  }
+
+  test("deleteMode is read per statement: ALTER between two DELETEs switches COW to MOR") {
+    val t = mkTable()
+    val root = s"$wh/db/${t.stripPrefix("graft.db.")}"
+    val rels0 = LakeTable.snapshot(spark, root).entries.map(_.rel).toSet
+
+    // cow: the first DELETE rewrites the files holding a match
+    spark.sql(s"DELETE FROM $t WHERE k = 4")
+    val s1 = LakeTable.snapshot(spark, root)
+    assert(s1.entries.map(_.rel).toSet !== rels0, "a COW delete rewrites files")
+    assert(s1.entries.forall(_.dv.isEmpty), "a COW delete records no vectors")
+
+    // the property flips in a metadata-only commit; the next DELETE on
+    // the SAME table tombstones instead of rewriting
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('deleteMode'='mor')")
+    val rels1 = LakeTable.snapshot(spark, root).entries.map(_.rel).toSet
+    spark.sql(s"DELETE FROM $t WHERE k = 5")
+    val s2 = LakeTable.snapshot(spark, root)
+    assert(s2.entries.map(_.rel).toSet === rels1, "a MOR delete writes no data file")
+    assert(s2.entries.flatMap(_.dv).map(_.card).sum === 1, "k=5 lands as one tombstone")
+    assert(spark.sql(s"SELECT count(*) c FROM $t").head.getLong(0) === 28)
+    assert(spark.sql(s"SELECT count(*) c FROM $t WHERE k IN (4, 5)").head.getLong(0) === 0)
   }
 
   test("deleteMode=mor: SQL DELETE records deletion vectors; DSv2 scans filter them") {

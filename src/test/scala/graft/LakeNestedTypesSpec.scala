@@ -61,7 +61,8 @@ class LakeNestedTypesSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).count() === 10 + 20)
 
     // MOR update leaves files in place, nested SET lands through DVs
-    LakeTable.updateMor(spark, root, $"k" === 7L,
+    LakeTable.alterTable(spark, root, deleteMode = Some("mor"))
+    LakeTable.update(spark, root, $"k" === 7L,
       Map("s" -> struct(lit(700L).as("a"), lit("mor").as("b"))), "p")
     val after = LakeTable.read(spark, root)
     assert(after.where($"s.b" === "mor").select($"s.a").as[Long].head() === 700L)

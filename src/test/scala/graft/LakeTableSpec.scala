@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.operators.LakeTable
+import graft.operators.{CommitConflict, LakeTable}
 
 /** Transactional copy-on-write MERGE (LakeTable): content correctness is
   * hash-checked by q130's oracle; this spec pins the TRANSACTIONAL
@@ -70,7 +70,7 @@ class LakeTableSpec extends SparkSpec {
     // MOR delete spanning both specs: tombstones land per file (rel-keyed,
     // spec-agnostic), originals stay, counts exact
     val before = LakeTable.snapshot(spark, root).entries.map(_.rel).toSet
-    LakeTable.deleteMor(spark, root, col("k") % 10 === 5, "k")
+    LakeTable.delete(spark, root, col("k") % 10 === 5, "k")
     val s1 = LakeTable.snapshot(spark, root)
     assert(before.subsetOf(s1.entries.map(_.rel).toSet))
     assert(s1.entries.exists(_.dv.isDefined))
@@ -78,11 +78,14 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).where(col("k") % 10 === 5).count() === 0)
 
     // a branch forked AFTER evolution carries the spec history; branch
-    // DML classifies per spec like main
+    // DML classifies per spec like main — a COW delete on the branch
+    // rewrites the DV'd files of both specs
     val br = LakeTable.branchRef(root, "exp")
     LakeTable.branch(spark, root, "exp")
     assert(LakeTable.snapshot(spark, br).meta.get.priorSpecs.nonEmpty)
-    LakeTable.deleteWithRetry(spark, br, col("k") < 3, "k")
+    LakeTable.alterTable(spark, br, deleteMode = Some("cow"))
+    assert(LakeTable.delete(spark, br, col("k") < 3, "k").filesWritten > 0,
+      "the branch delete must take the COW rewrite")
     assert(LakeTable.read(spark, br).count() === 315 - 3)
     assert(LakeTable.read(spark, root).count() === 315, "main pinned untouched")
   }
@@ -99,7 +102,7 @@ class LakeTableSpec extends SparkSpec {
     val srcB = spark.range(5000, 5010).select(
       col("id").as("k"), lit("9").as("p"), lit(1L).as("v"))
     var fired = 0
-    val stats = LakeTable.mergeImpl(spark, root, srcA, Seq("k"), "p", () => {
+    val stats = LakeTable.merge(spark, root, srcA, Seq("k"), "p", preCommit = () => {
       fired += 1
       if (fired == 1) LakeTable.merge(spark, root, srcB, Seq("k"), "p")
     })
@@ -118,7 +121,7 @@ class LakeTableSpec extends SparkSpec {
     val srcA2 = baseDf.where(col("k") >= 20 && col("k") < 30).withColumn("v", lit(100L))
     val srcB2 = baseDf.where(col("k") === 25).withColumn("v", lit(200L))
     var fired2 = 0
-    LakeTable.mergeWithRetryImpl(spark, root, srcA2, Seq("k"), "p", 3, () => {
+    LakeTable.merge(spark, root, srcA2, Seq("k"), "p", maxRetries = 3, preCommit = () => {
       fired2 += 1
       if (fired2 == 1) LakeTable.merge(spark, root, srcB2, Seq("k"), "p")
     })
@@ -126,6 +129,74 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.mergeRebases.get() === r1, "no rebase on a true conflict")
     assert(LakeTable.read(spark, root).where(col("k") === 25)
       .head.getAs[Long]("v") === 100L, "A2 lands after B2, sequentially")
+  }
+
+  test("COW clause merge reaches the shared rebase tail") {
+    val root = freshRoot()
+    LakeTable.init(spark, root, baseDf, "p", statsCol = Some("k"))
+    def withS(df: org.apache.spark.sql.DataFrame) =
+      df.columns.foldLeft(df)((d, c) => d.withColumn("__s_" + c, col(c)))
+    val bump = Seq(LakeTable.MergeBranch(None, Some(Map("v" -> (col("__s_v") + 1L)))))
+
+    // a stats-disjoint winner lands BETWEEN the merge's write and its
+    // commit: one metadata re-commit, no second compute pass
+    val r0 = LakeTable.mergeRebases.get()
+    var fired = 0
+    val stats = LakeTable.mergeClauses(spark, root, withS(baseDf.where(col("k") < 10)),
+      Seq("k"), matched = bump, notMatched = Nil, partitionCol = "p", preCommit = () => {
+        fired += 1
+        if (fired == 1) LakeTable.append(spark, root, spark.range(5000, 5010).select(
+          col("id").as("k"), lit("9").as("p"), lit(1L).as("v")))
+      })
+    assert(fired === 1, "the losing clause merge must rebase, not recompute")
+    assert(LakeTable.mergeRebases.get() === r0 + 1)
+    assert(stats.version === 3)
+    val got = LakeTable.read(spark, root)
+    assert(got.count() === 310)
+    assert(got.where(col("k") < 10).agg(sum("v")).head.getLong(0) ===
+      (0 until 10).map(_ * 10L + 1).sum, "the clause update applied")
+    assert(got.where(col("k") >= 5000).count() === 10, "the winner's append survived")
+
+    // an OVERLAPPING winner (it rewrote a file of our read set) refuses
+    // the rebase: a single attempt surfaces the typed conflict
+    val r1 = LakeTable.mergeRebases.get()
+    var fired2 = 0
+    val e = intercept[CommitConflict](
+      LakeTable.mergeClauses(spark, root, withS(baseDf.where(col("k") >= 20 && col("k") < 30)),
+        Seq("k"), matched = bump, notMatched = Nil, partitionCol = "p",
+        maxRetries = 0, preCommit = () => {
+          fired2 += 1
+          if (fired2 == 1) LakeTable.merge(spark, root,
+            baseDf.where(col("k") === 25).withColumn("v", lit(200L)), Seq("k"), "p")
+        }))
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    assert(LakeTable.mergeRebases.get() === r1, "no rebase on a true conflict")
+    assert(LakeTable.read(spark, root).where(col("k") === 25).head.getAs[Long]("v") === 200L,
+      "the loser's attempt stays invisible")
+  }
+
+  test("retryOnConflict retries a typed CommitConflict only, then rethrows it") {
+    var attempts = 0
+    val e = intercept[CommitConflict](LakeTable.retryOnConflict(2) {
+      attempts += 1
+      throw new CommitConflict(s"LakeTable.test: concurrent commit (attempt $attempts)")
+    })
+    assert(attempts === 3, "one attempt plus maxRetries retries")
+    assert(e.getMessage.contains("attempt 3"), "the last conflict is rethrown")
+    var n = 0
+    assert(LakeTable.retryOnConflict(3) {
+      n += 1
+      if (n < 3) throw new CommitConflict("lost") else n
+    } === 3, "a later attempt that lands returns its result")
+    // a failure whose message merely SAYS "concurrent commit" is not a
+    // conflict: no message text is matched anywhere
+    var plain = 0
+    val iae = intercept[IllegalArgumentException](LakeTable.retryOnConflict(3) {
+      plain += 1
+      throw new IllegalArgumentException("LakeTable.merge: concurrent commit at /t")
+    })
+    assert(plain === 1, "an untyped failure propagates on the first attempt")
+    assert(iae.getMessage.contains("concurrent commit"))
   }
 
   test("lost-commit rebase covers UPDATE, DELETE and OPTIMIZE for disjoint writers") {
@@ -138,7 +209,7 @@ class LakeTableSpec extends SparkSpec {
     val interloper = spark.range(5000, 5010).select(
       col("id").as("k"), lit("9").as("p"), lit(1L).as("v"))
     var fired = 0
-    val del = LakeTable.deleteImpl(spark, root, col("k") < 10, "p", () => {
+    val del = LakeTable.delete(spark, root, col("k") < 10, "p", preCommit = () => {
       fired += 1
       if (fired == 1) LakeTable.append(spark, root, interloper)
     })
@@ -153,8 +224,8 @@ class LakeTableSpec extends SparkSpec {
     // UPDATE loses to another disjoint append → rebase again
     val r1 = LakeTable.mergeRebases.get()
     var fired2 = 0
-    val upd = LakeTable.updateImpl(spark, root, col("k") >= 290 && col("k") < 300,
-      Map("v" -> lit(777L)), "p", () => {
+    val upd = LakeTable.update(spark, root, col("k") >= 290 && col("k") < 300,
+      Map("v" -> lit(777L)), "p", preCommit = () => {
         fired2 += 1
         if (fired2 == 1) LakeTable.append(spark, root,
           spark.range(6000, 6005).select(col("id").as("k"), lit("9").as("p"), lit(2L).as("v")))
@@ -167,16 +238,17 @@ class LakeTableSpec extends SparkSpec {
 
     // UPDATE loses to a writer whose NEW file may hold a matching row
     // → the rebase refuses (the winner's rows must re-enter the probe);
-    // updateImpl surfaces the crisp concurrent-commit error the retry
-    // wrapper recomputes from
+    // a single attempt surfaces the typed conflict the retry loop
+    // recomputes from
     val r2 = LakeTable.mergeRebases.get()
     var fired3 = 0
-    val e = intercept[IllegalArgumentException](
-      LakeTable.updateImpl(spark, root, col("k") === 50, Map("v" -> lit(1L)), "p", () => {
-        fired3 += 1
-        if (fired3 == 1) LakeTable.append(spark, root,
-          Seq((50L, "9", 5L)).toDF("k", "p", "v"))
-      }))
+    val e = intercept[CommitConflict](
+      LakeTable.update(spark, root, col("k") === 50, Map("v" -> lit(1L)), "p",
+        maxRetries = 0, preCommit = () => {
+          fired3 += 1
+          if (fired3 == 1) LakeTable.append(spark, root,
+            Seq((50L, "9", 5L)).toDF("k", "p", "v"))
+        }))
     assert(e.getMessage.contains("concurrent commit"))
     assert(LakeTable.mergeRebases.get() === r2, "no rebase when the winner may match")
 
@@ -185,7 +257,7 @@ class LakeTableSpec extends SparkSpec {
     val preSum = LakeTable.read(spark, root).agg(sum("v")).head.getLong(0)
     val r3 = LakeTable.mergeRebases.get()
     var fired4 = 0
-    LakeTable.optimizeImpl(spark, root, 2, 0L, 3, () => {
+    LakeTable.optimize(spark, root, 2, 0L, 3, preCommit = () => {
       fired4 += 1
       if (fired4 == 1) LakeTable.append(spark, root,
         spark.range(7000, 7005).select(col("id").as("k"), lit("9").as("p"), lit(3L).as("v")))
@@ -214,7 +286,7 @@ class LakeTableSpec extends SparkSpec {
         .select((col("k") + 1000L * i).as("k"), col("p"), col("v"))))
     LakeTable.read(spark, root).count() // warm the new head
     val p1 = LakeTable.manifestParses.get()
-    LakeTable.deleteWithRetry(spark, root, col("k") === 1001L, "p")
+    LakeTable.delete(spark, root, col("k") === 1001L, "p")
     LakeTable.read(spark, root).count()
     val d = LakeTable.manifestParses.get() - p1
     assert(d <= 2, s"a single-commit DML + re-read must parse O(1) manifests, got $d")
@@ -265,12 +337,12 @@ class LakeTableSpec extends SparkSpec {
 
     // DML spanning both specs: every file holding a matched row is
     // classified in ITS OWN spec space
-    LakeTable.deleteWithRetry(spark, root, col("k") % 10 === 5, "k")
+    LakeTable.delete(spark, root, col("k") % 10 === 5, "k")
     assert(LakeTable.read(spark, root).count() === 400 - 40)
     assert(LakeTable.read(spark, root).where(col("k") % 10 === 5).count() === 0)
 
     // updates recompute across specs too
-    LakeTable.updateWithRetry(spark, root, col("k") === 2 || col("k") === 1002,
+    LakeTable.update(spark, root, col("k") === 2 || col("k") === 1002,
       Map("v" -> lit(-1L)), "k")
     assert(LakeTable.read(spark, root).where(col("v") === -1L).count() === 2)
 
@@ -454,7 +526,7 @@ class LakeTableSpec extends SparkSpec {
         assert(LakeTable.commit(spark, root, s.version + 1, s.meta.get, s.entries)) // the "winner"
       }
     val src = baseDf.where(col("k") < 10).withColumn("v", col("v") + 7)
-    val stats = LakeTable.mergeWithRetryImpl(spark, root, src, Seq("k"), "p", 3, steal)
+    val stats = LakeTable.merge(spark, root, src, Seq("k"), "p", maxRetries = 3, preCommit = steal)
     assert(stole, "saboteur never ran — the race was not exercised")
     assert(stats.version === 3, s"expected the retry to land v3, got v${stats.version}")
     val got = LakeTable.read(spark, root)
@@ -562,7 +634,7 @@ class LakeTableSpec extends SparkSpec {
   test("optimize WHERE under MOR: scoped DV materialization leaves other vectors standing") {
     val root = freshRoot()
     LakeTable.init(spark, root, baseDf, "p", statsCol = Some("k"), deleteMode = "mor")
-    LakeTable.deleteMor(spark, root, col("k") % 7 === 0, "p") // DVs in every partition
+    LakeTable.delete(spark, root, col("k") % 7 === 0, "p") // DVs in every partition
     val before = LakeTable.snapshot(spark, root)
     assert(before.entries.count(_.dv.isDefined) >= 3, "fixture needs DVs in each partition")
     val preSum = LakeTable.read(spark, root).agg(sum("v")).head.getLong(0)
@@ -628,7 +700,7 @@ class LakeTableSpec extends SparkSpec {
       .select((col("k") + 10000L).as("k"), col("p"), col("v"))
     val extraSum = extra.agg(sum("v")).head.getLong(0)
     LakeTable.append(spark, root, extra)
-    val raced = LakeTable.optimizeImpl(spark, root, 2, 0L, 3, steal)
+    val raced = LakeTable.optimize(spark, root, 2, 0L, 3, preCommit = steal)
     assert(stole && raced.version === LakeTable.snapshot(spark, root).version)
     assert(LakeTable.read(spark, root).agg(sum("v")).head.getLong(0) === preSum + extraSum)
   }
@@ -726,10 +798,16 @@ class LakeTableSpec extends SparkSpec {
       "p", statsCols = Seq("s"))
     val s2 = LakeTable.snapshot(spark, root2)
     assert(s2.entries.forall(e => e.min.isEmpty && e.max.isEmpty))
-    // and range pruning over the string column still prunes correctly
-    val hit = LakeTable.pruneRangeOn(s0.meta.get, s0.entries, "s", "id-0000", "id-0049")
-    assert(hit.nonEmpty && hit.size < s0.entries.size ||
-      s0.entries.size <= 3) // tiny layouts may keep all files; never zero
+    // and range pruning over the string column still prunes correctly:
+    // cluster the table into narrow k-ranged files so the string ranges
+    // of most files provably miss the probe range
+    LakeTable.optimize(spark, root, minFilesPerPartition = 1, maxRecordsPerFile = 10,
+      sortCols = Seq("k"))
+    val s1 = LakeTable.snapshot(spark, root)
+    assert(s1.entries.size > 3, s"fixture needs a multi-file layout, got ${s1.entries.size}")
+    val hit = LakeTable.pruneRangeOn(s1.meta.get, s1.entries, "s", "id-0000", "id-0049")
+    assert(hit.nonEmpty && hit.size < s1.entries.size,
+      s"string range pruning kept ${hit.size} of ${s1.entries.size} files")
   }
 
   test("per-file stats stay correct when one task writes many partition dirs") {
@@ -1166,7 +1244,7 @@ class LakeTableSpec extends SparkSpec {
     val threads = (0 until n).map { i =>
       new Thread {
         override def run(): Unit =
-          try LakeTable.mergeWithRetry(spark, root, batch(i), Seq("k"), "p", maxRetries = n * 2)
+          try LakeTable.merge(spark, root, batch(i), Seq("k"), "p", maxRetries = n * 2)
           catch { case t: Throwable => errors.add(t) }
       }
     }

@@ -53,14 +53,14 @@ class MatViewSpec extends SparkSpec {
     // inserts, a delete and an update land; one refresh folds all three
     LakeTable.append(spark,
       src, Seq((100L, "p0", 7L), (101L, "p3", 5L)).toDF("k", "p", "v"))
-    LakeTable.deleteWithRetry(spark, src, col("k") % 10 === 1, "p")
-    LakeTable.updateWithRetry(spark, src, col("k") === 2, Map("v" -> lit(9999L)), "p")
+    LakeTable.delete(spark, src, col("k") % 10 === 1, "p")
+    LakeTable.update(spark, src, col("k") === 2, Map("v" -> lit(9999L)), "p")
     val applied = MatView.refresh(spark, mv)
     assert(applied === LakeTable.snapshot(spark, src).version)
     assertInSync(src, mv, Seq("p"), Seq("sum(v)"))
 
     // group death: delete every p3 row → the group leaves the view
-    LakeTable.deleteWithRetry(spark, src, col("p") === "p3", "p")
+    LakeTable.delete(spark, src, col("p") === "p3", "p")
     MatView.refresh(spark, mv)
     assert(LakeTable.read(spark, mv).where(col("p") === "p3").count() === 0)
     assertInSync(src, mv, Seq("p"), Seq("sum(v)"))
@@ -95,7 +95,7 @@ class MatViewSpec extends SparkSpec {
       .head.getAs[Long]("sum_x") === 3L)
 
     // ...and leaves again → back to NULL (cnt stays 2: the null rows)
-    LakeTable.deleteWithRetry(spark, src, col("x").isNotNull && col("g") === "g1", "g")
+    LakeTable.delete(spark, src, col("x").isNotNull && col("g") === "g1", "g")
     MatView.refresh(spark, mv)
     val r2 = LakeTable.read(spark, mv).where(col("g") === "g1").head
     assert(r2.getAs[Any]("sum_x") === null)
@@ -115,7 +115,7 @@ class MatViewSpec extends SparkSpec {
     // delta cannot maintain; the dirty-group rescan gets it right
     val oldMax = LakeTable.read(spark, mv).where(col("p") === "p0")
       .head.getAs[Long]("max_v")
-    LakeTable.deleteWithRetry(spark, src, col("v") === oldMax && col("p") === "p0", "p")
+    LakeTable.delete(spark, src, col("v") === oldMax && col("p") === "p0", "p")
     MatView.refresh(spark, mv)
     val newMax = LakeTable.read(spark, mv).where(col("p") === "p0")
       .head.getAs[Long]("max_v")
@@ -126,7 +126,7 @@ class MatViewSpec extends SparkSpec {
     // p0/p2 rows stay identical through the refresh
     val before = LakeTable.read(spark, mv).where(col("p") =!= "p1")
       .orderBy("p").collect().toSeq
-    LakeTable.deleteWithRetry(spark, src, col("p") === "p1", "p")
+    LakeTable.delete(spark, src, col("p") === "p1", "p")
     MatView.refresh(spark, mv)
     assert(LakeTable.read(spark, mv).where(col("p") === "p1").count() === 0)
     assert(LakeTable.read(spark, mv).where(col("p") =!= "p1")
@@ -203,8 +203,8 @@ class MatViewSpec extends SparkSpec {
     assertInSync(src, mv, Seq("p"), Seq("sum(v)", "avg(v)"))
     LakeTable.append(spark, src,
       Seq((100L, "p0", 1000L, "u9"), (101L, "p1", 5L, "u9")).toDF("k", "p", "v", "u"))
-    LakeTable.deleteWithRetry(spark, src, col("k") % 10 === 3, "p")
-    LakeTable.updateWithRetry(spark, src, col("k") === 2, Map("v" -> lit(7777L)), "p")
+    LakeTable.delete(spark, src, col("k") % 10 === 3, "p")
+    LakeTable.update(spark, src, col("k") === 2, Map("v" -> lit(7777L)), "p")
     MatView.refresh(spark, mv)
     assertInSync(src, mv, Seq("p"), Seq("sum(v)", "avg(v)"))
 
@@ -214,7 +214,7 @@ class MatViewSpec extends SparkSpec {
       Seq(("g1", Option.empty[Long]), ("g1", Some(4L))).toDF("g", "x"),
       partitionCol = "g")
     MatView.create(spark, mv2, src2, Seq("g"), MatView.parseAggs("cnt,avg:x"))
-    LakeTable.deleteWithRetry(spark, src2, col("x").isNotNull, "g")
+    LakeTable.delete(spark, src2, col("x").isNotNull, "g")
     MatView.refresh(spark, mv2)
     val r = LakeTable.read(spark, mv2).head
     assert(r.getAs[Any]("avg_x") === null && r.getAs[Long]("cnt") === 1L)
@@ -227,7 +227,7 @@ class MatViewSpec extends SparkSpec {
     def cntdOf() = LakeTable.read(spark, mv3)
       .select("p", "cntd_u").orderBy("p").collect().map(_.getLong(1)).toSeq
     val before = cntdOf()
-    LakeTable.deleteWithRetry(spark, src3, col("u") === "u4", "p")
+    LakeTable.delete(spark, src3, col("u") === "u4", "p")
     MatView.refresh(spark, mv3)
     val after = cntdOf()
     assert(after !== before, "the delete wave must lower some distinct count")
@@ -257,7 +257,7 @@ class MatViewSpec extends SparkSpec {
     assert(nullRows().head.getAs[Long]("sum_v") === 14L)
 
     // group death for the NULL key: the delete fires for it too
-    LakeTable.deleteWithRetry(spark, src, col("g").isNull, "b")
+    LakeTable.delete(spark, src, col("g").isNull, "b")
     MatView.refresh(spark, mv)
     assert(nullRows().isEmpty, s"dead NULL group must leave the view: ${nullRows()}")
 
@@ -289,7 +289,7 @@ class MatViewSpec extends SparkSpec {
     // signed row diff must decompose via DV diffs + added files
     val batch = Seq((3L, 0L), (5L, 77L), (100L, 777L)).toDF("k", "nv")
       .withColumn("__s_nv", col("nv")).withColumn("__s_k", col("k"))
-    LakeTable.mergeClausesMor(spark, src, batch, Seq("k"),
+    LakeTable.mergeClauses(spark, src, batch, Seq("k"),
       matched = Seq(
         LakeTable.MergeBranch(Some(col("k") === 3), None),
         LakeTable.MergeBranch(None, Some(Map("v" -> col("__s_nv"))))),
@@ -328,19 +328,19 @@ class MatViewSpec extends SparkSpec {
 
     // fact-only wave: ΔF ⋈ D1, no dim work
     LakeTable.append(spark, fact, Seq((100L, "b0", 1L, 999L)).toDF("k", "b", "fk", "v"))
-    LakeTable.deleteWithRetry(spark, fact, col("k") % 10 === 3, "b")
+    LakeTable.delete(spark, fact, col("k") % 10 === 3, "b")
     MatView.refresh(spark, mv)
     inSync()
 
     // dim-only wave: a partition-moving UPDATE changes group MEMBERSHIP —
     // every joining fact row must move between groups (F0 ⋈ ΔD)
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
+    LakeTable.update(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
     MatView.refresh(spark, mv)
     inSync()
 
     // both sides change in ONE window (the cross-term exactness case)
     LakeTable.append(spark, fact, Seq((101L, "b1", 5L, 7L)).toDF("k", "b", "fk", "v"))
-    LakeTable.deleteWithRetry(spark, dim, col("dk") === 0, "seg")
+    LakeTable.delete(spark, dim, col("dk") === 0, "seg")
     MatView.refresh(spark, mv)
     inSync()
 
@@ -377,13 +377,13 @@ class MatViewSpec extends SparkSpec {
 
     // an UPDATE that moves rows ACROSS the filter boundary in both
     // directions: in-filter rows drop below 100, out-of-filter rise above
-    LakeTable.updateWithRetry(spark, src, col("k") === 15, Map("v" -> lit(5L)), "p")
-    LakeTable.updateWithRetry(spark, src, col("k") === 3, Map("v" -> lit(500L)), "p")
-    LakeTable.deleteWithRetry(spark, src, col("k") >= 30 && col("k") < 35, "p")
+    LakeTable.update(spark, src, col("k") === 15, Map("v" -> lit(5L)), "p")
+    LakeTable.update(spark, src, col("k") === 3, Map("v" -> lit(500L)), "p")
+    LakeTable.delete(spark, src, col("k") >= 30 && col("k") < 35, "p")
     MatView.refresh(spark, mv)
     inSync(mv, Seq("cnt", "sum_v"))
     // group death through the filter: every in-filter row of dec=1 gone
-    LakeTable.updateWithRetry(spark, src, col("k") >= 10 && col("k") < 20,
+    LakeTable.update(spark, src, col("k") >= 10 && col("k") < 20,
       Map("v" -> lit(1L)), "p")
     MatView.refresh(spark, mv)
     assert(LakeTable.read(spark, mv).where(col("dec") === 1).count() === 0)
@@ -393,7 +393,7 @@ class MatViewSpec extends SparkSpec {
     val mv2 = s"$wh/mvfd$n"
     MatView.create(spark, mv2, src, Seq("dec"), MatView.parseAggs("cnt,min:v"),
       where = Some("v >= 100"), keyExprs = Seq("dec" -> "k div 10"))
-    LakeTable.deleteWithRetry(spark, src, col("k") === 20, "p")
+    LakeTable.delete(spark, src, col("k") === 20, "p")
     LakeTable.append(spark, src, Seq((25L, "p1", 105L)).toDF("k", "p", "v"))
     MatView.refresh(spark, mv2)
     val fresh2 = LakeTable.read(spark, src).where(col("v") >= 100)
@@ -440,18 +440,18 @@ class MatViewSpec extends SparkSpec {
 
     // a delete wave that REMOVES each group's current max (the case no
     // delta algebra can fold — only a rescan of the touched groups)
-    LakeTable.deleteWithRetry(spark, fact, col("v") >= 300L, "b")
+    LakeTable.delete(spark, fact, col("v") >= 300L, "b")
     MatView.refresh(spark, mv)
     inSync()
 
     // dim-side wave: group membership moves, min/max follow
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
+    LakeTable.update(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
     MatView.refresh(spark, mv)
     inSync()
 
     // both sides in one window + a group dies (dim key deleted)
     LakeTable.append(spark, fact, Seq((200L, "b2", 5L, 5000L)).toDF("k", "b", "fk", "v"))
-    LakeTable.deleteWithRetry(spark, dim, col("dk") === 0, "seg")
+    LakeTable.delete(spark, dim, col("dk") === 0, "seg")
     MatView.refresh(spark, mv)
     inSync()
 
@@ -486,9 +486,9 @@ class MatViewSpec extends SparkSpec {
       .orderBy("seg").collect().toSeq.map(_.toSeq)
     inSync(mv, Seq("seg", "cnt", "sum_v"), freshCntSum)
     // a wave crossing the filter boundary both ways + a dim move
-    LakeTable.updateWithRetry(spark, fact, col("k") === 15, Map("v" -> lit(5L)), "fk")
-    LakeTable.updateWithRetry(spark, fact, col("k") === 3, Map("v" -> lit(500L)), "fk")
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
+    LakeTable.update(spark, fact, col("k") === 15, Map("v" -> lit(5L)), "fk")
+    LakeTable.update(spark, fact, col("k") === 3, Map("v" -> lit(500L)), "fk")
+    LakeTable.update(spark, dim, col("dk") === 1, Map("seg" -> lit("g9")), "seg")
     MatView.refresh(spark, mv)
     inSync(mv, Seq("seg", "cnt", "sum_v"), freshCntSum)
 
@@ -496,7 +496,7 @@ class MatViewSpec extends SparkSpec {
     val mv2 = s"$wh/mvw2$n"
     MatView.createJoin(spark, mv2, fact, dim, "fk", "dk",
       Seq("seg"), MatView.parseAggs("cnt,max:v"), where = Some("v >= 100"))
-    LakeTable.deleteWithRetry(spark, fact, col("v") >= 400L, "fk")
+    LakeTable.delete(spark, fact, col("v") >= 400L, "fk")
     MatView.refresh(spark, mv2)
     def freshCntMax(): Seq[Seq[Any]] = LakeTable.read(spark, fact)
       .where(col("v") >= 100).as("f")
@@ -532,10 +532,10 @@ class MatViewSpec extends SparkSpec {
     // dim rows cross the filter boundary BOTH ways (a deactivation must
     // retire every joining fact row, an activation must admit them), a
     // dim segment moves, and the fact takes a delete — one refresh each
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 1, Map("act" -> lit(false)), "seg")
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 3, Map("act" -> lit(true)), "seg")
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 4, Map("seg" -> lit("g9")), "seg")
-    LakeTable.deleteWithRetry(spark, fact, col("k") % 10 === 2, "fk")
+    LakeTable.update(spark, dim, col("dk") === 1, Map("act" -> lit(false)), "seg")
+    LakeTable.update(spark, dim, col("dk") === 3, Map("act" -> lit(true)), "seg")
+    LakeTable.update(spark, dim, col("dk") === 4, Map("seg" -> lit("g9")), "seg")
+    LakeTable.delete(spark, fact, col("k") % 10 === 2, "fk")
     MatView.refresh(spark, mv)
     inSync(mv, Seq("seg", "cnt", "sum_v"), freshCntSum)
 
@@ -545,8 +545,8 @@ class MatViewSpec extends SparkSpec {
     MatView.createJoin(spark, mv2, fact, dim, "fk", "dk",
       Seq("seg"), MatView.parseAggs("cnt,max:v"),
       where = Some("v >= 100"), dimWhere = Some("act = true"))
-    LakeTable.deleteWithRetry(spark, fact, col("v") >= 400L, "fk")
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 3, Map("act" -> lit(false)), "seg")
+    LakeTable.delete(spark, fact, col("v") >= 400L, "fk")
+    LakeTable.update(spark, dim, col("dk") === 3, Map("act" -> lit(false)), "seg")
     MatView.refresh(spark, mv2)
     def freshCntMax(): Seq[Seq[Any]] = LakeTable.read(spark, fact)
       .where(col("v") >= 100).as("f")
@@ -584,8 +584,8 @@ class MatViewSpec extends SparkSpec {
     assert(stored(mv, Seq("gband", "kb", "cnt", "sum_v")) ===
       freshAgg(Seq("sum_v" -> sum("v"))))
     // waves on both sides: the dim update MOVES derived-key membership
-    LakeTable.deleteWithRetry(spark, fact, col("k") % 10 === 2, "fk")
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 1, Map("grp" -> lit(5L)), "grp")
+    LakeTable.delete(spark, fact, col("k") % 10 === 2, "fk")
+    LakeTable.update(spark, dim, col("dk") === 1, Map("grp" -> lit(5L)), "grp")
     MatView.refresh(spark, mv)
     assert(stored(mv, Seq("gband", "kb", "cnt", "sum_v")) ===
       freshAgg(Seq("sum_v" -> sum("v"))))
@@ -594,7 +594,7 @@ class MatViewSpec extends SparkSpec {
     val mv2 = s"$wh/mvek2$n"
     MatView.createJoin(spark, mv2, fact, dim, "fk", "dk",
       Seq("gband", "kb"), MatView.parseAggs("cnt,max:v"), keyExprs = ke)
-    LakeTable.deleteWithRetry(spark, fact, col("v") >= 400L, "fk")
+    LakeTable.delete(spark, fact, col("v") >= 400L, "fk")
     MatView.refresh(spark, mv2)
     assert(stored(mv2, Seq("gband", "kb", "cnt", "max_v")) ===
       freshAgg(Seq("max_v" -> max("v"))))
@@ -636,7 +636,7 @@ class MatViewSpec extends SparkSpec {
       Seq("seg"), MatView.parseAggs("cnt,max:v"))
     // touch ONE dim row: the rescan must not read the whole fact — the
     // dirty seg names one dk, which prunes the fact to its partition
-    LakeTable.updateWithRetry(spark, dim, col("dk") === 3,
+    LakeTable.update(spark, dim, col("dk") === 3,
       Map("seg" -> lit("moved")), "seg")
     val head = LakeTable.snapshot(spark, fact).version
     val allFiles = LakeTable.readVersion(spark, fact, head).inputFiles.length
@@ -703,7 +703,7 @@ class MatViewSpec extends SparkSpec {
       widenColumns = Map("k" -> LongType, "v" -> LongType))
     LakeTable.append(spark, src,
       Seq((3000000000L, "p0", 5000000000L), (3000000001L, "p1", 1L)).toDF("k", "p", "v"))
-    LakeTable.deleteWithRetry(spark, src, col("k") % 4 === 1, "p")
+    LakeTable.delete(spark, src, col("k") % 4 === 1, "p")
     MatView.refresh(spark, mv)
     assertInSync(src, mv, Seq("p"), Seq("sum(v)", "max(v)"))
     assert(LakeTable.read(spark, mv).agg(max("max_v")).head.getLong(0) === 5000000000L)
