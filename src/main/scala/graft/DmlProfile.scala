@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
 import graft.engine.SparkEngine
@@ -47,7 +48,7 @@ object DmlProfile {
     def time(label: String)(f: => Unit): Double = {
       val (j0, k0) = (jobs.get(), tasks.get())
       val t0 = System.nanoTime(); f; val s = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(50)
+      GraftColumnBridge.drainListenerBus(spark) // job counts come from the async bus
       println(f"[dmlprofile] $label%-34s $s%7.3f s  jobs=${jobs.get() - j0}%3d " +
         f"tasks=${tasks.get() - k0}%5d")
       s

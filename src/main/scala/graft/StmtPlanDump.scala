@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.GraftColumnBridge
+
 import graft.engine.SparkEngine
 
 /** Dump the EXECUTED (AQE-final) physical plans of the Spark actions a
@@ -33,10 +35,12 @@ object StmtPlanDump {
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
     def capture(label: String, file: String)(f: => Unit): Unit = {
-      Thread.sleep(500) // drain async events of PRIOR statements first
+      // QueryExecutionListener is async: drain PRIOR statements' events
+      // before clearing, and this statement's before reading
+      GraftColumnBridge.drainListenerBus(spark)
       plans.clear()
       f
-      Thread.sleep(500) // QueryExecutionListener is async
+      GraftColumnBridge.drainListenerBus(spark)
       import scala.jdk.CollectionConverters._
       val text = s"== statement: $label ==\n\n" + plans.asScala.mkString("\n\n")
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/$file"),

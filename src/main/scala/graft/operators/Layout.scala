@@ -9,16 +9,17 @@ import graft.functions.exprs
   * A 100 TB fact table is usually partitioned on one coarse axis (date)
   * and then scanned with predicates on OTHER columns; whether those
   * scans prune anything is decided entirely by how rows were laid out
-  * inside the partition at write time. `zorderWrite` range-partitions
-  * and locally sorts by the Morton key of two selective columns, so
+  * inside the partition at write time. `zorderWrite` partitions on
+  * ranges of the Morton key of two selective columns and sorts each
+  * range locally, so
   * every output file covers a small axis-aligned tile of the (x, y)
   * space and its parquet footer min/max stats are tight in BOTH
   * columns — a filter on either one (or a box on both) skips most row
   * groups at scan time, with zero read-side cooperation (plain
   * `spark.read.parquet` + the default filter pushdown does the
   * pruning). LayoutSpec measures the effect via the scan operator's
-  * numOutputRows metric; the write itself is one range shuffle, same
-  * cost class as any global sort.
+  * numOutputRows metric; the write itself is one quantile pass plus
+  * one shuffle, same cost class as any global sort.
   */
 object Layout {
 
@@ -66,21 +67,50 @@ object Layout {
   }
 
   /** Write `df` as `files` parquet files clustered by the Z-order of
-    * (x, y). Range-partition on the key (contiguous key ranges per
-    * file → tight per-file min/max on both source columns), sort within
-    * each partition (tight ROW-GROUP stats too, when files exceed one
-    * row group), then drop the transient key before writing.
+    * (x, y). Partition on contiguous key ranges (tight per-file min/max
+    * on both source columns), sort within each partition (tight
+    * ROW-GROUP stats too, when files exceed one row group), then drop
+    * the transient key before writing.
     */
   def zorderWrite(df: DataFrame, x: Column, y: Column, files: Int, path: String): Unit =
     zorderWrite(df, Seq(x, y), files, path)
 
   /** [[zorderWrite]] over 2-4 clustering columns. */
-  def zorderWrite(df: DataFrame, cols: Seq[Column], files: Int, path: String): Unit =
-    df.withColumn("__zkey", zorderKey(cols))
-      .repartitionByRange(files, col("__zkey"))
+  def zorderWrite(df: DataFrame, cols: Seq[Column], files: Int, path: String): Unit = {
+    val keyed = df.withColumn("__zkey", zorderKey(cols))
+    keyed.repartitionById(files, keyRangeId(keyed, "__zkey", files))
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** Range id in `[0, files)` of each row's `key`: the count of the
+    * key's `files`-quantile bounds strictly below it, so range j holds
+    * keys in (bound(j-1), bound(j)] as in a range exchange. The bounds
+    * come from one percentile_approx pass (rank error under 1% of a
+    * range), not from the range exchange's sampler: that sampler seeds
+    * on the shuffle RDD's id, so the same input got different file
+    * boundaries, and different pruning, depending on how many RDDs the
+    * session had built before.
+    */
+  private def keyRangeId(keyed: DataFrame, key: String, files: Int): Column =
+    if (files <= 1) lit(0)
+    else {
+      val fractions = Array.tabulate(files - 1)(i => (i + 1).toDouble / files)
+      val bounds = keyed
+        .agg(percentile_approx(col(key), lit(fractions), lit(files * 100)))
+        .head().getSeq[Long](0).toArray
+      val rangeOf = udf { (k: Long) =>
+        var lo = 0
+        var hi = bounds.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (bounds(mid) < k) lo = mid + 1 else hi = mid
+        }
+        lo
+      }
+      coalesce(rangeOf(col(key)), lit(0))
+    }
 
   /** Single-axis comparison layout: same file count, sorted by one
     * column only (what a naive `ORDER BY x` write produces).

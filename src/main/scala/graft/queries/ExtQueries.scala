@@ -611,14 +611,14 @@ object ExtQueries {
         .orderBy("event_type", "hr")
     },
 
-    // The graft-lake CONNECTOR face end-to-end (LakeFileIndex +
-    // HadoopFsRelation, sources/lake): the table is CREATED through
-    // df.write.format("graft-lake") (init via partitionCol/statsCols
-    // options), grown through mode("append"), and read back through
-    // spark.read.format("graft-lake") — where the scan is manifest-pruned
-    // AUTOMATICALLY from a plain .where() predicate (no readRange/
-    // readPartitions entry point): the executed plan's numFiles metric is
-    // pinned strictly below the snapshot's file count and folded into the
+    // The graft-lake CONNECTOR face end-to-end (DSv2 BatchScan over the
+    // manifest-pruned LakeFileIndex, sources/lake): the table is CREATED
+    // through df.write.format("graft-lake") (init via partitionCol/
+    // statsCols options), grown through mode("append"), and read back
+    // through spark.read.format("graft-lake") — where the scan is
+    // manifest-pruned AUTOMATICALLY from a plain .where() predicate (no
+    // readRange/readPartitions entry point): the BatchScan's planned file
+    // count is pinned strictly below the snapshot's file count and folded into the
     // hash as files_skipped (if pruning silently broke, the flag flips
     // and the hash fails even though the residual predicate keeps the
     // VALUES right). versionAsOf rides along: v1/v2 row counts prove time
@@ -627,7 +627,6 @@ object ExtQueries {
     // rollup — and their files are among the skipped.
     "q143_lake_connector" -> { (s, dir) =>
       import graft.operators.LakeTable
-      import org.apache.spark.sql.execution.FileSourceScanExec
       val root = s"/root/repo/target/staging/q143_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
       val p = new org.apache.hadoop.fs.Path(root)
       val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -648,11 +647,8 @@ object ExtQueries {
       val lake = s.read.format("graft-lake").load(root)
       val filtered = lake.where(col("o_orderkey").between(100, 399))
       filtered.collect()
-      // the path face plans through DSv2 now (BatchScan over the same
-      // manifest-pruned index); the v1 FileSourceScanExec arm stays for
-      // anything still landing there
+      // distinct data files the BatchScan's planned partitions read
       val scanned = filtered.queryExecution.executedPlan.collect {
-        case sc: FileSourceScanExec => sc.metrics("numFiles").value
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
           b.inputRDD.partitions.toSeq.collect {
             case dp: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
@@ -2682,10 +2678,10 @@ object ExtQueries {
     // `graft.<t>.__changes` — `spark.readStream.table` on manifest-
     // version offsets, each (a, b] micro-batch one materialized
     // changesSince slice — drained by a real writeStream under
-    // Trigger.AvailableNow. Same classification contract as q147's DSv1
-    // face; a replayed version doubles a cell, a missed change commit
-    // empties one, a mis-keyed join misclassifies updates as
-    // insert+delete pairs.
+    // Trigger.AvailableNow. Same classification contract as q147's path
+    // face (readChangeFeed on readStream.format("graft-lake")); a
+    // replayed version doubles a cell, a missed change commit empties
+    // one, a mis-keyed join misclassifies updates as insert+delete pairs.
     "q153_catalog_stream_changes" -> { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

@@ -1,16 +1,8 @@
 package graft.sources.lake
 
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.connector.read.streaming.{
-  Offset => ConnectorOffset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.sources.{
-  BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, RelationProvider,
-  StreamSourceProvider}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.LakeTable
@@ -35,24 +27,32 @@ import graft.operators.LakeTable
   *   spark.readStream.format("graft-lake").load(root)
   * }}}
   *
-  * The batch relation is a [[HadoopFsRelation]] over [[LakeFileIndex]]
-  * — Spark's own vectorized parquet reader does the scanning, the
-  * manifest does the listing and the pruning (see the index's doc), and
-  * `sizeInBytes` comes from the snapshot so join planning can broadcast
-  * a small lake table. Writes map SaveMode onto the transactional ops:
-  * Append → [[LakeTable.append]], Overwrite → [[LakeTable.overwrite]]
-  * (full replace, old versions still time-travel), ErrorIfExists /
-  * Ignore → create-or-refuse. Creation requires `partitionCol`
-  * (`statsCols` opts into per-file min/max collection).
+  * Every READ resolves through one DSv2 face, the same tables the
+  * catalog hands out: batch and streaming reads of a root are a
+  * [[GraftLakeV2Table]] (BatchScan over [[LakeScanBuilder]] — Spark's
+  * vectorized parquet reader over the manifest-pruned [[LakeFileIndex]],
+  * metadata-only aggregates, runtime file skipping, native deletion
+  * vectors — and [[LakeMicroBatchStream]] for `readStream`), and
+  * `readChangeFeed=true` maps onto the derived [[GraftLakeChangesTable]].
+  * Reads have no v1 fallback, so `useV1SourceList` /
+  * `disabledV2MicroBatchReaders` naming this format get Spark's own
+  * unsupported-source error.
   *
-  * The STREAMING source treats the manifest version sequence as the
+  * WRITES keep the v1 [[CreatableRelationProvider]] route, because
+  * SaveMode create-or-refuse semantics live there: Append →
+  * [[LakeTable.append]], Overwrite → [[LakeTable.overwrite]] (full
+  * replace, old versions still time-travel), ErrorIfExists / Ignore →
+  * create-or-refuse. Creation requires `partitionCol` (`statsCols` opts
+  * into per-file min/max collection).
+  *
+  * The STREAMING face treats the manifest version sequence as the
   * offset line: micro-batch (a, b] reads exactly the files ADDED by
   * pure-append commits in that range — manifests and data files are
   * immutable, so any replayed range reproduces the same rows
   * (exactly-once admission without a source-side log; restart resumes
   * from the checkpointed version). A commit that REMOVES files (merge,
   * delete, optimize) is not expressible as an append-only stream:
-  * by default the source fails crisply on it; `skipChangeCommits=true`
+  * by default the stream fails crisply on it; `skipChangeCommits=true`
   * skips such commits wholly (the Delta semantics — rows added by a
   * change commit are NOT re-delivered, their original append already
   * streamed them; an OPTIMIZE's rewrite is likewise invisible).
@@ -62,28 +62,19 @@ import graft.operators.LakeTable
   */
 class GraftLake
   extends DataSourceRegister
-  with RelationProvider
   with CreatableRelationProvider
-  with StreamSourceProvider
   with org.apache.spark.sql.connector.catalog.TableProvider {
 
   import GraftLake._
 
   override def shortName(): String = "graft-lake"
 
-  // ---- DSv2 TableProvider face ----------------------------------------
+  // ---- read: DSv2 TableProvider face ----------------------------------
   //
-  // With TableProvider present, `spark.read.format("graft-lake")` and
-  // `readStream.format("graft-lake")` resolve through DSv2: reads plan
-  // as BatchScan over LakeScanBuilder — the SAME scan the catalog face
-  // uses, with vectorized parquet + pushdown, metadata-only aggregate
-  // pushdown, runtime file skipping, and native deletion-vector
-  // handling (the split scan), retiring the v1 DvV1Relation `.rdd`
-  // path from the read route. `readChangeFeed=true` maps onto the
-  // `__changes` table (batch + streaming), so the option is honored
-  // instead of silently ignored as the v1 batch face did. WRITES keep
-  // the v1 CreatableRelationProvider route (SaveMode create semantics,
-  // GraftLakeV2Table declares V1_BATCH_WRITE).
+  // `spark.read.format("graft-lake")` and `readStream.format("graft-lake")`
+  // both resolve here. Writes call getTable too, before they decide
+  // anything: no table here is SupportsWrite with BATCH_WRITE, so every
+  // SaveMode falls back to the v1 createRelation below.
 
   override def supportsExternalMetadata(): Boolean = false
 
@@ -105,12 +96,9 @@ class GraftLake
         case None =>
           val snap = LakeTable.snapshot(spark, root)
           // a root with no committed snapshot yet must still resolve on
-          // the WRITE path — DataFrameWriter calls getTable before it
-          // decides anything, and the create-on-save flow lives in the
-          // v1 CreatableRelationProvider. A capability-less placeholder
-          // (not SupportsWrite) routes every SaveMode to the v1 fall
-          // back; reads through it fail with the crisp missing-table
-          // error instead of a capability complaint.
+          // the WRITE path — the create-on-save flow lives in the v1
+          // CreatableRelationProvider; reads fail crisply in the
+          // placeholder's newScanBuilder
           if (snap.version == 0) new MissingLakeTable(root)
           else new GraftLakeV2Table(s"`graft-lake`.`$root`", root, snap)
       }
@@ -130,15 +118,6 @@ class GraftLake
       : org.apache.spark.sql.connector.catalog.Table = {
     import scala.jdk.CollectionConverters._
     v2Table(SparkSession.active, properties.asScala.toMap)
-  }
-
-  // ---- batch read ----------------------------------------------------
-
-  override def createRelation(
-      sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    relation(spark, rootOf(parameters), opt(parameters, "versionAsOf").map(_.toLong))
   }
 
   // ---- batch write ---------------------------------------------------
@@ -170,52 +149,14 @@ class GraftLake
         create()
       case SaveMode.Ignore => if (!exists) create()
     }
-    createRelation(sqlContext, parameters)
-  }
-
-  // ---- streaming read ------------------------------------------------
-
-  override def sourceSchema(
-      sqlContext: SQLContext,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val spark = sqlContext.sparkSession
-    val snap = LakeTable.snapshot(spark, rootOf(parameters))
-    require(snap.version > 0,
-      s"graft-lake: no committed snapshot at ${rootOf(parameters)} (streaming " +
-        "requires an existing table)")
-    // nullable face: files from older schemas legitimately read NULL for
-    // since-added columns, and the engine compares batch output against
-    // this declared schema
-    GraftLake.validateStreamOptions(parameters)
-    val base = GraftLake.nullable(snap.meta.get.schema)
-    val out =
-      if (opt(parameters, "readChangeFeed").exists(_.toBoolean))
-        GraftLake.cdfSchema(base)
-      else base
-    (shortName(), out)
-  }
-
-  override def createSource(
-      sqlContext: SQLContext,
-      metadataPath: String,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): Source = {
-    val spark = sqlContext.sparkSession
-    GraftLake.validateStreamOptions(parameters)
-    val cdf = opt(parameters, "readChangeFeed").exists(_.toBoolean)
-    val keyCols = opt(parameters, "keyCols")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    new GraftLakeSource(
-      spark,
-      rootOf(parameters),
-      startingVersion = opt(parameters, "startingVersion").map(_.toLong).getOrElse(0L),
-      skipChangeCommits = opt(parameters, "skipChangeCommits").exists(_.toBoolean),
-      maxVersionsPerTrigger = opt(parameters, "maxVersionsPerTrigger").map(_.toLong),
-      readChangeFeed = cdf,
-      keyCols = keyCols)
+    // SaveIntoDataSourceCommand reads only the schema (to re-cache
+    // plans over this path); no index or scan is built here
+    val ctx = sqlContext
+    val written = nullable(LakeTable.snapshot(spark, root).meta.get.schema)
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
+    }
   }
 }
 
@@ -248,10 +189,10 @@ object GraftLake {
   private def rootOf(parameters: Map[String, String]): String =
     opt(parameters, "path").getOrElse(sys.error("graft-lake: path is required"))
 
-  /** Streaming-option validation shared by sourceSchema (so a bad
-    * combination fails at `load`, not at query start) and createSource.
+  /** Change-feed option validation, run when the path face resolves so
+    * a bad combination fails at `load`, not at query start.
     */
-  private[lake] def validateStreamOptions(parameters: Map[String, String]): Unit = {
+  private def validateStreamOptions(parameters: Map[String, String]): Unit = {
     val cdf = opt(parameters, "readChangeFeed").exists(_.toBoolean)
     val keyCols = opt(parameters, "keyCols")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
@@ -262,39 +203,14 @@ object GraftLake {
       "graft-lake: readChangeFeed and skipChangeCommits are mutually exclusive " +
         "(the change feed exists to DELIVER change commits)")
   }
-
-  /** The pruned-scan batch relation (shared by the provider and the
-    * streaming source's per-batch frames).
-    */
-  private[lake] def relationFor(
-      spark: SparkSession,
-      root: String,
-      index: LakeFileIndex): HadoopFsRelation =
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = new StructType(),
-      dataSchema = nullable(index.meta.schema),
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-
-  def relation(spark: SparkSession, root: String, versionAsOf: Option[Long]): BaseRelation = {
-    val index = LakeFileIndex(spark, root, versionAsOf)
-    if (index.entries.forall(_.dv.isEmpty)) relationFor(spark, root, index)
-    else
-      // merge-on-read snapshot on the v1 format face: the HadoopFsRelation
-      // fast path cannot filter positions, so serve the DV-aware operator
-      // read through a PrunedFilteredScan (projection + advisory filters
-      // still reach the underlying pruned parquet scan via Catalyst;
-      // unhandledFilters keeps Spark re-applying everything)
-      new DvV1Relation(spark, root, versionAsOf)
-  }
 }
 
-/** Placeholder for a root with no committed snapshot on the DSv2 face:
-  * zero capabilities (and not SupportsWrite), so DataFrameWriter's save
-  * falls back to the v1 CreatableRelationProvider create flow; a READ
-  * that lands here fails with the crisp missing-table error.
+/** Placeholder for a root with no committed snapshot on the DSv2 face.
+  * It is not SupportsWrite, so DataFrameWriter's save falls back to the
+  * v1 CreatableRelationProvider create flow. It declares both read
+  * capabilities so a batch or streaming READ reaches `newScanBuilder`
+  * and fails with the crisp missing-table error, not Spark's generic
+  * unsupported-source one.
   */
 private[lake] class MissingLakeTable(root: String)
   extends org.apache.spark.sql.connector.catalog.Table
@@ -303,174 +219,12 @@ private[lake] class MissingLakeTable(root: String)
   override def schema(): StructType = new StructType()
   override def capabilities()
       : java.util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    java.util.Collections.emptySet()
+    java.util.EnumSet.of(
+      org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ,
+      org.apache.spark.sql.connector.catalog.TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     throw new IllegalArgumentException(
       s"graft-lake: no committed snapshot at $root")
-}
-
-private[lake] class DvV1Relation(
-    spark: SparkSession,
-    root: String,
-    versionAsOf: Option[Long])
-  extends BaseRelation
-  with org.apache.spark.sql.sources.PrunedFilteredScan {
-
-  override val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  override val schema: StructType = {
-    val snap = versionAsOf.fold(LakeTable.snapshot(spark, root))(v =>
-      LakeTable.snapshotAt(spark, root, v))
-    require(snap.version > 0, s"graft-lake: no committed snapshot at $root")
-    GraftLake.nullable(snap.meta.get.schema)
-  }
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  override def buildScan(
-      requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val df0 = versionAsOf.fold(LakeTable.read(spark, root))(v =>
-      LakeTable.readVersion(spark, root, v))
-    val filtered = filters.flatMap(GraftLakeCatalog.filterToColumn).foldLeft(df0)(_ where _)
-    filtered.select(requiredColumns.toSeq.map(c =>
-      org.apache.spark.sql.functions.col(s"`$c`")): _*).rdd
-  }
-}
-
-/** v1 streaming [[Source]] over the manifest version line (see
-  * [[GraftLake]]'s doc for semantics). Manifest immutability is what
-  * carries the exactly-once contract: getBatch(a, b] is a pure function
-  * of the two version's entry lists, so engine-driven replay after a
-  * crash re-reads byte-identical input. Offsets are committed by the
-  * engine's checkpoint, not here — `commit` is a no-op (versions stay
-  * re-readable until their files age out of the vacuum window; a
-  * restart from BEFORE that window fails crisply on the missing files
-  * rather than silently skipping).
-  */
-/** CHANGE-FEED mode (`readChangeFeed=true` + `keyCols`, the Delta CDF
-  * shape): instead of appended rows, each micro-batch delivers the
-  * table's classified changes — `_change_type` ∈ insert / delete /
-  * update_preimage / update_postimage plus `_commit_version` — derived
-  * per version by [[LakeTable.changesSince]] from the immutable
-  * manifests (same replay determinism as the append mode). The first
-  * batch from version 0 delivers the CURRENT snapshot as inserts
-  * stamped with its version (per-commit replay of pre-subscription
-  * history is available via `startingVersion`); every later batch is
-  * the exact (from, to] changelog walk.
-  */
-class GraftLakeSource(
-    spark: SparkSession,
-    root: String,
-    startingVersion: Long,
-    skipChangeCommits: Boolean,
-    maxVersionsPerTrigger: Option[Long] = None,
-    readChangeFeed: Boolean = false,
-    keyCols: Seq[String] = Nil)
-  extends Source
-  with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  private val tableSchema: StructType = {
-    val snap = LakeTable.snapshot(spark, root)
-    require(snap.version > 0, s"graft-lake: no committed snapshot at $root")
-    val base = GraftLake.nullable(snap.meta.get.schema)
-    if (readChangeFeed) GraftLake.cdfSchema(base) else base
-  }
-
-  // the shared version-offset core (entry caching + pure-append window +
-  // admission decision) — one implementation for this face and the
-  // catalog's MicroBatchStream, so semantics cannot drift
-  private val window = new VersionWindow(spark, root)
-
-  private def ver(o: OffsetV1): Long = o match {
-    case l: LongOffset => l.offset
-    case other => other.json.trim.toLong // SerializedOffset from a restart
-  }
-
-  private def verC(o: ConnectorOffset): Long = o match {
-    case l: LongOffset => l.offset
-    case other => other.json.trim.toLong
-  }
-
-  override def schema: StructType = tableSchema
-
-  override def getOffset: Option[OffsetV1] = {
-    val v = LakeTable.snapshot(spark, root).version
-    if (v > startingVersion) Some(LongOffset(v)) else None
-  }
-
-  // ---- admission control / Trigger.AvailableNow ----------------------
-  // The FileStreamSource pattern: a v1 Source opts into the v2 admission
-  // path, so Trigger.AvailableNow pins the END VERSION once at prepare
-  // time and drains exactly up to it (no single-batch fallback, no race
-  // with writers committing during the drain). `maxVersionsPerTrigger`
-  // caps each micro-batch's version span — a consumer starting against a
-  // long-lived table drains the backlog in bounded batches instead of
-  // one giant initial batch (the engine keeps triggering until the
-  // reported offset stops advancing, so the cap composes with
-  // AvailableNow exactly like graft-avro's maxFilesPerTrigger).
-
-  @volatile private var pinnedVersion: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    pinnedVersion = Some(LakeTable.snapshot(spark, root).version)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(start: ConnectorOffset, limit: ReadLimit): ConnectorOffset = {
-    val from = Option(start).map(verC).getOrElse(startingVersion)
-    val end = window.nextEndVersion(from, pinnedVersion, maxVersionsPerTrigger)
-    if (end > 0) LongOffset(end) else null
-  }
-
-  override def reportLatestOffset(): ConnectorOffset = {
-    val v = LakeTable.snapshot(spark, root).version
-    if (v > startingVersion) LongOffset(v) else null
-  }
-
-  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    val from = start.map(ver).getOrElse(startingVersion)
-    val to = ver(end)
-    // a mid-stream ALTER COLUMN TYPE refuses crisply (restart picks
-    // up the wide schema) instead of failing in the parquet reader —
-    // on the CDF face too, where the failure mode is otherwise an ANSI
-    // cast error while aligning the slice to the captured narrow schema
-    window.requireTypesUnchanged(tableSchema, to)
-    if (readChangeFeed) changeFeedBatch(from, to)
-    else {
-      val added = window.addedEntries(from, to, skipChangeCommits)
-      // the batch is a REAL pruned file scan (isStreaming wrapped): later
-      // query filters still push into listFiles and the parquet reader
-      val meta = LakeTable.snapshot(spark, root).meta.get.copy(schema = tableSchema)
-      val index = new LakeFileIndex(spark, root, meta, added)
-      GraftColumnBridge.streamingRelationFrame(
-        spark, GraftLake.relationFor(spark, root, index))
-    }
-  }
-
-  /** The (from, to] change slice, aligned to the declared CDF schema and
-    * re-issued as a streaming frame. `from == 0` bootstraps with the
-    * snapshot-as-inserts shape (the processChanges contract).
-    */
-  private def changeFeedBatch(from: Long, to: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val batch =
-      if (from <= 0)
-        LakeTable.readVersion(spark, root, to)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(to))
-      else LakeTable.changesSince(spark, root, from, to, keyCols)
-    val aligned = batch.select(tableSchema.map { f =>
-      (if (batch.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-    GraftColumnBridge.streamingFrameFromBatch(spark, aligned)
-  }
-
-  override def commit(end: OffsetV1): Unit = ()
-
-  override def stop(): Unit = ()
 }

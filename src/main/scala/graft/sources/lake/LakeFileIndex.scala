@@ -14,8 +14,9 @@ import graft.operators.LakeTable.{Entry, TableMeta}
 
 /** The lake table's [[FileIndex]] — the planning half of the
   * `graft-lake` connector. This is the Delta-OSS idiom (a log-backed
-  * FileIndex plugged into Spark's own parquet `FileFormat` through
-  * `HadoopFsRelation`): the MANIFEST is the file listing, so
+  * FileIndex under Spark's own parquet reader, here the DSv2
+  * `ParquetScan` the connector's scan builders plan): the MANIFEST is
+  * the file listing, so
   *
   *   - `listFiles` answers from metadata alone — no directory walk ever
   *     happens (on a 100 TB table the data tree is millions of files;

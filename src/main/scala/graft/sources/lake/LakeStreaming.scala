@@ -20,10 +20,11 @@ import graft.operators.LakeTable
 /** The catalog table's Scan layer: batch scans delegate verbatim to
   * Spark's [[ParquetScanBuilder]]/[[ParquetScan]] over the manifest
   * index (pushdown included), and `toMicroBatchStream` adds the
-  * STREAMING face — `spark.readStream.table("graft.db.t")` — with the
-  * same manifest-version-offset semantics as the `graft-lake` DSv1
-  * source (GraftLake.scala): micro-batch (a, b] reads exactly the files
-  * ADDED by pure-append commits in that version range (immutable
+  * STREAMING face — `spark.readStream.table("graft.db.t")` and
+  * `spark.readStream.format("graft-lake").load(root)` alike — with the
+  * manifest-version-offset semantics GraftLake.scala documents:
+  * micro-batch (a, b] reads exactly the files ADDED by pure-append
+  * commits in that version range (immutable
   * manifests ⇒ byte-identical replay, exactly-once admission), change
   * commits fail crisply or are skipped wholly under
   * `skipChangeCommits`, `startingVersion` skips the initial snapshot,
@@ -545,8 +546,9 @@ class LakeScan(
       "graft-lake: the change feed carries extra columns (_change_type, " +
         "_commit_version), so it is its own table — read the derived table " +
         "instead: spark.readStream.option(\"keyCols\", ...).table(\"<table>.__changes\"), " +
-        "or the DSv1 face spark.readStream.format(\"graft-lake\")" +
-        ".option(\"readChangeFeed\", true).option(\"keyCols\", ...).load(root)")
+        "or by path, where the option selects that table: spark.readStream" +
+        ".format(\"graft-lake\").option(\"readChangeFeed\", true)" +
+        ".option(\"keyCols\", ...).load(root)")
     new LakeMicroBatchStream(
       spark, root, meta,
       startingVersion = Option(options.get("startingVersion")).map(_.toLong).getOrElse(0L),
@@ -736,9 +738,9 @@ class LakeMicroBatchStream(
   * feed carries extra columns, so it must BE a table for
   * `readStream.table` to type-check against).
   *
-  * Both faces share [[LakeTable.changesSince]]'s classification (the
-  * same slices as the DSv1 `readChangeFeed` source, so the two cannot
-  * drift). A change slice is the result of a JOIN between each commit's
+  * The path face's `readChangeFeed=true` resolves to this same table,
+  * so every change feed shares [[LakeTable.changesSince]]'s
+  * classification. A change slice is the result of a JOIN between each commit's
   * removed and added rows — not a set of existing files — so the DSv2
   * contract (InputPartitions) is met by MATERIALIZING each slice once
   * to parquet and planning a real ParquetScan over it: the Delta
@@ -790,9 +792,9 @@ class LakeChangesScan(
   override def description(): String = s"graft-lake-changes $root"
 
   /** Batch face: `startingVersion = 0` (default) delivers the CURRENT
-    * snapshot as inserts stamped with the head version (the DSv1
-    * source's bootstrap convention); `startingVersion = n > 0` delivers
-    * the exact `(n, head]` per-commit changelog.
+    * snapshot as inserts stamped with the head version (the bootstrap
+    * the streaming face's first batch delivers too); `startingVersion =
+    * n > 0` delivers the exact `(n, head]` per-commit changelog.
     */
   override def toBatch: Batch = {
     val head = LakeTable.snapshot(spark, root).version

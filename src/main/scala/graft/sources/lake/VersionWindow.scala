@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 import graft.operators.LakeTable
 
-/** The version-offset streaming core SHARED by the two streaming faces —
-  * the DSv1 [[GraftLakeSource]] and the catalog's [[LakeMicroBatchStream]]
-  * — so admission semantics cannot drift between them: a micro-batch
+/** The version-offset streaming core of [[LakeMicroBatchStream]] and the
+  * change-feed stream (one per stream, whether it was opened by path or
+  * through the catalog): a micro-batch
   * (from, to] delivers exactly the files ADDED by pure-append commits in
   * that version range; a commit that REMOVES files (merge / delete /
   * optimize / restore) either fails crisply or is skipped wholly under

@@ -62,27 +62,11 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** A BaseRelation wrapped as a STREAMING frame — what a v1
-    * `Source.getBatch` must return (the engine asserts isStreaming on the
-    * batch plan). Routing through LogicalRelation keeps the relation's
-    * full file-scan planning (pushdown, pruning) instead of freezing the
-    * plan behind an RDD boundary; `LogicalRelation.apply` is sql-private,
-    * hence this bridge.
+  /** Block until every event already posted to the SparkContext's
+    * listener bus has been delivered (QueryExecutionListener callbacks
+    * included) — the deterministic replacement for sleeping after an
+    * action. The bus is private[spark], hence this bridge.
     */
-  def streamingRelationFrame(spark: SparkSession, relation: sources.BaseRelation): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession],
-      execution.datasources.LogicalRelation(relation, isStreaming = true))
-
-  /** An arbitrary BATCH frame re-issued as a streaming one (the
-    * change-feed batches are derived plans — unions of classified file
-    * diffs — not relations, so the LogicalRelation route above doesn't
-    * apply; the plan freezes behind an RDD boundary, which is fine for
-    * an already-computed CDC slice).
-    */
-  def streamingFrameFromBatch(spark: SparkSession, df: DataFrame): DataFrame = {
-    val s = spark.asInstanceOf[classic.SparkSession]
-    val d = df.asInstanceOf[classic.Dataset[Row]]
-    s.internalCreateDataFrame(d.queryExecution.toRdd, d.schema, isStreaming = true)
-  }
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
@@ -26,33 +25,34 @@ class GraftLakeSpec extends SparkSpec {
   }
 
   /** Distinct data files the executed scan actually read (post-pruning).
-    * The path face now resolves through DSv2 (BatchScanExec); the v1
-    * FileSourceScanExec arm stays for anything still landing there.
+    * The path face reads through DSv2 only, so the scan is a BatchScanExec
+    * over file partitions; a plan without one fails the assertion below.
     */
   private def scannedFiles(df: DataFrame): Long = {
     df.collect()
     def unwrap(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+        : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         unwrap(a.executedPlan)
-      case s: FileSourceScanExec => Seq(s)
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => Seq(b)
       case other => other.children.flatMap(unwrap)
     }
     val scans = unwrap(df.queryExecution.executedPlan)
     assert(scans.nonEmpty, "no file scan in executed plan")
-    scans.map {
-      case s: FileSourceScanExec => s.metrics("numFiles").value
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputRDD.partitions.toSeq.collect {
-          case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
-            p.inputPartitions.collect {
-              case f: org.apache.spark.sql.execution.datasources.FilePartition =>
-                f.files.map(_.urlEncodedPath).toSeq
-            }.flatten
-        }.flatten.distinct.size.toLong
+    scans.map { b =>
+      b.inputRDD.partitions.toSeq.collect {
+        case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+          p.inputPartitions.collect {
+            case f: org.apache.spark.sql.execution.datasources.FilePartition =>
+              f.files.map(_.urlEncodedPath).toSeq
+          }.flatten
+      }.flatten.distinct.size.toLong
     }.sum
   }
+
+  /** Every message down an exception's cause chain, one per line. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 
   /** A 3-partition, stats-tracked table with one file per key bucket:
     * 300 rows, k in [0,300), partition p = k/100, stats on k.
@@ -544,31 +544,29 @@ class GraftLakeSpec extends SparkSpec {
       val want = f(plain).orderBy("k").collect().toSeq
       assert(got === want, s"predicate #$i diverged under pruning")
     }
+    // the default path face plans a DSv2 BatchScan, and its manifest
+    // pruning reads strictly fewer files than the snapshot holds
+    val ranged = lake.where(col("k").between(120, 130))
+    assert(ranged.queryExecution.executedPlan.toString.contains("BatchScan"),
+      "default path face must plan through DSv2")
+    val total = LakeTable.snapshot(spark, root).entries.size.toLong
+    val files = scannedFiles(ranged)
+    assert(files < total, s"pruned read scanned $files of $total files")
   }
 
-  test("v1/v2 read-face parity: useV1SourceList forces v1 with identical results and pruning") {
-    val root = tmp("facepar")
-    mkTable(root)
-    // the v2 (default) face: BatchScan over LakeScanBuilder
-    val v2 = spark.read.format("graft-lake").load(root).where(col("k").between(120, 130))
-    val v2Rows = v2.orderBy("k").collect().toSeq
-    val v2Files = scannedFiles(spark.read.format("graft-lake").load(root)
-      .where(col("k").between(120, 130)))
-    assert(v2.queryExecution.executedPlan.toString.contains("BatchScan"),
-      "default path face must plan through DSv2")
-    // the v1 escape hatch: same relation machinery the streaming source
-    // uses internally; results AND file pruning must agree exactly
-    spark.conf.set("spark.sql.sources.useV1SourceList", "graft-lake")
-    try {
-      val v1 = spark.read.format("graft-lake").load(root).where(col("k").between(120, 130))
-      assert(!v1.queryExecution.executedPlan.toString.contains("BatchScan"),
-        "useV1SourceList must force the v1 relation")
-      assert(v1.orderBy("k").collect().toSeq === v2Rows, "face results diverged")
-      val v1Files = scannedFiles(
-        spark.read.format("graft-lake").load(root).where(col("k").between(120, 130)))
-      assert(v1Files === v2Files,
-        s"manifest pruning must be face-independent: v1 read $v1Files files, v2 $v2Files")
-    } finally spark.conf.unset("spark.sql.sources.useV1SourceList")
+  test("reads of a root with no committed snapshot fail crisply, batch and streaming") {
+    val missing = tmp("missing")
+    val batch = intercept[Exception](
+      spark.read.format("graft-lake").load(missing).collect())
+    assert(causes(batch).contains("no committed snapshot"), causes(batch))
+    val base = missing.stripSuffix("/t")
+    val stream = intercept[Exception] {
+      val q = spark.readStream.format("graft-lake").load(missing)
+        .writeStream.format("noop").option("checkpointLocation", s"$base/ckpt")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(causes(stream).contains("no committed snapshot"), causes(stream))
   }
 
   test("maxVersionsPerTrigger drains a version backlog in capped micro-batches") {
