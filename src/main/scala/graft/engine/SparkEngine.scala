@@ -35,7 +35,10 @@ object SparkEngine {
       // map bound), so it is scale-safe by construction: a batch-sized
       // merge source skips two whole-stage sorts, a 100 TB join keeps
       // SMJ. Default 0 (off) upstream; bound chosen well under the
-      // per-task execution-memory share, overridable for clusters.
+      // per-task execution-memory share. It bounds SERIALIZED bytes: the
+      // in-memory hash relation is ~2-4x larger, and a FullOuter build
+      // side cannot spill, so many tasks on a small executor can OOM where
+      // SMJ would not — SPARK_GRAFT_SHJ_THRESHOLD exists to lower it.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
       .config("spark.sql.session.timeZone", "UTC")
@@ -76,7 +79,9 @@ object SparkEngine {
   def align(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // same runtime SMJ->SHJ conversion as session() — correctness runs
-    // must exercise the same plan shapes the bench measures
+    // must exercise the same plan shapes the bench measures. Same memory
+    // caveat too: the hash relation is ~2-4x the serialized bound and a
+    // FullOuter build side cannot spill; SPARK_GRAFT_SHJ_THRESHOLD lowers it
     spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
       sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

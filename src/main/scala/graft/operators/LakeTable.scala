@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StructType}
 
+import graft.sources.lake.LakeFileIndex
+
 /** Transactional copy-on-write table on plain parquet — the MERGE INTO
   * upsert the incremental-ingest chain (q113 signature appends, q117
   * incremental groups, streaming sinks) was missing: those paths can
@@ -505,6 +507,9 @@ object LakeTable {
     * invalid for the new type). A format-4 reader ignoring the key
     * would probe the STALE sidecars under the bare column name and
     * wrongly prune files, so any rekeyed table claims 5.
+    *
+    * Local-filesystem manifests and segments carry no Hadoop `.crc`
+    * ([[writeSmallFile]]): corruption is caught by the parse, not a checksum.
     */
   private[graft] val ManifestFormat = 5
 
@@ -2641,22 +2646,6 @@ object LakeTable {
     }
   }
 
-  /** The probe-side file filter for [[merge]]: a file whose recorded
-    * min/max on some stats-covered key column cannot intersect the
-    * source keys' [min,max] cannot contain a matched row, so neither the
-    * affected-partition probe nor the COW rewrite needs to read it. One
-    * metadata-sized agg over the (already-distinct) source keys computes
-    * the bounds; a composite equi-key matches only when EVERY column
-    * matches, so ONE disjoint dimension rules a file out.
-    *
-    * Conservative edges: a key column with no recorded stats, a file
-    * without stats, or a source/table type mismatch on the column (the
-    * rendered stats would not compare) keeps the file in; with no
-    * stats-covered key column at all everything stays (the pre-stats
-    * behavior). A key column whose source side is entirely NULL — or an
-    * empty source — can never equi-match anything, so the filter then
-    * excludes every file.
-    */
   /** Largest distinct-key-tuple count a merge batch may have and still
     * get per-key Bloom probing (the keys are collected to the driver to
     * hash; a wider batch falls back to min/max bounds alone).
@@ -2753,6 +2742,22 @@ object LakeTable {
     (bounds, anyNull)
   }
 
+  /** The probe-side file filter for [[merge]]: a file whose recorded
+    * min/max on some stats-covered key column cannot intersect the
+    * source keys' [min,max] cannot contain a matched row, so neither the
+    * affected-partition probe nor the COW rewrite needs to read it. One
+    * metadata-sized agg over the (already-distinct) source keys computes
+    * the bounds; a composite equi-key matches only when EVERY column
+    * matches, so ONE disjoint dimension rules a file out.
+    *
+    * Conservative edges: a key column with no recorded stats, a file
+    * without stats, or a source/table type mismatch on the column (the
+    * rendered stats would not compare) keeps the file in; with no
+    * stats-covered key column at all everything stays (the pre-stats
+    * behavior). A key column whose source side is entirely NULL — or an
+    * empty source — can never equi-match anything, so the filter then
+    * excludes every file.
+    */
   private def keyProbeFilter(
       spark: SparkSession,
       root: String,
@@ -2839,90 +2844,6 @@ object LakeTable {
       }
 
     e => statsPred(e) && bloomPred(e)
-  }
-
-  /** Per-column [lo,hi] bounds IMPLIED by a predicate, for manifest-level
-    * file pruning in [[delete]]: walks the top-level conjuncts for
-    * attr-vs-literal comparisons (`=`, `<`, `<=`, `>`, `>=`; `between`
-    * desugars to two of them) and intersects constraints per column.
-    * Strictly conservative: anything else — OR, IN, function calls,
-    * casts, columns absent from the schema, and non-numeric/string
-    * literal types (date/timestamp literals carry internal encodings
-    * that do not compare against the manifest's rendered stats) —
-    * contributes no constraint, so an unrecognized predicate disables
-    * skipping rather than corrupting it. Strict bounds are widened to
-    * inclusive (never narrower than the predicate).
-    */
-  private[graft] def predicateBounds(
-      schema: StructType,
-      predicate: Column): Map[String, (Option[String], Option[String])] = {
-    type Arg = Option[Either[String, Any]]
-    def attrName(x: Arg): Option[String] = x.collect { case Left(n) => n }
-    // a literal usable against column `name`'s rendered stats. The guard
-    // is EXACT-type (or integral-vs-integral, where widening is exact):
-    // a cross-width float literal does NOT round-trip — `doubleCol ===
-    // lit(0.1f)` compares the float-widened 0.10000000149…, but renders
-    // "0.1", so string-space pruning would skip files that hold matching
-    // rows (silent wrong results on delete). For accepted literals the
-    // rendering is exact both ways: integral strings parse back exactly,
-    // and same-type float/double shortest-repr round-trips — which also
-    // makes the rendered value safe to re-cast for the Bloom probe in
-    // [[delete]]. Non-finite values never contribute (NULL semantics of
-    // NaN comparisons don't match stats-interval logic).
-    def litFor(name: String, x: Arg): Option[String] = x.collect {
-      case Right(v) if v != null => v
-    }.flatMap { v =>
-      import org.apache.spark.sql.types._
-      val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
-      def nonFinite = v match {
-        case d: java.lang.Double => d.isNaN || d.isInfinite
-        case f: java.lang.Float => f.isNaN || f.isInfinite
-        case _ => false
-      }
-      schema.fields.find(_.name == name).map(_.dataType).flatMap {
-        case dt: NumericType if v.isInstanceOf[java.lang.Number] && !nonFinite =>
-          val lt = scala.util.Try(
-            org.apache.spark.sql.catalyst.expressions.Literal.create(v).dataType)
-            .getOrElse(NullType)
-          if (lt == dt || (integral.contains(lt) && integral.contains(dt))) Some(v.toString)
-          else None
-        case StringType if v.isInstanceOf[String] => Some(v.toString)
-        case _ => None
-      }
-    }
-    // (column, lower, upper) triples; attr-on-left and attr-on-right forms
-    def c(fn: String, args: Seq[Arg]): Seq[(String, Option[String], Option[String])] =
-      if (args.size != 2) Nil
-      else {
-        val (a, b) = (args(0), args(1))
-        def side(
-            x: Arg,
-            y: Arg,
-            mk: (String, String) => (String, Option[String], Option[String])) =
-          (for (nm <- attrName(x); v <- litFor(nm, y)) yield mk(nm, v)).toSeq
-        fn match {
-          case "=" =>
-            side(a, b, (n, v) => (n, Some(v), Some(v))) ++
-              side(b, a, (n, v) => (n, Some(v), Some(v)))
-          // strict bounds widened to inclusive — never narrower than the
-          // predicate, so pruning stays conservative
-          case ">" | ">=" =>
-            side(a, b, (n, v) => (n, Some(v), None)) ++
-              side(b, a, (n, v) => (n, None, Some(v)))
-          case "<" | "<=" =>
-            side(a, b, (n, v) => (n, None, Some(v))) ++
-              side(b, a, (n, v) => (n, Some(v), None))
-          case _ => Nil
-        }
-      }
-    org.apache.spark.sql.GraftColumnBridge.conjunctComparisons(predicate)
-      .flatMap { case (fn, args) => c(fn, args) }
-      .groupBy(_._1).map { case (n, xs) =>
-        val dt = schema(n).dataType
-        val lo = xs.flatMap(_._2).reduceOption((a, b) => if (cmpStat(dt, a, b) >= 0) a else b)
-        val hi = xs.flatMap(_._3).reduceOption((a, b) => if (cmpStat(dt, a, b) <= 0) a else b)
-        n -> ((lo, hi))
-      }
   }
 
   // ---- Bloom point-lookup skipping -----------------------------------
@@ -3327,38 +3248,18 @@ object LakeTable {
   private def unchanged(s0: Snapshot, probed: Int): MergeStats =
     MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probed)
 
-  /** File-level pruner for a row predicate (shared by [[delete]] and
-    * [[update]]): TRUE = the file may hold a matching row.
-    *
-    * Stats arm: conjunctive attr-vs-literal bounds implied by the
-    * predicate prune files that provably hold no matching row (rows
-    * whose stats column is NULL are never matched by a range/equality
-    * predicate — NULL comparisons are not TRUE — so pruning on non-null
-    * min/max is sound). Unrecognized predicate shapes scan everything.
-    *
-    * Bloom arm: point-equality conjuncts on bloom-indexed columns prune
-    * by sidecar too. Re-casting the rendered bound is exact BECAUSE
-    * predicateBounds' literal guard only admits exact-type or integral
-    * literals (a float-vs-double literal that would round-trip to a
-    * different runtime value never reaches here — it yields no bound,
-    * disabling both stats and bloom pruning conservatively).
+  /** File-level pruner for a row predicate ([[delete]], [[update]],
+    * [[optimize]]'s WHERE): TRUE = the file may hold a matching row. The
+    * scan's own [[LakeFileIndex.entryFilter]], so SQL and API statements
+    * prune the files a SELECT with the same WHERE would read.
     */
   private def predicateFilePruner(
       spark: SparkSession,
       root: String,
       meta: TableMeta,
-      predicate: Column): Entry => Boolean = {
-    val allBounds = predicateBounds(meta.schema, predicate)
-    val bounds = allBounds.filter { case (c, _) => meta.statsCols.contains(c) }
-    val bloomPts = allBounds.toSeq.collect {
-      case (c, (Some(lo), Some(hi))) if lo == hi && meta.bloomCols.contains(c) =>
-        (bloomHashExternal(meta.schema(c).dataType, lo),
-          loadBlooms(spark, root, meta.bloomNamesFor(c)))
-    }
-    e =>
-      bounds.forall { case (c, (lo, hi)) => entryIntersects(meta, e, c, lo, hi) } &&
-        bloomPts.forall { case (h, blooms) => blooms.get(e.rel).forall(_.mightContainLong(h)) }
-  }
+      predicate: Column): Entry => Boolean =
+    new LakeFileIndex(spark, root, meta, Nil).entryFilter(LakeFileIndex.resolvedConjuncts(
+      spark, meta.schema, GraftColumnBridge.expression(spark, predicate)))
 
   /** The COW rewrite set: files in partitions holding a matched row (one
     * probe pass over `matchedRows`; None = nothing can match) that the
@@ -3519,9 +3420,9 @@ object LakeTable {
     * compliance face of the lake path: opt-out and contamination
     * removals on a training corpus must actually remove the bytes, not
     * just filter at read time (a `mor` delete's bytes go at the next
-    * OPTIMIZE). The probe is manifest-pruned (bounds
-    * implied by the predicate's conjunctive attr-vs-literal comparisons
-    * skip files whose recorded min/max provably hold no match), then:
+    * OPTIMIZE). The probe is manifest-pruned (partition values, min/max
+    * stats and Blooms rule out files that provably hold no match, see
+    * [[predicateFilePruner]]), then:
     *
     *   - `cow`: only files in partitions CONTAINING a match are
     *     rewritten, minus the stats-disjoint ones, which carry by path
@@ -4274,33 +4175,20 @@ object LakeTable {
     // explicit full-migration call
     val compactParts0 = fileCounts.filter(_._2 >= minFilesPerPartition).keySet ++
       s0.entries.filter(_.dv.isDefined).map(e => (e.spec, e.part))
-    // WHERE scope: the same metadata-only pruning the scan runs (per-spec
-    // partition arms, stats, Blooms) selects the groups that may hold a
-    // matching row; everything else carries untouched
     val compactParts = where.fold(compactParts0) { w =>
       val parsed = spark.sessionState.sqlParser.parseExpression(w)
-      // Nested-field references (multi-part names, e.g. s.cust) have no
-      // top-level stats/partition arm to prune on — per the stated
-      // contract, an unprunable predicate shape conservatively keeps
-      // every group in rather than throwing. A single-part name that
-      // matches nothing is still a hard error (typo detection).
-      val nested = parsed.collect {
+      // an unknown single-part name is a typo: refuse. A nested field
+      // (s.cust) has no stats or partition arm, so it keeps every group
+      parsed.foreach {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length > 1 => a
+            if a.nameParts.length == 1 &&
+              !meta.schema.fieldNames.exists(_.equalsIgnoreCase(a.name)) =>
+          throw new IllegalArgumentException(
+            s"LakeTable.optimize: WHERE references unknown column ${a.name}")
+        case _ =>
       }
-      if (nested.nonEmpty) compactParts0
-      else {
-        val resolved = parsed.transformUp {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            val f = meta.schema.fields.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
-              throw new IllegalArgumentException(
-                s"LakeTable.optimize: WHERE references unknown column ${a.name}"))
-            org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType)()
-        }
-        val idx = new graft.sources.lake.LakeFileIndex(spark, root, meta, s0.entries)
-        val scoped = idx.pruneEntries(Seq(resolved)).map(e => (e.spec, e.part)).toSet
-        compactParts0 & scoped
-      }
+      val mayMatch = predicateFilePruner(spark, root, meta, GraftColumnBridge.column(parsed))
+      compactParts0 & s0.entries.filter(mayMatch).map(e => (e.spec, e.part)).toSet
     }
     if (compactParts.isEmpty) unchanged(s0, -1)
     else {

@@ -2,12 +2,16 @@ package graft.sources.lake
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{
   PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 import graft.operators.LakeTable
 import graft.operators.LakeTable.{Entry, TableMeta}
@@ -38,11 +42,15 @@ import graft.operators.LakeTable.{Entry, TableMeta}
   * stats pruning. That keeps evolution/row-shape concerns out of the
   * partition-value decoding path entirely.
   *
+  * It is the lake's one predicate-to-files pruner: DELETE and UPDATE
+  * (SQL or API) and `OPTIMIZE ... WHERE` prune through [[entryFilter]]
+  * too, so a predicate skips the same files whichever verb carries it.
+  *
   * Pruning is strictly conservative: only bare attr-vs-literal
   * comparisons, IN/INSET, and null tests on the partition column
   * contribute; casts, functions, ORs, disjunct literal types, and files
   * without recorded stats all keep the file in. Correctness never
-  * depends on pruning — the full predicate still evaluates on the scan.
+  * depends on pruning — the full predicate still evaluates on the rows.
   *
   * `sizeInBytes` reports the snapshot's actual byte count from the
   * manifest's recorded per-file lengths — like `listFiles`, METADATA
@@ -140,23 +148,28 @@ class LakeFileIndex(
     * it without touching the filesystem.
     */
   private[graft] def pruneEntries(filters: Seq[Expression]): Seq[Entry] =
+    entries.filter(entryFilter(filters))
+
+  /** The per-entry filter for resolved conjuncts `filters`: TRUE = the
+    * entry may hold a matching row (any entry, e.g. a rival commit's).
+    * Under PARTITION SPEC EVOLUTION an entry is tested in the spec space
+    * it was WRITTEN under, through a single-spec child index: old files
+    * keep pruning under the old grain, new files under the new (Iceberg's
+    * model). An entry whose spec id this meta does not know is kept.
+    */
+  private[graft] def entryFilter(filters: Seq[Expression]): Entry => Boolean =
     if (meta.priorSpecs.isEmpty) {
       val preds = filters.flatMap(entryPredicate)
-      entries.filter(e => preds.forall(_(e)))
+      e => preds.forall(_(e))
     } else {
-      // PARTITION SPEC EVOLUTION: each entry's partition value lives in
-      // the spec space it was WRITTEN under — group by spec, prune each
-      // group through a single-spec child index whose meta carries that
-      // spec, union. Stats/Bloom arms are spec-independent; only the
-      // partition arms reinterpret. Old files keep pruning under the
-      // old grain, new files under the new — exactly Iceberg's model.
-      val specs = meta.specs
-      entries.groupBy(_.spec).toSeq.sortBy(_._1).flatMap { case (sid, es) =>
-        val (pc, fn) = specs(sid)
-        new LakeFileIndex(spark, root,
-          meta.copy(partitionCol = pc, partitionFn = fn, priorSpecs = Nil), es)
-          .pruneEntries(filters)
+      // built on first use: a spec no tested entry carries costs nothing
+      val perSpec = meta.specs.map { case (pc, fn) =>
+        lazy val f = new LakeFileIndex(spark, root,
+          meta.copy(partitionCol = pc, partitionFn = fn, priorSpecs = Nil), Nil)
+          .entryFilter(filters)
+        (e: Entry) => f(e)
       }
+      e => perSpec.lift(e.spec).forall(_(e))
     }
 
   override def listFiles(
@@ -187,7 +200,8 @@ class LakeFileIndex(
     * (stats are `cast("string")` renderings; partition values likewise).
     * Only same-family numeric/string pairs compare soundly — dates,
     * timestamps, binaries, and cross-family literals return None (no
-    * pruning), mirroring LakeTable.predicateBounds' conservatism.
+    * pruning). Literals arrive typed to the column (scan pushdown, or
+    * [[LakeFileIndex.resolvedConjuncts]] for DML and OPTIMIZE WHERE).
     */
   private def render(colDt: DataType, v: Any): Option[String] = (colDt, v) match {
     case (_, null) => None
@@ -421,6 +435,33 @@ object LakeFileIndex {
         try java.lang.Double.toString(java.lang.Double.parseDouble(s))
         catch { case _: NumberFormatException => s }
     }
+
+  /** `predicate` (unresolved, by column name) as conjuncts resolved over
+    * `schema` with literal casts folded, as a scan would type them:
+    * `x = 0.1f` on a DOUBLE arrives as the widened double the rows are
+    * compared with. Conjuncts holding a subquery are dropped unresolved;
+    * a predicate that fails to analyze or fold yields none. Either only
+    * disables pruning — the full predicate still runs on the rows.
+    */
+  private[graft] def resolvedConjuncts(
+      spark: SparkSession,
+      schema: StructType,
+      predicate: Expression): Seq[Expression] = {
+    // an API Column's `&&` is not an And until analysis: such a group
+    // splits after it, and is dropped whole if it holds a subquery
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case o => Seq(o)
+    }
+    val plain = split(predicate).filterNot(SubqueryExpression.hasSubquery)
+    if (plain.isEmpty) Nil
+    else try {
+      val analyzed = spark.sessionState.analyzer.executeAndCheck(
+        Filter(plain.reduce(And), LocalRelation(DataTypeUtils.toAttributes(schema))),
+        new QueryPlanningTracker)
+      ConstantFolding(analyzed).collectFirst { case Filter(c, _) => split(c) }.getOrElse(Nil)
+    } catch { case NonFatal(_) => Nil }
+  }
 
   /** The index over the CURRENT snapshot, or a time-travel version
     * (`versionAsOf`), with readVersion's vacuumed-snapshot refusal.

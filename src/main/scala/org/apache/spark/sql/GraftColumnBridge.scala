@@ -20,31 +20,10 @@ object GraftColumnBridge {
       cols: Array[connector.catalog.Column]): types.StructType =
     connector.catalog.CatalogV2Util.v2ColumnsToStructType(cols.toSeq)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-  /** Top-level conjuncts of `c`'s ColumnNode tree (the pre-analysis shape
-    * Spark 4 Columns carry: comparisons are UnresolvedFunction nodes named
-    * "=", "<", "and", …, not catalyst BinaryComparisons — and the node
-    * classes are private[sql], hence this bridge), each function reduced
-    * to (name, args) with every argument mapped to Left(attributeName),
-    * Right(literalValue), or None for anything more complex. Callers
-    * pattern match on this neutral form to derive e.g. predicate-implied
-    * bounds without touching sql-private classes.
-    */
-  def conjunctComparisons(c: Column): Seq[(String, Seq[Option[Either[String, Any]]])] = {
-    import org.apache.spark.sql.internal.{ColumnNode, Literal, UnresolvedAttribute,
-      UnresolvedFunction}
-    def conj(n: ColumnNode): Seq[ColumnNode] = n match {
-      case f: UnresolvedFunction if f.functionName == "and" => f.arguments.flatMap(conj)
-      case o => Seq(o)
-    }
-    def arg(n: ColumnNode): Option[Either[String, Any]] = n match {
-      case a: UnresolvedAttribute => Some(Left(a.nameParts.mkString(".")))
-      case l: Literal => Some(Right(l.value))
-      case _ => None
-    }
-    conj(c.node).collect {
-      case f: UnresolvedFunction => (f.functionName, f.arguments.map(arg))
-    }
-  }
+  /** `c` converted now, as Dataset operators do (the form above defers
+    * an API Column's conversion to the Dataset that uses it). */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
   /** A DataFrame over an already-materialized InternalRow RDD (e.g. a
     * localCheckpoint'ed iteration state) — `internalCreateDataFrame` is
     * sql-private. The plan is a LogicalRDD leaf: lineage is CUT, which

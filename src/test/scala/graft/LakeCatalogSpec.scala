@@ -1185,6 +1185,44 @@ class LakeCatalogSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).where(col("v") === -1L).count() === 1)
   }
 
+  test("SQL UPDATE/DELETE prune the same files as the LakeTable API route") {
+    val _ = wh
+    // twin 15-file tables: range(300) over p = k % 3, stats on k, 20-row
+    // files sorted on k
+    def twin(name: String): String = {
+      spark.sql(s"CREATE TABLE graft.db.$name (k BIGINT, p STRING, v BIGINT) " +
+        "PARTITIONED BY (p) TBLPROPERTIES (statsCols 'k')")
+      spark.sql(s"INSERT INTO graft.db.$name " +
+        "SELECT id, cast(id % 3 as string), id * 10 FROM range(300)")
+      val root = s"$wh/db/$name"
+      LakeTable.optimize(spark, root, minFilesPerPartition = 1, maxRecordsPerFile = 20,
+        sortCols = Seq("k"))
+      root
+    }
+    val (sqlRoot, apiRoot) = (twin("route_sql"), twin("route_api"))
+    val total = LakeTable.snapshot(spark, sqlRoot).entries.size
+    assert(total === 15)
+    def removed(t: String): Long = spark.sql(
+      s"SELECT files_removed FROM graft.db.$t.__history ORDER BY version DESC LIMIT 1")
+      .head.getLong(0)
+
+    spark.sql("UPDATE graft.db.route_sql SET v = v + 1 WHERE k BETWEEN 10 AND 14")
+    LakeTable.update(spark, apiRoot, col("k").between(10L, 14L),
+      Map("v" -> (col("v") + 1L)), "p")
+    assert(removed("route_sql") === removed("route_api"))
+    assert(removed("route_sql") < total, "a SQL UPDATE must be stats-pruned")
+
+    val held = LakeTable.snapshot(spark, sqlRoot).entries.size
+    spark.sql("DELETE FROM graft.db.route_sql WHERE k BETWEEN 100 AND 104")
+    LakeTable.delete(spark, apiRoot, col("k").between(100L, 104L), "p")
+    assert(removed("route_sql") === removed("route_api"))
+    assert(removed("route_sql") < held, "a SQL DELETE must be stats-pruned")
+
+    val (viaSql, viaApi) = (spark.table("graft.db.route_sql"), spark.table("graft.db.route_api"))
+    assert(viaSql.count() === 295)
+    assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
+  }
+
   test("deleteMode is read per statement: ALTER between two DELETEs switches COW to MOR") {
     val t = mkTable()
     val root = s"$wh/db/${t.stripPrefix("graft.db.")}"

@@ -1147,39 +1147,73 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).where(col("k") % 100 === 99L).count() === 0)
   }
 
-  test("predicateBounds: conjuncts intersect; unrecognized shapes contribute nothing") {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, s STRING, d DATE")
-    def b(c: org.apache.spark.sql.Column) = LakeTable.predicateBounds(schema, c)
-    assert(b(col("k") === 5L) === Map("k" -> ((Some("5"), Some("5")))))
-    assert(b(col("k") >= 3L && col("k") < 9L) === Map("k" -> ((Some("3"), Some("9")))))
-    assert(b(col("k").between(2L, 7L) && col("s") === "x") ===
-      Map("k" -> ((Some("2"), Some("7"))), "s" -> ((Some("x"), Some("x")))))
-    assert(b(lit(4L) < col("k")) === Map("k" -> ((Some("4"), None))))
-    // OR, functions, unknown columns, date literals: no constraint
-    assert(b(col("k") === 1L || col("k") === 2L) === Map.empty)
-    assert(b(abs(col("k")) === 1L) === Map.empty)
-    assert(b(col("zz") === 1L) === Map.empty)
-    assert(b(col("d") === java.sql.Date.valueOf("2024-01-01")) === Map.empty)
-    // tighter conjunct wins on each side
-    assert(b(col("k") >= 1L && col("k") >= 6L && col("k") <= 9L && col("k") <= 7L) ===
-      Map("k" -> ((Some("6"), Some("7")))))
+  /** The rels of `entries` the shared DML/scan pruner keeps for `c` on a
+    * table whose stats columns are every column of `ddl` but `p`.
+    */
+  private def keptBy(ddl: String, entries: Seq[(String, Seq[(String, String)])])(
+      c: org.apache.spark.sql.Column): Set[String] = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(s"p STRING, $ddl")
+    val meta = LakeTable.TableMeta(schema, "p", schema.fieldNames.toSeq.tail)
+    val es = entries.map { case (rel, st) =>
+      LakeTable.Entry("0", rel, st.map { case (mn, mx) => (Option(mn), Option(mx)) })
+    }
+    val conjuncts = graft.sources.lake.LakeFileIndex.resolvedConjuncts(
+      spark, schema, org.apache.spark.sql.GraftColumnBridge.expression(spark, c))
+    val keep = new graft.sources.lake.LakeFileIndex(spark, "/graft-prune-nonexistent", meta, es)
+      .entryFilter(conjuncts)
+    es.filter(keep).map(_.rel).toSet
   }
 
-  test("predicateBounds: cross-width float literals and non-finite values contribute nothing") {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("x DOUBLE, f FLOAT, k BIGINT")
-    def b(c: org.apache.spark.sql.Column) = LakeTable.predicateBounds(schema, c)
-    // a Float literal vs a DOUBLE column renders "0.1" but the runtime
-    // predicate compares the float-widened 0.10000000149… — pruning on
-    // the rendering would silently skip matching files
-    assert(b(col("x") === 0.1f) === Map.empty)
-    assert(b(col("f") === 0.1) === Map.empty) // Double literal vs FLOAT column: same hazard
-    // exact-type and integral-widening literals still bound
-    assert(b(col("x") === 0.5) === Map("x" -> ((Some("0.5"), Some("0.5")))))
-    assert(b(col("f") >= 1.5f) === Map("f" -> ((Some("1.5"), None))))
-    assert(b(col("k") === 5) === Map("k" -> ((Some("5"), Some("5"))))) // Int vs BIGINT: exact
-    // non-finite literals never constrain (stats intervals can't reason about NaN)
-    assert(b(col("x") === Double.NaN) === Map.empty)
-    assert(b(col("x") <= Double.PositiveInfinity) === Map.empty)
+  test("DML pruner: conjuncts intersect; unrecognized shapes keep every file") {
+    val all = Set("k0-3", "k5", "k6-9", "k10-20", "nostats")
+    def kept(c: org.apache.spark.sql.Column) = keptBy("k BIGINT, s STRING, d DATE", Seq(
+      "k0-3" -> Seq(("0", "3"), ("a", "c"), ("2023-01-01", "2023-06-01")),
+      "k5" -> Seq(("5", "5"), ("x", "x"), ("2024-01-01", "2024-01-01")),
+      "k6-9" -> Seq(("6", "9"), ("d", "m"), ("2024-02-01", "2024-03-01")),
+      "k10-20" -> Seq(("10", "20"), ("n", "z"), ("2024-04-01", "2024-05-01")),
+      "nostats" -> Seq((null, null), (null, null), (null, null))))(c)
+    assert(kept(col("k") === 5L) === Set("k5", "nostats"))
+    assert(kept(col("k") >= 3L && col("k") < 9L) === Set("k0-3", "k5", "k6-9", "nostats"))
+    assert(kept(col("k").between(2L, 7L) && col("s") === "x") === Set("k5", "nostats"))
+    // attr on the right; strict bounds widen to inclusive (never narrower)
+    assert(kept(lit(4L) < col("k")) === all - "k0-3")
+    // OR, functions, unknown columns, date literals: no constraint
+    assert(kept(col("k") === 1L || col("k") === 2L) === all)
+    assert(kept(abs(col("k")) === 1L) === all)
+    assert(kept(col("zz") === 1L) === all)
+    assert(kept(col("d") === java.sql.Date.valueOf("2024-01-01")) === all)
+    // tighter conjunct wins on each side
+    assert(kept(col("k") >= 1L && col("k") >= 6L && col("k") <= 9L && col("k") <= 7L) ===
+      Set("k6-9", "nostats"))
+    // an IN list prunes on its values' envelope: the files holding 5 and 6 stay
+    assert(kept(col("k").isin(5L, 6L)) === Set("k5", "k6-9", "nostats"))
+  }
+
+  test("DML pruner: cross-width floats bound at the widened value; NaN and Infinity") {
+    def kept(c: org.apache.spark.sql.Column) = keptBy("x DOUBLE, f FLOAT, k BIGINT", Seq(
+      "x0.1" -> Seq(("0.1", "0.1"), ("0.1", "0.1"), ("5", "5")),
+      "x0.1f" -> Seq(("0.10000000149011612", "0.10000000149011612"), ("1.5", "2.0"), ("1", "2")),
+      "x0.5" -> Seq(("0.5", "0.5"), ("0.5", "1.0"), ("6", "9")),
+      "x3.5-inf" -> Seq(("3.5", "Infinity"), ("-1.0", "0.0"), ("10", "12")),
+      "x1-nan" -> Seq(("1.0", "NaN"), ("3.0", "NaN"), ("20", "30")),
+      "xnan" -> Seq(("NaN", "NaN"), ("4.0", "4.0"), ("40", "40"))))(c)
+    val all = Set("x0.1", "x0.1f", "x0.5", "x3.5-inf", "x1-nan", "xnan")
+    // a Float literal vs a DOUBLE column compares the float-widened
+    // 0.10000000149…, so the pruner bounds there: the file holding the
+    // widened value is kept, the one holding only double 0.1 is not
+    assert(kept(col("x") === 0.1f) === Set("x0.1f"))
+    // a Double literal vs a FLOAT column casts the column: no constraint
+    assert(kept(col("f") === 0.1) === all)
+    // exact-type and integral-widening literals bound
+    assert(kept(col("x") === 0.5) === Set("x0.5"))
+    assert(kept(col("f") >= 1.5f) === Set("x0.1f", "x1-nan", "xnan"))
+    assert(kept(col("k") === 5) === Set("x0.1")) // Int vs BIGINT: exact
+    // NaN and ±Infinity bound in cmpStat order (NaN greatest, as Spark
+    // sorts and compares it): every file holding a NaN is kept
+    assert(kept(col("x") === Double.NaN) === Set("x1-nan", "xnan"))
+    // NaN <= Infinity is false in Spark: only an all-NaN file drops
+    assert(kept(col("x") <= Double.PositiveInfinity) === all - "xnan")
+    assert(kept(col("x") >= Double.NegativeInfinity) === all)
   }
 
   test("delete with a cross-width float literal still rewrites the matching file") {
@@ -1199,6 +1233,26 @@ class LakeTableSpec extends SparkSpec {
     val got = LakeTable.read(spark, root)
     assert(got.count() === 2, "the float-widened row must actually be deleted")
     assert(got.where(col("k") === 1L).count() === 0)
+  }
+
+  test("a table root whose path holds a space and a '%' serves every verb") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft lake %20").toFile
+    d.deleteOnExit()
+    val root = s"${d.getAbsolutePath}/t 50%25 off"
+    LakeTable.init(spark, root, baseDf, "p", statsCol = Some("k"))
+    LakeTable.append(spark, root, baseDf.select((col("k") + 1000L).as("k"), col("p"), col("v")))
+    val cow = LakeTable.delete(spark, root, col("k") < 10L, "p")
+    assert(cow.filesRewritten > 0)
+    LakeTable.alterTable(spark, root, deleteMode = Some("mor"))
+    LakeTable.delete(spark, root, col("k") >= 1290L, "p")
+    assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined),
+      "the mor delete records deletion vectors")
+    val want = ((10L until 300L) ++ (1000L until 1290L)).toSet
+    def keys = LakeTable.read(spark, root).select("k").as[Long].collect()
+    assert(keys.length === want.size && keys.toSet === want)
+    assert(LakeTable.vacuum(spark, root, retainMillis = 0L) > 0)
+    assert(keys.length === want.size && keys.toSet === want)
   }
 
   test("cmpStat: non-finite stat renderings compare in double order instead of throwing") {
