@@ -9,9 +9,19 @@ import org.apache.spark.sql.SparkSession
   * partitions sized to the local core count rather than Spark's default 200
   * (on a real cluster this is expected to be overridden to ~2-3x total
   * cores), UTC session time zone so timestamp semantics are stable across
-  * environments and match the DuckDB oracle.
+  * environments and match the DuckDB oracle. The `file:` scheme is
+  * [[NioLocalFileSystem]] (and [[NioLocalFs]] for FileContext users such as
+  * streaming checkpoints): Hadoop's local file system with permissions and
+  * file status through java.nio, so writing a local lake file forks no
+  * `chmod` and listing one forks no `ls`.
   */
 object SparkEngine {
+
+  /** Hadoop keys (without the `spark.hadoop.` prefix) that bind the
+    * `file:` scheme to the fork-free classes. */
+  private val localFileSystem = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   /** Build (or reuse) a configured session. */
   def session(
@@ -50,7 +60,11 @@ object SparkEngine {
       // field ids; match read columns by id so renames are metadata-only
       .config("spark.sql.parquet.fieldId.read.enabled", "true")
       .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
+    // on the builder, so the context's first `file:` FileSystem (which
+    // Hadoop caches per scheme and user) is already the fork-free class
+    val spark = localFileSystem
+      .foldLeft(builder) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // engine extensions: native SQL functions, the TopKPerKey strategy and
     // the row_number-filter -> TopKPerKey optimizer rewrite
@@ -75,8 +89,16 @@ object SparkEngine {
 
   /** Tune an externally-created session (e.g. the driver's) with the same
     * semantic settings without touching parallelism knobs.
+    *
+    * The fork-free `file:` classes are set on the live context's Hadoop
+    * configuration. Hadoop caches one `file:` FileSystem per scheme and
+    * user for the JVM: if one was created before this call (any earlier
+    * local read or write creates it), that stock instance stays in use and
+    * only the FileContext face (streaming checkpoints), which is not
+    * cached, changes.
     */
   def align(spark: SparkSession): SparkSession = {
+    localFileSystem.foreach { case (k, v) => spark.sparkContext.hadoopConfiguration.set(k, v) }
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // same runtime SMJ->SHJ conversion as session() — correctness runs
     // must exercise the same plan shapes the bench measures. Same memory

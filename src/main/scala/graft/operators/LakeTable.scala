@@ -885,14 +885,12 @@ object LakeTable {
   }
 
   /** Write a small metadata file (manifest, segment). On the local
-    * scheme this bypasses Hadoop's LocalFileSystem, whose public
-    * `create()` FORKS a chmod process per file (no native lib in this
-    * image) and shadows every file with a `.crc` — measured ~4% of a
-    * warm DML statement's driver wall. java.nio writes the bytes
-    * directly; readers via the Hadoop FS are unaffected (a missing
-    * `.crc` simply skips verification). Non-local schemes keep the
-    * FileSystem route. Fails (like `create(p, overwrite = false)`) if
-    * the file already exists.
+    * scheme java.nio writes it with `CREATE_NEW`, so the existence check
+    * and the create are one atomic step (Hadoop's `create(p, false)`
+    * checks, then opens), and no `.crc` shadow file is written: one file
+    * per metadata write instead of two. Readers through the Hadoop FS are
+    * unaffected (a missing `.crc` simply skips verification). Non-local
+    * schemes keep the FileSystem route. Fails if the file already exists.
     */
   private def writeSmallFile(f: FileSystem, p: Path, bytes: Array[Byte]): Unit =
     if (Option(f.getUri.getScheme).getOrElse("file") == "file") {
