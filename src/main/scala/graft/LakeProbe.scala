@@ -100,7 +100,8 @@ object LakeProbe {
       require(snap.entries.size == n, s"parse dropped entries: ${snap.entries.size}")
       // metadata-only planning: partition prune + range prune over n files
       val (kept, tPrune) = time(
-        LakeTable.pruneRangeOn(meta, snap.entries, "k", n * 500L, n * 500L + 5000L))
+        snap.entries.filter(LakeTable.predicateFilePruner(
+          spark, mroot, meta, col("k").between(n * 500L, n * 500L + 5000L))))
       println(f"[lake] manifest n=$n%7d: render $tRender%6.3f s, commit $tCommit%6.3f s, " +
         f"parse $tParse%6.3f s, prune $tPrune%6.3f s (kept ${kept.size}), " +
         f"${text.length / 1048576.0}%5.1f MiB")
@@ -170,7 +171,8 @@ object LakeProbe {
     val (blooms, tLoad) = time(LakeTable.loadBlooms(spark, bloomRoot, Seq("k")))
     val probeKey = 777777L
     val (keptB, tPruneB) = time(
-      LakeTable.pruneBloom(spark, bloomRoot, snapB.meta.get, snapB.entries, "k", probeKey))
+      snapB.entries.filter(LakeTable.predicateFilePruner(
+        spark, bloomRoot, snapB.meta.get, col("k") === probeKey)))
     val (hitCnt, tPoint) = time(
       LakeTable.readPoint(spark, bloomRoot, "k", probeKey).count())
     val (fullCnt, tFull) = time(

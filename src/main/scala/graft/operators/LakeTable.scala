@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{NumericType, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{
+  BooleanType, DateType, NumericType, StringType, StructType, TimestampNTZType, TimestampType}
 
 import graft.sources.lake.LakeFileIndex
 
@@ -2521,10 +2523,10 @@ object LakeTable {
   }
 
   /** [[readVersion]] narrowed to files that can hold any of `keys`'
-    * tuples — the same stats + Bloom entry probe the merge path uses,
-    * so a derived-view dirty-group re-aggregation reads candidate
-    * files only, never the table (files without covering stats are
-    * conservatively kept).
+    * tuples — the same key probe the merge path prunes through
+    * ([[keyProbePruner]]), so a derived-view dirty-group re-aggregation
+    * reads candidate files only, never the table (files without covering
+    * stats are conservatively kept).
     */
   def readVersionForKeys(
       spark: SparkSession,
@@ -2534,7 +2536,9 @@ object LakeTable {
       keys: DataFrame): DataFrame = {
     val s = snapshotAt(spark, root, version)
     val meta = s.meta.get
-    val mayMatch = keyProbeFilter(spark, root, meta, keyCols, keys)
+    val ks = keys.select(keyCols.map(col): _*)
+    val mayMatch = keyProbePruner(spark, root, meta, ks,
+      foldKeyInfo(ks, probeCols(meta, ks.schema))._1)
     readEntries(spark, root, meta.schema, s.entries.filter(mayMatch))
   }
 
@@ -2587,261 +2591,128 @@ object LakeTable {
                 catch { case _: NumberFormatException => 0 }
             }
         }
+      // date/timestamp renderings order lexically only inside years
+      // 0000-9999 ("+10000-01-01" and "-0001-01-01" sort below "0001"):
+      // outside them claim equality, which keeps the file in
+      case DateType | TimestampType | TimestampNTZType
+          if !(fourDigitYear(a) && fourDigitYear(b)) => 0
       // date/timestamp/string cast-to-string forms all order lexically
       case _ => a.compareTo(b)
     }
 
-  /** The entries a `statsCol BETWEEN lo AND hi` scan must read: a file is
-    * skipped only when its recorded [min,max] interval is disjoint from
-    * [lo,hi]; files with no stats are always kept (conservative). The
-    * 4-arg form prunes on the FIRST stats column; [[pruneRangeOn]] picks
-    * any recorded dimension.
-    */
-  private[graft] def pruneRange(
-      meta: TableMeta,
-      entries: Seq[Entry],
-      lo: Any,
-      hi: Any): Seq[Entry] =
-    pruneRangeOn(meta, entries,
-      meta.statsCol.getOrElse(sys.error("LakeTable.readRange: table has no stats column")),
-      lo, hi)
-
-  private[graft] def pruneRangeOn(
-      meta: TableMeta,
-      entries: Seq[Entry],
-      statsCol: String,
-      lo: Any,
-      hi: Any): Seq[Entry] = {
-    val idx = meta.statsCols.indexOf(statsCol)
-    require(idx >= 0,
-      s"LakeTable.pruneRangeOn: $statsCol is not a stats column (have ${meta.statsCols})")
-    val dt = meta.schema(statsCol).dataType
-    val (l, h) = (lo.toString, hi.toString)
-    entries.filter { e =>
-      e.stats.lift(idx) match {
-        case Some((Some(mn), Some(mx))) => cmpStat(dt, mx, l) >= 0 && cmpStat(dt, mn, h) <= 0
-        case _ => true
-      }
-    }
-  }
-
-  /** True when `e`'s recorded [min,max] on stats dimension `statsCol`
-    * can intersect [lo,hi] (an absent bound is unbounded on that side;
-    * missing file stats → true, conservative).
-    */
-  private[graft] def entryIntersects(
-      meta: TableMeta,
-      e: Entry,
-      statsCol: String,
-      lo: Option[String],
-      hi: Option[String]): Boolean = {
-    val idx = meta.statsCols.indexOf(statsCol)
-    val dt = meta.schema(statsCol).dataType
-    e.stats.lift(idx) match {
-      case Some((Some(mn), Some(mx))) =>
-        lo.forall(l => cmpStat(dt, mx, l) >= 0) && hi.forall(h => cmpStat(dt, mn, h) <= 0)
-      case _ => true
-    }
-  }
+  /** A date/timestamp rendering in the lexically ordered `yyyy-` form. */
+  private[graft] def fourDigitYear(s: String): Boolean =
+    s.length > 4 && s.charAt(4) == '-' && (0 until 4).forall(i => Character.isDigit(s.charAt(i)))
 
   /** Largest distinct-key-tuple count a merge batch may have and still
-    * get per-key Bloom probing (the keys are collected to the driver to
-    * hash; a wider batch falls back to min/max bounds alone).
+    * probe the Bloom sidecars with `k IN (…)` (the keys are collected to
+    * the driver; a wider batch falls back to min/max bounds alone).
     */
   private val MaxBloomProbeKeys = 1000
 
-  /** One-job key probe fold: per-column exact min/max (rendered with
-    * Spark's own cast-to-string) AND per-column null presence, from a
-    * single mapPartitions pass. A column whose type is outside the set
-    * whose SQL ordering this fold reproduces exactly gets `None` bounds
-    * (the caller aggregates just those); floats/decimals are
-    * deliberately excluded (NaN/-0.0/scale orderings). A foldable
-    * column with no non-null value renders Some((None, None)). Null
-    * presence is computed for EVERY column regardless of type — it
-    * feeds the null-safe merge gate, replacing a separate probe job.
+  /** One-job key probe fold over `df`'s columns `cols`, from a single
+    * mapPartitions pass: each column's exact min and max as internal
+    * values in Spark's own SQL ordering (NaN greatest, -0.0 = 0.0,
+    * strings in binary order) — None when the column holds no non-null
+    * value — and whether any of them holds a NULL (the null-safe merge
+    * gate). Only types the file pruner compares get bounds; other
+    * columns feed the null check alone. No columns, no job.
     */
   private def foldKeyInfo(
-      proj: DataFrame,
-      dts: Seq[org.apache.spark.sql.types.DataType])
-      : (IndexedSeq[Option[(Option[String], Option[String])]], Array[Boolean]) = {
-    import org.apache.spark.sql.types._
-    val n = dts.size
-    val isStr = dts.map(_ == StringType).toArray
-    // long-extraction codes for the primitive columns; -1 = not foldable
-    val codes: Array[Int] = dts.map {
-      case ByteType => 0
-      case ShortType => 1
-      case IntegerType | DateType => 2
-      case LongType | TimestampType | TimestampNTZType => 3
-      case BooleanType => 4
-      case StringType => 5
-      case _ => -1
-    }.toArray
-    val parts = proj.queryExecution.toRdd.mapPartitions { it =>
-      val minL = Array.fill(n)(Long.MaxValue)
-      val maxL = Array.fill(n)(Long.MinValue)
-      val minS = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-      val maxS = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-      val seen = new Array[Boolean](n)
-      val nulls = new Array[Boolean](n)
-      it.foreach { r =>
-        var i = 0
-        while (i < n) {
-          if (r.isNullAt(i)) nulls(i) = true
-          else if (codes(i) >= 0) {
-            if (isStr(i)) {
-              val v = r.getUTF8String(i)
-              if (minS(i) == null || v.compareTo(minS(i)) < 0) minS(i) = v.clone()
-              if (maxS(i) == null || v.compareTo(maxS(i)) > 0) maxS(i) = v.clone()
-            } else {
-              val v = codes(i) match {
-                case 0 => r.getByte(i).toLong
-                case 1 => r.getShort(i).toLong
-                case 2 => r.getInt(i).toLong
-                case 3 => r.getLong(i)
-                case 4 => if (r.getBoolean(i)) 1L else 0L
-              }
-              if (v < minL(i)) minL(i) = v
-              if (v > maxL(i)) maxL(i) = v
+      df: DataFrame,
+      cols: Seq[String]): (Map[String, Option[(Any, Any)]], Boolean) =
+    if (cols.isEmpty) (Map.empty, false)
+    else {
+      import org.apache.spark.sql.catalyst.util.TypeUtils
+      val dts = cols.map(df.schema(_).dataType).toArray
+      val n = dts.length
+      val folds = dts.map {
+        case _: NumericType | StringType | DateType | TimestampType | TimestampNTZType |
+            BooleanType => true
+        case _ => false
+      }
+      val parts = df.select(cols.map(col): _*).queryExecution.toRdd.mapPartitions { it =>
+        val get = dts.map(InternalRow.getAccessor(_, true))
+        val ord = dts.indices.map(i =>
+          if (folds(i)) TypeUtils.getInterpretedOrdering(dts(i)) else null)
+        val lo = new Array[Any](n)
+        val hi = new Array[Any](n)
+        var anyNull = false
+        it.foreach { r =>
+          var i = 0
+          while (i < n) {
+            if (r.isNullAt(i)) anyNull = true
+            else if (folds(i)) {
+              val v = get(i)(r, i)
+              if (lo(i) == null || ord(i).lt(v, lo(i))) lo(i) = InternalRow.copyValue(v)
+              if (hi(i) == null || ord(i).gt(v, hi(i))) hi(i) = InternalRow.copyValue(v)
             }
-            seen(i) = true
-          } else seen(i) = true
-          i += 1
+            i += 1
+          }
         }
+        Iterator.single((lo, hi, anyNull))
+      }.collect()
+      val bounds = cols.indices.filter(folds(_)).map { i =>
+        val ord = TypeUtils.getInterpretedOrdering(dts(i))
+        val seen = parts.filter(_._1(i) != null)
+        cols(i) -> (if (seen.isEmpty) None
+          else Some((seen.map(_._1(i)).min(ord), seen.map(_._2(i)).max(ord))))
       }
-      Iterator.single((minL, maxL, minS, maxS, seen, nulls))
-    }.collect()
-    def render(i: Int, v: Long): String = {
-      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CLit}
-      val lit = codes(i) match {
-        case 0 => CLit(v.toByte, dts(i))
-        case 1 => CLit(v.toShort, dts(i))
-        case 2 => CLit(v.toInt, dts(i))
-        case 3 => CLit(v, dts(i))
-        case 4 => CLit(v == 1L, dts(i))
-      }
-      Cast(lit, StringType, Some("UTC")).eval(null).toString
+      (bounds.toMap, parts.exists(_._3))
     }
-    val anyNull = Array.tabulate(n)(i => parts.exists(_._6(i)))
-    val bounds = (0 until n).map { i =>
-      if (codes(i) < 0) None
-      else if (!parts.exists(_._5(i))) Some((None, None))
-      else if (isStr(i)) {
-        val mins = parts.flatMap(p => Option(p._3(i)))
-        val maxs = parts.flatMap(p => Option(p._4(i)))
-        Some((Some(mins.reduce((a, b) => if (a.compareTo(b) <= 0) a else b).toString),
-          Some(maxs.reduce((a, b) => if (a.compareTo(b) >= 0) a else b).toString)))
-      } else {
-        val lo = parts.collect { case p if p._5(i) => p._1(i) }.min
-        val hi = parts.collect { case p if p._5(i) => p._2(i) }.max
-        Some((Some(render(i, lo)), Some(render(i, hi))))
-      }
-    }
-    (bounds, anyNull)
-  }
 
-  /** The probe-side file filter for [[merge]]: a file whose recorded
-    * min/max on some stats-covered key column cannot intersect the
-    * source keys' [min,max] cannot contain a matched row, so neither the
-    * affected-partition probe nor the COW rewrite needs to read it. One
-    * metadata-sized agg over the (already-distinct) source keys computes
-    * the bounds; a composite equi-key matches only when EVERY column
-    * matches, so ONE disjoint dimension rules a file out.
-    *
-    * Conservative edges: a key column with no recorded stats, a file
-    * without stats, or a source/table type mismatch on the column (the
-    * rendered stats would not compare) keeps the file in; with no
-    * stats-covered key column at all everything stays (the pre-stats
-    * behavior). A key column whose source side is entirely NULL — or an
-    * empty source — can never equi-match anything, so the filter then
-    * excludes every file.
+  /** Key columns of `batch` a probe can prune on: stats or partition
+    * columns of the batch's own type.
     */
-  private def keyProbeFilter(
+  private def probeCols(meta: TableMeta, batch: StructType): Seq[String] =
+    batch.fieldNames.toSeq.filter(k =>
+      (meta.statsCols.contains(k) || meta.partitionCol == k) && sameType(meta, batch, k))
+
+  /** Whether table column `k` has the batch's type: a key literal
+    * coerced to another type could order differently from the join.
+    */
+  private def sameType(meta: TableMeta, batch: StructType, k: String): Boolean =
+    meta.schema.find(_.name == k).exists(_.dataType == batch(k).dataType)
+
+  /** The file pruner for an equi-key probe of the batch keys `srcKeys`
+    * (one column per key, distinct), through [[predicateFilePruner]]: a
+    * file that cannot hold a matched row needs neither the probe read
+    * nor the COW rewrite. The row predicate is `k BETWEEN lo AND hi` per
+    * [[probeCols]] key with folded `bounds` (FALSE when the batch holds
+    * no non-null value there — it can equi-match nothing), plus
+    * `k IN (…)` per same-typed Bloom column for a batch of at most
+    * [[MaxBloomProbeKeys]] tuples, where per-file blooms prune an
+    * unclustered key layout min/max cannot. A composite key matches only
+    * when EVERY column matches, so one ruled-out column skips the file.
+    */
+  private def keyProbePruner(
       spark: SparkSession,
       root: String,
       meta: TableMeta,
-      keyCols: Seq[String],
       srcKeys: DataFrame,
-      // the UN-distinct source projection when the caller has one
-      // persisted: min/max bounds are duplicate-insensitive, so the fold
-      // can skip the distinct shuffle entirely
-      srcRaw: Option[DataFrame] = None,
-      // a caller that already folded the FULL key projection (to derive
-      // its null-safe gate) passes it here so the probe reuses the job
-      preFold: Option[Map[String, Option[(Option[String], Option[String])]]] = None)
-      : Entry => Boolean = {
-    val covered = keyCols.filter(k =>
-      meta.statsCols.contains(k) &&
-        srcKeys.schema.fields.find(_.name == k)
-          .exists(_.dataType == meta.schema(k).dataType))
-    val statsPred: Entry => Boolean =
-      if (covered.isEmpty) _ => true
+      bounds: Map[String, Option[(Any, Any)]]): Entry => Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    def litOf(v: Any, k: String) = GraftColumnBridge.column(Literal(v, meta.schema(k).dataType))
+    val ranges = probeCols(meta, srcKeys.schema).flatMap(k => bounds.get(k).map {
+      case Some((lo, hi)) => col(k).between(litOf(lo, k), litOf(hi, k))
+      case None => lit(false)
+    })
+    val bloomed = srcKeys.columns.toSeq.filter(k =>
+      meta.bloomCols.contains(k) && sameType(meta, srcKeys.schema, k))
+    val ins =
+      if (bloomed.isEmpty) Nil
       else {
-        // min/max bounds of the batch keys in ONE mapPartitions fold
-        // (driver-sized result; the two-stage aggregate here cost two
-        // scheduler round-trips per merge statement). Restricted to
-        // types whose SQL ordering and rendering are reproduced exactly
-        // (integrals, date/timestamp, boolean, string — binary
-        // UTF8String order IS Spark's string min/max); anything else
-        // falls back to the aggregate.
-        val dts = covered.map(k => meta.schema(k).dataType)
-        val byName: Map[String, Option[(Option[String], Option[String])]] =
-          preFold.getOrElse {
-            val (bs, _) = foldKeyInfo(
-              srcRaw.getOrElse(srcKeys).select(covered.map(col): _*), dts)
-            covered.zip(bs).toMap
-          }
-        val needAgg = covered.filter(k => byName.get(k).flatten.isEmpty)
-        val aggBounds: Map[String, (Option[String], Option[String])] =
-          if (needAgg.isEmpty) Map.empty
-          else {
-            val aggs = needAgg.zipWithIndex.flatMap { case (k, i) =>
-              Seq(min(col(k)).cast("string").as(s"__mn$i"),
-                max(col(k)).cast("string").as(s"__mx$i"))
-            }
-            val r = srcKeys.agg(aggs.head, aggs.tail: _*).head()
-            needAgg.zipWithIndex.map { case (k, i) =>
-              k -> ((Option(r.getString(2 * i)), Option(r.getString(2 * i + 1))))
-            }.toMap
-          }
-        val bounds = covered.map(k =>
-          k -> byName.get(k).flatten.getOrElse(aggBounds(k)))
-        if (bounds.exists { case (_, (mn, mx)) => mn.isEmpty || mx.isEmpty }) _ => false
-        else
-          e => bounds.forall { case (k, (mn, mx)) => entryIntersects(meta, e, k, mn, mx) }
-      }
-
-    // Bloom probe: where min/max bounds need a CLUSTERED key layout to
-    // bite, per-file blooms prune an UNCLUSTERED one — for a narrow
-    // batch (≤ MaxBloomProbeKeys distinct tuples) a file is ruled out
-    // when, on some bloom-indexed key column, NONE of the batch's values
-    // might be present. A source column that is entirely NULL can never
-    // equi-match, so it excludes every file (same as the stats path).
-    val bloomCovered = keyCols.filter(k =>
-      meta.bloomCols.contains(k) &&
-        srcKeys.schema.fields.find(_.name == k)
-          .exists(_.dataType == meta.schema(k).dataType))
-    val bloomPred: Entry => Boolean =
-      if (bloomCovered.isEmpty) _ => true
-      else {
-        val rows = srcKeys.select(bloomCovered.map(col): _*)
-          .limit(MaxBloomProbeKeys + 1).collect()
-        if (rows.length > MaxBloomProbeKeys) _ => true
-        else {
-          val perCol = bloomCovered.zipWithIndex.map { case (k, i) =>
-            val dt = meta.schema(k).dataType
-            val hashes = rows.map(_.get(i)).filter(_ != null).distinct
-              .map(v => bloomHashExternal(dt, v))
-            (hashes, loadBlooms(spark, root, meta.bloomNamesFor(k)))
-          }
-          e => perCol.forall { case (hashes, blooms) =>
-            hashes.nonEmpty &&
-              blooms.get(e.rel).forall(bf => hashes.exists(bf.mightContainLong))
-          }
+        val rows = srcKeys.select(bloomed.map(col): _*).limit(MaxBloomProbeKeys + 1).collect()
+        if (rows.length > MaxBloomProbeKeys) Nil
+        else bloomed.zipWithIndex.map { case (k, i) =>
+          val vs = rows.map(_.get(i)).filter(_ != null).distinct.toSeq
+          if (vs.isEmpty) lit(false)
+          else col(k).isin(vs.map(v =>
+            GraftColumnBridge.column(Literal.create(v, meta.schema(k).dataType))): _*)
         }
       }
-
-    e => statsPred(e) && bloomPred(e)
+    (ranges ++ ins).reduceOption(_ && _)
+      .fold((_: Entry) => true)(predicateFilePruner(spark, root, meta, _))
   }
 
   // ---- Bloom point-lookup skipping -----------------------------------
@@ -2854,17 +2725,6 @@ object LakeTable {
     new org.apache.spark.sql.catalyst.expressions.XxHash64(
       Seq(org.apache.spark.sql.catalyst.expressions.Literal(v, dt))).eval(null)
       .asInstanceOf[Long]
-
-  /** [[bloomHashInternal]] for an EXTERNAL (Scala) value: converted and
-    * cast to the column's type first, so `readPoint(..., 5)` probes an
-    * Int value against a LongType column correctly.
-    */
-  private[graft] def bloomHashExternal(dt: org.apache.spark.sql.types.DataType, v: Any): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CLit}
-    val l = CLit.create(v)
-    val internal = if (l.dataType == dt) l.value else Cast(l, dt, Some("UTC")).eval(null)
-    bloomHashInternal(dt, internal)
-  }
 
   /** The per-file Bloom filters recorded for `column`: rel path → filter.
     * One parquet read over the batch sidecars (`index/<batch>/`),
@@ -3020,32 +2880,15 @@ object LakeTable {
     computed
   }
 
-  /** The entries a point lookup `column = value` must read: files whose
-    * Bloom filter EXCLUDES the value's hash are skipped; files without a
-    * recorded filter are kept. False positives only cost a read (the
-    * residual predicate removes them); false negatives cannot happen
-    * (Bloom property), so the result equals the unpruned filtered read.
-    */
-  private[graft] def pruneBloom(
-      spark: SparkSession,
-      root: String,
-      meta: TableMeta,
-      entries: Seq[Entry],
-      column: String,
-      value: Any): Seq[Entry] = {
-    val h = bloomHashExternal(meta.schema(column).dataType, value)
-    val blooms = loadBlooms(spark, root, meta.bloomNamesFor(column))
-    entries.filter(e => blooms.get(e.rel).forall(_.mightContainLong(h)))
-  }
-
   /** `read(...).where(column === value)` with per-file Bloom skipping —
     * the POINT-lookup complement of [[readRange]]: min/max stats cannot
     * prune an equality probe on an unclustered high-cardinality column
     * (every file's [min,max] spans the domain), but a per-file Bloom
     * filter excludes all but ~fpp of the non-containing files from
     * metadata sidecars alone. `column` must be in the table's
-    * `bloomCols`. NULL lookups are rejected (`= NULL` is never TRUE —
-    * use a partition/IS NULL read).
+    * `bloomCols`; the lookup prunes through [[predicateFilePruner]], so
+    * stats and partition arms apply too. NULL lookups are rejected
+    * (`= NULL` is never TRUE — use a partition/IS NULL read).
     */
   def readPoint(spark: SparkSession, root: String, column: String, value: Any): DataFrame = {
     require(value != null, "LakeTable.readPoint: NULL equality never matches")
@@ -3054,16 +2897,17 @@ object LakeTable {
     val meta = s0.meta.get
     require(meta.bloomCols.contains(column),
       s"LakeTable.readPoint: $column is not a bloom column (have ${meta.bloomCols})")
-    readEntries(spark, root, meta.schema, pruneBloom(spark, root, meta, s0.entries, column, value))
-      .where(col(column) === lit(value))
+    readPruned(spark, root, s0, col(column) === lit(value))
   }
 
   /** `read(...).where(statsCol BETWEEN lo AND hi)` with manifest min/max
     * file skipping: files whose stats interval cannot contain a match are
     * never handed to the parquet scan at all — planning-time pruning from
-    * metadata alone, the footer-free skipping a 100 TB table needs (the
-    * residual predicate still applies, so results are identical to the
-    * unpruned filtered read).
+    * metadata alone, the footer-free skipping a 100 TB table needs. The
+    * bounds prune through [[predicateFilePruner]], typed and rendered as
+    * the scan renders them (a TIMESTAMP bound compares in the stats'
+    * cast-to-string form), and the same predicate filters the rows, so
+    * results are identical to the unpruned filtered read.
     */
   def readRange(spark: SparkSession, root: String, lo: Any, hi: Any): DataFrame = {
     val s0 = snapshot(spark, root)
@@ -3081,9 +2925,19 @@ object LakeTable {
   def readRangeOn(spark: SparkSession, root: String, statsCol: String, lo: Any, hi: Any): DataFrame = {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.readRangeOn: no committed snapshot at $root")
+    require(s0.meta.get.statsCols.contains(statsCol),
+      s"LakeTable.readRangeOn: $statsCol is not a stats column (have ${s0.meta.get.statsCols})")
+    readPruned(spark, root, s0, col(statsCol).between(lit(lo), lit(hi)))
+  }
+
+  /** `s0`'s rows matching `predicate`, reading only the files
+    * [[predicateFilePruner]] keeps — the files a SELECT with the same
+    * WHERE reads.
+    */
+  private def readPruned(spark: SparkSession, root: String, s0: Snapshot, predicate: Column) = {
     val meta = s0.meta.get
-    readEntries(spark, root, meta.schema, pruneRangeOn(meta, s0.entries, statsCol, lo, hi))
-      .where(col(statsCol).between(lit(lo), lit(hi)))
+    readEntries(spark, root, meta.schema,
+      s0.entries.filter(predicateFilePruner(spark, root, meta, predicate))).where(predicate)
   }
 
   // ---- MERGE ---------------------------------------------------------
@@ -3247,11 +3101,12 @@ object LakeTable {
     MergeStats(s0.version, 0, 0, s0.entries.size, 0, filesProbed = probed)
 
   /** File-level pruner for a row predicate ([[delete]], [[update]],
-    * [[optimize]]'s WHERE): TRUE = the file may hold a matching row. The
-    * scan's own [[LakeFileIndex.entryFilter]], so SQL and API statements
-    * prune the files a SELECT with the same WHERE would read.
+    * [[optimize]]'s WHERE, the merge key probe [[keyProbePruner]],
+    * [[readPoint]] and [[readRange]]): TRUE = the file may hold a
+    * matching row. The scan's own [[LakeFileIndex.entryFilter]], so every
+    * statement prunes the files a SELECT with the same WHERE would read.
     */
-  private def predicateFilePruner(
+  private[graft] def predicateFilePruner(
       spark: SparkSession,
       root: String,
       meta: TableMeta,
@@ -3626,13 +3481,16 @@ object LakeTable {
     val (src, releaseSrc) = persistForStatement(source)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
     try {
-      // stats/bloom-informed probe: when the manifest records min/max (or
+      // key probe: when the manifest records min/max, partition values (or
       // Bloom sidecars) on the key columns, files whose bounds cannot
       // intersect — or whose blooms exclude every batch key — are pruned
       // from the probe scan BEFORE any data file is opened: a narrow
       // upsert batch against a 100 TB table probes the few files that can
-      // hold its keys, not the corpus, even on an unclustered key layout
-      val mayMatch = keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src))
+      // hold its keys, not the corpus, even on an unclustered key layout.
+      // The bounds fold the persisted source: min/max are duplicate-
+      // insensitive, so the fold skips the distinct shuffle
+      val mayMatch = keyProbePruner(spark, root, meta, srcKeys,
+        foldKeyInfo(src, probeCols(meta, srcKeys.schema))._1)
       val probeEntries = s0.entries.filter(mayMatch)
       // partitions holding a matched key (one probe of the surviving files
       // against the broadcast source keys) ∪ partitions receiving source
@@ -3679,7 +3537,8 @@ object LakeTable {
     *   2. every file we rewrote is still present BYTE-IDENTICAL at
     *      head (the winner did not touch our read set), and
     *   3. the winner's new/changed files provably hold NONE of our
-    *      batch keys (the same stats/Bloom probe that pruned our scan,
+    *      batch keys or predicate matches (`mayMatch`: the same
+    *      [[predicateFilePruner]] filter that pruned our scan,
     *      metadata-only) — so a sequential run would have classified
     *      them as carry.
     *
@@ -3936,19 +3795,15 @@ object LakeTable {
           (s0.entries, s0.entries.size, s0.entries.map(_.part).distinct.size,
             (_: Entry) => true)
         else {
-          // stats/Bloom pruning is sound only for non-null keys (NULL is
+          // key pruning is sound only for non-null keys (NULL is
           // outside every min/max bound) — a null-safe merge whose batch
           // carries a NULL key must probe every entry. Null presence and
           // the probe's min/max bounds come from ONE fold over the
           // persisted source.
-          val keyDts = keyCols.map(k => src.schema(k).dataType)
-          val (foldBounds, keyHasNull) =
-            foldKeyInfo(src.select(keyCols.map(col): _*), keyDts)
-          val srcHasNullKey = nullSafeKeys && keyHasNull.exists(identity)
+          val (bounds, keyHasNull) = foldKeyInfo(src, keyCols)
           val mayMatch =
-            if (srcHasNullKey) (_: Entry) => true
-            else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(src),
-              Some(keyCols.zip(foldBounds).toMap))
+            if (nullSafeKeys && keyHasNull) (_: Entry) => true
+            else keyProbePruner(spark, root, meta, srcKeys, bounds)
           val probeEntries = s0.entries.filter(mayMatch)
           val (rw, matchedCount) = rewriteSet(s0, meta,
             if (probeEntries.isEmpty) None
@@ -4018,7 +3873,7 @@ object LakeTable {
       preCommit: () => Unit): MergeStats = {
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
 
-    // candidate files: the stats/Bloom probe is conservative-COMPLETE
+    // candidate files: the key probe is conservative-COMPLETE
     // (every file that could hold a source key survives it), so a
     // source row unmatched within the probe set is unmatched in the
     // whole table — the NOT MATCHED classification needs no full scan.
@@ -4030,13 +3885,12 @@ object LakeTable {
     // (as in the COW arm, one fold yields null presence and the bounds).
     val mayMatch =
       if (notMatchedBySource.nonEmpty) (_: Entry) => true
-      else if (nullSafeKeys) {
-        val (foldBounds, keyHasNull) = foldKeyInfo(
-          source.select(keyCols.map(col): _*), keyCols.map(k => source.schema(k).dataType))
-        if (keyHasNull.exists(identity)) (_: Entry) => true
-        else keyProbeFilter(spark, root, meta, keyCols, srcKeys, Some(source),
-          Some(keyCols.zip(foldBounds).toMap))
-      } else keyProbeFilter(spark, root, meta, keyCols, srcKeys)
+      else {
+        val (bounds, keyHasNull) =
+          foldKeyInfo(source, if (nullSafeKeys) keyCols else probeCols(meta, srcKeys.schema))
+        if (nullSafeKeys && keyHasNull) (_: Entry) => true
+        else keyProbePruner(spark, root, meta, srcKeys, bounds)
+      }
     val probeEntries = s0.entries.filter(mayMatch)
 
     val srcCols = source.columns.filter(_.startsWith("__s_")).toSeq

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{AggOps, AsOfJoin, RangeJoin, Resample, SketchOps}
@@ -381,7 +381,7 @@ object ExtQueries {
     // against the plain filtered aggregate) plus the REAL pruning
     // outcome — files_skipped = (pruned entry list is strictly smaller)
     // — which the oracle pins to literal true: if the stats pipeline
-    // broke (no stats recorded, pruneRange keeping everything), the
+    // broke (no stats recorded, the file pruner keeping everything), the
     // boolean flips and the hash fails even though the VALUES would
     // still be right via the residual predicate.
     "q136_lake_skipping" -> { (s, dir) =>
@@ -402,7 +402,8 @@ object ExtQueries {
       val orders = base.withColumn("key_bucket", floor(col("o_orderkey") / width))
       LakeTable.init(s, root, orders, "key_bucket", statsCol = Some("o_orderkey"))
       val snap = LakeTable.snapshot(s, root)
-      val pruned = LakeTable.pruneRange(snap.meta.get, snap.entries, 100, 399)
+      val pruned = snap.entries.filter(LakeTable.predicateFilePruner(
+        s, root, snap.meta.get, col("o_orderkey").between(100, 399)))
       val skipped = pruned.size < snap.entries.size
       LakeTable.readRange(s, root, 100, 399)
         .agg(
@@ -697,10 +698,11 @@ object ExtQueries {
       val probeKey = orders.where(col("o_orderkey") >= 100)
         .agg(min("o_orderkey")).head.getLong(0)
       val snap = LakeTable.snapshot(s, root)
-      val statsUseless = LakeTable.pruneRange(
-        snap.meta.get, snap.entries, probeKey, probeKey).size == snap.entries.size
-      val bloomKept = LakeTable.pruneBloom(
-        s, root, snap.meta.get, snap.entries, "o_orderkey", probeKey).size
+      def kept(p: Column) =
+        snap.entries.count(LakeTable.predicateFilePruner(s, root, snap.meta.get, p))
+      val statsUseless =
+        kept(col("o_orderkey").between(probeKey, probeKey)) == snap.entries.size
+      val bloomKept = kept(col("o_orderkey") === probeKey)
       LakeTable.readPoint(s, root, "o_orderkey", probeKey)
         .select(
           col("o_orderkey"),

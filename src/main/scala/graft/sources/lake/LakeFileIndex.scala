@@ -9,7 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{
   PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
-import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
+import org.apache.spark.sql.types.{
+  BooleanType, DataType, DateType, NumericType, StringType, StructType, TimestampNTZType,
+  TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.control.NonFatal
 
@@ -28,12 +30,10 @@ import graft.operators.LakeTable.{Entry, TableMeta}
   *   - the `dataFilters` Spark pushes down prune that list BEFORE the
   *     scan: partition-column predicates select manifest partitions
   *     exactly, and stats-column predicates skip files whose recorded
-  *     [min,max] cannot intersect — the `readPartitions`/`readRangeOn`
-  *     skipping, but applied AUTOMATICALLY to any `.where()` the user
-  *     writes instead of through dedicated entry points, and composable
-  *     with everything else Catalyst pushes (column pruning and residual
-  *     parquet footer/page skipping still happen downstream in the
-  *     vectorized reader).
+  *     [min,max] cannot intersect — applied AUTOMATICALLY to any
+  *     `.where()` the user writes, and composable with everything else
+  *     Catalyst pushes (column pruning and residual parquet footer/page
+  *     skipping still happen downstream in the vectorized reader).
   *
   * The table is declared UNPARTITIONED to Spark (`partitionSchema`
   * empty): the partition column is stored inside every data file as
@@ -42,9 +42,14 @@ import graft.operators.LakeTable.{Entry, TableMeta}
   * stats pruning. That keeps evolution/row-shape concerns out of the
   * partition-value decoding path entirely.
   *
-  * It is the lake's one predicate-to-files pruner: DELETE and UPDATE
-  * (SQL or API) and `OPTIMIZE ... WHERE` prune through [[entryFilter]]
-  * too, so a predicate skips the same files whichever verb carries it.
+  * It is the lake's one predicate-to-files pruner, and the one module
+  * that knows how stats intervals and Bloom filters rule out a file.
+  * Besides scans, [[entryFilter]] prunes DELETE and UPDATE (SQL or API),
+  * `OPTIMIZE ... WHERE`, the MERGE key probe (`k BETWEEN lo AND hi`,
+  * plus `k IN (…)` on Bloom columns for a narrow batch) and the lost-
+  * commit rebase check it feeds, a matview's `readVersionForKeys`, and
+  * `readPoint`/`readRange`, so a predicate skips the same files whichever
+  * verb carries it.
   *
   * Pruning is strictly conservative: only bare attr-vs-literal
   * comparisons, IN/INSET, and null tests on the partition column
@@ -197,11 +202,16 @@ class LakeFileIndex(
     if (e.part == LakeTable.NullPartition) None else Some(e.part)
 
   /** Render a literal/internal value into the manifest's string space
-    * (stats are `cast("string")` renderings; partition values likewise).
-    * Only same-family numeric/string pairs compare soundly — dates,
-    * timestamps, binaries, and cross-family literals return None (no
-    * pruning). Literals arrive typed to the column (scan pushdown, or
-    * [[LakeFileIndex.resolvedConjuncts]] for DML and OPTIMIZE WHERE).
+    * (stats are `cast("string")` renderings in the engine's pinned UTC
+    * session zone; partition values likewise). Numbers and strings
+    * render directly; dates, timestamps and booleans through Spark's own
+    * cast to string, so "2020-01-01 00:00:00" meets the stat it was
+    * written as — a date or timestamp only inside years 0000-9999, where
+    * its rendering orders lexically. Binaries, other types and
+    * cross-family literals return None (no pruning). Literals arrive
+    * typed to the column (scan pushdown, or
+    * [[LakeFileIndex.resolvedConjuncts]] for DML, MERGE and the read
+    * helpers).
     */
   private def render(colDt: DataType, v: Any): Option[String] = (colDt, v) match {
     case (_, null) => None
@@ -209,6 +219,10 @@ class LakeFileIndex(
     case (_: NumericType, d: org.apache.spark.sql.types.Decimal) => Some(d.toString)
     case (StringType, s: UTF8String) => Some(s.toString)
     case (StringType, s: String) => Some(s)
+    case (BooleanType, _: Boolean) => Some(v.toString)
+    case (DateType, _: Int) | (TimestampType | TimestampNTZType, _: Long) =>
+      Some(Cast(Literal(v, colDt), StringType, Some("UTC")).eval().toString)
+        .filter(LakeTable.fourDigitYear)
     case _ => None
   }
 
@@ -223,11 +237,20 @@ class LakeFileIndex(
         hi.forall(h => LakeTable.cmpStat(dt, v, h) <= 0))
   }
 
-  /** Keep entries whose recorded stats on `sc` can intersect [lo,hi]
-    * (missing stats keep the file, conservative).
+  /** Keep entries whose recorded [min,max] on stats column `sc` can
+    * intersect [lo,hi] (an absent bound is unbounded on that side;
+    * missing file stats keep the file, conservative).
     */
-  private def statsRange(sc: String, lo: Option[String], hi: Option[String]): EPred =
-    e => LakeTable.entryIntersects(meta, e, sc, lo, hi)
+  private def statsRange(sc: String, lo: Option[String], hi: Option[String]): EPred = {
+    val idx = meta.statsCols.indexOf(sc)
+    val dt = meta.schema(sc).dataType
+    e => e.stats.lift(idx) match {
+      case Some((Some(mn), Some(mx))) =>
+        lo.forall(l => LakeTable.cmpStat(dt, mx, l) >= 0) &&
+          hi.forall(h => LakeTable.cmpStat(dt, mn, h) <= 0)
+      case _ => true
+    }
+  }
 
   private def identityPart: Boolean =
     meta.partitionFn == graft.operators.PartitionFn.Identity
@@ -310,7 +333,8 @@ class LakeFileIndex(
   /** Bloom consult for an equality/IN probe: a file is kept if ANY probed
     * value might be present (or it has no recorded filter). Hashes use
     * the attribute's own type, so this also prunes types the rendered
-    * min/max comparison conservatively skips (dates, timestamps).
+    * min/max comparison conservatively skips (binaries, out-of-range
+    * dates).
     */
   private def bloomPred(nm: String, dt: DataType, raws: Seq[Any]): Option[EPred] =
     bloomName(nm).flatMap { bc =>
@@ -390,6 +414,7 @@ class LakeFileIndex(
 
   /** One pushed conjunct → an entry predicate, or None (no pruning). */
   private def entryPredicate(f: Expression): Option[EPred] = f match {
+    case Literal(false, BooleanType) => Some(_ => false) // no row can match
     case EqualTo(a, Literal(v, _)) if v != null => eqPred(a, Seq(v))
     case EqualTo(Literal(v, _), a) if v != null => eqPred(a, Seq(v))
     case EqualNullSafe(a, Literal(null, _)) =>

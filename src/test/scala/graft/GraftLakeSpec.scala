@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
@@ -281,12 +281,14 @@ class GraftLakeSpec extends SparkSpec {
     assert(total >= 8)
 
     // stats pruning really is useless here (control)
-    assert(LakeTable.pruneRange(snap.meta.get, snap.entries, 1234, 1234).size === total)
+    def pruned(p: Column) =
+      snap.entries.filter(LakeTable.predicateFilePruner(spark, root, snap.meta.get, p))
+    assert(pruned(col("k").between(1234, 1234)).size === total)
 
     // bloom pruning on the long key and the string id
-    val keptK = LakeTable.pruneBloom(spark, root, snap.meta.get, snap.entries, "k", 1234L)
+    val keptK = pruned(col("k") === 1234L)
     assert(keptK.size < total, s"bloom should skip files: kept ${keptK.size} of $total")
-    val keptU = LakeTable.pruneBloom(spark, root, snap.meta.get, snap.entries, "u", "u1234")
+    val keptU = pruned(col("u") === "u1234")
     assert(keptU.size < total)
 
     // exactness: present and absent keys
@@ -435,7 +437,8 @@ class GraftLakeSpec extends SparkSpec {
     LakeTable.optimize(spark, root, minFilesPerPartition = 2)
     val snap = LakeTable.snapshot(spark, root)
     assert(snap.entries.size === 4) // compacted to one file per partition
-    val kept = LakeTable.pruneBloom(spark, root, snap.meta.get, snap.entries, "k", 123L)
+    val kept = snap.entries.filter(
+      LakeTable.predicateFilePruner(spark, root, snap.meta.get, col("k") === 123L))
     assert(kept.size < snap.entries.size,
       s"post-optimize blooms must still prune: kept ${kept.size} of ${snap.entries.size}")
     assert(LakeTable.readPoint(spark, root, "k", 123L)
@@ -519,7 +522,8 @@ class GraftLakeSpec extends SparkSpec {
     // live blooms unaffected
     val kept = {
       val snap = LakeTable.snapshot(spark, root)
-      LakeTable.pruneBloom(spark, root, snap.meta.get, snap.entries, "k", 42L)
+      snap.entries.filter(
+        LakeTable.predicateFilePruner(spark, root, snap.meta.get, col("k") === 42L))
     }
     assert(kept.nonEmpty)
     assert(LakeTable.readPoint(spark, root, "k", 42L).select("v").head.getString(0) === "b42")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.{CommitConflict, LakeTable}
 
@@ -22,6 +23,10 @@ class LakeTableSpec extends SparkSpec {
     d.deleteOnExit()
     s"${d.getAbsolutePath}/tbl"
   }
+
+  /** The entries of `snap` the lake's file pruner keeps for `predicate`. */
+  private def pruned(root: String, snap: LakeTable.Snapshot, predicate: Column) =
+    snap.entries.filter(LakeTable.predicateFilePruner(spark, root, snap.meta.get, predicate))
 
   private def baseDf = {
     import spark.implicits._
@@ -719,7 +724,7 @@ class LakeTableSpec extends SparkSpec {
     assert(s0.entries.forall(e => e.min.isDefined && e.max.isDefined))
 
     // selective range: v in [600, 750] -> k in [200, 250] -> partition "2" only
-    val kept = LakeTable.pruneRange(s0.meta.get, s0.entries, 600, 750)
+    val kept = pruned(root, s0, col("v").between(600, 750))
     assert(kept.size < s0.entries.size,
       s"pruning kept all ${s0.entries.size} files")
     assert(kept.map(_.part).toSet === Set("2"))
@@ -738,6 +743,62 @@ class LakeTableSpec extends SparkSpec {
     assert(got2.exceptAll(expected2).isEmpty && expected2.exceptAll(got2).isEmpty)
   }
 
+  test("readRange on a TIMESTAMP stats column keeps a file whose max equals the lower bound") {
+    import spark.implicits._
+    val root = freshRoot()
+    val (lo, hi) = (java.sql.Timestamp.valueOf("2020-01-01 00:00:00"),
+      java.sql.Timestamp.valueOf("2020-01-02 00:00:00"))
+    // partition "a" ends exactly at lo; partition "b" lies wholly before it
+    val df = Seq((1, "a", "2019-12-31 00:00:00"), (2, "a", "2020-01-01 00:00:00"),
+      (3, "b", "2019-06-01 12:00:00")).toDF("k", "p", "t")
+      .select(col("k"), col("p"), col("t").cast("timestamp").as("ts"))
+    LakeTable.init(spark, root, df, "p", statsCol = Some("ts"))
+    val s0 = LakeTable.snapshot(spark, root)
+    assert(s0.entries.filter(_.part == "a").flatMap(_.max) === Seq("2020-01-01 00:00:00"))
+    val got = LakeTable.readRange(spark, root, lo, hi)
+    val expected = LakeTable.read(spark, root).where(col("ts").between(lit(lo), lit(hi)))
+    assert(expected.count() === 1)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      s"readRange returned ${got.count()} rows, the filtered read 1")
+    // the bound still skips the file that lies wholly before it
+    assert(pruned(root, s0, col("ts").between(lit(lo), lit(hi))).map(_.part).toSet === Set("a"))
+  }
+
+  test("merge keyed on an identity partition column prunes its probe as a SELECT does") {
+    Seq("cow", "mor").foreach { mode =>
+      val root = freshRoot()
+      val base = spark.range(1000).select(
+        col("id").as("k"), (col("id") % 10).cast("int").as("p"), col("id").as("v"))
+      LakeTable.init(spark, root, base, "p", deleteMode = mode)
+      val total = LakeTable.snapshot(spark, root).entries.size
+      // the files a SELECT over the batch's key range reads
+      val scan = spark.read.format("graft-lake").load(root).where(col("p").between(3, 4))
+        .queryExecution.sparkPlan
+      val selected = scan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputRDD.partitions.toSeq.flatMap {
+            case dp: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+              dp.inputPartitions.flatMap {
+                case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+                  fp.files.map(_.urlEncodedPath).toSeq
+                case _ => Nil
+              }
+            case _ => Nil
+          }
+      }.flatten.distinct.size
+      assert(selected > 0 && selected < total, s"$mode: fixture must prune ($selected/$total)")
+      // k is no stats column: only the partition key bounds the probe
+      val src = base.where(col("p").between(3, 4) && col("k") < 100)
+        .withColumn("v", col("v") + 1)
+      val stats = LakeTable.merge(spark, root, src, Seq("p", "k"), "p")
+      assert(stats.filesProbed === selected,
+        s"$mode: merge probed ${stats.filesProbed} files, the SELECT reads $selected of $total")
+      val after = LakeTable.read(spark, root)
+      assert(after.count() === 1000)
+      assert(after.where(col("v") =!= col("k")).count() === 20)
+    }
+  }
+
   test("multi-column stats: range reads skip files on either dimension") {
     val root = freshRoot()
     // each partition is one contiguous century of k, so BOTH k and v=3k
@@ -751,11 +812,10 @@ class LakeTableSpec extends SparkSpec {
     assert(s0.meta.get.statsCols === Seq("v", "k"))
     assert(s0.entries.forall(_.stats.size === 2))
     // first-column face unchanged: v in [600, 750] -> partition "2"
-    assert(LakeTable.pruneRange(s0.meta.get, s0.entries, 600, 750).map(_.part).toSet === Set("2"))
+    assert(pruned(root, s0, col("v").between(600, 750)).map(_.part).toSet === Set("2"))
     // second dimension prunes independently: k in [250, 260] -> "2" too,
     // but k in [850, 930] -> partitions "8" and "9"
-    assert(LakeTable.pruneRangeOn(s0.meta.get, s0.entries, "k", 850, 930)
-      .map(_.part).toSet === Set("8", "9"))
+    assert(pruned(root, s0, col("k").between(850, 930)).map(_.part).toSet === Set("8", "9"))
     val got = LakeTable.readRangeOn(spark, root, "k", 850, 930)
     assert(got.count() === 81)
     assert(got.agg(sum("v")).head.getLong(0) === (850L to 930L).map(_ * 3).sum)
@@ -819,7 +879,7 @@ class LakeTableSpec extends SparkSpec {
       sortCols = Seq("k"))
     val s1 = LakeTable.snapshot(spark, root)
     assert(s1.entries.size > 3, s"fixture needs a multi-file layout, got ${s1.entries.size}")
-    val hit = LakeTable.pruneRangeOn(s1.meta.get, s1.entries, "s", "id-0000", "id-0049")
+    val hit = pruned(root, s1, col("s").between("id-0000", "id-0049"))
     assert(hit.nonEmpty && hit.size < s1.entries.size,
       s"string range pruning kept ${hit.size} of ${s1.entries.size} files")
   }
@@ -845,7 +905,7 @@ class LakeTableSpec extends SparkSpec {
         s"partition ${e.part} recorded [${e.min},${e.max}], expected [$lo,${lo + 99}]")
     }
     // and a narrow range read must keep exactly one file
-    val kept = LakeTable.pruneRange(s0.meta.get, s0.entries, 1234, 1299)
+    val kept = pruned(root, s0, col("v").between(1234, 1299))
     assert(kept.map(_.part).toSet === Set("12"))
   }
 
@@ -862,7 +922,7 @@ class LakeTableSpec extends SparkSpec {
     val s0 = LakeTable.snapshot(spark, root)
     assert(s0.entries.size === 4)
     // interleaved slices: no file can be skipped for a mid-range probe
-    assert(LakeTable.pruneRange(s0.meta.get, s0.entries, 100, 149).size === 4)
+    assert(pruned(root, s0, col("k").between(100, 149)).size === 4)
     val preSum = LakeTable.read(spark, root).agg(sum("v")).head.getLong(0)
 
     LakeTable.optimize(spark, root, minFilesPerPartition = 2,
@@ -870,7 +930,7 @@ class LakeTableSpec extends SparkSpec {
     val s1 = LakeTable.snapshot(spark, root)
     assert(s1.entries.size >= 2, "maxRecordsPerFile should split the partition")
     // clustered files: disjoint k-ranges -> a 50-wide probe keeps few
-    val kept = LakeTable.pruneRange(s1.meta.get, s1.entries, 100, 149)
+    val kept = pruned(root, s1, col("k").between(100, 149))
     assert(kept.size < s1.entries.size,
       s"clustered optimize did not restore skipping: kept ${kept.size}/${s1.entries.size}")
     // contents untouched; the pruned read equals the plain filtered read
@@ -1177,16 +1237,34 @@ class LakeTableSpec extends SparkSpec {
     assert(kept(col("k").between(2L, 7L) && col("s") === "x") === Set("k5", "nostats"))
     // attr on the right; strict bounds widen to inclusive (never narrower)
     assert(kept(lit(4L) < col("k")) === all - "k0-3")
-    // OR, functions, unknown columns, date literals: no constraint
+    // OR, functions, unknown columns: no constraint
     assert(kept(col("k") === 1L || col("k") === 2L) === all)
     assert(kept(abs(col("k")) === 1L) === all)
     assert(kept(col("zz") === 1L) === all)
-    assert(kept(col("d") === java.sql.Date.valueOf("2024-01-01")) === all)
+    // a date literal renders as its stats do ("2024-01-01") and prunes
+    assert(kept(col("d") === java.sql.Date.valueOf("2024-01-01")) === Set("k5", "nostats"))
     // tighter conjunct wins on each side
     assert(kept(col("k") >= 1L && col("k") >= 6L && col("k") <= 9L && col("k") <= 7L) ===
       Set("k6-9", "nostats"))
     // an IN list prunes on its values' envelope: the files holding 5 and 6 stay
     assert(kept(col("k").isin(5L, 6L)) === Set("k5", "k6-9", "nostats"))
+  }
+
+  test("DML pruner: dates past year 9999 keep their files, as stat or as literal") {
+    import java.time.LocalDate
+    val farDay = LocalDate.of(10000, 1, 1)
+    // the stat a writer records for it: Spark's cast to string
+    val far = org.apache.spark.sql.catalyst.expressions.Cast(
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        farDay.toEpochDay.toInt, org.apache.spark.sql.types.DateType),
+      org.apache.spark.sql.types.StringType, Some("UTC")).eval().toString
+    def kept(c: org.apache.spark.sql.Column) = keptBy("d DATE", Seq(
+      "mixed" -> Seq(("2024-06-01", far)),
+      "early" -> Seq(("2024-01-01", "2024-01-31"))))(c)
+    // a max past 9999 still lies above every in-range bound
+    assert(kept(col("d") >= java.sql.Date.valueOf("2024-03-01")) === Set("mixed"))
+    // an IN list holding the far date keeps the file that may hold it
+    assert(kept(col("d").isin(LocalDate.of(2024, 1, 10), farDay)) === Set("mixed", "early"))
   }
 
   test("DML pruner: cross-width floats bound at the widened value; NaN and Infinity") {

@@ -105,7 +105,7 @@ class TypeWideningSpec extends SparkSpec {
     val stale = LakeTable.loadBlooms(spark, root, Seq("k"))
     assert(stale.nonEmpty, "fixture must have written a sidecar")
     val wouldFalsePrune = (1 to 64).filter { i =>
-      val h = LakeTable.bloomHashExternal(LongType, i.toLong)
+      val h = LakeTable.bloomHashInternal(LongType, i.toLong)
       stale.values.forall(!_.mightContainLong(h))
     }
     assert(wouldFalsePrune.nonEmpty,
@@ -126,7 +126,8 @@ class TypeWideningSpec extends SparkSpec {
     val fresh = LakeTable.loadBlooms(spark, root, Seq("k#w2"))
     assert(fresh.nonEmpty, "post-widening write must index under the new key")
     val s2 = LakeTable.snapshot(spark, root)
-    val pruned = LakeTable.pruneBloom(spark, root, s2.meta.get, s2.entries, "k", 1000L)
+    val pruned = s2.entries.filter(
+      LakeTable.predicateFilePruner(spark, root, s2.meta.get, col("k") === 1000L))
     assert(pruned.map(_.rel).toSet ===
       fresh.keySet ++ s2.entries.filterNot(e => fresh.contains(e.rel)).map(_.rel),
       "gen-1 entries are kept (no sidecar under the new key); the gen-2 filter prunes normally")
