@@ -70,6 +70,13 @@ object StmtPlanDump {
     capture("REFRESH MATERIALIZED VIEW (signed-delta merge)", "stmt_mv_refresh_after.txt") {
       spark.sql("REFRESH MATERIALIZED VIEW graft.db.spmv")
     }
+    capture("COW MERGE INTO (key upsert)", "stmt_merge_upsert_after.txt") {
+      spark.sql("MERGE INTO graft.db.sp t USING (SELECT o_orderkey, o_orderstatus, " +
+        "CAST(o_totalprice * 2 AS DOUBLE) AS o_totalprice FROM p_orders " +
+        "WHERE o_orderkey % 109 = 11 " +
+        "UNION ALL SELECT 3000000001, 'F', 2.5) s ON t.o_orderkey = s.o_orderkey " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    }
     spark.stop()
   }
 }

@@ -41,28 +41,28 @@ import graft.sources.lake.LakeFileIndex
   * `escapePathName` (NOT URL encoding — '+' is a literal character in
   * path names, and control characters are %-escaped), and a NULL
   * partition value maps to Hive's `__HIVE_DEFAULT_PARTITION__` sentinel
-  * ON BOTH SIDES — the directory listing and the affected-partition set
-  * merge/delete compute — so null-keyed partitions are rewritten and
-  * carried exactly like any other value.
+  * in both the directory name and the manifest entry, so null-keyed
+  * partitions are read, rewritten and carried exactly like any other
+  * value.
   *
-  * MERGE (source wins on key, unmatched source rows insert) is
-  * copy-on-write at FILE granularity:
+  * MERGE (source wins on key, unmatched source rows insert) is the
+  * clause merge with one UPDATE-all and one INSERT-all clause; on a
+  * `cow` table it is copy-on-write at FILE granularity:
   *
-  *   1. matched-partition discovery: one semi-join of the target against
-  *      the (broadcast) source keys, aggregated to the distinct partition
-  *      values containing a match — metadata-sized result. The probe
-  *      itself is manifest-pruned: when per-file min/max stats cover the
-  *      key columns, files whose bounds cannot intersect the source keys'
-  *      bounds are never opened (a narrow batch probes O(batch-range)
-  *      files, not the table). Files in partitions with no match and no
-  *      insert are NOT rewritten; their manifest entries carry over
-  *      verbatim (the spec pins unchanged paths). This handles
-  *      partition-moving updates correctly: a row whose new partition
-  *      value differs still has its OLD file's partition rewritten,
-  *      because the match lives there;
-  *   2. rewrite = source rows ∪ (affected-partition target rows
-  *      anti-joined on key) written once, hash-partitioned by partition
-  *      value — one shuffle sized by the affected slice, never the table;
+  *   1. matched-file discovery: the probe is manifest-pruned (partition
+  *      values, min/max stats and Bloom sidecars rule out files that
+  *      cannot hold a source key, so a narrow batch probes O(batch-range)
+  *      files, not the table), then one semi-join of the surviving files
+  *      against the broadcast source keys names the files holding a
+  *      match — a metadata-sized set. Every other file's manifest entry
+  *      carries over verbatim (the spec pins unchanged paths). A
+  *      partition-moving update still rewrites its OLD file, because the
+  *      match lives there;
+  *   2. rewrite = one full-outer join of the matched files' rows with the
+  *      source, deciding every row's fate (matched rows take the source
+  *      values, other rows stay, unmatched source rows insert), written
+  *      once and partitioned by partition value — sized by the matched
+  *      files and the batch, never the table;
   *   3. commit as above.
   *
   * Schema evolution: a source carrying columns the table lacks widens
@@ -72,7 +72,7 @@ import graft.sources.lake.LakeFileIndex
   * scan, so no footer merging is needed). Columns shared by name must
   * keep their type.
   *
-  * At 100 TB the cost is proportional to the touched partitions (the
+  * At 100 TB the cost is proportional to the touched files (the
   * usual upsert locality: late-arriving corrections cluster in recent
   * partitions), the manifest is O(files) metadata, and the scheme needs
   * nothing from the filesystem beyond atomic same-dir rename — the same
@@ -96,10 +96,13 @@ object LakeTable {
     */
   val NullPartition: String = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 
-  /** `filesProbed` = manifest entries the affected-partition probe
-    * actually scanned after stats pruning (-1 when the operation has no
-    * probe, e.g. append/optimize) — the number a scale test pins to
-    * prove a narrow merge/delete did NOT read the whole table.
+  /** The outcome of one write. For row-level DML: `matchedPartitions` =
+    * distinct partitions among the files the statement touched (rewrote
+    * on `cow`, gave a deletion vector on `mor`); `filesRewritten` = those
+    * files; `filesProbed` = manifest entries the probe actually scanned
+    * after stats pruning (-1 when the operation has no probe, e.g.
+    * append/optimize) — the number a scale test pins to prove a narrow
+    * merge/delete did NOT read the whole table.
     */
   case class MergeStats(
       version: Long,
@@ -1171,46 +1174,6 @@ object LakeTable {
       PartitionFn.column(meta.partitionFn, col(meta.partitionCol),
         meta.schema(meta.partitionCol).dataType),
       lit(NullPartition))
-
-  /** DML file-classification matcher under PARTITION SPEC EVOLUTION:
-    * TRUE iff the entry's partition value — interpreted under the
-    * entry's OWN spec — is among the values `rows` map to under that
-    * spec. One distinct-collect computes every spec's value set in a
-    * single pass; on never-evolved tables this is exactly the old
-    * single-spec `partExpr.distinct` classification. Completeness is
-    * what correctness rides on: a file holding a row the DML must touch
-    * is matched because that row itself maps into the file's spec space.
-    * Returns the matcher and the CURRENT spec's affected-value count
-    * (the MergeStats partition figure).
-    */
-  private def partitionMatcher(
-      meta: TableMeta,
-      rows: DataFrame): (Entry => Boolean, Int) = {
-    val exprs = meta.specs.zipWithIndex.map { case ((c, fn), i) =>
-      coalesce(
-        PartitionFn.column(fn, col(s"`$c`"), meta.schema(c).dataType),
-        lit(NullPartition)).as(s"__p$i")
-    }
-    // single-job distinct: fold per-partition value sets in one
-    // mapPartitions pass and union the (bounded: distinct partition
-    // values x specs) sets on the driver — a distinct().collect() here
-    // costs a full shuffle + two AQE stages per DML statement for the
-    // same driver-sized result
-    val n = meta.specs.size
-    val folded = rows.select(exprs: _*).queryExecution.toRdd
-      .mapPartitions { it =>
-        val acc = Array.fill(n)(scala.collection.mutable.HashSet.empty[String])
-        it.foreach { r =>
-          var i = 0
-          while (i < n) { acc(i).add(r.getUTF8String(i).toString); i += 1 }
-        }
-        Iterator.single(acc.map(_.toSet))
-      }.fold(Array.fill(n)(Set.empty[String])) { (a, b) =>
-        a.indices.map(i => a(i) ++ b(i)).toArray
-      }
-    val sets: IndexedSeq[Set[String]] = folded.toIndexedSeq
-    ((e: Entry) => sets(e.spec).contains(e.part), sets.last.size)
-  }
 
   /** Recompute GENERATED columns over a post-SET frame: an UPDATE that
     * changed a referenced column must not leave the stale generated
@@ -2526,7 +2489,10 @@ object LakeTable {
     * tuples — the same key probe the merge path prunes through
     * ([[keyProbePruner]]), so a derived-view dirty-group re-aggregation
     * reads candidate files only, never the table (files without covering
-    * stats are conservatively kept).
+    * stats are conservatively kept). A NULL key lies outside every
+    * min/max bound and Bloom `IN` list, so when the one key fold sees one
+    * (a null-safe caller's NULL group) the read is the unpruned version —
+    * a superset, sound for every caller.
     */
   def readVersionForKeys(
       spark: SparkSession,
@@ -2537,9 +2503,9 @@ object LakeTable {
     val s = snapshotAt(spark, root, version)
     val meta = s.meta.get
     val ks = keys.select(keyCols.map(col): _*)
-    val mayMatch = keyProbePruner(spark, root, meta, ks,
-      foldKeyInfo(ks, probeCols(meta, ks.schema))._1)
-    readEntries(spark, root, meta.schema, s.entries.filter(mayMatch))
+    val (bounds, keyHasNull) = foldKeyInfo(ks, keyCols)
+    readEntries(spark, root, meta.schema,
+      if (keyHasNull) s.entries else s.entries.filter(keyProbePruner(spark, root, meta, ks, bounds)))
   }
 
   /** The committed snapshot AT `version` (time-travel planning face; the
@@ -3069,11 +3035,12 @@ object LakeTable {
   //
   // One public entry per verb — [[delete]], [[update]], [[merge]] (key
   // upsert) and [[mergeClauses]] — and one shape under all four: pruned
-  // probe → row fates → write → commit or rebase. The write strategy
-  // comes from the table, never the caller: each attempt reads
-  // `deleteMode` from the snapshot it starts on and either REWRITES the
-  // files holding a touched row (`cow`) or tombstones the touched rows
-  // into deletion-vector sidecars and appends their postimages (`mor`).
+  // probe → row fates ([[RowFates]], stated once per verb) → write step
+  // → commit or rebase. The write step comes from the table, never the
+  // caller: [[landFates]] reads `deleteMode` from the snapshot the
+  // attempt starts on and either REWRITES the files holding a touched
+  // row (`cow`) or tombstones the fired rows into deletion-vector
+  // sidecars and appends their post-images (`mor`).
   // Every verb retries a lost race through [[retryOnConflict]] — the
   // recompute is REQUIRED for correctness, not just convenience: the
   // predicate / key probe re-evaluates against the winner's rows, so
@@ -3114,33 +3081,15 @@ object LakeTable {
     new LakeFileIndex(spark, root, meta, Nil).entryFilter(LakeFileIndex.resolvedConjuncts(
       spark, meta.schema, GraftColumnBridge.expression(spark, predicate)))
 
-  /** The COW rewrite set: files in partitions holding a matched row (one
-    * probe pass over `matchedRows`; None = nothing can match) that the
-    * file pruner keeps — stats-disjoint files inside affected partitions
-    * hold no matched row and carry by path. NULL partition values go
-    * through the same sentinel the directory listing produces, and under
-    * spec evolution each entry is classified in ITS OWN spec space (see
-    * [[partitionMatcher]]). Returns the set and the affected-partition
-    * count.
-    */
-  private def rewriteSet(
-      s0: Snapshot,
-      meta: TableMeta,
-      matchedRows: Option[DataFrame],
-      mayMatch: Entry => Boolean): (Seq[Entry], Int) = {
-    val (inAffected, affected) =
-      matchedRows.fold(((_: Entry) => false, 0))(partitionMatcher(meta, _))
-    (s0.entries.filter(e => inAffected(e) && mayMatch(e)), affected)
-  }
-
-  /** The MOR probe: the live rows of `es` with their scan position —
-    * `__file` (the RAW url-encoded path; tasks decode it to the
-    * manifest's suffix key when publishing) and `__pos` (the row index).
-    * Files are read directly, not via readEntries (the position metadata
-    * must be requested on the scan itself), with existing DVs applied
-    * through the same keep filter — already-dead positions never reach a
-    * fate, so re-deleting is naturally idempotent. None when `es` is
-    * empty.
+  /** The target rows of a row-level statement where the write step needs
+    * positions (tombstones, the touched-file fold): the live rows of `es`
+    * with their scan position — `__file` (the RAW url-encoded
+    * path; [[fileKeys]] and the sidecar tasks decode it to the manifest's
+    * suffix key) and `__pos` (the row index). Files are read directly, not
+    * via readEntries (the position metadata must be requested on the scan
+    * itself), with existing DVs applied through the same keep filter —
+    * already-dead positions never reach a fate, so re-deleting is
+    * naturally idempotent. None when `es` is empty.
     */
   private def positionalScan(
       spark: SparkSession,
@@ -3154,9 +3103,9 @@ object LakeTable {
         val df = spark.read.schema(meta.schema)
           .parquet(files.map(e => s"${dataRoot(root)}/${e.rel}"): _*)
         val kept = if (applyDv) df.where(dvKeepColumn(spark, root, files)) else df
-        Some(kept
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index")))
+        Some(kept.withColumns(Map(
+          "__file" -> col("_metadata.file_path"),
+          "__pos" -> col("_metadata.row_index"))))
       }
     (withPos(clean, applyDv = false).toSeq ++ withPos(dvd, applyDv = true).toSeq)
       .reduceOption(_.unionByName(_))
@@ -3268,6 +3217,159 @@ object LakeTable {
       removed.map(_.part).distinct.size, probeEntries.size, mayMatch, dvMerge, preCommit)
   }
 
+  /** One statement's row fates, stated once for both write steps. `rows`
+    * builds the fate frame from the live target rows of a set of probed
+    * files (None: no file) — MERGE joins them with the source — and the
+    * columns below evaluate over it:
+    *
+    *   - `fired`: the statement deletes or rewrites this target row (NULL
+    *     does not fire). The write step binds it as `__fired`, which
+    *     `post` may read.
+    *   - `keep`: a fired row's post-image survives (None: none does —
+    *     DELETE).
+    *   - `insert`: a source row to insert (None: the verb inserts none).
+    *   - `post`: the post-image, one column per table column (an unfired
+    *     row's own values);
+    *   - `target`: the row is a target row (FALSE: a MERGE source row).
+    *
+    * The write step reads the target rows through [[positionalScan]]
+    * (`__file`, `__pos`) where it needs positions — tombstones and the
+    * touched-file fold — and through a plain scan for a COW rewrite.
+    * `touched` overrides the rows whose file a COW rewrite replaces (by
+    * default the fired ones; MERGE's are the rows whose key hits a source
+    * key, so the rewrite's own join still sees an unfired matched row as
+    * matched). `assigned` names the columns the statement sets (the other
+    * GENERATED columns recompute); `layoutStable` says every row keeps its
+    * partition value.
+    */
+  private case class RowFates(
+      probeEntries: Seq[Entry],
+      mayMatch: Entry => Boolean,
+      rows: Option[DataFrame] => Option[DataFrame],
+      fired: Column,
+      keep: Option[Column],
+      insert: Option[Column],
+      post: Seq[Column],
+      assigned: Set[String],
+      layoutStable: Boolean,
+      target: Column = lit(true),
+      touched: Option[Seq[Entry] => Option[DataFrame]] = None) {
+
+    /** The fate frame over `targetRows` with `__fired`, `__keep` and
+      * `__ins` bound.
+      */
+    def flagged(targetRows: Option[DataFrame]): Option[DataFrame] =
+      rows(targetRows).map(_.withColumns(Map(
+        "__fired" -> fired,
+        "__keep" -> keep.getOrElse(lit(false)),
+        "__ins" -> insert.getOrElse(lit(false)))))
+  }
+
+  /** The write step every row-level verb ends in — the one place the
+    * table's `deleteMode` is read: `cow` rewrites ([[rewriteFates]]),
+    * `mor` tombstones ([[tombstoneFates]]).
+    */
+  private def landFates(
+      spark: SparkSession,
+      root: String,
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      f: RowFates,
+      preCommit: () => Unit): MergeStats =
+    if (meta.deleteMode == "mor") tombstoneFates(spark, root, verb, s0, meta, f, preCommit)
+    else rewriteFates(spark, root, verb, s0, meta, f, preCommit)
+
+  /** The files holding a row of `rows`, as [[Dv.suffixKey]]s of its
+    * `__file` column (the key the MOR step names sidecars by): one
+    * mapPartitions fold, no shuffle.
+    */
+  private def fileKeys(rows: DataFrame): Set[String] =
+    rows.select(col("__file")).queryExecution.toRdd
+      .mapPartitions { it =>
+        val acc = scala.collection.mutable.HashSet.empty[String]
+        it.foreach(r => acc += r.getUTF8String(0).toString)
+        Iterator.single(acc.toSet)
+      }.fold(Set.empty[String])(_ ++ _)
+      .map(f => Dv.suffixKey(Dv.decodeUrlPath(f)))
+
+  /** The `cow` write step: the probed files holding a touched row are
+    * rewritten from the fate frame over those files alone — unfired rows
+    * as they are, fired rows' surviving post-images, the inserts — and
+    * every other file carries by path. A rewrite of a DV'd file also
+    * materializes its vector (the scan applies it). Always commits: a
+    * statement that touches nothing lands a no-op version.
+    */
+  private def rewriteFates(
+      spark: SparkSession,
+      root: String,
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      f: RowFates,
+      preCommit: () => Unit): MergeStats = {
+    val touched = f.touched.fold(f.rows(positionalScan(spark, root, meta, f.probeEntries))
+      .map(_.where(f.fired)))(_(f.probeEntries))
+    val hit = touched.fold(Set.empty[String])(fileKeys)
+    val rewrite = f.probeEntries.filter(e => hit.contains(Dv.suffixKey(e.rel)))
+    val live = (f.target && (!coalesce(col("__fired"), lit(false)) || col("__keep"))) ||
+      col("__ins")
+    val scan = if (rewrite.isEmpty) None else Some(readEntries(spark, root, meta.schema, rewrite))
+    val written = f.flagged(scan).fold(Seq.empty[Entry])(r =>
+      writeBatch(spark, root, regenerate(r.where(live).select(f.post: _*), meta, f.assigned),
+        meta,
+        // rows that keep their partition value are partition-aligned as
+        // read: skip the write shuffle. Only sound when every rewritten
+        // file carries the CURRENT spec — a pre-evolution file re-
+        // partitions under the new one
+        preserveLayout = f.layoutStable && rewrite.forall(_.spec == meta.currentSpec)))
+    landDml(spark, root, verb, s0,
+      if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta, rewrite, Nil, written,
+      rewrite.map(_.part).distinct.size, f.probeEntries.size, f.mayMatch, dvMerge = false,
+      preCommit)
+  }
+
+  /** The `mor` write step: fired rows tombstone into DV sidecars
+    * ([[publishDvSidecars]]) and the surviving post-images plus the
+    * inserts append as one new batch, in one [[landTombstones]] commit —
+    * O(changed rows) written, no data file rewritten. A statement that
+    * changes no row and no metadata commits nothing. The metadata-only
+    * rebase may merge vectors (`dvMerge`) only without inserts: a
+    * winner's tombstone on a row we matched but did not fire flips that
+    * source row to NOT MATCHED, which position disjointness cannot see.
+    */
+  private def tombstoneFates(
+      spark: SparkSession,
+      root: String,
+      verb: String,
+      s0: Snapshot,
+      meta: TableMeta,
+      f: RowFates,
+      preCommit: () => Unit): MergeStats = {
+    val writes = f.keep.isDefined || f.insert.isDefined
+    val probed = positionalScan(spark, root, meta, f.probeEntries)
+    f.flagged(probed).fold(unchanged(s0, f.probeEntries.size)) { r =>
+      val fated = r.where(col("__fired") || col("__ins"))
+      val work = if (writes) fated.persist() else fated
+      try {
+        val sidecars =
+          if (probed.isEmpty) Array.empty[(String, String, Long)]
+          else publishDvSidecars(spark, root, work.where(col("__fired")), f.probeEntries)
+        lazy val post = work.where(col("__ins") || (col("__fired") && col("__keep")))
+          .select(f.post: _*)
+        val written =
+          if (!writes || (f.insert.isEmpty && sidecars.isEmpty) ||
+            (f.insert.isDefined && post.isEmpty)) Nil
+          else writeBatch(spark, root, regenerate(post, meta, f.assigned), meta)
+        val landMeta = if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta
+        if (sidecars.isEmpty && written.isEmpty && s0.meta.contains(landMeta))
+          unchanged(s0, f.probeEntries.size)
+        else landTombstones(spark, root, verb, s0, landMeta, f.probeEntries, sidecars, written,
+          f.mayMatch, dvMerge = f.insert.isEmpty, preCommit)
+      } finally if (writes) work.unpersist()
+    }
+  }
+
   /** Transactional DELETE: remove every row where `predicate` is TRUE
     * (SQL DELETE semantics — NULL-predicate rows are KEPT). The
     * compliance face of the lake path: opt-out and contamination
@@ -3277,9 +3379,8 @@ object LakeTable {
     * stats and Blooms rule out files that provably hold no match, see
     * [[predicateFilePruner]]), then:
     *
-    *   - `cow`: only files in partitions CONTAINING a match are
-    *     rewritten, minus the stats-disjoint ones, which carry by path
-    *     like everything else. A re-issued delete is a no-op commit
+    *   - `cow`: only files CONTAINING a match are rewritten; every other
+    *     file carries by path. A re-issued delete is a no-op commit
     *     (idempotent); a delete that removes every row commits a
     *     legitimately-empty snapshot — the manifest's recorded schema
     *     keeps the table readable and mergeable.
@@ -3299,39 +3400,11 @@ object LakeTable {
     retryOnConflict(maxRetries) {
       val (s0, meta) = dmlSnapshot(spark, root, "delete", partitionCol)
       val mayDelete = predicateFilePruner(spark, root, meta, predicate)
-      val probeEntries = s0.entries.filter(mayDelete)
-      if (meta.deleteMode == "mor") {
-        val sidecars = positionalScan(spark, root, meta, probeEntries)
-          .fold(Array.empty[(String, String, Long)])(p =>
-            publishDvSidecars(spark, root, p.where(predicate), probeEntries))
-        if (sidecars.isEmpty) unchanged(s0, probeEntries.size)
-        else landTombstones(spark, root, "delete", s0, meta, probeEntries, sidecars, Nil,
-          mayDelete, dvMerge = true, preCommit)
-      } else {
-        val (rewrite, affected) = rewriteSet(s0, meta,
-          if (probeEntries.isEmpty) None
-          else Some(readEntries(spark, root, meta.schema, probeEntries).where(predicate)),
-          mayDelete)
-        val written =
-          if (rewrite.isEmpty) Nil
-          else writeBatch(
-            spark, root,
-            // DV-aware read: a COW rewrite of a MOR-deleted file also
-            // MATERIALIZES its deletion vector (the rewritten entry is
-            // dv-free)
-            readEntries(spark, root, meta.schema, rewrite)
-              .where(!coalesce(predicate, lit(false))),
-            meta,
-            // surviving rows keep their partition value — the rewrite is
-            // already partition-aligned, skip the write shuffle. Only sound
-            // when every rewritten file already carries the CURRENT spec: a
-            // pre-evolution file re-partitions under the new spec, where the
-            // scan layout means nothing (one old file would scatter across
-            // many new values as task-sized fragments).
-            preserveLayout = rewrite.forall(_.spec == meta.currentSpec))
-        landDml(spark, root, "delete", s0, meta, rewrite, Nil, written, affected,
-          probeEntries.size, mayDelete, dvMerge = false, preCommit)
-      }
+      landFates(spark, root, "delete", s0, meta, RowFates(
+        s0.entries.filter(mayDelete), mayDelete, identity,
+        fired = predicate, keep = None, insert = None,
+        post = meta.schema.fieldNames.toSeq.map(n => col(s"`$n`")),
+        assigned = Set.empty, layoutStable = true), preCommit)
     }
 
   /** Transactional UPDATE: rows where `predicate` is TRUE get the `set`
@@ -3342,12 +3415,11 @@ object LakeTable {
     * constraints validate the updated rows before anything commits. The
     * probe is pruned like [[delete]]'s, then:
     *
-    *   - `cow`: files that may hold a match in affected partitions are
-    *     rewritten and committed atomically — one commit, unlike a
-    *     delete+append emulation, so a crash can never lose the updated
-    *     rows. Assigning the partition column moves rows between
-    *     partitions (affected files are rewritten wholesale and the write
-    *     path re-partitions them).
+    *   - `cow`: files holding a match are rewritten and committed
+    *     atomically — one commit, unlike a delete+append emulation, so a
+    *     crash can never lose the updated rows. Assigning the partition
+    *     column moves rows between partitions (the write path
+    *     re-partitions the rewritten files).
     *   - `mor`: matched LIVE rows are tombstoned by position (DV
     *     sidecars, [[delete]]'s shape) and their updated copies append
     *     as a NEW batch in the same commit, so the write cost is
@@ -3368,69 +3440,30 @@ object LakeTable {
         s"LakeTable.update: SET column $c not in table schema"))
       requireNoIdentitySet(meta, set.keys, "update")
       val mayMatch = predicateFilePruner(spark, root, meta, predicate)
-      val probeEntries = s0.entries.filter(mayMatch)
-      if (meta.deleteMode == "mor") positionalScan(spark, root, meta, probeEntries) match {
-        case None => unchanged(s0, 0)
-        case Some(probed) =>
-          val matched = probed.where(coalesce(predicate, lit(false))).persist()
-          try {
-            val sidecars = publishDvSidecars(spark, root, matched, probeEntries)
-            if (sidecars.isEmpty) unchanged(s0, probeEntries.size)
-            else {
-              // updated copies: assignments evaluate against the PRE-update row
-              val updatedRows = matched.select(meta.schema.map { fld =>
-                set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
-                  .getOrElse(col(s"`${fld.name}`"))
-              }.toSeq: _*)
-              val written = writeBatch(spark, root, regenerate(updatedRows, meta, set.keySet), meta)
-              landTombstones(spark, root, "update", s0, meta, probeEntries, sidecars, written,
-                mayMatch, dvMerge = true, preCommit)
-            }
-          } finally matched.unpersist()
-      }
-      else {
-        val (rewrite, affected) = rewriteSet(s0, meta,
-          if (probeEntries.isEmpty) None
-          else Some(readEntries(spark, root, meta.schema, probeEntries).where(predicate)),
-          mayMatch)
-        val written =
-          if (rewrite.isEmpty) Nil
-          else {
-            val hit = coalesce(predicate, lit(false))
-            val updated = readEntries(spark, root, meta.schema, rewrite)
-              .select(meta.schema.map { fld =>
-                set.get(fld.name)
-                  .map(v => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name))
-                  .getOrElse(col(fld.name))
-              }.toSeq: _*)
-            // rows keep their partition value unless the SET (or a
-            // regeneration it triggers) can touch the partition source
-            // column — then the rewrite is partition-aligned as read and
-            // needs no write shuffle
-            val layoutStable = !set.keySet.contains(meta.partitionCol) &&
-              generatedOf(meta.schema).forall(_._1 != meta.partitionCol) &&
-              rewrite.forall(_.spec == meta.currentSpec)
-            writeBatch(spark, root, regenerate(updated, meta, set.keySet), meta,
-              preserveLayout = layoutStable)
-          }
-        landDml(spark, root, "update", s0, meta, rewrite, Nil, written, affected,
-          probeEntries.size, mayMatch, dvMerge = false, preCommit)
-      }
+      landFates(spark, root, "update", s0, meta, RowFates(
+        s0.entries.filter(mayMatch), mayMatch, identity,
+        fired = predicate, keep = Some(lit(true)), insert = None,
+        // assignments evaluate against the PRE-update row
+        post = meta.schema.toSeq.map { fld =>
+          val old = col(s"`${fld.name}`")
+          set.get(fld.name).fold(old)(v =>
+            when(col("__fired"), v.cast(fld.dataType)).otherwise(old).as(fld.name))
+        },
+        assigned = set.keySet,
+        // the SET (or a regeneration it triggers) may move a row only
+        // when it reaches the partition source column
+        layoutStable = !set.keySet.contains(meta.partitionCol) &&
+          generatedOf(meta.schema).forall(_._1 != meta.partitionCol)), preCommit)
     }
 
   /** MERGE INTO: rows of `source` matching target rows on `keyCols`
     * replace them (source wins); unmatched source rows are inserted.
-    * Source columns the table lacks evolve the schema (see class doc).
-    *
-    *   - `cow` rewrites ONLY files that can hold a matched key:
-    *     partitions with no match carry whole (insert-only partitions
-    *     get the new rows appended as a new file, never a rewrite), and
-    *     inside matched partitions, files whose recorded key min/max (or
-    *     Bloom sidecar) excludes every source key carry too.
-    *   - `mor` runs the upsert as one unconditional matched-UPDATE +
-    *     insert clause pair over the MOR arm of [[mergeClauses]]:
-    *     matched rows tombstone and re-append, files without a match
-    *     stay byte-identical. A matched row keeps its identity values.
+    * Source columns the table lacks evolve the schema (see class doc),
+    * and columns the source lacks become NULL. The clause merge
+    * ([[mergeClauses]]'s fate frame) with one unconditional UPDATE-all
+    * and one INSERT-all clause: `cow` rewrites only files holding a
+    * matched key, `mor` tombstones the matched rows and appends their
+    * post-images. A matched row keeps its identity values.
     */
   def merge(
       spark: SparkSession,
@@ -3445,82 +3478,24 @@ object LakeTable {
       // schema evolution: columns only the source has widen the table
       val newFields = source.schema.filterNot(f => meta.schema.fieldNames.contains(f.name))
       val outMeta = meta.copy(schema = extendSchema(meta.schema, newFields.toSeq, highWater(meta)))
-      if (meta.deleteMode == "mor") {
-        requireNoExplicitIdentity(source, outMeta, "merge")
-        val withS = source.columns.foldLeft(source)((d, c) => d.withColumn("__s_" + c, col(c)))
-        def assign(c: String) = c ->
-          (if (source.columns.contains(c)) col("__s_" + c) else lit(null))
-        // identity columns: a matched row keeps its value (SET on them is
-        // refused); an insert takes a BY DEFAULT value the source carries
-        // and otherwise leaves the cell NULL for writeBatch to allocate
-        val idents = identityOf(outMeta.schema).map(_._1).toSet
-        val plain = outMeta.schema.fieldNames.filterNot(idents.contains)
-        val byDefault = identityOf(outMeta.schema).filter(_._4).map(_._1)
-          .filter(source.columns.contains)
-        val matched = Seq(MergeBranch(None, Some(plain.map(assign).toMap)))
-        val inserted = Seq(MergeBranch(None, Some((plain ++ byDefault).map(assign).toMap)))
-        clausesTombstone(spark, root, "merge", s0, outMeta, withS, keyCols,
-          matched, inserted, Nil, nullSafeKeys = false, preCommit)
-      } else upsertRewrite(spark, root, s0, meta, outMeta, source, keyCols, preCommit)
-    }
-
-  /** The `cow` fate step of [[merge]]; `outMeta` carries the evolved schema. */
-  private def upsertRewrite(
-      spark: SparkSession,
-      root: String,
-      s0: Snapshot,
-      meta: TableMeta,
-      outMeta: TableMeta,
-      source: DataFrame,
-      keyCols: Seq[String],
-      preCommit: () => Unit): MergeStats = {
-    val outSchema = outMeta.schema
-    // the source feeds the key probe, the affected-partition probe AND
-    // the merged write below — persist it for this statement (batch-
-    // sized), so an expensive upsert source computes once
-    val (src, releaseSrc) = persistForStatement(source)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    try {
-      // key probe: when the manifest records min/max, partition values (or
-      // Bloom sidecars) on the key columns, files whose bounds cannot
-      // intersect — or whose blooms exclude every batch key — are pruned
-      // from the probe scan BEFORE any data file is opened: a narrow
-      // upsert batch against a 100 TB table probes the few files that can
-      // hold its keys, not the corpus, even on an unclustered key layout.
-      // The bounds fold the persisted source: min/max are duplicate-
-      // insensitive, so the fold skips the distinct shuffle
-      val mayMatch = keyProbePruner(spark, root, meta, srcKeys,
-        foldKeyInfo(src, probeCols(meta, srcKeys.schema))._1)
-      val probeEntries = s0.entries.filter(mayMatch)
-      // partitions holding a matched key (one probe of the surviving files
-      // against the broadcast source keys) ∪ partitions receiving source
-      // rows
-      val matchedRows =
-        if (probeEntries.isEmpty) None
-        else Some(readEntries(spark, root, meta.schema, probeEntries)
-          .join(broadcast(srcKeys), keyCols, "left_semi"))
-      val affectedRows = matchedRows
-        .map(m => align(m, outSchema).unionByName(align(src, outSchema)))
-        .getOrElse(align(src, outSchema))
-      val (rewrite, affected) = rewriteSet(s0, meta, Some(affectedRows), mayMatch)
-      // survivors of the affected slice: target rows there whose key has no
-      // source match — read ONLY the rewritten files, not the table
-      val survivors =
-        if (rewrite.isEmpty) None
-        else Some(
-          readEntries(spark, root, meta.schema, rewrite)
-            .join(broadcast(srcKeys), keyCols, "left_anti"))
-      val merged = survivors.fold(align(src, outSchema))(s =>
-        align(src, outSchema).unionByName(align(s, outSchema)))
       // upsert source rows are an insert funnel: GENERATED ALWAYS AS
-      // IDENTITY values may not arrive from outside (matched rows are
-      // replaced wholesale, so their identity values re-allocate)
-      requireNoExplicitIdentity(src, outMeta, "merge")
-      val written = writeBatch(spark, root, merged, outMeta)
-      landDml(spark, root, "merge", s0, advanceIdentityHw(outMeta, written), rewrite, Nil,
-        written, affected, probeEntries.size, mayMatch, dvMerge = false, preCommit)
-    } finally releaseSrc()
-  }
+      // IDENTITY values may not arrive from outside
+      requireNoExplicitIdentity(source, outMeta, "merge")
+      val withS = source.columns.foldLeft(source)((d, c) => d.withColumn("__s_" + c, col(c)))
+      def assign(c: String) = c ->
+        (if (source.columns.contains(c)) col("__s_" + c) else lit(null))
+      // identity columns: a matched row keeps its value (SET on them is
+      // refused); an insert takes a BY DEFAULT value the source carries
+      // and otherwise leaves the cell NULL for writeBatch to allocate
+      val idents = identityOf(outMeta.schema).map(_._1).toSet
+      val plain = outMeta.schema.fieldNames.filterNot(idents.contains)
+      val byDefault = identityOf(outMeta.schema).filter(_._4).map(_._1)
+        .filter(source.columns.contains)
+      val matched = Seq(MergeBranch(None, Some(plain.map(assign).toMap)))
+      val inserted = Seq(MergeBranch(None, Some((plain ++ byDefault).map(assign).toMap)))
+      landMerge(spark, root, "merge", s0, outMeta, withS, keyCols, matched, inserted, Nil,
+        nullSafeKeys = false, preCommit)
+    }
 
   /** Merges that landed via the lost-commit REBASE fast path (spec
     * observability: the contention case asserts zero recomputes).
@@ -3710,23 +3685,23 @@ object LakeTable {
     * throughout: `=` join keys never match NULL, a NULL clause condition
     * does not fire, and later clauses are then consulted.
     *
-    *   - `cow`: the same stats/Bloom-pruned file-level COW as [[merge]]
-    *     — files that provably hold no source key carry by path — with
-    *     ONE full-outer join between the rewritten files' rows and the
-    *     source deciding every row's fate in a single pass. With
-    *     NOT-MATCHED-BY-SOURCE clauses every target row's fate depends
-    *     on the join, so the whole table is rewritten (Delta does the
-    *     same).
-    *   - `mor`: matched rows a clause touches TOMBSTONE into DV sidecars
-    *     ([[delete]]'s shape) and their postimages plus the NOT MATCHED
-    *     inserts APPEND as a new batch, all in ONE commit — a CDC-apply
-    *     MERGE touching 0.1% of the rows per file writes O(matched)
-    *     bytes instead of rewriting every file holding a match.
-    *     Matched-but-unfired and unmatched target rows never move.
-    *     By-source clauses make the READ a full scan, but the write stays
-    *     O(fired rows): a nightly full-sync CDC apply (upsert + delete-
-    *     the-rest) on a 100 TB table writes only the day's churn.
-    *     OPTIMIZE later materializes the vectors away.
+    * One full-outer join between the probed target rows and the source
+    * decides every row's fate; files that provably hold no source key
+    * (stats/Bloom key probe) are neither read nor written. With
+    * NOT-MATCHED-BY-SOURCE clauses every target row's fate depends on
+    * the join, so the probe reads the whole table.
+    *
+    *   - `cow`: the files holding a matched row (or a fired by-source
+    *     row) are rewritten; every other file carries by path.
+    *   - `mor`: fired rows TOMBSTONE into DV sidecars ([[delete]]'s
+    *     shape) and their post-images plus the NOT MATCHED inserts
+    *     APPEND as a new batch, all in ONE commit — a CDC-apply MERGE
+    *     touching 0.1% of the rows per file writes O(matched) bytes
+    *     instead of rewriting every file holding a match. Matched-but-
+    *     unfired and unmatched target rows never move, so even a nightly
+    *     full-sync CDC apply (upsert + delete-the-rest) on a 100 TB table
+    *     writes only the day's churn. OPTIMIZE later materializes the
+    *     vectors away.
     */
   def mergeClauses(
       spark: SparkSession,
@@ -3758,107 +3733,14 @@ object LakeTable {
       // IDENTITY column never (BY DEFAULT may) — same gates as
       // update()/append(), enforced statically on the clause shapes
       requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
-      if (meta.deleteMode == "mor")
-        clausesTombstone(spark, root, "mergeClauses", s0, meta, source, keyCols,
-          matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit)
-      else clausesRewrite(spark, root, s0, meta, source, keyCols,
+      landMerge(spark, root, "mergeClauses", s0, meta, source, keyCols,
         matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit)
     }
 
-  /** The `cow` fate step of [[mergeClauses]]. */
-  private def clausesRewrite(
-      spark: SparkSession,
-      root: String,
-      s0: Snapshot,
-      meta: TableMeta,
-      source: DataFrame,
-      keyCols: Seq[String],
-      matched: Seq[MergeBranch],
-      notMatched: Seq[MergeBranch],
-      notMatchedBySource: Seq[MergeBranch],
-      nullSafeKeys: Boolean,
-      preCommit: () => Unit): MergeStats = {
-    // the source is evaluated several times below (null-key probe, key
-    // distinct for the file probe, and the full-outer merge join) — for
-    // an expensive source (a matview refresh's signed-delta aggregate)
-    // each evaluation would recompute the whole delta. Persist it for
-    // the length of THIS statement only: batch-sized by construction
-    // (the merge input, never the table), released before returning.
-    val (src, releaseSrc) = persistForStatement(source)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    try {
-      // rewrite set: with by-source clauses every target row's fate
-      // depends on the join — no file can carry, and any file a rival
-      // writer adds may match; otherwise identical to merge()
-      val (rewrite, probed, affectedParts, mayMatch) =
-        if (notMatchedBySource.nonEmpty)
-          (s0.entries, s0.entries.size, s0.entries.map(_.part).distinct.size,
-            (_: Entry) => true)
-        else {
-          // key pruning is sound only for non-null keys (NULL is
-          // outside every min/max bound) — a null-safe merge whose batch
-          // carries a NULL key must probe every entry. Null presence and
-          // the probe's min/max bounds come from ONE fold over the
-          // persisted source.
-          val (bounds, keyHasNull) = foldKeyInfo(src, keyCols)
-          val mayMatch =
-            if (nullSafeKeys && keyHasNull) (_: Entry) => true
-            else keyProbePruner(spark, root, meta, srcKeys, bounds)
-          val probeEntries = s0.entries.filter(mayMatch)
-          val (rw, matchedCount) = rewriteSet(s0, meta,
-            if (probeEntries.isEmpty) None
-            else Some(readEntries(spark, root, meta.schema, probeEntries).as("t")
-              .join(broadcast(srcKeys).as("k"), keyMatch(keyCols, nullSafeKeys, "t", "k"),
-                "left_semi")),
-            mayMatch)
-          (rw, probeEntries.size, matchedCount, mayMatch)
-        }
-
-      val joined = readEntries(spark, root, meta.schema, rewrite)
-        .withColumn("__thit", lit(true)).as("t")
-        .join(
-          src.withColumn("__shit", lit(true)).as("s"),
-          keyMatch(keyCols, nullSafeKeys, "t", "s"),
-          "full_outer")
-      val base = joined.select(
-        meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
-          src.columns.filter(_.startsWith("__s_")).toSeq.map(c => col(s"s.`$c`")) ++
-          Seq(
-            coalesce(col("t.__thit"), lit(false)).as("__thit"),
-            coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
-
-      val isM = col("__thit") && col("__shit")
-      val isS = !col("__thit") && col("__shit")
-      val result = base
-        .withColumn("__keep",
-          when(isM, keepChain(matched, lit(true)))
-            .when(isS, keepChain(notMatched, lit(false)))
-            .otherwise(keepChain(notMatchedBySource, lit(true))))
-        .where(col("__keep"))
-        .select(meta.schema.map { f =>
-          val nul = lit(null).cast(f.dataType)
-          when(isM, valueChain(matched, f.name, col(f.name), col(f.name)))
-            .when(isS, valueChain(notMatched, f.name, nul, nul))
-            .otherwise(valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
-            .cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-
-      // GENERATED ALWAYS AS: recompute any generated column a branch did
-      // not assign explicitly — an UPDATE of a referenced column must not
-      // leave the stale generated value (mirrors update)
-      val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
-        .flatMap(_.values).flatMap(_.keys).toSet
-      val written = writeBatch(spark, root, regenerate(result, meta, explicitGen), meta)
-      // a lost race rebases like merge's (an identity high-water advance
-      // or a metaUpdate changes meta, which the rebase refuses — those
-      // statements recompute)
-      landDml(spark, root, "mergeClauses", s0, advanceIdentityHw(meta, written), rewrite, Nil,
-        written, affectedParts, probed, mayMatch, dvMerge = false, preCommit)
-    } finally releaseSrc()
-  }
-
-  /** The `mor` fate step of [[mergeClauses]] (and of [[merge]]'s upsert). */
-  private def clausesTombstone(
+  /** The fates of a clause merge ([[merge]] and [[mergeClauses]]) and
+    * their write step; `meta` carries any evolved schema or metaUpdate.
+    */
+  private def landMerge(
       spark: SparkSession,
       root: String,
       verb: String,
@@ -3871,96 +3753,87 @@ object LakeTable {
       notMatchedBySource: Seq[MergeBranch],
       nullSafeKeys: Boolean,
       preCommit: () => Unit): MergeStats = {
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-
-    // candidate files: the key probe is conservative-COMPLETE
-    // (every file that could hold a source key survives it), so a
-    // source row unmatched within the probe set is unmatched in the
-    // whole table — the NOT MATCHED classification needs no full scan.
-    // By-source clauses invert the question (which TARGET rows have no
-    // source match?): every live row must reach the join, so the probe
-    // widens to all files — the read is table-sized, the write is not.
-    // A null-safe NULL key lies outside every min/max bound, so a
-    // null-safe merge whose source carries one probes every file too
-    // (as in the COW arm, one fold yields null presence and the bounds).
-    val mayMatch =
-      if (notMatchedBySource.nonEmpty) (_: Entry) => true
-      else {
-        val (bounds, keyHasNull) =
-          foldKeyInfo(source, if (nullSafeKeys) keyCols else probeCols(meta, srcKeys.schema))
-        if (nullSafeKeys && keyHasNull) (_: Entry) => true
-        else keyProbePruner(spark, root, meta, srcKeys, bounds)
-      }
-    val probeEntries = s0.entries.filter(mayMatch)
-
-    val srcCols = source.columns.filter(_.startsWith("__s_")).toSeq
-    val base = positionalScan(spark, root, meta, probeEntries) match {
-      case Some(tdf) =>
-        tdf.withColumn("__thit", lit(true)).as("t")
-          .join(
-            source.withColumn("__shit", lit(true)).as("s"),
-            keyMatch(keyCols, nullSafeKeys, "t", "s"),
-            "full_outer")
-          .select(
-            meta.schema.map(f => col(s"t.`${f.name}`").as(f.name)) ++
-              Seq(col("t.`__file`").as("__file"), col("t.`__pos`").as("__pos")) ++
-              srcCols.map(c => col(s"s.`$c`")) ++
-              Seq(
-                coalesce(col("t.__thit"), lit(false)).as("__thit"),
-                coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
-      case None => // no candidate files: every source row is unmatched
-        source.select(
-          meta.schema.map(f => lit(null).cast(f.dataType).as(f.name)) ++
-            Seq(lit(null).cast("string").as("__file"), lit(null).cast("long").as("__pos")) ++
-            srcCols.map(col) ++
-            Seq(lit(false).as("__thit"), lit(true).as("__shit")): _*)
-    }
-
-    val isM = col("__thit") && col("__shit")
-    val isS = !col("__thit") && col("__shit")
-    val isB = col("__thit") && !col("__shit")
-    // only rows a clause actually FIRES for do any work: fired matched
-    // and fired by-source rows tombstone (and, for UPDATE, re-append);
-    // fired not-matched rows insert; everything else — matched-unfired,
-    // unmatched-unfired target, unfired source — is untouched
-    val work = base
-      .withColumn("__mfire", isM && firedChain(matched))
-      .withColumn("__bfire", isB && firedChain(notMatchedBySource))
-      .withColumn("__ins", isS && keepChain(notMatched, lit(false)))
-      .withColumn("__mkeep", keepChain(matched, lit(true)))
-      .withColumn("__bkeep", keepChain(notMatchedBySource, lit(true)))
-      .where(col("__mfire") || col("__bfire") || col("__ins"))
-      .persist()
+    // the source feeds the key fold, the probe, the touched-file probe
+    // and the fate join — for an expensive source (a matview refresh's
+    // signed-delta aggregate) each evaluation would recompute it. Persist
+    // it for THIS statement only: batch-sized by construction (the merge
+    // input, never the table), released before returning.
+    val (src, releaseSrc) = persistForStatement(source)
     try {
-      val sidecars = publishDvSidecars(spark, root,
-        work.where(col("__mfire") || col("__bfire")), probeEntries)
-      val post = work
-        .where((col("__mfire") && col("__mkeep")) ||
-          (col("__bfire") && col("__bkeep")) || col("__ins"))
-        .select(meta.schema.map { f =>
+      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      // candidate files: the key probe is conservative-COMPLETE (every
+      // file that could hold a source key survives it), so a source row
+      // unmatched within the probe set is unmatched in the whole table —
+      // the NOT MATCHED classification needs no full scan. By-source
+      // clauses invert the question (which TARGET rows have no source
+      // match?): every live row must reach the join, so the probe widens
+      // to all files. A null-safe NULL key lies outside every min/max
+      // bound, so a null-safe merge whose source carries one probes every
+      // file too; one fold yields null presence and the bounds.
+      val mayMatch =
+        if (notMatchedBySource.nonEmpty) (_: Entry) => true
+        else {
+          val (bounds, keyHasNull) =
+            foldKeyInfo(src, if (nullSafeKeys) keyCols else probeCols(meta, srcKeys.schema))
+          if (nullSafeKeys && keyHasNull) (_: Entry) => true
+          else keyProbePruner(spark, root, meta, srcKeys, bounds)
+        }
+      val srcCols = src.columns.filter(_.startsWith("__s_")).toSeq
+      def rows(targetRows: Option[DataFrame]): Option[DataFrame] = Some(targetRows match {
+        case Some(tdf) =>
+          tdf.withColumn("__thit", lit(true)).as("t")
+            .join(
+              src.withColumn("__shit", lit(true)).as("s"),
+              keyMatch(keyCols, nullSafeKeys, "t", "s"),
+              "full_outer")
+            .select(
+              tdf.columns.toSeq.map(c => col(s"t.`$c`").as(c)) ++
+                srcCols.map(c => col(s"s.`$c`")) ++
+                Seq(
+                  coalesce(col("t.__thit"), lit(false)).as("__thit"),
+                  coalesce(col("s.__shit"), lit(false)).as("__shit")): _*)
+        case None => // no candidate files: every source row is unmatched
+          src.select(
+            meta.schema.map(f => lit(null).cast(f.dataType).as(f.name)) ++
+              srcCols.map(col) ++
+              Seq(lit(false).as("__thit"), lit(true).as("__shit")): _*)
+      })
+      val isM = col("__thit") && col("__shit")
+      val isS = !col("__thit") && col("__shit")
+      val isB = col("__thit") && !col("__shit")
+      val fired = (isM && firedChain(matched)) || (isB && firedChain(notMatchedBySource))
+      landFates(spark, root, verb, s0, meta, RowFates(
+        s0.entries.filter(mayMatch), mayMatch, rows,
+        fired = fired,
+        keep = Some(when(isM, keepChain(matched, lit(true)))
+          .otherwise(keepChain(notMatchedBySource, lit(true)))),
+        insert =
+          if (notMatched.isEmpty) None else Some(isS && keepChain(notMatched, lit(false))),
+        post = meta.schema.toSeq.map { f =>
           val nul = lit(null).cast(f.dataType)
-          when(col("__ins"), valueChain(notMatched, f.name, nul, nul))
-            .when(col("__bfire"),
-              valueChain(notMatchedBySource, f.name, col(f.name), col(f.name)))
-            .otherwise(valueChain(matched, f.name, col(f.name), col(f.name)))
+          val own = col(s"`${f.name}`")
+          when(isS, valueChain(notMatched, f.name, nul, nul))
+            .when(isM, valueChain(matched, f.name, own, own))
+            .otherwise(valueChain(notMatchedBySource, f.name, own, own))
             .cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-      val explicitGen = (matched ++ notMatched ++ notMatchedBySource)
-        .flatMap(_.values).flatMap(_.keys).toSet
-      val written =
-        if (post.isEmpty) Nil
-        else writeBatch(spark, root, regenerate(post, meta, explicitGen), meta)
-      // lost race → metadata-only rebase; an identity high-water advance
-      // changes meta, which condition 1 refuses — those tables keep the
-      // recompute. dvMerge only WITHOUT insert clauses: a winner's
-      // tombstone on a target row we matched but did not fire flips that
-      // source row's sequential classification to NOT MATCHED — our fate
-      // join decided "no insert" against state the winner changed, and
-      // position disjointness cannot see it (we hold no position for an
-      // unfired row)
-      landTombstones(spark, root, verb, s0, advanceIdentityHw(meta, written), probeEntries,
-        sidecars, written, mayMatch, dvMerge = notMatched.isEmpty, preCommit)
-    } finally work.unpersist()
+        },
+        assigned = (matched ++ notMatched ++ notMatchedBySource)
+          .flatMap(_.values).flatMap(_.keys).toSet,
+        layoutStable = false,
+        target = col("__thit"),
+        // COW rewrites every file holding a MATCHED row (fired or not —
+        // the rewrite's own join must still see it matched), found by
+        // probing the broadcast source keys; by-source clauses add the
+        // fired unmatched rows
+        touched = Some(es =>
+          if (notMatchedBySource.isEmpty)
+            positionalScan(spark, root, meta, es).map(_.as("t")
+              .join(broadcast(srcKeys).as("k"), keyMatch(keyCols, nullSafeKeys, "t", "k"),
+                "left_semi"))
+          else rows(positionalScan(spark, root, meta, es))
+            .map(_.where(col("__thit") && (col("__shit") || fired))))),
+        preCommit)
+    } finally releaseSrc()
   }
 
   // ---- OPTIMIZE (compaction) -----------------------------------------

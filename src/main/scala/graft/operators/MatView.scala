@@ -570,14 +570,10 @@ object MatView {
       physKeys: Seq[String],
       prepFn: DataFrame => DataFrame): DataFrame = {
     val dirty = changes.select(keys.map(col): _*).distinct()
-    // NULL keys sit outside every min/max bound, so the entry-pruned
-    // read is only sound when no dirty PHYSICAL key is NULL — then (or
-    // when every key is derived) fall back to the full pinned-version
-    // scan (rare, still one pass)
-    val hasNullKey = physKeys.isEmpty ||
-      !dirty.where(physKeys.map(k => col(s"`$k`").isNull).reduce(_ || _)).isEmpty
+    // with every key derived nothing can prune: the full pinned-version
+    // scan (readVersionForKeys itself falls back to it on a NULL key)
     val base = prepFn(
-      if (hasNullKey) LakeTable.readVersion(spark, src, head)
+      if (physKeys.isEmpty) LakeTable.readVersion(spark, src, head)
       else LakeTable.readVersionForKeys(spark, src, head, physKeys,
         dirty.select(physKeys.map(col): _*).distinct()))
     def keyEq(l: String, r: String): Column =
@@ -622,10 +618,9 @@ object MatView {
     val derivedNames = keyExprs.map(_._1).toSet
     val factKeys = keys.filter(k => factCols.contains(k) && !derivedNames.contains(k))
     val dimKeys = keys.filter(k => d1.columns.contains(k) && !derivedNames.contains(k))
-    val hasNullFactKey = factKeys.isEmpty ||
-      !dirty.where(factKeys.map(k => col(s"`$k`").isNull).reduce(_ || _)).isEmpty
     val f1 =
-      if (!hasNullFactKey)
+      // a NULL dirty key reads the unpruned version (readVersionForKeys)
+      if (factKeys.nonEmpty)
         LakeTable.readVersionForKeys(spark, fact, headF, factKeys,
           dirty.select(factKeys.map(col): _*).distinct())
       else if (dimKeys.size == keys.size) {

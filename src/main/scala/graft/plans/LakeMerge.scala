@@ -16,15 +16,15 @@ import graft.operators.LakeTable
 import graft.sources.lake.GraftLakeV2Table
 
 /** SQL DML for `graft` catalog tables — MERGE INTO / UPDATE / DELETE
-  * planned directly onto the transactional copy-on-write ops.
+  * planned directly onto the transactional row-level verbs.
   *
   * Spark's own route for these verbs is the row-level-operation rewrite
   * (SupportsRowLevelOperations), whose group-based COPY_ON_WRITE plan
-  * re-implements exactly what [[LakeTable.merge]]/[[LakeTable.update]]/
-  * [[LakeTable.delete]] already do — affected-file discovery, carry-by-
-  * path, atomic commit — but through a generic scan+replace protocol
-  * that, without connector-side runtime group filtering, rewrites the
-  * WHOLE table. Planning the logical command straight onto the native
+  * re-implements exactly what [[LakeTable.mergeClauses]]/
+  * [[LakeTable.update]]/[[LakeTable.delete]] already do — affected-file
+  * discovery, carry-by-path, atomic commit — but through a generic
+  * scan+replace protocol that, without connector-side runtime group
+  * filtering, rewrites the WHOLE table. Planning the logical command straight onto the native
   * ops keeps the stats/Bloom-pruned probe, file-level COW and
   * single-commit atomicity (and their spec pins) on the SQL path too.
   * The strategy is injected via `experimental.extraStrategies` (consulted
@@ -44,12 +44,9 @@ import graft.sources.lake.GraftLakeV2Table
   *   WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE | DELETE
   * }}}
   *
-  * The canonical source-wins upsert (one unconditional source-only
-  * UPDATE + one unconditional INSERT of the same values, keys assigned
-  * their ON expressions) plans onto [[LakeTable.merge]]'s specialized
-  * broadcast-anti-join path (with append-style schema evolution); every
-  * other clause shape plans onto [[LakeTable.mergeClauses]]'s general
-  * full-outer-join COW rewrite. UPDATE and DELETE statements take
+  * Every clause shape, the source-wins upsert included, plans onto
+  * [[LakeTable.mergeClauses]], whose one fate frame both write steps
+  * (COW rewrite, MOR tombstones) share. UPDATE and DELETE statements take
   * ARBITRARY predicates/assignments (evaluated by the rewrite scan
   * itself), including UNCORRELATED subqueries — `DELETE FROM t WHERE k
   * IN (SELECT ...)` and friends — which are executed once at statement
@@ -67,10 +64,9 @@ import graft.sources.lake.GraftLakeV2Table
   * Cardinality: duplicate SOURCE keys are a MERGE cardinality violation
   * (checked with one batch-sized aggregate before the merge — the
   * Delta/Iceberg contract; silently inserting duplicates is worse than
-  * failing). The TARGET side is assumed key-unique — the invariant
-  * merge itself maintains; a table made non-unique by blind appends
-  * collapses those duplicates to the source row on their next matched
-  * merge, which is the upsert reading of "source wins on key".
+  * failing). Duplicate TARGET keys (a table made non-unique by blind
+  * appends) are each matched: every such row takes the clause's action,
+  * as in Delta.
   */
 object LakeMerge {
   def register(spark: SparkSession): Unit =
@@ -87,7 +83,8 @@ object LakeDmlStrategy extends SparkStrategy {
     // re-resolved the target, so by planning time the new columns are
     // ordinary table columns and the clause merge needs no special case
     case MergeIntoTable(tgt @ LakeTarget(t), source, cond, matched, notMatched, bySource, _) =>
-      planMerge(t, tgt, source, cond, matched, notMatched, bySource) :: Nil
+      planGeneralMerge(t, tgt, source, cond, parseOn(cond, source.outputSet),
+        matched, notMatched, bySource) :: Nil
     case UpdateTable(tgt @ LakeTarget(t), assignments, condition) =>
       planUpdate(t, tgt, assignments, condition) :: Nil
     case DeleteFromTable(tgt @ LakeTarget(t), condition) =>
@@ -508,85 +505,6 @@ object LakeDmlStrategy extends SparkStrategy {
     }
     if (pairs.isEmpty) fail("an ON condition with no key equality")
     pairs
-  }
-
-  private def planMerge(
-      t: GraftLakeV2Table,
-      tgt: LogicalPlan,
-      source: LogicalPlan,
-      cond: Expression,
-      matched: Seq[MergeAction],
-      notMatched: Seq[MergeAction],
-      bySource: Seq[MergeAction]): SparkPlan = {
-    val keyPairs = parseOn(cond, source.outputSet)
-    // the canonical source-wins upsert keeps its specialized path — a
-    // broadcast anti-join instead of the general full-outer join, plus
-    // append-style schema evolution; every other clause shape routes
-    // through the general clause merge
-    try planSourceWins(t, source, keyPairs, matched, notMatched, bySource)
-    catch {
-      case _: UnsupportedOperationException =>
-        planGeneralMerge(t, tgt, source, cond, keyPairs, matched, notMatched, bySource)
-    }
-  }
-
-  private def planSourceWins(
-      t: GraftLakeV2Table,
-      source: LogicalPlan,
-      keyPairs: Seq[(String, Expression)],
-      matched: Seq[MergeAction],
-      notMatched: Seq[MergeAction],
-      bySource: Seq[MergeAction]): SparkPlan = {
-    if (bySource.nonEmpty) fail("WHEN NOT MATCHED BY SOURCE clauses")
-    val updateAssigns = matched match {
-      case Seq(u: UpdateAction) if u.condition.isEmpty => u.assignments
-      case other => fail(s"matched actions ${other.mkString(", ")}")
-    }
-    val insertAssigns = notMatched match {
-      case Seq(i: InsertAction) if i.condition.isEmpty => i.assignments
-      case other => fail(s"not-matched actions ${other.mkString(", ")}")
-    }
-    val sourceOut = source.outputSet
-
-    // assignment per target column; values must be source-side only
-    def byTarget(assigns: Seq[Assignment], what: String): Map[String, Expression] =
-      assigns.map { a =>
-        val name = a.key match {
-          case ar: AttributeReference => ar.name
-          case other => fail(s"$what assignment to non-column $other")
-        }
-        if (!a.value.references.subsetOf(sourceOut))
-          fail(s"$what assignment $name = ${a.value.sql} references the target row")
-        name -> a.value
-      }.toMap
-    val upd = byTarget(updateAssigns, "UPDATE")
-    val ins = byTarget(insertAssigns, "INSERT")
-    val targetCols = t.meta.schema.fieldNames.toSeq
-    targetCols.foreach { c =>
-      val (u, i) = (upd.get(c), ins.get(c))
-      if (u.isEmpty || i.isEmpty) fail(s"column $c is not assigned by both branches")
-      if (!u.get.semanticEquals(i.get))
-        fail(s"UPDATE and INSERT assign different values to $c (source-wins needs one value)")
-    }
-    // each key's assignment must BE its ON expression (otherwise matched
-    // rows could change key — that shape needs the general clause merge)
-    val keyCols = keyPairs.map { case (name, sExpr) =>
-      if (!upd(name).semanticEquals(sExpr))
-        fail(s"key column $name is reassigned away from its ON expression")
-      name
-    }
-
-    // the effective source: one row per source row, projected to the
-    // target's column names through the (source-side) assignments — the
-    // exact frame LakeTable.merge upserts
-    val projected = Project(
-      t.meta.schema.map(f => Alias(upd(f.name), f.name)()).toSeq, source)
-    LakeDmlExec("merge", () => {
-      val spark = SparkSession.active
-      val src = GraftColumnBridge.ofRows(spark, projected)
-      cardinalityCheck(src, keyCols)
-      LakeTable.merge(spark, t.root, src, keyCols, t.meta.partitionCol)
-    })
   }
 
   /** ANSI MERGE cardinality: a target row matched by MULTIPLE source

@@ -52,10 +52,10 @@ import graft.operators.LakeTable
   * map onto the transactional ops through [[V1Write]] (append →
   * [[LakeTable.append]], truncate/overwrite-all → [[LakeTable.overwrite]]),
   * so INSERT INTO from SQL gets the same atomic manifest commit. DELETE
-  * FROM routes predicate-translatable conditions to the COW
-  * [[LakeTable.delete]] (actual file rewrites, not read-time filtering);
-  * MERGE INTO is rewritten by [[graft.plans.LakeMerge]] onto
-  * [[LakeTable.merge]].
+  * FROM, UPDATE and MERGE INTO are planned by [[graft.plans.LakeMerge]]
+  * onto [[LakeTable.delete]], [[LakeTable.update]] and
+  * [[LakeTable.mergeClauses]] (the table's `deleteMode` picks file
+  * rewrites or deletion vectors, never read-time filtering).
   *
   * Time travel: `VERSION AS OF n` resolves through [[LakeTable.snapshotAt]]
   * (with its vacuumed-version refusal); `TIMESTAMP AS OF t` picks the

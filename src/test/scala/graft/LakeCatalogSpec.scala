@@ -604,14 +604,18 @@ class LakeCatalogSpec extends SparkSpec {
     assert(e3 != null)
   }
 
-  test("key-upsert merge on a mor table keeps matched IDENTITY values, allocates inserted ones") {
+  /** The key upsert keeps a matched row's IDENTITY value and allocates
+    * an inserted row's, whichever write step the table's `deleteMode`
+    * picks.
+    */
+  private def identityUpsert(mode: String): Unit = {
     n += 1
     val t = s"graft.db.t$n"
     val _ = wh
     val root = s"$wh/db/t$n"
     spark.sql(s"CREATE TABLE $t (k BIGINT, p STRING, v BIGINT, " +
       "id BIGINT GENERATED ALWAYS AS IDENTITY) PARTITIONED BY (p) " +
-      "TBLPROPERTIES (statsCols 'k', deleteMode 'mor')")
+      s"TBLPROPERTIES (statsCols 'k', deleteMode '$mode')")
     spark.sql(s"INSERT INTO $t (k, p, v) SELECT id, cast(id % 3 AS string), id FROM range(30)")
     def rows(): Map[Long, (Long, Long)] = spark.sql(s"SELECT k, v, id FROM $t").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -620,18 +624,26 @@ class LakeCatalogSpec extends SparkSpec {
     import spark.implicits._
     LakeTable.merge(spark, root,
       Seq((5L, "2", 500L), (100L, "1", 1000L)).toDF("k", "p", "v"), Seq("k"), "p")
-    assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined),
-      "the merge must have taken the MOR arm")
+    assert(LakeTable.snapshot(spark, root).entries.exists(_.dv.isDefined) === (mode == "mor"),
+      s"the merge must have taken the $mode write step")
     val after = rows()
     assert(after.size === 31)
     assert(after(5L) === ((500L, before(5L)._2)), "a matched row keeps its identity value")
     assert(after(100L)._2 > before.values.map(_._2).max, "an insert allocates beyond the mark")
     assert(after.values.map(_._2).toSet.size === 31, "identity values stay unique")
 
-    // GENERATED ALWAYS: explicit source values refuse, as on the COW arm
+    // GENERATED ALWAYS: explicit source values refuse
     val e = intercept[IllegalArgumentException](LakeTable.merge(spark, root,
       Seq((6L, "0", 1L, 7L)).toDF("k", "p", "v", "id"), Seq("k"), "p"))
     assert(e.getMessage.contains("IDENTITY"))
+  }
+
+  test("key-upsert merge on a mor table keeps matched IDENTITY values, allocates inserted ones") {
+    identityUpsert("mor")
+  }
+
+  test("key-upsert merge on a cow table keeps matched IDENTITY values, allocates inserted ones") {
+    identityUpsert("cow")
   }
 
   test("ALTER COLUMN SET/DROP DEFAULT is metadata-only; exists-default stays frozen") {

@@ -503,6 +503,47 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.read(spark, root).count() === n1)
   }
 
+  test("COW DML rewrites the files holding a changed row, not their partition") {
+    import spark.implicits._
+    // no stats column: the file pruner keeps both files of partition "a",
+    // so only the fate frame can tell the file without a changed row
+    def twoFiles(): (String, LakeTable.Entry, LakeTable.Entry) = {
+      val root = freshRoot()
+      LakeTable.init(spark, root, Seq((1L, "a", 10L), (2L, "a", 20L)).toDF("k", "p", "v"), "p")
+      val first = LakeTable.snapshot(spark, root).entries
+      LakeTable.append(spark, root, Seq((3L, "a", 30L), (4L, "a", 40L)).toDF("k", "p", "v"))
+      val es = LakeTable.snapshot(spark, root).entries
+      assert(first.size === 1 && es.size === 2 && es.forall(_.part == "a"),
+        s"fixture needs two files in one partition: $es")
+      (root, first.head, es.filterNot(_.rel == first.head.rel).head)
+    }
+    def check(
+        root: String,
+        stats: LakeTable.MergeStats,
+        carried: LakeTable.Entry,
+        expected: Seq[(Long, String, Long)]): Unit = {
+      val after = LakeTable.snapshot(spark, root).entries
+      assert(after.exists(_.rel == carried.rel), s"untouched file must carry by path: $after")
+      assert(stats.filesRewritten === 1 && stats.matchedPartitions === 1, s"$stats")
+      val got = LakeTable.read(spark, root).select("k", "p", "v")
+      val want = expected.toDF("k", "p", "v")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+
+    val (r1, _, second1) = twoFiles()
+    check(r1, LakeTable.delete(spark, r1, col("k") === 1L, "p"), second1,
+      Seq((2L, "a", 20L), (3L, "a", 30L), (4L, "a", 40L)))
+
+    val (r2, first2, _) = twoFiles()
+    check(r2, LakeTable.update(spark, r2, col("k") === 3L, Map("v" -> lit(99L)), "p"), first2,
+      Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "a", 99L), (4L, "a", 40L)))
+
+    val (r3, _, second3) = twoFiles()
+    check(r3, LakeTable.merge(spark, r3,
+      Seq((2L, "a", 200L), (5L, "a", 50L)).toDF("k", "p", "v"), Seq("k"), "p"), second3,
+      Seq((1L, "a", 10L), (2L, "a", 200L), (3L, "a", 30L), (4L, "a", 40L), (5L, "a", 50L)))
+  }
+
   test("delete that removes every row leaves a readable, mergeable empty table") {
     val root = freshRoot()
     LakeTable.init(spark, root, baseDf, "p")

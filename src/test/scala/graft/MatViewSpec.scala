@@ -277,6 +277,34 @@ class MatViewSpec extends SparkSpec {
       && nr.head.getAs[Long]("min_v") === 1L, s"got $nr")
   }
 
+  test("dirty-path rescan on a STATS group key reads NULL groups unpruned") {
+    val (src, mv) = freshRoots()
+    import spark.implicits._
+    // g is a stats column: the key probe would prune the b0 file, whose g
+    // range [a, a] misses the dirty key "z" — yet it holds a NULL-group row
+    LakeTable.init(spark, src,
+      Seq((1L, "b0", Option("a"), 10L), (2L, "b0", Option.empty[String], 5L))
+        .toDF("k", "b", "g", "v"),
+      partitionCol = "b", statsCols = Seq("k", "g"))
+    MatView.create(spark, mv, src, Seq("g"), MatView.parseAggs("cnt,min:v"))
+    LakeTable.append(spark, src,
+      Seq((3L, "b1", Option.empty[String], 7L), (4L, "b1", Option("z"), 1L))
+        .toDF("k", "b", "g", "v"))
+    val head = LakeTable.snapshot(spark, src).version
+    val all = LakeTable.readVersion(spark, src, head).inputFiles.length
+    assert(LakeTable.readVersionForKeys(spark, src, head, Seq("g"),
+      Seq("z").toDF("g")).inputFiles.length < all, "the non-NULL key alone must prune")
+    assert(LakeTable.readVersionForKeys(spark, src, head, Seq("g"),
+      Seq(Option("z"), Option.empty[String]).toDF("g")).inputFiles.length === all,
+      "a NULL key must read the unpruned version")
+
+    MatView.refresh(spark, mv)
+    val nr = LakeTable.read(spark, mv).where(col("g").isNull).collect().toSeq
+    assert(nr.size === 1 && nr.head.getAs[Long]("cnt") === 2L
+      && nr.head.getAs[Long]("min_v") === 5L, s"got $nr")
+    assertInSync(src, mv, Seq("g"), Seq("min(v)"))
+  }
+
   test("refresh over a MOR source: a tombstone+append merge commit folds exactly") {
     val (src, mv) = freshRoots()
     import spark.implicits._
