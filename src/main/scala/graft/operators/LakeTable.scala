@@ -3149,9 +3149,10 @@ object LakeTable {
     finally bEx.destroy()
   }
 
-  /** The tail every row-level verb shares: commit `s0` minus `removed`
-    * plus `written` as version s0+1 — a `kept` entry (a MOR file with its
-    * grown deletion vector) takes its original's place in the manifest.
+  /** The tail every row-level verb and OPTIMIZE share: commit `s0`
+    * minus `removed` plus `written` as version s0+1 — a `kept` entry (a
+    * MOR file with its grown deletion vector) takes its original's place
+    * in the manifest.
     * A lost race first tries the metadata-only [[rebaseCommit]]; when
     * that is unsound the attempt throws [[CommitConflict]] and
     * [[retryOnConflict]] recomputes it on the winner's snapshot.
@@ -3188,34 +3189,17 @@ object LakeTable {
       written.size, filesProbed = probed)
   }
 
-  /** The MOR tail: every file `sidecars` names gains (or extends) its
-    * deletion vector — a file whose every row is dead drops from the
-    * manifest instead (no tombstone chains; its just-published sidecar is
-    * an unreferenced orphan for vacuum's `dv/` sweep) — and `written`
-    * appends, in one [[landDml]] commit. "Rewritten" in the stats counts
-    * the files that gained a vector: metadata only, zero data bytes moved.
+  /** What a write step lands ([[landDml]]'s arguments): `removed`
+    * entries leave the manifest, `kept` ones (a MOR file with its grown
+    * deletion vector) take their original's place, `written` append,
+    * under `meta`. `dvMerge` lets the metadata-only rebase merge vectors.
     */
-  private def landTombstones(
-      spark: SparkSession,
-      root: String,
-      verb: String,
-      s0: Snapshot,
-      meta: TableMeta,
-      probeEntries: Seq[Entry],
-      sidecars: Array[(String, String, Long)],
+  private case class Landing(
+      removed: Seq[Entry],
+      kept: Seq[Entry],
       written: Seq[Entry],
-      mayMatch: Entry => Boolean,
-      dvMerge: Boolean,
-      preCommit: () => Unit): MergeStats = {
-    val byKey = probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
-    val dvd: Map[String, Option[Entry]] = sidecars.iterator.map { case (key, rel, card) =>
-      val e = byKey(key)
-      e.rel -> (if (e.rows.contains(card)) None else Some(e.copy(dv = Some(DvRef(rel, card)))))
-    }.toMap
-    val removed = s0.entries.filter(e => dvd.contains(e.rel))
-    landDml(spark, root, verb, s0, meta, removed, removed.flatMap(e => dvd(e.rel)), written,
-      removed.map(_.part).distinct.size, probeEntries.size, mayMatch, dvMerge, preCommit)
-  }
+      meta: TableMeta,
+      dvMerge: Boolean)
 
   /** One statement's row fates, stated once for both write steps. `rows`
     * builds the fate frame from the live target rows of a set of probed
@@ -3267,7 +3251,11 @@ object LakeTable {
 
   /** The write step every row-level verb ends in — the one place the
     * table's `deleteMode` is read: `cow` rewrites ([[rewriteFates]]),
-    * `mor` tombstones ([[tombstoneFates]]).
+    * `mor` tombstones ([[tombstoneFates]]). A statement that rewrites or
+    * tombstones no file, writes nothing and leaves the metadata as it was
+    * commits nothing on either mode (a re-issued DELETE, a MERGE with an
+    * empty source); a matview refresh always commits, its watermark stamp
+    * changes the metadata.
     */
   private def landFates(
       spark: SparkSession,
@@ -3276,9 +3264,15 @@ object LakeTable {
       s0: Snapshot,
       meta: TableMeta,
       f: RowFates,
-      preCommit: () => Unit): MergeStats =
-    if (meta.deleteMode == "mor") tombstoneFates(spark, root, verb, s0, meta, f, preCommit)
-    else rewriteFates(spark, root, verb, s0, meta, f, preCommit)
+      preCommit: () => Unit): MergeStats = {
+    val l =
+      if (meta.deleteMode == "mor") tombstoneFates(spark, root, s0, meta, f)
+      else rewriteFates(spark, root, meta, f)
+    if (l.removed.isEmpty && l.written.isEmpty && s0.meta.contains(l.meta))
+      unchanged(s0, f.probeEntries.size)
+    else landDml(spark, root, verb, s0, l.meta, l.removed, l.kept, l.written,
+      l.removed.map(_.part).distinct.size, f.probeEntries.size, f.mayMatch, l.dvMerge, preCommit)
+  }
 
   /** The files holding a row of `rows`, as [[Dv.suffixKey]]s of its
     * `__file` column (the key the MOR step names sidecars by): one
@@ -3297,17 +3291,13 @@ object LakeTable {
     * rewritten from the fate frame over those files alone — unfired rows
     * as they are, fired rows' surviving post-images, the inserts — and
     * every other file carries by path. A rewrite of a DV'd file also
-    * materializes its vector (the scan applies it). Always commits: a
-    * statement that touches nothing lands a no-op version.
+    * materializes its vector (the scan applies it).
     */
   private def rewriteFates(
       spark: SparkSession,
       root: String,
-      verb: String,
-      s0: Snapshot,
       meta: TableMeta,
-      f: RowFates,
-      preCommit: () => Unit): MergeStats = {
+      f: RowFates): Landing = {
     val touched = f.touched.fold(f.rows(positionalScan(spark, root, meta, f.probeEntries))
       .map(_.where(f.fired)))(_(f.probeEntries))
     val hit = touched.fold(Set.empty[String])(fileKeys)
@@ -3323,17 +3313,19 @@ object LakeTable {
         // file carries the CURRENT spec — a pre-evolution file re-
         // partitions under the new one
         preserveLayout = f.layoutStable && rewrite.forall(_.spec == meta.currentSpec)))
-    landDml(spark, root, verb, s0,
-      if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta, rewrite, Nil, written,
-      rewrite.map(_.part).distinct.size, f.probeEntries.size, f.mayMatch, dvMerge = false,
-      preCommit)
+    Landing(rewrite, Nil, written,
+      if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta, dvMerge = false)
   }
 
   /** The `mor` write step: fired rows tombstone into DV sidecars
     * ([[publishDvSidecars]]) and the surviving post-images plus the
-    * inserts append as one new batch, in one [[landTombstones]] commit —
-    * O(changed rows) written, no data file rewritten. A statement that
-    * changes no row and no metadata commits nothing. The metadata-only
+    * inserts append as one new batch, in one commit — O(changed rows)
+    * written, no data file rewritten. Every file a sidecar names gains
+    * (or extends) its deletion vector — a file whose every row is dead
+    * drops from the manifest instead (no tombstone chains; its
+    * just-published sidecar is an unreferenced orphan for vacuum's `dv/`
+    * sweep). "Rewritten" in the stats counts the files that gained a
+    * vector: metadata only, zero data bytes moved. The metadata-only
     * rebase may merge vectors (`dvMerge`) only without inserts: a
     * winner's tombstone on a row we matched but did not fire flips that
     * source row to NOT MATCHED, which position disjointness cannot see.
@@ -3341,14 +3333,12 @@ object LakeTable {
   private def tombstoneFates(
       spark: SparkSession,
       root: String,
-      verb: String,
       s0: Snapshot,
       meta: TableMeta,
-      f: RowFates,
-      preCommit: () => Unit): MergeStats = {
+      f: RowFates): Landing = {
     val writes = f.keep.isDefined || f.insert.isDefined
     val probed = positionalScan(spark, root, meta, f.probeEntries)
-    f.flagged(probed).fold(unchanged(s0, f.probeEntries.size)) { r =>
+    f.flagged(probed).fold(Landing(Nil, Nil, Nil, meta, dvMerge = false)) { r =>
       val fated = r.where(col("__fired") || col("__ins"))
       val work = if (writes) fated.persist() else fated
       try {
@@ -3361,11 +3351,15 @@ object LakeTable {
           if (!writes || (f.insert.isEmpty && sidecars.isEmpty) ||
             (f.insert.isDefined && post.isEmpty)) Nil
           else writeBatch(spark, root, regenerate(post, meta, f.assigned), meta)
-        val landMeta = if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta
-        if (sidecars.isEmpty && written.isEmpty && s0.meta.contains(landMeta))
-          unchanged(s0, f.probeEntries.size)
-        else landTombstones(spark, root, verb, s0, landMeta, f.probeEntries, sidecars, written,
-          f.mayMatch, dvMerge = f.insert.isEmpty, preCommit)
+        val byKey = f.probeEntries.map(e => Dv.suffixKey(e.rel) -> e).toMap
+        val dvd: Map[String, Option[Entry]] = sidecars.iterator.map { case (key, rel, card) =>
+          val e = byKey(key)
+          e.rel -> (if (e.rows.contains(card)) None else Some(e.copy(dv = Some(DvRef(rel, card)))))
+        }.toMap
+        val removed = s0.entries.filter(e => dvd.contains(e.rel))
+        Landing(removed, removed.flatMap(e => dvd(e.rel)), written,
+          if (f.insert.isDefined) advanceIdentityHw(meta, written) else meta,
+          dvMerge = f.insert.isEmpty)
       } finally if (writes) work.unpersist()
     }
   }
@@ -3380,7 +3374,7 @@ object LakeTable {
     * [[predicateFilePruner]]), then:
     *
     *   - `cow`: only files CONTAINING a match are rewritten; every other
-    *     file carries by path. A re-issued delete is a no-op commit
+    *     file carries by path. A re-issued delete commits nothing
     *     (idempotent); a delete that removes every row commits a
     *     legitimately-empty snapshot — the manifest's recorded schema
     *     keeps the table readable and mergeable.
@@ -3917,22 +3911,17 @@ object LakeTable {
     }
     if (compactParts.isEmpty) unchanged(s0, -1)
     else {
-      val (rewrite, carry) = s0.entries.partition(e => compactParts.contains((e.spec, e.part)))
+      val rewrite = s0.entries.filter(e => compactParts.contains((e.spec, e.part)))
       val df = readEntries(spark, root, meta.schema, rewrite)
       // already-validated rows being compacted — no CHECK re-validation
       val written = writeBatch(spark, root, df, meta, maxRecordsPerFile, sortCols, zorderCols,
         enforceChecks = false)
-      preCommit()
       // lost race → metadata-only rebase: compaction never needs the
       // winner's new files (compacting fewer groups than a fresh run is
       // content-preserving), so the only conditions are untouched
       // metadata and a byte-identical rewrite set at head
-      val landed =
-        if (commit(spark, root, s0.version + 1, meta, carry ++ written)) s0.version + 1
-        else rebaseCommit(spark, root, s0, meta, rewrite, written, _ => false).getOrElse(
-          throw new CommitConflict(
-            s"LakeTable.optimize: concurrent commit at $root (retries exhausted)"))
-      MergeStats(landed, compactParts.size, rewrite.size, carry.size, written.size)
+      landDml(spark, root, "optimize", s0, meta, rewrite, Nil, written, compactParts.size,
+        probed = -1L, mayMatch = _ => false, dvMerge = false, preCommit)
     }
   }
 

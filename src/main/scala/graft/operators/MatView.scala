@@ -6,35 +6,49 @@ import org.apache.spark.sql.functions._
 /** Incrementally-maintained MATERIALIZED VIEWS over lake tables: a
   * group-by aggregate (`count` / `sum` / `avg` / `min` / `max` /
   * exact `count(distinct)` over key columns) stored as its own lake
-  * table and kept in sync with the source by REFRESH steps that never
+  * table and kept in sync with its sources by REFRESH steps that never
   * recompute the world.
   *
-  * Refresh strategy is picked from the aggregate set:
+  * One definition ([[ViewDef]]) describes every view: a FACT leg (root,
+  * optional WHERE, watermark), an optional DIM leg (root, equi-join
+  * columns, optional dim WHERE, watermark), the group keys (some may be
+  * derived `name := sql` expressions) and the aggregates. A single-table
+  * view is a join view without a dim leg. One function ([[rows]]) turns
+  * a fact frame and, on a join view, a dim frame into the view's input
+  * rows; the full compute, every delta term and the dirty-group rescan
+  * all go through it. With F0/D0 the leg states at the last refresh and
+  * F1/D1 at head, a refresh sums the terms of the legs whose head moved:
+  *
+  * {{{ ΔF (⋈ D1)  ∪  F0 ⋈ ΔD }}}
+  *
+  * (exact in signed multiset algebra: F1⋈D1 − F0⋈D0 =
+  * (F1−F0)⋈D1 + F0⋈(D1−D0)). ΔF/ΔD are the file-wise signed row diffs
+  * ([[LakeTable.rowDeltas]] — key-free, exact under duplicates); the
+  * F0⋈ΔD term reads the fact pruned to the dirty dim keys. The strategy
+  * is picked from the aggregate set:
   *
   *   - '''pure delta''' (only `cnt`/`sum`/`avg` — avg folds from its
-  *     stored sum + non-null-count support columns): the source's SIGNED row
-  *     diff over the window ([[LakeTable.rowDeltas]] — file-wise,
-  *     key-free, exact under duplicates) folds to one net delta row
-  *     per touched group (entered rows +1, departed rows −1; sums
-  *     sign-weighted), which MERGEs into the view — '''the source is
-  *     never scanned''', refresh cost is O(changed files) regardless
-  *     of table size. Groups whose net count reaches zero are deleted.
-  *     SQL `sum` null semantics are kept exact through a hidden
+  *     stored sum + non-null-count support columns): the terms fold to
+  *     one net delta row per touched group (entered rows +1, departed
+  *     rows −1; sums sign-weighted), which MERGEs into the view — the
+  *     source is never scanned, refresh cost is O(changed files)
+  *     regardless of table size. Groups whose net count reaches zero are
+  *     deleted. SQL `sum` null semantics are kept exact through a hidden
   *     non-null counter per sum column (`_nn_<col>`): a group whose
   *     every value is NULL reports a NULL sum even after incremental
   *     updates.
   *   - '''dirty groups''' (`min`/`max`/`cntd` present — not
-  *     incrementally maintainable under deletes): the change feed yields the DISTINCT
-  *     touched keys; only those groups re-aggregate from the source
-  *     (a semi join the scan layer prunes by stats/Bloom/partition),
-  *     then MERGE. Cost O(changes + rows of touched groups), never a
-  *     full recompute.
+  *     incrementally maintainable under deletes): the terms yield the
+  *     DISTINCT touched keys; only those groups re-aggregate from the
+  *     sources at head ([[dirtySource]]: one rescan, the fact read
+  *     pruned by the dirty keys), then MERGE. Cost O(changes + rows of
+  *     touched groups), never a full recompute.
   *
-  * Exactly-once: the last-applied source version rides in the SAME
+  * Exactly-once: the last-applied source versions ride in the SAME
   * manifest commit as the data change ([[LakeTable.mergeClauses]]'s
   * `metaUpdate`), so a crash between "apply" and "record" cannot
   * double-apply a delta. An empty refresh window still advances the
-  * watermark (one metadata-only commit).
+  * watermarks (one metadata-only commit).
   *
   * The view is an ordinary lake table: SQL reads, time travel, CDF and
   * streaming compose over it unchanged. It is bucket-partitioned on the
@@ -56,27 +70,98 @@ object MatView {
     def spec: String = if (fn == "cnt") "cnt" else s"$fn:$column"
   }
 
+  // the definition rides the view's manifest props; ViewDef is the only
+  // reader and writer of these keys
   private val PropSrc = "mv.src"
   private val PropKeys = "mv.keys"
   private val PropAggs = "mv.aggs"
   private val PropVersion = "mv.srcVersion"
-  // filtered/projected views: an optional WHERE predicate over the
-  // source (applied to full compute AND to every signed delta — a
-  // row-wise deterministic filter commutes with the diff), and derived
-  // group-key expressions `name := sql` (re-derived on each delta row
-  // before grouping)
   private val PropWhere = "mv.where"
   private val PropKeyExprs = "mv.keyExprs"
-  // join views (fact ⋈ dim): the dim side's root, the equi-join columns
-  // and the dim-side watermark — present only on views over a join
   private val PropDim = "mv.dim"
   private val PropJoinFact = "mv.joinFact"
   private val PropJoinDim = "mv.joinDim"
   private val PropDimVersion = "mv.dimVersion"
-  // optional DIM-side filter on a join view ("active customers only"):
-  // row-wise deterministic, so it commutes with the signed dim diff the
-  // same way mv.where commutes with the fact diff
   private val PropDimWhere = "mv.dimWhere"
+
+  /** One source of a view: its root, an optional row filter (row-wise
+    * deterministic, so it commutes with the signed diff — a row UPDATEd
+    * across the filter boundary nets to a membership change) and the
+    * source version the view last applied (its watermark).
+    */
+  private case class Leg(root: String, where: Option[String], version: Long)
+
+  /** A join view's dim side: the inner equi-join is
+    * `fact.factKey = dim.dimKey`.
+    */
+  private case class DimLeg(leg: Leg, factKey: String, dimKey: String)
+
+  /** A view's stored definition. `keyExprs` derive group keys
+    * (`"decade" -> "year div 10"`), each named in `keys`.
+    */
+  private case class ViewDef(
+      fact: Leg,
+      dim: Option[DimLeg],
+      keys: Seq[String],
+      keyExprs: Seq[(String, String)],
+      aggs: Seq[Agg]) {
+    def legs: Seq[Leg] = fact +: dim.map(_.leg).toSeq
+    def derived: Set[String] = keyExprs.map(_._1).toSet
+    // the only keys a pruned read can prune on (derived keys have no stats arm)
+    def physKeys: Seq[String] = keys.filterNot(derived)
+    def deltaOnly: Boolean = aggs.forall(a => Set("cnt", "sum", "avg")(a.fn))
+
+    /** The same view with its legs' watermarks at `versions`. */
+    def at(versions: Seq[Long]): ViewDef = copy(
+      fact = fact.copy(version = versions.head),
+      dim = dim.map(j => j.copy(leg = j.leg.copy(version = versions.last))))
+
+    def aggregate(input: DataFrame): DataFrame =
+      input.groupBy(keys.map(col): _*).agg(aggExprs(aggs).head, aggExprs(aggs).tail: _*)
+
+    // key-expression pairs ride one prop: records separated by U+001E
+    // (never legal in a column name or SQL expression), name/expr split
+    // on ':='
+    def props: Map[String, String] =
+      Map(PropSrc -> fact.root, PropKeys -> keys.mkString(","),
+        PropAggs -> aggs.map(_.spec).mkString(","), PropVersion -> fact.version.toString) ++
+        fact.where.map(PropWhere -> _) ++
+        (if (keyExprs.isEmpty) Nil
+         else Seq(PropKeyExprs -> keyExprs.map { case (n, e) => s"$n:=$e" }.mkString("\u001E"))) ++
+        dim.toSeq.flatMap(j => Seq(PropDim -> j.leg.root, PropJoinFact -> j.factKey,
+          PropJoinDim -> j.dimKey, PropDimVersion -> j.leg.version.toString) ++
+          j.leg.where.map(PropDimWhere -> _))
+  }
+
+  private object ViewDef {
+    def decode(p: Map[String, String]): ViewDef = ViewDef(
+      Leg(p(PropSrc), p.get(PropWhere), p(PropVersion).toLong),
+      p.get(PropDim).map(root => DimLeg(
+        Leg(root, p.get(PropDimWhere), p(PropDimVersion).toLong), p(PropJoinFact), p(PropJoinDim))),
+      p(PropKeys).split(",").toSeq,
+      p.get(PropKeyExprs).toSeq.flatMap(_.split('\u001E')).filter(_.nonEmpty).map { r =>
+        val i = r.indexOf(":=")
+        require(i > 0, s"MatView: bad key expression encoding '$r'")
+        (r.substring(0, i), r.substring(i + 2))
+      },
+      parseAggs(p(PropAggs)))
+  }
+
+  /** Is the lake table whose manifest carries `props` a materialized view? */
+  def isView(props: Map[String, String]): Boolean = props.contains(PropSrc)
+
+  /** Is `key` a view-definition prop? Refresh maintains them; SQL may
+    * neither set nor show them.
+    */
+  def isInternalProp(key: String): Boolean = key.startsWith("mv.")
+
+  /** The source versions a view reflects: the fact's, and the dim's on a
+    * join view.
+    */
+  def appliedVersions(props: Map[String, String]): (Long, Option[Long]) = {
+    val v = ViewDef.decode(props)
+    (v.fact.version, v.dim.map(_.leg.version))
+  }
 
   /** A refresh whose watermark went stale under it: a concurrent refresh
     * already applied (at least) this window, so the refresh restarts
@@ -128,18 +213,6 @@ object MatView {
 
   private def storedCols(aggs: Seq[Agg]): Seq[String] = storedPlan(aggs).map(_._1)
 
-  // pairs ride one manifest prop: records separated by U+001E (never
-  // legal in a column name or SQL expression), name/expr split on ':='
-  private def encodeKeyExprs(ke: Seq[(String, String)]): String =
-    ke.map { case (n, e) => s"$n:=$e" }.mkString("\u001E")
-
-  private def decodeKeyExprs(s: String): Seq[(String, String)] =
-    s.split('\u001E').toSeq.filter(_.nonEmpty).map { p =>
-      val i = p.indexOf(":=")
-      require(i > 0, s"MatView: bad key expression encoding '$p'")
-      (p.substring(0, i), p.substring(i + 2))
-    }
-
   /** Reconstruct the `SELECT ...` definition a stored view's manifest
     * props encode — SHOW CREATE's render: prefixed with
     * `CREATE MATERIALIZED VIEW <name> AS` it re-executes through the
@@ -149,32 +222,30 @@ object MatView {
   def definitionSelect(
       props: Map[String, String],
       renderIdent: String => String = r => s"graft.`$r`"): String = {
-    val keys = props(PropKeys).split(",").toSeq
-    val keyExprs = props.get(PropKeyExprs).map(decodeKeyExprs).getOrElse(Nil).toMap
-    val aggs = parseAggs(props(PropAggs))
-    val keyItems = keys.map(k => keyExprs.get(k).fold(k)(e => s"$e AS $k"))
-    val aggItems = aggs.map {
+    val v = ViewDef.decode(props)
+    val keyExprs = v.keyExprs.toMap
+    val keyItems = v.keys.map(k => keyExprs.get(k).fold(k)(e => s"$e AS $k"))
+    val aggItems = v.aggs.map {
       case Agg("cnt", _) => "count(*) AS cnt"
       case Agg("cntd", c) => s"count(DISTINCT $c) AS cntd_$c"
       case Agg(fn, c) => s"$fn($c) AS ${fn}_$c"
     }
-    val from = props.get(PropDim) match {
-      case Some(dim) =>
+    val from = v.dim match {
+      case Some(j) =>
         // qualified ON: the two join columns may legally share a name
-        s"FROM ${renderIdent(props(PropSrc))} f JOIN ${renderIdent(dim)} d " +
-          s"ON f.`${props(PropJoinFact)}` = d.`${props(PropJoinDim)}`"
-      case None => s"FROM ${renderIdent(props(PropSrc))}"
+        s"FROM ${renderIdent(v.fact.root)} f JOIN ${renderIdent(j.leg.root)} d " +
+          s"ON f.`${j.factKey}` = d.`${j.dimKey}`"
+      case None => s"FROM ${renderIdent(v.fact.root)}"
     }
-    val where = props.get(PropWhere).toSeq ++ props.get(PropDimWhere).toSeq
+    val where = v.legs.flatMap(_.where)
     val whereClause =
       if (where.isEmpty) "" else where.mkString("\nWHERE (", ") AND (", ")")
-    val groupBy = keys.map(k => keyExprs.getOrElse(k, k)).mkString(", ")
+    val groupBy = v.keys.map(k => keyExprs.getOrElse(k, k)).mkString(", ")
     s"SELECT ${(keyItems ++ aggItems).mkString(", ")}\n$from$whereClause\nGROUP BY $groupBy"
   }
 
-  /** Derive expression keys, then apply the WHERE filter — on the full
-    * compute and on every signed delta identically (both are row-wise
-    * deterministic, so they commute with the diff).
+  /** Derive expression keys, then apply the WHERE filter (both row-wise
+    * deterministic, so they commute with the signed diff).
     */
   private def prep(
       df: DataFrame,
@@ -182,6 +253,57 @@ object MatView {
       keyExprs: Seq[(String, String)]): DataFrame = {
     val derived = keyExprs.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, expr(e)) }
     where.fold(derived)(w => derived.where(expr(w)))
+  }
+
+  private def read(spark: SparkSession, leg: Leg): DataFrame =
+    LakeTable.readVersion(spark, leg.root, leg.version)
+
+  /** The view's input rows — the relation it aggregates — over a fact
+    * frame and, on a join view, a dim frame: each leg's WHERE applies to
+    * its frame, then the join (if any), then the derived keys. A `_sign`
+    * column on either side (a signed diff) passes through as `_sign`.
+    * The same shape serves the full compute, every delta term and the
+    * dirty rescan.
+    */
+  private def rows(v: ViewDef, fact: DataFrame, dim: Option[DataFrame]): DataFrame =
+    v.dim.zip(dim).fold(prep(fact, v.fact.where, v.keyExprs)) { case (j, d) =>
+      joined(v, j, prep(fact, v.fact.where, Nil), prep(d, j.leg.where, Nil))
+    }
+
+  /** The inner equi-join projected to the view's input columns plus
+    * `_sign`, then the derived keys (which may mix both sides' columns).
+    * Column names must be disjoint across the two sides (the dim join
+    * column may share the fact join column's name — it is dropped, the
+    * values are equal on every joined row).
+    */
+  private def joined(v: ViewDef, j: DimLeg, fact: DataFrame, dim: DataFrame): DataFrame = {
+    val factCols = fact.columns.toSet - "_sign"
+    val dimCols = dim.columns.toSet - "_sign"
+    val shared = (factCols & dimCols) - j.dimKey
+    require(shared.isEmpty,
+      s"MatView join: column names must be disjoint across sides " +
+        s"(shared: ${shared.mkString(", ")}; only the join column may collide)")
+    // derived keys project their INPUT columns through the join, then
+    // derive
+    val exprRefs = v.keyExprs.flatMap { case (_, e) =>
+      org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(e).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.nameParts.last
+      } }
+    val needed = (v.physKeys ++ exprRefs ++ v.aggs.filter(_.fn != "cnt").map(_.column))
+      .distinct.filter(c => factCols.contains(c) || dimCols.contains(c))
+    // the window's sign rides the side that is a signed diff; a full
+    // read on both sides counts +1
+    val sign =
+      if (fact.columns.contains("_sign")) col("f.`_sign`")
+      else if (dim.columns.contains("_sign")) col("d.`_sign`")
+      else lit(1L)
+    val sel = fact.as("f").join(dim.as("d"), col(s"f.`${j.factKey}`") === col(s"d.`${j.dimKey}`"))
+      .select(needed.map { c =>
+        if (factCols.contains(c)) col(s"f.`$c`").as(c)
+        else col(s"d.`$c`").as(c)
+      } :+ sign.as("_sign"): _*)
+    prep(sel, None, v.keyExprs)
   }
 
   /** Full compute at the source's CURRENT version + view-table init.
@@ -201,73 +323,20 @@ object MatView {
       keys: Seq[String],
       aggs: Seq[Agg],
       where: Option[String] = None,
-      keyExprs: Seq[(String, String)] = Nil): Long = {
-    require(keys.nonEmpty, "MatView.create: at least one key column")
-    require(aggs.nonEmpty, "MatView.create: at least one aggregate")
-    keyExprs.foreach { case (n, _) => require(keys.contains(n),
-      s"MatView.create: derived key $n must be listed in keys") }
-    val head = LakeTable.snapshot(spark, srcRoot).version
-    require(head > 0, s"MatView.create: no committed snapshot at $srcRoot")
-    // a derived key that SHADOWS a source column would silently change
-    // what aggregates over that column aggregate (and what the dirty
-    // rescan prunes on) — refuse the collision, never reinterpret
-    if (keyExprs.nonEmpty) {
-      val srcCols = LakeTable.snapshot(spark, srcRoot).meta.get.schema.fieldNames.toSet
-      keyExprs.foreach { case (n, _) => require(!srcCols.contains(n),
-        s"MatView.create: derived key $n shadows a source column — pick a fresh name") }
-    }
-    val full = prep(LakeTable.readVersion(spark, srcRoot, head), where, keyExprs)
-      .groupBy(keys.map(col): _*).agg(aggExprs(aggs).head, aggExprs(aggs).tail: _*)
-    LakeTable.init(spark, mvRoot, full,
-      partitionCol = keys.head,
-      statsCols = keys,
-      partitionFn = "bucket:16",
-      props = Map(
-        PropSrc -> srcRoot, PropKeys -> keys.mkString(","),
-        PropAggs -> aggs.map(_.spec).mkString(","), PropVersion -> head.toString) ++
-        where.map(PropWhere -> _).toMap ++
-        (if (keyExprs.nonEmpty) Map(PropKeyExprs -> encodeKeyExprs(keyExprs)) else Map.empty))
-    head
-  }
+      keyExprs: Seq[(String, String)] = Nil): Long =
+    materialize(spark, mvRoot, "create",
+      ViewDef(Leg(srcRoot, where, 0L), None, keys, keyExprs, aggs))
 
   /** A view over `fact ⋈ dim` (inner equi-join on `factKey = dimKey`),
-    * maintained by DELTA-JOIN refresh: with F0/D0 the states at the last
-    * refresh and F1/D1 at head,
+    * maintained by delta-join refresh (see the object doc): a
+    * fact-append refresh is O(fact changes) and a dim-update refresh
+    * O(rows joining the changed dim keys).
     *
-    * {{{ Δ(F ⋈ D) = ΔF ⋈ D1  ∪  F0 ⋈ ΔD }}}
-    *
-    * (exact in signed multiset algebra: F1⋈D1 − F0⋈D0 =
-    * (F1−F0)⋈D1 + F0⋈(D1−D0)). ΔF/ΔD are the file-wise signed row
-    * diffs; the F0⋈ΔD term reads the fact PRUNED to the dirty dim keys
-    * (stats/Bloom — never the fact table), so a fact-append refresh is
-    * O(fact changes) and a dim-update refresh O(rows joining the
-    * changed dim keys). The delta family (cnt/sum/avg) folds from the
-    * terms directly; min/max/cntd use the SAME terms only to find the
-    * touched group keys, then re-aggregate those groups from the join
-    * at head with the fact read pruned to the dirty fact-side keys — a
-    * dirty-group rescan of the join, never a full recompute.
-    *
-    * Column names must be disjoint across the two sides (the dim join
-    * column may share the fact join column's name — it is dropped, the
-    * values are equal on every joined row).
-    */
-  /** `where` filters the FACT side (the "completed orders only" shape):
-    * it applies identically to the full compute, to both delta terms
-    * (ΔF filtered before the join — row-wise deterministic transforms
-    * commute with the signed diff — and F0 filtered in the dim term)
-    * and to the dirty rescan's fact read, so every refresh path
-    * maintains the filtered join exactly. `dimWhere` filters the DIM
-    * side ("active customers only") by the same commutation: a dim row
-    * UPDATEd across the filter boundary nets to a membership change in
-    * the filtered dim's signed diff, so one delta refresh folds it.
-    */
-  /** `keyExprs` derives group keys from the JOINED row (either side's
-    * columns — `"decade" := "o_year div 10"`): derivation runs after the
-    * join on the full compute and on every delta term identically
-    * (row-wise deterministic, so it commutes with the signed diffs).
-    * Derived keys have no stats arm, so the dirty-rescan fact pruning
-    * uses only the PHYSICAL keys (all-derived key sets fall back to the
-    * pinned full scan — sound, one pass).
+    * `where` filters the FACT side ("completed orders only"), `dimWhere`
+    * the DIM side ("active customers only"); each applies to its leg on
+    * the full compute, on both delta terms and on the dirty rescan.
+    * `keyExprs` derives group keys from the JOINED row (either side's
+    * columns — `"decade" := "o_year div 10"`), after the join.
     */
   def createJoin(
       spark: SparkSession,
@@ -280,223 +349,111 @@ object MatView {
       aggs: Seq[Agg],
       where: Option[String] = None,
       dimWhere: Option[String] = None,
-      keyExprs: Seq[(String, String)] = Nil): Long = {
-    require(keys.nonEmpty, "MatView.createJoin: at least one key column")
-    require(aggs.nonEmpty, "MatView.createJoin: at least one aggregate")
-    keyExprs.foreach { case (n, _) => require(keys.contains(n),
-      s"MatView.createJoin: derived key $n must be listed in keys") }
-    val headF = LakeTable.snapshot(spark, factRoot).version
-    val headD = LakeTable.snapshot(spark, dimRoot).version
-    require(headF > 0 && headD > 0, "MatView.createJoin: both sources need a snapshot")
-    // same shadowing refusal as create(): a derived key named like a
-    // physical column of either side would silently redirect aggregates
-    // and the dirty-rescan pruning
-    if (keyExprs.nonEmpty) {
-      val cols = LakeTable.snapshot(spark, factRoot).meta.get.schema.fieldNames.toSet ++
-        LakeTable.snapshot(spark, dimRoot).meta.get.schema.fieldNames.toSet
-      keyExprs.foreach { case (n, _) => require(!cols.contains(n),
-        s"MatView.createJoin: derived key $n shadows a source column — pick a fresh name") }
+      keyExprs: Seq[(String, String)] = Nil): Long =
+    materialize(spark, mvRoot, "createJoin",
+      ViewDef(Leg(factRoot, where, 0L), Some(DimLeg(Leg(dimRoot, dimWhere, 0L), factKey, dimKey)),
+        keys, keyExprs, aggs))
+
+  private def materialize(spark: SparkSession, mvRoot: String, verb: String, v0: ViewDef): Long = {
+    require(v0.keys.nonEmpty, s"MatView.$verb: at least one key column")
+    require(v0.aggs.nonEmpty, s"MatView.$verb: at least one aggregate")
+    v0.keyExprs.foreach { case (n, _) => require(v0.keys.contains(n),
+      s"MatView.$verb: derived key $n must be listed in keys") }
+    val heads = v0.legs.map(l => LakeTable.snapshot(spark, l.root))
+    v0.legs.zip(heads).foreach { case (l, h) =>
+      require(h.version > 0, s"MatView.$verb: no committed snapshot at ${l.root}") }
+    // a derived key that SHADOWS a source column would silently change
+    // what aggregates over that column aggregate (and what the dirty
+    // rescan prunes on) — refuse the collision, never reinterpret
+    if (v0.keyExprs.nonEmpty) {
+      val cols = heads.flatMap(_.meta.get.schema.fieldNames).toSet
+      v0.keyExprs.foreach { case (n, _) => require(!cols.contains(n),
+        s"MatView.$verb: derived key $n shadows a source column — pick a fresh name") }
     }
-    val full = joined(
-      prep(LakeTable.readVersion(spark, factRoot, headF), where, Nil),
-      prep(LakeTable.readVersion(spark, dimRoot, headD), dimWhere, Nil),
-      factKey, dimKey, keys, aggs, col("f.`__one`"), keyExprs)
-      .groupBy(keys.map(col): _*).agg(aggExprs(aggs).head, aggExprs(aggs).tail: _*)
+    val v = v0.at(heads.map(_.version))
+    val full = v.aggregate(rows(v, read(spark, v.fact), v.dim.map(j => read(spark, j.leg))))
     LakeTable.init(spark, mvRoot, full,
-      partitionCol = keys.head,
-      statsCols = keys,
+      partitionCol = v.keys.head,
+      statsCols = v.keys,
       partitionFn = "bucket:16",
-      props = Map(
-        PropSrc -> factRoot, PropDim -> dimRoot,
-        PropJoinFact -> factKey, PropJoinDim -> dimKey,
-        PropKeys -> keys.mkString(","),
-        PropAggs -> aggs.map(_.spec).mkString(","),
-        PropVersion -> headF.toString, PropDimVersion -> headD.toString) ++
-        where.map(PropWhere -> _).toMap ++
-        dimWhere.map(PropDimWhere -> _).toMap ++
-        (if (keyExprs.nonEmpty) Map(PropKeyExprs -> encodeKeyExprs(keyExprs)) else Map.empty))
-    headF
+      props = v.props)
+    v.fact.version
   }
 
-  /** The inner equi-join projected to the view's input columns plus a
-    * `_sign` column (`signCol` — `f.__one`/`d.__one` select which side
-    * carries the window's sign; both sides get a constant `__one` so
-    * the same shape serves full compute and both delta terms).
-    */
-  private def joined(
-      fact: DataFrame,
-      dim: DataFrame,
-      factKey: String,
-      dimKey: String,
-      keys: Seq[String],
-      aggs: Seq[Agg],
-      signCol: Column,
-      keyExprs: Seq[(String, String)] = Nil): DataFrame = {
-    val f = (if (fact.columns.contains("_sign")) fact
-             else fact.withColumn("_sign", lit(1L))).withColumnRenamed("_sign", "__one")
-    val d = (if (dim.columns.contains("_sign")) dim
-             else dim.withColumn("_sign", lit(1L))).withColumnRenamed("_sign", "__one")
-    val factCols = f.columns.toSet - "__one"
-    val dimCols = d.columns.toSet - "__one"
-    val shared = (factCols & dimCols) - dimKey
-    require(shared.isEmpty,
-      s"MatView join: column names must be disjoint across sides " +
-        s"(shared: ${shared.mkString(", ")}; only the join column may collide)")
-    // derived keys project their INPUT columns through the join, then
-    // derive — the key expression may mix both sides' columns
-    val exprRefs = keyExprs.flatMap { case (_, e) =>
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(e).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.nameParts.last
-      } }
-    val physKeys = keys.filterNot(k => keyExprs.exists(_._1 == k))
-    val needed = (physKeys ++ exprRefs ++ aggs.filter(_.fn != "cnt").map(_.column))
-      .distinct.filter(c => factCols.contains(c) || dimCols.contains(c))
-    val sel = f.as("f").join(d.as("d"), col(s"f.`$factKey`") === col(s"d.`$dimKey`"))
-      .select(needed.map { c =>
-        if (factCols.contains(c)) col(s"f.`$c`").as(c)
-        else col(s"d.`$c`").as(c)
-      } :+ signCol.as("_sign"): _*)
-    keyExprs.foldLeft(sel) { case (df, (n, e)) => df.withColumn(n, expr(e)) }
-  }
-
-  /** Applies the source's `(lastApplied, head]` change window to the
-    * view. Returns the source version the view now reflects.
+  /** Applies every leg's `(lastApplied, head]` change window to the
+    * view. Returns the fact version the view now reflects.
     */
   def refresh(spark: SparkSession, mvRoot: String): Long = {
     val s0 = LakeTable.snapshot(spark, mvRoot)
     require(s0.version > 0, s"MatView.refresh: no committed snapshot at $mvRoot")
     val meta = s0.meta.get
-    val d = meta.props
-    require(d.contains(PropSrc), s"MatView.refresh: $mvRoot is not a materialized view")
-    if (d.contains(PropDim)) return refreshJoin(spark, mvRoot, meta)
-    val (src, keys, aggs, last) = (
-      d(PropSrc), d(PropKeys).split(",").toSeq, parseAggs(d(PropAggs)), d(PropVersion).toLong)
-    val (where, keyExprs) =
-      (d.get(PropWhere), d.get(PropKeyExprs).map(decodeKeyExprs).getOrElse(Nil))
-    val head = LakeTable.snapshot(spark, src).version
-    if (head <= last) return last
+    require(isView(meta.props), s"MatView.refresh: $mvRoot is not a materialized view")
+    val v = ViewDef.decode(meta.props)
+    val heads = v.legs.map(l => LakeTable.snapshot(spark, l.root))
+    val v1 = v.at(heads.map(_.version))
+    def moved(l0: Leg, l1: Leg): Boolean = l1.version > l0.version
+    if (!v.legs.zip(v1.legs).exists { case (l0, l1) => moved(l0, l1) }) return v.fact.version
 
-    // the SIGNED row diff of the whole window — file-wise, key-free,
-    // exact under duplicates; intermediate states net out. Derived keys
-    // and the view's WHERE apply to every signed row (a row UPDATEd out
-    // of the filter nets to −1, into it to +1 — exactly the filtered
-    // relation's diff)
-    val changes = prep(LakeTable.rowDeltas(spark, src, last, head), where, keyExprs)
-    // the stamp VALIDATES the watermark on the same snapshot the merge
-    // commits against: a concurrent refresh that already applied (at
-    // least) our window advanced mv.srcVersion, and re-applying our
-    // delta on top would double-count it — abort and recompute instead.
-    // mergeClauses re-runs metaUpdate on every retry snapshot, so the
-    // check rides the same atomic commit.
-    val stamp = (m: LakeTable.TableMeta) => {
-      if (!m.props.get(PropVersion).contains(last.toString))
-        throw new StaleRefresh(
-          s"MatView.refresh: stale refresh watermark (view advanced past $last concurrently)")
-      m.copy(props = m.props + (PropVersion -> head.toString))
+    // the fact window against the dim AT HEAD (a single-table view: the
+    // fact window alone). Derived keys and the WHERE apply to every
+    // signed row: a row UPDATEd out of the filter nets to −1, into it
+    // to +1 — exactly the filtered relation's diff
+    val factTerm =
+      if (!moved(v.fact, v1.fact)) None
+      else Some(rows(v, LakeTable.rowDeltas(spark, v.fact.root, v.fact.version, v1.fact.version),
+        v1.dim.map(j => read(spark, j.leg))))
+    // the PRE-WINDOW fact against the filtered dim window — the fact
+    // read prunes to the dirty dim keys (stats/Bloom), never the table
+    val dimTerm = v.dim.zip(v1.dim).filter { case (j0, j1) => moved(j0.leg, j1.leg) }.map {
+      case (j0, j1) =>
+        val dD = LakeTable.rowDeltas(spark, j0.leg.root, j0.leg.version, j1.leg.version)
+        val dirtyKeys = prep(dD, j0.leg.where, Nil)
+          .select(col(s"`${j0.dimKey}`").as(j0.factKey)).distinct()
+        rows(v, LakeTable.readVersionForKeys(
+          spark, v.fact.root, v.fact.version, Seq(j0.factKey), dirtyKeys), Some(dD))
     }
-    val deltaOnly = aggs.forall(a => Set("cnt", "sum", "avg")(a.fn))
+    val changes = (factTerm.toSeq ++ dimTerm.toSeq).reduce(_.unionByName(_))
+
+    // the stamp VALIDATES the watermarks on the same snapshot the merge
+    // commits against: a concurrent refresh that already applied (at
+    // least) our window advanced them, and re-applying our delta on top
+    // would double-count it — abort and recompute instead. mergeClauses
+    // re-runs metaUpdate on every retry snapshot, so the check rides the
+    // same atomic commit.
+    val stamp = (m: LakeTable.TableMeta) => {
+      if (ViewDef.decode(m.props).legs.map(_.version) != v.legs.map(_.version))
+        throw new StaleRefresh("MatView.refresh: stale refresh watermark (view advanced " +
+          s"past ${v.legs.map(_.version).mkString("/")} concurrently)")
+      m.copy(props = m.props ++ v1.props)
+    }
     val source =
-      if (deltaOnly) deltaSource(changes, keys, aggs)
-      else dirtySource(spark, src, head, changes, keys, aggs,
-        physKeys = keys.filterNot(k => keyExprs.exists(_._1 == k)),
-        prepFn = prep(_, where, keyExprs))
-    val stored = storedCols(aggs)
-    inheritWidenings(spark, mvRoot, meta, keys ++ stored, source)
+      if (v.deltaOnly) deltaSource(changes, v.keys, v.aggs)
+      else dirtySource(spark, v1, heads.head, changes)
+    val stored = storedCols(v.aggs)
+    inheritWidenings(spark, mvRoot, meta, v.keys ++ stored, source)
 
     // matched groups: dead (post-refresh cnt NULL or <= 0) delete,
     // live update; unseen-but-live groups insert. The __s_cnt guard on
     // INSERT skips windows that net to "never existed".
     val matched = Seq(
-      LakeTable.MergeBranch(Some(deadCond(deltaOnly)), None),
+      LakeTable.MergeBranch(Some(deadCond(v.deltaOnly)), None),
       LakeTable.MergeBranch(None, Some(
-        stored.map(c => c -> updateValue(deltaOnly, c)).toMap)))
+        stored.map(c => c -> updateValue(v.deltaOnly, c)).toMap)))
     val notMatched = Seq(
-      LakeTable.MergeBranch(Some(liveInsertCond(deltaOnly)), Some(
-        (keys.map(k => k -> col(s"__s_$k")) ++
-          stored.map(c => c -> insertValue(deltaOnly, c))).toMap)))
+      LakeTable.MergeBranch(Some(liveInsertCond(v.deltaOnly)), Some(
+        (v.keys.map(k => k -> col(s"__s_$k")) ++
+          stored.map(c => c -> insertValue(v.deltaOnly, c))).toMap)))
     try {
       // nullSafeKeys: GROUP BY treats NULL as a real group — the view
       // merge must match it, or every refresh re-inserts the NULL group
       LakeTable.mergeClauses(
-        spark, mvRoot, source, keys, matched, notMatched, Nil,
+        spark, mvRoot, source, v.keys, matched, notMatched, Nil,
         partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
-      head
+      v1.fact.version
     } catch {
       case _: StaleRefresh =>
         // a concurrent refresh covered our window — restart from its
         // watermark (terminates: the watermark strictly advances)
-        refresh(spark, mvRoot)
-    }
-  }
-
-  /** Delta-join refresh: ΔF ⋈ D1 ∪ F0 ⋈ ΔD folded to net per-group
-    * deltas, merged under BOTH watermarks in one atomic commit.
-    */
-  private def refreshJoin(spark: SparkSession, mvRoot: String, meta: LakeTable.TableMeta): Long = {
-    val d = meta.props
-    val (fact, dim) = (d(PropSrc), d(PropDim))
-    val (fk, dk) = (d(PropJoinFact), d(PropJoinDim))
-    val (keys, aggs) = (d(PropKeys).split(",").toSeq, parseAggs(d(PropAggs)))
-    val where = d.get(PropWhere)
-    val dimWhere = d.get(PropDimWhere)
-    val keyExprs = d.get(PropKeyExprs).map(decodeKeyExprs).getOrElse(Nil)
-    val (lastF, lastD) = (d(PropVersion).toLong, d(PropDimVersion).toLong)
-    val headF = LakeTable.snapshot(spark, fact).version
-    val headD = LakeTable.snapshot(spark, dim).version
-    if (headF <= lastF && headD <= lastD) return lastF
-
-    // term 1: the fact window joined against the FILTERED dim AT HEAD
-    val term1 =
-      if (headF <= lastF) None
-      else Some(joined(prep(LakeTable.rowDeltas(spark, fact, lastF, headF), where, Nil),
-        prep(LakeTable.readVersion(spark, dim, headD), dimWhere, Nil),
-        fk, dk, keys, aggs, col("f.`__one`"), keyExprs))
-    // term 2: the PRE-WINDOW fact joined against the FILTERED dim
-    // window (a dim row crossing the filter boundary is a membership
-    // change in the filtered diff) — the fact read prunes to the dirty
-    // dim keys (stats/Bloom), never the table
-    val term2 =
-      if (headD <= lastD) None
-      else {
-        val dD = prep(LakeTable.rowDeltas(spark, dim, lastD, headD), dimWhere, Nil)
-        val dirtyKeys = dD.select(col(s"`$dk`").as(fk)).distinct()
-        val f0 = prep(
-          LakeTable.readVersionForKeys(spark, fact, lastF, Seq(fk), dirtyKeys), where, Nil)
-        Some(joined(f0, dD, fk, dk, keys, aggs, col("d.`__one`"), keyExprs))
-      }
-    val changes = (term1.toSeq ++ term2.toSeq).reduce(_.unionByName(_))
-
-    val stamp = (m: LakeTable.TableMeta) => {
-      if (!m.props.get(PropVersion).contains(lastF.toString) ||
-          !m.props.get(PropDimVersion).contains(lastD.toString))
-        throw new StaleRefresh(
-          s"MatView.refresh: stale refresh watermark (view advanced past $lastF/$lastD concurrently)")
-      m.copy(props = m.props +
-        (PropVersion -> headF.toString) + (PropDimVersion -> headD.toString))
-    }
-    val deltaOnly = aggs.forall(a => Set("cnt", "sum", "avg")(a.fn))
-    val source =
-      if (deltaOnly) deltaSource(changes, keys, aggs)
-      else dirtyJoinSource(spark, fact, dim, fk, dk, headF, headD, changes, keys, aggs,
-        where, dimWhere, keyExprs)
-    val stored = storedCols(aggs)
-    inheritWidenings(spark, mvRoot, meta, keys ++ stored, source)
-    val matched = Seq(
-      LakeTable.MergeBranch(Some(deadCond(deltaOnly)), None),
-      LakeTable.MergeBranch(None, Some(
-        stored.map(c => c -> updateValue(deltaOnly, c)).toMap)))
-    val notMatched = Seq(
-      LakeTable.MergeBranch(Some(liveInsertCond(deltaOnly)), Some(
-        (keys.map(k => k -> col(s"__s_$k")) ++
-          stored.map(c => c -> insertValue(deltaOnly, c))).toMap)))
-    try {
-      LakeTable.mergeClauses(
-        spark, mvRoot, source, keys, matched, notMatched, Nil,
-        partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
-      headF
-    } catch {
-      case _: StaleRefresh =>
         refresh(spark, mvRoot)
     }
   }
@@ -552,99 +509,51 @@ object MatView {
         g.columns.filterNot(keys.contains).toSeq.map(c => col(c).as(s"__s_$c")): _*)
   }
 
-  /** Dirty-group source: DISTINCT touched keys from the change feed,
-    * re-aggregated from the source AT THE PINNED head version (groups
-    * the window killed come back with NULL aggregates → DELETE). The
-    * source read is entry-pruned by the dirty key set (stats/Bloom),
-    * then semi-joined — candidate files only, never the table.
+  /** Dirty-group source: the DISTINCT touched keys of the delta terms,
+    * re-aggregated from the sources AT THE PINNED heads (`v` carries the
+    * head watermarks; groups the window killed come back with NULL
+    * aggregates → DELETE). One rescan for both view shapes: the fact read
+    * is entry-pruned (stats/Bloom) by the dirty PHYSICAL fact-side keys,
+    * or — when every view key is a physical dim column (the common
+    * "GROUP BY segment" shape) — through the fact join-key values of the
+    * dirty dim rows; otherwise it reads the pinned version. The input rows
+    * are then semi-joined to the dirty keys and re-aggregated — candidate
+    * files only, never the table.
     */
   private def dirtySource(
       spark: SparkSession,
-      src: String,
-      head: Long,
-      changes: DataFrame,
-      keys: Seq[String],
-      aggs: Seq[Agg],
-      // PHYSICAL source columns among the keys — the only ones the
-      // entry-pruned read can prune on (derived keys have no stats arm)
-      physKeys: Seq[String],
-      prepFn: DataFrame => DataFrame): DataFrame = {
+      v: ViewDef,
+      factHead: LakeTable.Snapshot,
+      changes: DataFrame): DataFrame = {
+    val keys = v.keys
     val dirty = changes.select(keys.map(col): _*).distinct()
-    // with every key derived nothing can prune: the full pinned-version
-    // scan (readVersionForKeys itself falls back to it on a NULL key)
-    val base = prepFn(
-      if (physKeys.isEmpty) LakeTable.readVersion(spark, src, head)
-      else LakeTable.readVersionForKeys(spark, src, head, physKeys,
-        dirty.select(physKeys.map(col): _*).distinct()))
     def keyEq(l: String, r: String): Column =
       keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-    val recomputed = base.as("b")
-      .join(broadcast(dirty).as("d"), keyEq("b", "d"), "left_semi")
-      .groupBy(keys.map(col): _*).agg(aggExprs(aggs).head, aggExprs(aggs).tail: _*)
-    val joined = dirty.as("d").join(recomputed.as("r"), keyEq("d", "r"), "left")
-    joined.select(
-      keys.map(k => col(s"d.`$k`").as(k)) ++ keys.map(k => col(s"d.`$k`").as(s"__s_$k")) ++
-        storedCols(aggs).map(c => col(s"r.`$c`").as(s"__s_$c")): _*)
-  }
-
-  /** Dirty-group rescan of the JOIN for min/max/cntd join views: the
-    * delta terms (already computed) identify the touched group keys;
-    * those groups re-aggregate from `F1 ⋈ D1` with the fact read
-    * entry-pruned to the dirty FACT-SIDE key values (dim-side keys
-    * cannot prune the fact — the dim itself is read at head, typically
-    * the small side). Groups the window killed come back NULL → DELETE,
-    * exactly [[dirtySource]]'s contract.
-    */
-  private def dirtyJoinSource(
-      spark: SparkSession,
-      fact: String,
-      dim: String,
-      fk: String,
-      dk: String,
-      headF: Long,
-      headD: Long,
-      changes: DataFrame,
-      keys: Seq[String],
-      aggs: Seq[Agg],
-      where: Option[String] = None,
-      dimWhere: Option[String] = None,
-      keyExprs: Seq[(String, String)] = Nil): DataFrame = {
-    val dirty = changes.select(keys.map(col): _*).distinct()
-    val d1 = prep(LakeTable.readVersion(spark, dim, headD), dimWhere, Nil)
-    val factCols = LakeTable.snapshot(spark, fact).meta.get.schema.fieldNames.toSet
-    // derived keys have no stats arm: only PHYSICAL keys may prune
-    // (create refuses shadowing, so the exclusion here is belt-and-
-    // braces against legacy-created views)
-    val derivedNames = keyExprs.map(_._1).toSet
-    val factKeys = keys.filter(k => factCols.contains(k) && !derivedNames.contains(k))
-    val dimKeys = keys.filter(k => d1.columns.contains(k) && !derivedNames.contains(k))
-    val f1 =
-      // a NULL dirty key reads the unpruned version (readVersionForKeys)
+    val dim1 = v.dim.map(j => read(spark, j.leg))
+    val factCols = factHead.meta.get.schema.fieldNames.toSet
+    val factKeys = v.physKeys.filter(factCols.contains)
+    // a NULL dirty key reads the unpruned version (readVersionForKeys)
+    val fact1 =
       if (factKeys.nonEmpty)
-        LakeTable.readVersionForKeys(spark, fact, headF, factKeys,
+        LakeTable.readVersionForKeys(spark, v.fact.root, v.fact.version, factKeys,
           dirty.select(factKeys.map(col): _*).distinct())
-      else if (dimKeys.size == keys.size) {
-        // dim-side view keys (the common "GROUP BY segment" shape): the
-        // dirty groups name DIM rows, and only fact rows joining those
-        // rows can belong to a dirty group — prune the fact read by
-        // THEIR join-key values (the dim is the small side; its dirty
-        // slice is smaller still)
-        val dirtyFks = d1.as("d").join(broadcast(dirty).as("x"),
-          dimKeys.map(k => col(s"d.`$k`") <=> col(s"x.`$k`")).reduce(_ && _),
-          "left_semi")
-          .select(col(s"`$dk`").as(fk)).where(col(s"`$fk`").isNotNull).distinct()
-        LakeTable.readVersionForKeys(spark, fact, headF, Seq(fk), dirtyFks)
-      } else LakeTable.readVersion(spark, fact, headF)
-    val j = joined(prep(f1, where, Nil), d1, fk, dk, keys, aggs, col("f.`__one`"), keyExprs)
-    def keyEq(l: String, r: String): Column =
-      keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-    val recomputed = j.as("b")
-      .join(broadcast(dirty).as("d"), keyEq("b", "d"), "left_semi")
-      .groupBy(keys.map(col): _*).agg(aggExprs(aggs).head, aggExprs(aggs).tail: _*)
-    val out = dirty.as("d").join(recomputed.as("r"), keyEq("d", "r"), "left")
-    out.select(
+      else v.dim.zip(dim1) match {
+        case Some((j, d1)) if keys.forall(k => !v.derived(k) && d1.columns.contains(k)) =>
+          // the dirty groups name DIM rows, and only fact rows joining
+          // those rows can belong to a dirty group (the dim is the small
+          // side; its dirty slice is smaller still)
+          val dirtyFks = prep(d1, j.leg.where, Nil).as("d")
+            .join(broadcast(dirty).as("x"), keyEq("d", "x"), "left_semi")
+            .select(col(s"`${j.dimKey}`").as(j.factKey))
+            .where(col(s"`${j.factKey}`").isNotNull).distinct()
+          LakeTable.readVersionForKeys(spark, v.fact.root, v.fact.version, Seq(j.factKey), dirtyFks)
+        case _ => read(spark, v.fact)
+      }
+    val recomputed = v.aggregate(rows(v, fact1, dim1).as("b")
+      .join(broadcast(dirty).as("d"), keyEq("b", "d"), "left_semi"))
+    dirty.as("d").join(recomputed.as("r"), keyEq("d", "r"), "left").select(
       keys.map(k => col(s"d.`$k`").as(k)) ++ keys.map(k => col(s"d.`$k`").as(s"__s_$k")) ++
-        storedCols(aggs).map(c => col(s"r.`$c`").as(s"__s_$c")): _*)
+        storedCols(v.aggs).map(c => col(s"r.`$c`").as(s"__s_$c")): _*)
   }
 
   // ---- merge branch value expressions ---------------------------------

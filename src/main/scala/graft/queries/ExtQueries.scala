@@ -1660,9 +1660,9 @@ object ExtQueries {
       val headF = graft.operators.LakeTable.snapshot(s, fact).version
       val r = s.sql(s"CALL graft.system.refresh_matview('$mv')").head.getLong(0)
       require(r == headF, s"q181: refresh must reach the fact head ($r vs $headF)")
-      require(graft.operators.LakeTable.snapshot(s, mv)
-        .meta.get.props("mv.dimVersion").toLong ==
-        graft.operators.LakeTable.snapshot(s, dim).version,
+      require(graft.operators.MatView.appliedVersions(
+        graft.operators.LakeTable.snapshot(s, mv).meta.get.props)._2
+        .contains(graft.operators.LakeTable.snapshot(s, dim).version),
         "q181: the dim watermark must advance with the same refresh")
       s.sql(s"SELECT c_seg, cnt, sum_o_cents AS cents FROM graft.`$mv` ORDER BY c_seg")
     },
@@ -1881,9 +1881,9 @@ object ExtQueries {
       val headF = graft.operators.LakeTable.snapshot(s, fact).version
       val r = s.sql(s"REFRESH MATERIALIZED VIEW graft.`$mv`").head.getLong(0)
       require(r == headF, s"q192: refresh must reach the fact head ($r vs $headF)")
-      require(graft.operators.LakeTable.snapshot(s, mv)
-        .meta.get.props("mv.dimVersion").toLong ==
-        graft.operators.LakeTable.snapshot(s, dim).version,
+      require(graft.operators.MatView.appliedVersions(
+        graft.operators.LakeTable.snapshot(s, mv).meta.get.props)._2
+        .contains(graft.operators.LakeTable.snapshot(s, dim).version),
         "q192: the dim watermark must advance with the same refresh")
       s.sql(s"SELECT c_seg, cnt, sum_o_cents AS cents FROM graft.`$mv` ORDER BY c_seg")
     },
@@ -1919,8 +1919,8 @@ object ExtQueries {
       require(r1 == head && r2 == head,
         s"q174: refresh must reach the source head ($r1/$r2 vs $head)")
       // exactly-once pin: the watermark rode the refresh commit itself
-      require(graft.operators.LakeTable.snapshot(s, mv1)
-        .meta.get.props("mv.srcVersion").toLong == head,
+      require(graft.operators.MatView.appliedVersions(
+        graft.operators.LakeTable.snapshot(s, mv1).meta.get.props)._1 == head,
         "q174: watermark must live in the view's manifest")
       s.sql(s"SELECT m1.o_orderstatus AS status, m1.cnt AS cnt, " +
         "m1.sum_o_cents AS cents, m2.min_o_orderkey AS mn_key, " +

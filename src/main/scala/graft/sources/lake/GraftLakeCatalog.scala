@@ -371,7 +371,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces with Procedu
     import scala.jdk.CollectionConverters._
     properties.asScala.toMap.filterNot { case (k, _) =>
       reserved.contains(k) || k.startsWith("option.") || k.startsWith("spark.sql.") ||
-        k.startsWith("mv.") || k.startsWith("identity.hw.")
+        graft.operators.MatView.isInternalProp(k) || k.startsWith("identity.hw.")
     }
   }
 
@@ -471,9 +471,9 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces with Procedu
         bloomCols = Some(split(s.value))
       case s: TableChange.SetProperty if s.property == "deleteMode" =>
         deleteMode = Some(s.value)
-      // mv.* bookkeeping is maintained by refresh_matview's atomic
-      // commits — hand-editing it via SQL would desynchronize the view
-      case s: TableChange.SetProperty if s.property.startsWith("mv.") =>
+      // view-definition props are maintained by refresh_matview's atomic
+      // commits — hand-editing them via SQL would desynchronize the view
+      case s: TableChange.SetProperty if graft.operators.MatView.isInternalProp(s.property) =>
         throw new UnsupportedOperationException(
           s"graft-lake: ${s.property} is maintained by graft.system.refresh_matview")
       case s: TableChange.SetProperty if s.property.startsWith("identity.hw.") =>
@@ -485,7 +485,8 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces with Procedu
       // high-water pin would let identity allocation fall back to data
       // bounds and reuse values of deleted rows
       case r: TableChange.RemoveProperty
-          if r.property.startsWith("mv.") || r.property.startsWith("identity.hw.") =>
+          if graft.operators.MatView.isInternalProp(r.property) ||
+            r.property.startsWith("identity.hw.") =>
         throw new UnsupportedOperationException(
           s"graft-lake: ${r.property} is engine-maintained and cannot be unset")
       case r: TableChange.RemoveProperty =>

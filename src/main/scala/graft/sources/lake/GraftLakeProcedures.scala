@@ -273,19 +273,13 @@ private[lake] object GraftLakeProcedures {
           p("keys", StringType), p("aggs", StringType),
           pd("where", StringType, "''"), pd("key_exprs", StringType, "''"))) {
         override protected def run(args: InternalRow): (StructType, Seq[InternalRow]) = {
-          val keyExprs = args.getUTF8String(5).toString.split(";")
-            .map(_.trim).filter(_.nonEmpty).toSeq.map { pair =>
-              val i = pair.indexOf(":=")
-              require(i > 0, s"create_matview: bad key_exprs pair '$pair' (want name:=sql)")
-              (pair.substring(0, i).trim, pair.substring(i + 2).trim)
-            }
           val v = graft.operators.MatView.create(spark(),
             rootOf(args.getUTF8String(0).toString),
             rootOf(args.getUTF8String(1).toString),
             args.getUTF8String(2).toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
             graft.operators.MatView.parseAggs(args.getUTF8String(3).toString),
             where = Some(args.getUTF8String(4).toString).filter(_.nonEmpty),
-            keyExprs = keyExprs)
+            keyExprs = parseKeyExprs("create_matview", args.getUTF8String(5).toString))
           (StructType(Seq(StructField("src_version", LongType))), Seq(InternalRow(v)))
         }
       },
@@ -304,13 +298,6 @@ private[lake] object GraftLakeProcedures {
           pd("dim_where", StringType, "''"),
           pd("key_exprs", StringType, "''"))) {
         override protected def run(args: InternalRow): (StructType, Seq[InternalRow]) = {
-          val keyExprs = args.getUTF8String(9).toString.split(";")
-            .map(_.trim).filter(_.nonEmpty).toSeq.map { pair =>
-              val i = pair.indexOf(":=")
-              require(i > 0,
-                s"create_matview_join: bad key_exprs pair '$pair' (want name:=sql)")
-              (pair.substring(0, i).trim, pair.substring(i + 2).trim)
-            }
           val v = graft.operators.MatView.createJoin(spark(),
             rootOf(args.getUTF8String(0).toString),
             rootOf(args.getUTF8String(1).toString),
@@ -321,7 +308,7 @@ private[lake] object GraftLakeProcedures {
             graft.operators.MatView.parseAggs(args.getUTF8String(6).toString),
             where = Some(args.getUTF8String(7).toString).filter(_.nonEmpty),
             dimWhere = Some(args.getUTF8String(8).toString).filter(_.nonEmpty),
-            keyExprs = keyExprs)
+            keyExprs = parseKeyExprs("create_matview_join", args.getUTF8String(9).toString))
           (StructType(Seq(StructField("src_version", LongType))), Seq(InternalRow(v)))
         }
       },
@@ -369,6 +356,16 @@ private[lake] object GraftLakeProcedures {
       }
     ).map { case (k, v) => k -> (v: UnboundProcedure) }
   }
+
+  /** Parse the matview procedures' `key_exprs` argument: `name:=sql`
+    * pairs, `;`-separated.
+    */
+  private def parseKeyExprs(proc: String, s: String): Seq[(String, String)] =
+    s.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { pair =>
+      val i = pair.indexOf(":=")
+      require(i > 0, s"$proc: bad key_exprs pair '$pair' (want name:=sql)")
+      (pair.substring(0, i).trim, pair.substring(i + 2).trim)
+    }
 
   /** Parse a partition-spec string into (column, PartitionFn code):
     * `col` / `identity(col)` / `days|months|hours(col)` /

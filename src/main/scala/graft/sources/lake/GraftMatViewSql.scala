@@ -306,7 +306,7 @@ case class GraftDropMatViewCommand(nameParts: Seq[String])
           "does not name a graft-catalog table"))
     val root = cat.tableRoot(ident)
     val isMv = cat.tableExists(ident) &&
-      LakeTable.snapshot(session, root).meta.exists(_.props.contains("mv.src"))
+      LakeTable.snapshot(session, root).meta.exists(m => MatView.isView(m.props))
     if (!isMv) throw new IllegalArgumentException(
       s"graft-lake DROP MATERIALIZED VIEW: $ident is not a materialized view " +
         "(DROP TABLE drops plain tables)")

@@ -434,7 +434,7 @@ case class GraftRenameViewCommand(
   * GENERATED / IDENTITY clauses, the partition transform, engine +
   * user TBLPROPERTIES); CHECK constraints follow as `ALTER TABLE ...
   * ADD CONSTRAINT` statements (they have no CREATE clause in the
-  * supported grammar). Internal bookkeeping (mv.* definitions,
+  * supported grammar). Internal bookkeeping (view definitions,
   * identity high-water marks) is NOT emitted — re-executing the DDL
   * must give a fresh table, not a view that believes it is refreshed.
   */
@@ -457,7 +457,7 @@ case class GraftShowCreateCommand(
 
     import graft.operators.LakeTable
     val meta = LakeTable.snapshot(session, catalog.tableRoot(ident)).meta.get
-    if (meta.props.contains("mv.src")) return Seq(Row(matViewDdl(name, meta)))
+    if (graft.operators.MatView.isView(meta.props)) return Seq(Row(matViewDdl(name, meta)))
     val gens = LakeTable.generatedOf(meta.schema).toMap
     val ids = LakeTable.identityOf(meta.schema)
       .map { case (n, s, st, a) => n -> ((s, st, a)) }.toMap
@@ -490,7 +490,7 @@ case class GraftShowCreateCommand(
         Seq("bloomCols" -> meta.bloomCols.mkString(",")) else Nil) ++
       (if (meta.deleteMode != "cow") Seq("deleteMode" -> meta.deleteMode) else Nil) ++
       meta.props.toSeq.filterNot { case (k, _) =>
-        k.startsWith("mv.") || k.startsWith("identity.hw.") }.sortBy(_._1)
+        graft.operators.MatView.isInternalProp(k) || k.startsWith("identity.hw.") }.sortBy(_._1)
     val propsClause =
       if (props.isEmpty) ""
       else props.map { case (k, v) => s"${str(k)} = ${str(v)}" }
@@ -501,7 +501,7 @@ case class GraftShowCreateCommand(
   }
 
   /** A materialized view's stored definition is fully reconstructible
-    * from its `mv.*` manifest props — rendering a plain CREATE TABLE
+    * from its manifest props — rendering a plain CREATE TABLE
     * here would re-execute to a table that does not refresh.
     */
   private def matViewDdl(

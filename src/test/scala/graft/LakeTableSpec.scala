@@ -497,10 +497,12 @@ class LakeTableSpec extends SparkSpec {
     // NULL-v rows in partition 0 survived (SQL DELETE keeps NULL predicate)
     assert(got.where(col("p") === "0" && col("v").isNull).count() ===
       base.where(col("p") === "0" && col("v").isNull).count())
-    // re-issuing the delete is a no-op commit
+    // re-issuing the delete changes nothing and commits nothing
     val n1 = got.count()
-    LakeTable.delete(spark, root, col("p") === "0" && col("v") < 1000, "p")
+    val v1 = LakeTable.snapshot(spark, root).version
+    val again = LakeTable.delete(spark, root, col("p") === "0" && col("v") < 1000, "p")
     assert(LakeTable.read(spark, root).count() === n1)
+    assert(again.version === v1 && LakeTable.snapshot(spark, root).version === v1)
   }
 
   test("COW DML rewrites the files holding a changed row, not their partition") {
@@ -1220,9 +1222,11 @@ class LakeTableSpec extends SparkSpec {
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
 
     // an empty source probes NOTHING (no key can equi-match) and commits
-    // a carry-everything no-op version
+    // nothing
+    val v1 = LakeTable.snapshot(spark, root).version
     val empty = LakeTable.merge(spark, root, baseDf.where(lit(false)), Seq("k"), "p")
     assert(empty.filesProbed === 0 && empty.filesRewritten === 0 && empty.filesWritten === 0)
+    assert(empty.version === v1 && LakeTable.snapshot(spark, root).version === v1)
     assert(LakeTable.read(spark, root).count() === 300)
   }
 
