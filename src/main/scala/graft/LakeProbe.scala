@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.engine.SparkEngine
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 
 /** Manual lake-layer scale probes (not part of the driver contract).
   *
@@ -168,7 +168,7 @@ object LakeProbe {
     val (_, tBloomInit) = time(
       LakeTable.init(spark, bloomRoot, bdf, "p", bloomCols = Seq("k")))
     val snapB = LakeTable.snapshot(spark, bloomRoot)
-    val (blooms, tLoad) = time(LakeTable.loadBlooms(spark, bloomRoot, Seq("k")))
+    val (blooms, tLoad) = time(LakeStats.loadBlooms(spark, bloomRoot, Seq("k")))
     val probeKey = 777777L
     val (keptB, tPruneB) = time(
       snapB.entries.filter(LakeTable.predicateFilePruner(
@@ -179,7 +179,7 @@ object LakeProbe {
       LakeTable.read(spark, plainRoot).where(col("k") === probeKey).count())
     require(hitCnt == 1L && fullCnt == 1L, s"point lookup drifted: $hitCnt/$fullCnt")
     val sidecarBytes = {
-      val p = new org.apache.hadoop.fs.Path(bloomRoot, "index")
+      val p = LakeStats.sidecarDir(bloomRoot)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = f.listFiles(p, true)
       Iterator.continually(it).takeWhile(_.hasNext).map(_.next())

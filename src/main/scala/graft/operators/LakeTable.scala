@@ -425,7 +425,7 @@ object LakeTable {
 
   case class Snapshot(version: Long, meta: Option[TableMeta], entries: Seq[Entry])
 
-  private val PartDirCol = "__part"
+  private[graft] val PartDirCol = "__part"
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1482,428 +1482,7 @@ object LakeTable {
     val writer = arranged.write.partitionBy(PartDirCol).mode("append")
     (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer).parquet(dataDir.toString)
-    collectBatchMetadata(spark, root, batch, meta, df.columns.toSeq)
-  }
-
-  /** The write-metadata pass over an already-written batch directory —
-    * shared by [[writeBatch]] and the streaming `toTable` epoch commit
-    * (whose files are written by executor-side [[DataWriter]]s, not a
-    * DataFrame write): one listing, footer row counts, and the single
-    * fused stats/Bloom aggregate, producing the batch's manifest
-    * entries. `writtenCols` = the columns actually present in the
-    * written files (stats/bloom columns not among them record nothing —
-    * conservative).
-    */
-  private[graft] def collectBatchMetadata(
-      spark: SparkSession,
-      root: String,
-      batch: String,
-      meta: TableMeta,
-      writtenCols: Seq[String]): Seq[Entry] = {
-    val dataDir = new Path(new Path(dataRoot(root), "data"), batch)
-    // ONE listing of the just-written batch serves everything below:
-    // empty-batch detection, per-file lengths for the manifest, and the
-    // footer row-count reads. An EMPTY batch (e.g. a merge whose source
-    // has no rows) writes no part files — nothing to record, and reading
-    // the empty directory back would fail schema inference.
-    val f = fs(spark, dataDir)
-    val files: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!f.exists(dataDir)) Nil
-      else {
-        val it = f.listFiles(dataDir, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => s: org.apache.hadoop.fs.FileStatus).toSeq
-      }
-    if (files.isEmpty) return Nil
-
-    // exact per-file ROW COUNTS from the parquet footers, read driver-
-    // side — O(files) metadata I/O, zero Spark jobs, zero row scans (the
-    // Delta-numRecords idiom: counts belong to the write, not to a
-    // re-scan). They fill the manifest's count cells (metadata-only
-    // COUNT(*) downstream) and size the Bloom sidecars BEFORE the single
-    // stats pass below. Keyed by the path RELATIVE to the batch dir
-    // (`__part=<v>/<name>`), NOT the bare file name: one write task
-    // covering several partition values emits the SAME part-<task>-<uuid>
-    // name into each partition dir, so a name-only map would collapse
-    // those entries.
-    // the reads are independent metadata round-trips — run them on a
-    // bounded pool (an object-store footer read is ~50-100 ms; a
-    // thousand-file batch must not serialize that on the driver)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // Footer-EXACT stats columns: for integral, date AND string columns
-    // the parquet row-group statistics the writer just recorded ARE the
-    // file's exact min/max (strings: unsigned-lexicographic binary order
-    // == UTF8String order, untruncated at parquet-mr defaults — oversize
-    // stats are OMITTED and fall back; floats/decimals/timestamps keep
-    // the scan path: NaN ordering and rendering hazards are real there).
-    // Reading them out of the footers we ALREADY open for
-    // row counts removes the whole per-batch stats scan for the common
-    // key/date stats layout — the Delta/Iceberg "stats belong to the
-    // write" idiom, extended from counts to bounds. Rendering matches
-    // Spark's cast-to-string bit-for-bit (Long.toString / ISO local
-    // date), so manifest consumers (pruning, metadata-only MIN/MAX,
-    // partition profiles) see identical values.
-    val present = meta.statsCols.filter(writtenCols.contains)
-    val footerEligible: Seq[String] = present.filter { c =>
-      meta.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-          org.apache.spark.sql.types.DateType | org.apache.spark.sql.types.StringType => true
-        case _ => false
-      }
-    }
-    // per-file: (rowCount, per-eligible-column Option[(min,max)]) — a
-    // column whose stats any block fails to record validly falls back
-    // to the scan path for the WHOLE batch (conservative)
-    val footerRead: Map[String, (Long, Map[String, Option[(Option[String], Option[String])]])] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(16, files.size)))
-      try {
-        files.map { st =>
-          st -> pool.submit(new java.util.concurrent.Callable[
-            (Long, Map[String, Option[(Option[String], Option[String])]])] {
-            override def call(): (Long, Map[String, Option[(Option[String], Option[String])]]) = {
-              val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-              try {
-                val blocks = rdr.getFooter.getBlocks
-                val colStats = footerEligible.map { c =>
-                  c -> footerMinMax(blocks, c, meta.schema(c).dataType)
-                }.toMap
-                (rdr.getRecordCount, colStats)
-              } finally rdr.close()
-            }
-          })
-        }.map { case (st, fut) => partAndName(st.getPath.toString) -> fut.get() }.toMap
-      } finally pool.shutdown()
-    }
-    val counts: Map[String, Long] = footerRead.map { case (k, v) => k -> v._1 }
-    // covered = eligible AND every file produced a valid footer bound
-    val footerCovered: Seq[String] =
-      footerEligible.filter(c => footerRead.values.forall(_._2(c).isDefined))
-    val footerStats: Map[String, Map[String, (Option[String], Option[String])]] =
-      footerRead.map { case (k, (_, cs)) =>
-        k -> footerCovered.map(c => c -> cs(c).get).toMap
-      }
-
-    // per-file stats AND Bloom sidecars in ONE fused pass over the batch
-    // (previously two aggregates = two batch scans — the measured init
-    // premium): min/max of each stats column aggregated in the column's
-    // NATIVE type (string-min over numbers would order "10"<"9") and
-    // rendered to string for the manifest, plus a Bloom of xxhash64(col)
-    // per (file, bloom column). The grouped result is #files rows —
-    // persisted only when BOTH consumers need it (driver collect for
-    // stats, distributed sidecar write), so the batch itself is scanned
-    // exactly once. Bloom bits are sized for the batch's largest file at
-    // 1% fpp from the footer counts (smaller files just get a lower
-    // fpp); sidecars are written DISTRIBUTED under index/<batch>/ —
-    // never collected to the driver. NULLs hash to the seed constant and
-    // sit in the filter harmlessly — an equality lookup never matches
-    // NULL anyway. Readers that find no sidecar row for a file keep it
-    // (conservative), so pre-bloom batches and evolution stay correct.
-    // A stats/bloom column absent from this batch's frame (should not
-    // happen post-align, but stay conservative) records nothing for it.
-    val bloomPresent = meta.bloomCols.filter(writtenCols.contains)
-    // columns still needing the scan: stats columns the footers could
-    // not cover exactly (floats/decimals/timestamps, oversize strings)
-    val scanStatsCols = present.filterNot(footerCovered.contains)
-    // the batch's DATA schema is already known (writtenCols over the
-    // table schema) — passing it to the reads below removes one
-    // schema-inference job per scan, a fixed per-commit cost that
-    // dominates small-batch DML statements (field ids ride the fields,
-    // so id-based matching keeps working)
-    val dataSchema: Option[StructType] =
-      if (writtenCols.forall(c => meta.schema.fieldNames.contains(c)))
-        Some(StructType(writtenCols.map(c => meta.schema(c).copy(nullable = true))))
-      else None
-    def readBatch(): DataFrame =
-      dataSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(dataDir.toString)
-    // equi-width histogram columns: numeric stats columns (CBO's
-    // FilterEstimation consumes numeric histograms; string min/max
-    // stay min/max-only)
-    val histPresent = present.filter(c =>
-      meta.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .exists(_.dataType.isInstanceOf[NumericType]))
-    // bin-count aggregates for an equi-width histogram with KNOWN bounds
-    def histBinAggs(bounds: Seq[(String, Double, Double)]): Seq[Column] =
-      bounds.zipWithIndex.flatMap { case ((c, lo, hi), ci) =>
-        val w = if (hi > lo) hi - lo else 1.0
-        val bucket = least(lit(HistBins - 1), greatest(lit(0),
-          floor((col(s"`$c`").cast("double") - lit(lo)) / lit(w) * lit(HistBins)).cast("int")))
-        (0 until HistBins).map(b =>
-          sum(when(col(s"`$c`").isNotNull && bucket === b, 1L).otherwise(0L))
-            .as(s"h_${ci}_$b"))
-      }
-    // histogram rows are a handful of ~300-byte cells — write them
-    // DRIVER-SIDE with parquet-mr rather than spending a Spark job on a
-    // 2-row DataFrame write (the job was a fixed ~100 ms per DML
-    // statement); the file carries the same (rel string, col string,
-    // bits binary) schema the Spark-written Bloom rows have, so the
-    // sidecar readers keep one schema
-    val histPending = scala.collection.mutable.ArrayBuffer.empty[(String, String, Array[Byte])]
-    def flushHistRows(): Unit = if (histPending.nonEmpty) {
-      val dir = new Path(new Path(dataRoot(root), "index"), batch)
-      val fh = fs(spark, dir)
-      fh.mkdirs(dir)
-      val file = new Path(dir, s"hist-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
-      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-        "message hist { optional binary rel (UTF8); optional binary col (UTF8); optional binary bits; }")
-      val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
-      org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
-      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
-          org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
-        .withConf(conf).build()
-      try histPending.foreach { case (rel, c, bits) =>
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-        g.add("rel", rel)
-        g.add("col", c)
-        g.add("bits", org.apache.parquet.io.api.Binary.fromConstantByteArray(bits))
-        writer.write(g)
-      } finally writer.close()
-    }
-    def boundsOf(vals: Iterable[(Option[String], Option[String])]): Option[(Double, Double)] = {
-      val los = vals.flatMap(_._1.flatMap(x => scala.util.Try(x.toDouble).toOption))
-      val his = vals.flatMap(_._2.flatMap(x => scala.util.Try(x.toDouble).toOption))
-      if (los.isEmpty || his.isEmpty) None else Some((los.min, his.max))
-    }
-
-    // At most ONE metadata pass beyond the write itself: the per-file
-    // scan runs only for what the footers could not supply (string/
-    // float/decimal/timestamp stats, Bloom sidecars), and when it runs,
-    // the histogram bin counts of footer-covered columns FUSE into it
-    // (their global bounds are already known pre-scan; per-file partial
-    // bins sum exactly on the driver). Footer-covered-only batches skip
-    // the scan entirely and pay just the histogram agg.
-    val scanNeeded = scanStatsCols.nonEmpty || bloomPresent.nonEmpty
-    val histFused: Seq[(String, Double, Double)] =
-      if (!scanNeeded) Nil
-      else histPresent.filter(footerCovered.contains).flatMap { c =>
-        boundsOf(footerStats.values.map(_(c))).map { case (lo, hi) => (c, lo, hi) }
-      }
-    val scannedStats: Map[String, Map[String, (Option[String], Option[String])]] =
-      if (!scanNeeded) Map.empty
-      else {
-        val statAggs = scanStatsCols.zipWithIndex.flatMap { case (sc, i) =>
-          Seq(min(col(sc)).cast("string").as(s"mn$i"), max(col(sc)).cast("string").as(s"mx$i"))
-        }
-        val bridge = org.apache.spark.sql.GraftColumnBridge
-        val items = math.max(64L, counts.values.foldLeft(0L)(math.max))
-        val bits = graft.operators.llm.BloomGate.optimalNumBits(items, 0.01)
-        val bloomAggs = bloomPresent.zipWithIndex.map { case (c, i) =>
-          val agg = new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            bridge.expression(xxhash64(col(c))),
-            org.apache.spark.sql.catalyst.expressions.Literal(items),
-            org.apache.spark.sql.catalyst.expressions.Literal(bits))
-          bridge.column(agg.toAggregateExpression()).as(s"bf_$i")
-        }
-        val aggs = statAggs ++ bloomAggs ++ histBinAggs(histFused)
-        val perFile = readBatch()
-          .groupBy(input_file_name().as("f"))
-          .agg(aggs.head, aggs.tail: _*)
-        val collectNeeded = scanStatsCols.nonEmpty || histFused.nonEmpty
-        val bothConsumers = collectNeeded && bloomPresent.nonEmpty
-        if (bothConsumers)
-          perFile.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (bloomPresent.nonEmpty) {
-            val rel = concat(lit(s"data/$batch/"), regexp_extract(col("f"), "([^/]+/[^/]+)$", 1))
-            bloomPresent.zipWithIndex.map { case (c, i) =>
-              // keyed by the column's sidecar WRITE key — rekeyed after a
-              // type widening so stale-typed rows never match a probe
-              perFile.select(rel.as("rel"), lit(meta.bloomKeyOf(c)).as("col"), col(s"bf_$i").as("bits"))
-            }.reduce(_.unionByName(_))
-              .write.mode("overwrite")
-              .parquet(new Path(new Path(dataRoot(root), "index"), batch).toString)
-          }
-          if (!collectNeeded) Map.empty
-          else {
-            val rows = perFile
-              .select(col("f") +: (scanStatsCols.indices.flatMap(i =>
-                Seq(col(s"mn$i"), col(s"mx$i"))) ++
-                histFused.indices.flatMap(ci =>
-                  (0 until HistBins).map(b => col(s"h_${ci}_$b")))): _*)
-              .collect()
-            if (histFused.nonEmpty) {
-              val base = 1 + 2 * scanStatsCols.size
-              histPending ++= histFused.zipWithIndex.map { case ((c, lo, hi), ci) =>
-                val cnts = (0 until HistBins).map(b =>
-                  rows.map(_.getLong(base + ci * HistBins + b)).sum).toArray
-                (HistRel, c, encodeHist(lo, hi, cnts))
-              }
-            }
-            rows.map { r =>
-              partAndName(r.getString(0)) -> scanStatsCols.zipWithIndex.map { case (sc, i) =>
-                sc -> (Option(r.getString(1 + 2 * i)), Option(r.getString(2 + 2 * i)))
-              }.toMap
-            }.toMap
-          }
-        } finally if (bothConsumers) perFile.unpersist()
-      }
-    // merged per-file stats in manifest order: footer-exact first,
-    // scanned otherwise
-    val stats: Map[String, Seq[(Option[String], Option[String])]] =
-      if (present.isEmpty && bloomPresent.isEmpty) Map.empty
-      else {
-        val keys = counts.keySet ++ scannedStats.keySet
-        keys.map { k =>
-          k -> meta.statsCols.map(sc =>
-            footerStats.get(k).flatMap(_.get(sc))
-              .orElse(scannedStats.get(k).flatMap(_.get(sc)))
-              .getOrElse((None: Option[String], None: Option[String])))
-        }.toMap
-      }
-
-    // per-batch equi-width histogram for the NUMERIC stats columns not
-    // already fused above (the CBO skew signal beyond min/max): bounds
-    // from the per-file min/max, bin counts from one narrow columnar
-    // scan (map-side partial sums, B cells per column back). Stored as
-    // `__hist` rows in the batch's index sidecar dataset, so the
-    // histogram lives and dies with its batch and [[tableHistograms]]
-    // folds live batches at estimate time.
-    val histRemaining = histPresent.filterNot(c => histFused.exists(_._1 == c))
-    if (histRemaining.nonEmpty && stats.nonEmpty) {
-      val bounds: Seq[(String, Double, Double)] = histRemaining.flatMap { c =>
-        val i = meta.statsCols.indexWhere(_.equalsIgnoreCase(c))
-        boundsOf(stats.values.map(_(i))).map { case (lo, hi) => (c, lo, hi) }
-      }
-      if (bounds.nonEmpty) {
-        // single-job bins: project each column's bucket index and fold
-        // per-partition count arrays in one mapPartitions pass (no
-        // shuffle, no second AQE stage — a global agg here costs two
-        // scheduler round-trips for a metadata-sized result). This is a
-        // metadata pass, not a query path: the closure folds B*cols
-        // longs per partition.
-        val bucketCols = bounds.zipWithIndex.map { case ((c, lo, hi), ci) =>
-          val w = if (hi > lo) hi - lo else 1.0
-          least(lit(HistBins - 1), greatest(lit(0),
-            floor((col(s"`$c`").cast("double") - lit(lo)) / lit(w) * lit(HistBins)).cast("int")))
-            .as(s"b_$ci") // null exactly when the column is null
-        }
-        val nb = bounds.size
-        val bins = HistBins
-        val folded = readBatch().select(bucketCols: _*).queryExecution.toRdd
-          .mapPartitions { it =>
-            val cnts = Array.fill(nb * bins)(0L)
-            it.foreach { r =>
-              var ci = 0
-              while (ci < nb) {
-                if (!r.isNullAt(ci)) cnts(ci * bins + r.getInt(ci)) += 1
-                ci += 1
-              }
-            }
-            Iterator.single(cnts)
-          }.fold(Array.fill(nb * bins)(0L)) { (a, b) =>
-            var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-          }
-        histPending ++= bounds.zipWithIndex.map { case ((c, lo, hi), ci) =>
-          (HistRel, c, encodeHist(lo, hi, folded.slice(ci * bins, (ci + 1) * bins)))
-        }
-      }
-    }
-    flushHistRows()
-
-    files.map { s =>
-      val p = s.getPath
-      val pv = p.getParent.getName match {
-        case d if d.startsWith(s"$PartDirCol=") => d.stripPrefix(s"$PartDirCol=")
-        case d => sys.error(s"unexpected data layout at $p (dir $d)")
-      }
-      val key = s"$PartDirCol=$pv/${p.getName}"
-      val bounds = stats.getOrElse(key, meta.statsCols.map(_ => (None, None)))
-      // decode with Hive path unescaping (NOT URLDecoder: '+' is
-      // literal); a null partition's directory IS the sentinel already
-      val decoded = if (pv == NullPartition) NullPartition else unesc(pv)
-      Entry(decoded, s"data/$batch/$PartDirCol=$pv/${p.getName}", bounds,
-        counts.get(key), bytes = Some(s.getLen), spec = meta.currentSpec)
-    }
-  }
-
-  /** Exact per-file min/max for an integral/date/string stats column
-    * from the parquet row-group statistics of a just-written file.
-    * Returns None when any block's statistics cannot be trusted (stats
-    * object missing, unexpected physical type, or neither values nor a
-    * provable all-null count) — the caller then falls back to the scan
-    * path for the whole batch, conservatively. Rendering matches
-    * Spark's cast-to-string bit-for-bit: integral via Long.toString,
-    * DateType via ISO local date (both proleptic Gregorian; dates
-    * outside years 1–9999 fall back to the scan rather than risk a
-    * formatting divergence), strings via UTF-8 decode of the binary
-    * stats (same unsigned byte order and same decode as UTF8String).
-    */
-  private def footerMinMax(
-      blocks: java.util.List[org.apache.parquet.hadoop.metadata.BlockMetaData],
-      column: String,
-      dt: org.apache.spark.sql.types.DataType): Option[(Option[String], Option[String])] = {
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    // string accumulation: parquet BINARY/UTF8 stats order is UNSIGNED
-    // lexicographic — exactly UTF8String.compareTo, i.e. what a Spark
-    // min/max over the column computes. These are footers WE just wrote
-    // (current parquet-mr, statistics truncation at its untruncated
-    // default; stats over 4 KB are OMITTED, never truncated — they land
-    // in the None fallback below), so a present binary min/max is the
-    // exact value. Rendering is the UTF-8 decode both paths share.
-    var smn: Array[Byte] = null
-    var smx: Array[Byte] = null
-    var any = false
-    val it = blocks.iterator()
-    while (it.hasNext) {
-      val b = it.next()
-      var cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData = null
-      val cit = b.getColumns.iterator()
-      while (cc == null && cit.hasNext) {
-        val c = cit.next()
-        if (c.getPath.toDotString == column) cc = c
-      }
-      if (cc == null) return None
-      val st = cc.getStatistics
-      if (st == null) return None
-      if (st.hasNonNullValue) {
-        (st.genericGetMin, st.genericGetMax) match {
-          case (a: java.lang.Integer, z: java.lang.Integer) =>
-            if (a.longValue() < mn) mn = a.longValue()
-            if (z.longValue() > mx) mx = z.longValue()
-          case (a: java.lang.Long, z: java.lang.Long) =>
-            if (a.longValue() < mn) mn = a.longValue()
-            if (z.longValue() > mx) mx = z.longValue()
-          case (a: org.apache.parquet.io.api.Binary, z: org.apache.parquet.io.api.Binary)
-              if dt == org.apache.spark.sql.types.StringType =>
-            val ab = a.getBytes
-            val zb = z.getBytes
-            if (smn == null || java.util.Arrays.compareUnsigned(ab, smn) < 0) smn = ab
-            if (smx == null || java.util.Arrays.compareUnsigned(zb, smx) > 0) smx = zb
-          case _ => return None
-        }
-        any = true
-      } else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount)) {
-        // no values recorded and the block is not provably all-null
-        return None
-      }
-    }
-    if (!any) return Some((None, None)) // all rows null: exactly what a scan records
-    dt match {
-      case org.apache.spark.sql.types.DateType =>
-        val (dLo, dHi) = (java.time.LocalDate.of(1, 1, 1).toEpochDay,
-          java.time.LocalDate.of(9999, 12, 31).toEpochDay)
-        if (mn < dLo || mx > dHi) None
-        else Some((Some(java.time.LocalDate.ofEpochDay(mn).toString),
-          Some(java.time.LocalDate.ofEpochDay(mx).toString)))
-      case org.apache.spark.sql.types.StringType =>
-        if (smn == null || smx == null) None
-        else Some((Some(new String(smn, java.nio.charset.StandardCharsets.UTF_8)),
-          Some(new String(smx, java.nio.charset.StandardCharsets.UTF_8))))
-      case _ => Some((Some(mn.toString), Some(mx.toString)))
-    }
-  }
-
-  /** Last two path components of a file URI: `__part=<v>/<fileName>` —
-    * the stats-map key that stays unique when one task writes the same
-    * file name into several partition dirs.
-    */
-  private def partAndName(uri: String): String = {
-    val parts = uri.split('/')
-    parts.takeRight(2).mkString("/")
+    LakeStats.collectBatchMetadata(spark, root, batch, meta, df.columns.toSeq)
   }
 
   /** Create the table (version 1) from `df`. Fails if it already exists.
@@ -1946,20 +1525,6 @@ object LakeTable {
       throw new CommitConflict(s"LakeTable.init: concurrent commit at $root")
   }
 
-  /** Metadata-only ALTER: commit a new version whose schema gains
-    * `addColumns` (appended; must be nullable — files written before the
-    * change legitimately read NULL for them), loses `dropColumns`
-    * (column-mapped tables only; the field id is retired via the
-    * [[TableMeta.maxFieldId]] high-water mark so old data can never leak
-    * into a later same-named column), renames via `renameColumns`,
-    * and/or replaces the stats/bloom column sets. Data files carry
-    * verbatim — this is one manifest commit, zero data I/O. Existing entries' stats cells are
-    * REMAPPED to the new statsCols order (a column kept keeps its
-    * recorded bounds; a column added records none, so old files are
-    * conservatively never pruned on it — stats/blooms take effect for
-    * batches written AFTER the change, exactly Delta's add-a-bloom
-    * semantics). Returns the committed version.
-    */
   /** Is `to` a SAFE (lossless, order-preserving) widening of `from`?
     * The Iceberg type-promotion set plus the int-family → double cases
     * Spark 4's parquet readers promote natively: every old file keeps
@@ -1981,30 +1546,20 @@ object LakeTable {
     }
   }
 
-  /** Re-render a manifest stat cell exactly under a widened type. Only
-    * float→double changes the text: a float's shortest-round-trip
-    * rendering re-read as a DOUBLE is a different number (the decimal
-    * lies inside the float's rounding interval, not on the value), so
-    * an unrewritten max could sit BELOW a double-typed query bound the
-    * file actually satisfies — a wrong prune. parseFloat→toDouble is
-    * exact, and pruning then compares double renderings to double
-    * bounds (order-exact, as before the widening). Integral and
-    * decimal widenings change only the parse type, never the text.
+  /** Metadata-only ALTER: commit a new version whose schema gains
+    * `addColumns` (appended; must be nullable — files written before the
+    * change legitimately read NULL for them), loses `dropColumns`
+    * (column-mapped tables only; the field id is retired via the
+    * [[TableMeta.maxFieldId]] high-water mark so old data can never leak
+    * into a later same-named column), renames via `renameColumns`,
+    * and/or replaces the stats/bloom column sets. Data files carry
+    * verbatim — this is one manifest commit, zero data I/O. Existing entries' stats cells are
+    * REMAPPED to the new statsCols order (a column kept keeps its
+    * recorded bounds; a column added records none, so old files are
+    * conservatively never pruned on it — stats/blooms take effect for
+    * batches written AFTER the change, exactly Delta's add-a-bloom
+    * semantics). Returns the committed version.
     */
-  private[graft] def rewidenStat(
-      s: String,
-      from: org.apache.spark.sql.types.DataType,
-      to: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    (from, to) match {
-      case (FloatType, DoubleType) =>
-        // NaN / Infinity / -Infinity parse and re-render to themselves
-        try java.lang.Double.toString(java.lang.Float.parseFloat(s).toDouble)
-        catch { case _: NumberFormatException => s }
-      case _ => s
-    }
-  }
-
   def alterTable(
       spark: SparkSession,
       root: String,
@@ -2218,12 +1773,13 @@ object LakeTable {
         if (i >= 0) {
           val cell = e.stats.lift(i).getOrElse((None: Option[String], None: Option[String]))
           // a widened stats column re-renders its cells exactly under
-          // the new type in the SAME commit (see rewidenStat: a float
+          // the new type in the SAME commit (see LakeStats.rewiden: a float
           // rendering re-read as a double mis-orders against double
           // bounds — a wrong prune)
           widenRenamed.get(c).fold(cell) { to =>
             val from = meta.schema(meta.statsCols(i)).dataType
-            (cell._1.map(rewidenStat(_, from, to)), cell._2.map(rewidenStat(_, from, to)))
+            (cell._1.map(LakeStats.rewiden(_, from, to)),
+              cell._2.map(LakeStats.rewiden(_, from, to)))
           }
         } else (None: Option[String], None: Option[String])
       })
@@ -2258,23 +1814,6 @@ object LakeTable {
       meta.copy(partitionCol = partitionCol, partitionFn = partitionFn,
         priorSpecs = meta.priorSpecs :+ ((meta.partitionCol, meta.partitionFn))),
       s0.entries)
-  }
-
-  /** Metadata-only property commit (optimistic, retried): merges `kv`
-    * into [[TableMeta.props]] without touching data. Used by derived-
-    * table maintenance when a refresh window carries no net change —
-    * the applied-version watermark still advances, in one commit.
-    */
-  def setProps(
-      spark: SparkSession,
-      root: String,
-      kv: Map[String, String],
-      maxRetries: Int = 3): Long = retryOnConflict(maxRetries) {
-    val s0 = snapshot(spark, root)
-    require(s0.version > 0, s"LakeTable.setProps: no committed snapshot at $root")
-    val meta = s0.meta.get
-    commitOrConflict(spark, root, "setProps", s0.version + 1,
-      meta.copy(props = meta.props ++ kv), s0.entries)
   }
 
   // ---- read path -----------------------------------------------------
@@ -2533,43 +2072,6 @@ object LakeTable {
 
   // ---- data skipping -------------------------------------------------
 
-  private[graft] def cmpStat(dt: org.apache.spark.sql.types.DataType, a: String, b: String): Int =
-    dt match {
-      case _: NumericType =>
-        // integral fast path: pruning runs per manifest entry on the
-        // planning path (two comparisons x a million files adds seconds
-        // as BigDecimal; as Long.parseLong it is noise); any non-integral
-        // rendering falls back to exact decimal comparison
-        try java.lang.Long.compare(a.toLong, b.toLong)
-        catch {
-          case _: NumberFormatException =>
-            try BigDecimal(a).compare(BigDecimal(b))
-            catch {
-              case _: NumberFormatException =>
-                // non-finite float/double renderings ("NaN", "Infinity",
-                // "-Infinity") are valid stats values BigDecimal rejects:
-                // compare as doubles (Double.compare orders NaN greatest,
-                // matching Spark's sort order); a pair that still fails to
-                // parse claims equality, which every caller treats
-                // conservatively (the file stays in)
-                try java.lang.Double.compare(
-                  java.lang.Double.parseDouble(a), java.lang.Double.parseDouble(b))
-                catch { case _: NumberFormatException => 0 }
-            }
-        }
-      // date/timestamp renderings order lexically only inside years
-      // 0000-9999 ("+10000-01-01" and "-0001-01-01" sort below "0001"):
-      // outside them claim equality, which keeps the file in
-      case DateType | TimestampType | TimestampNTZType
-          if !(fourDigitYear(a) && fourDigitYear(b)) => 0
-      // date/timestamp/string cast-to-string forms all order lexically
-      case _ => a.compareTo(b)
-    }
-
-  /** A date/timestamp rendering in the lexically ordered `yyyy-` form. */
-  private[graft] def fourDigitYear(s: String): Boolean =
-    s.length > 4 && s.charAt(4) == '-' && (0 until 4).forall(i => Character.isDigit(s.charAt(i)))
-
   /** Largest distinct-key-tuple count a merge batch may have and still
     * probe the Bloom sidecars with `k IN (…)` (the keys are collected to
     * the driver; a wider batch falls back to min/max bounds alone).
@@ -2683,169 +2185,6 @@ object LakeTable {
 
   // ---- Bloom point-lookup skipping -----------------------------------
 
-  /** xxhash64 (seed 42, the `xxhash64()` function's) of an INTERNAL
-    * (catalyst) value at `dt` — the exact hash the write-side
-    * BloomFilterAggregate inserted, so a probe compares like for like.
-    */
-  private[graft] def bloomHashInternal(dt: org.apache.spark.sql.types.DataType, v: Any): Long =
-    new org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(v, dt))).eval(null)
-      .asInstanceOf[Long]
-
-  /** The per-file Bloom filters recorded for `column`: rel path → filter.
-    * One parquet read over the batch sidecars (`index/<batch>/`),
-    * column-filtered; a table without sidecars (or written before blooms
-    * were configured) yields an empty map — every file then reads
-    * (conservative). Consult AFTER partition/stats pruning: the loaded
-    * set is then bounded by the already-narrowed candidate files.
-    */
-  private[graft] def loadBlooms(
-      spark: SparkSession,
-      root: String,
-      names: Seq[String]): Map[String, org.apache.spark.util.sketch.BloomFilter] = {
-    val idx = new Path(dataRoot(root), "index")
-    val f = fs(spark, idx)
-    if (!f.exists(idx)) Map.empty
-    else {
-      val batches = f.listStatus(idx).filter(_.isDirectory).map(_.getPath.toString).toSeq
-      if (batches.isEmpty) Map.empty
-      else
-        spark.read.parquet(batches: _*)
-          // histogram rows share the sidecar dataset under rel __hist —
-          // their bits are NOT Bloom bytes, keep them out of the probe
-          .where(col("rel") =!= HistRel && col("col").isin(names.map(x => x: Any): _*))
-          .select("rel", "bits")
-          .collect()
-          .map { r =>
-            r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          }.toMap
-    }
-  }
-
-  // ---- CBO histograms -------------------------------------------------
-
-  /** Sentinel `rel` for histogram rows inside a batch's index sidecar
-    * dataset (same (rel, col, bits) schema as the Bloom rows, so one
-    * dataset serves both; the bits cell is [[encodeHist]] bytes).
-    */
-  private[graft] val HistRel = "__hist"
-
-  /** Equi-width bins per batch histogram — enough resolution for CBO
-    * selectivity (the fold keeps the same grid), tiny enough that a
-    * histogram row is ~300 bytes.
-    */
-  private[graft] val HistBins = 32
-
-  private[graft] def encodeHist(lo: Double, hi: Double, counts: Array[Long]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeDouble(lo); out.writeDouble(hi); out.writeInt(counts.length)
-    counts.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  private[graft] def decodeHist(bytes: Array[Byte]): (Double, Double, Array[Long]) = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val lo = in.readDouble(); val hi = in.readDouble()
-    (lo, hi, Array.fill(in.readInt())(in.readLong()))
-  }
-
-  // fold cache: the sidecar read is a (tiny) Spark job at PLANNING time,
-  // so one live-batch-set's fold is computed once, not per query
-  private val histCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Map[String, (Double, Double, Array[Double])]](
-        16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Map[String, (Double, Double, Array[Double])]])
-            : Boolean = size() > 64
-      })
-
-  /** Fold the LIVE batches' write-time histograms into one table-level
-    * equi-width histogram per column (CBO's skew signal beyond min/max):
-    * each batch's counts redistribute proportionally onto the merged
-    * [lo, hi] grid, scaled by the batch's LIVE fraction (COW deletes
-    * drop whole files out of `entries`; the scale keeps the estimate
-    * honest without re-scanning anything). Returns None for a column
-    * unless EVERY live row-carrying batch recorded a histogram for it —
-    * a partial fold would misstate the distribution, and "no histogram"
-    * degrades to min/max estimation, never to a wrong answer.
-    */
-  private[graft] def tableHistograms(
-      spark: SparkSession,
-      root: String,
-      entries: Seq[Entry],
-      columns: Seq[String]): Map[String, (Double, Double, Array[Double])] = {
-    if (columns.isEmpty || entries.isEmpty) return Map.empty
-    val liveByBatch: Map[String, Long] = entries
-      .groupBy(_.rel.split('/')(1))
-      .map { case (b, es) =>
-        b -> (if (es.exists(_.rows.isEmpty)) -1L else es.flatMap(_.liveRows).sum)
-      }
-    // a batch with unknown row counts cannot be liveness-scaled
-    if (liveByBatch.valuesIterator.contains(-1L)) return Map.empty
-    val key = root + "\n" + liveByBatch.toSeq.sorted.mkString(",") + "\n" +
-      columns.sorted.mkString(",")
-    val hit = histCache.get(key)
-    if (hit != null) return hit
-    val idx = new Path(dataRoot(root), "index")
-    val f = fs(spark, idx)
-    val computed: Map[String, (Double, Double, Array[Double])] =
-      if (!f.exists(idx)) Map.empty
-      else {
-        val dirs = f.listStatus(idx).filter(_.isDirectory)
-          .filter(s => liveByBatch.contains(s.getPath.getName))
-          .map(_.getPath.toString).toSeq
-        // per (batch, col) histogram rows of the live batches
-        val rows: Seq[(String, String, Array[Byte])] =
-          if (dirs.isEmpty) Nil
-          else spark.read.parquet(dirs: _*)
-            .where(col("rel") === HistRel && col("col").isin(columns.map(x => x: Any): _*))
-            .select(input_file_name().as("f"), col("col"), col("bits"))
-            .collect().toSeq
-            .map(r => (r.getString(0).split('/').dropRight(1).last, r.getString(1),
-              r.getAs[Array[Byte]](2)))
-        columns.flatMap { c =>
-          val perBatch = rows.filter(_._2.equalsIgnoreCase(c))
-            .map(r => r._1 -> decodeHist(r._3)).toMap
-          val needed = liveByBatch.filter(_._2 > 0).keySet
-          if (needed.isEmpty || !needed.subsetOf(perBatch.keySet)) None
-          else {
-            val hs = needed.toSeq.map(b => (perBatch(b), liveByBatch(b)))
-            val lo = hs.map(_._1._1).min
-            val hi = hs.map(_._1._2).max
-            if (!(hi > lo)) None
-            else {
-              val out = Array.fill(HistBins)(0.0)
-              val w = (hi - lo) / HistBins
-              hs.foreach { case ((blo, bhi, counts), live) =>
-                val total = counts.sum.toDouble
-                val scale = if (total <= 0) 0.0 else math.min(1.0, live / total)
-                val bw = (if (bhi > blo) bhi - blo else w) / counts.length
-                counts.zipWithIndex.foreach { case (n, i) =>
-                  if (n > 0) {
-                    // spread the source cell's mass over the grid cells
-                    // it overlaps (proportional redistribution)
-                    val cl = blo + i * bw
-                    val ch = cl + bw
-                    var g = math.max(0, math.min(HistBins - 1, ((cl - lo) / w).toInt))
-                    val gEnd = math.max(0, math.min(HistBins - 1, (((ch - lo) / w) - 1e-12).toInt))
-                    val span = gEnd - g + 1
-                    while (g <= gEnd) { out(g) += n * scale / span; g += 1 }
-                  }
-                }
-              }
-              Some(c -> ((lo, hi, out)))
-            }
-          }
-        }.toMap
-      }
-    histCache.put(key, computed)
-    computed
-  }
-
   /** `read(...).where(column === value)` with per-file Bloom skipping —
     * the POINT-lookup complement of [[readRange]]: min/max stats cannot
     * prune an equality probe on an unclustered high-cardinality column
@@ -2909,7 +2248,7 @@ object LakeTable {
   // ---- MERGE ---------------------------------------------------------
 
   /** Pad/reorder `df` to `schema` (by name; missing columns → NULL). */
-  private def align(df: DataFrame, schema: StructType): DataFrame =
+  private[graft] def align(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.map { f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
@@ -2989,7 +2328,7 @@ object LakeTable {
     val s0 = snapshot(spark, root)
     require(s0.version > 0, s"LakeTable.appendStreamEpoch: no committed snapshot at $root")
     if (s0.meta.get.txns.get(appId).exists(_ >= epochId)) return // replayed epoch
-    val entries = collectBatchMetadata(spark, root, batch, s0.meta.get,
+    val entries = LakeStats.collectBatchMetadata(spark, root, batch, s0.meta.get,
       s0.meta.get.schema.fieldNames.toSeq)
     // executor-written files bypass writeBatch — enforce CHECK
     // constraints on the landed epoch BEFORE it becomes visible (a
@@ -3717,6 +3056,28 @@ object LakeTable {
       nullSafeKeys: Boolean = false,
       maxRetries: Int = 3,
       preCommit: () => Unit = () => ()): MergeStats =
+    mergeClausesChecked(spark, root, source, keyCols, matched, notMatched, notMatchedBySource,
+      partitionCol, metaUpdate, nullSafeKeys, maxRetries, preCommit, _ => ())
+
+  /** [[mergeClauses]] that runs `sourceCheck` (SQL MERGE's cardinality
+    * check) on the persisted source before anything is written — after
+    * the key fold, whose job builds the source's cache, so the check
+    * reads the cache instead of building it in a job of its own.
+    */
+  private[graft] def mergeClausesChecked(
+      spark: SparkSession,
+      root: String,
+      source: DataFrame,
+      keyCols: Seq[String],
+      matched: Seq[MergeBranch],
+      notMatched: Seq[MergeBranch],
+      notMatchedBySource: Seq[MergeBranch],
+      partitionCol: String,
+      metaUpdate: TableMeta => TableMeta,
+      nullSafeKeys: Boolean,
+      maxRetries: Int,
+      preCommit: () => Unit,
+      sourceCheck: DataFrame => Unit): MergeStats =
     retryOnConflict(maxRetries) {
       val (s0, meta0) = dmlSnapshot(spark, root, "mergeClauses", partitionCol)
       val meta = metaUpdate(meta0)
@@ -3728,7 +3089,7 @@ object LakeTable {
       // update()/append(), enforced statically on the clause shapes
       requireMergeIdentityGates(meta, matched ++ notMatchedBySource, notMatched, "mergeClauses")
       landMerge(spark, root, "mergeClauses", s0, meta, source, keyCols,
-        matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit)
+        matched, notMatched, notMatchedBySource, nullSafeKeys, preCommit, sourceCheck)
     }
 
   /** The fates of a clause merge ([[merge]] and [[mergeClauses]]) and
@@ -3746,7 +3107,8 @@ object LakeTable {
       notMatched: Seq[MergeBranch],
       notMatchedBySource: Seq[MergeBranch],
       nullSafeKeys: Boolean,
-      preCommit: () => Unit): MergeStats = {
+      preCommit: () => Unit,
+      sourceCheck: DataFrame => Unit = _ => ()): MergeStats = {
     // the source feeds the key fold, the probe, the touched-file probe
     // and the fate join — for an expensive source (a matview refresh's
     // signed-delta aggregate) each evaluation would recompute it. Persist
@@ -3772,6 +3134,7 @@ object LakeTable {
           if (nullSafeKeys && keyHasNull) (_: Entry) => true
           else keyProbePruner(spark, root, meta, srcKeys, bounds)
         }
+      sourceCheck(src)
       val srcCols = src.columns.filter(_.startsWith("__s_")).toSeq
       def rows(targetRows: Option[DataFrame]): Option[DataFrame] = Some(targetRows match {
         case Some(tdf) =>
@@ -4102,15 +3465,26 @@ object LakeTable {
     val (metaTo, _) = readManifest(spark, root, to)
     val outSchema = metaTo.schema
     (fromVersion + 1 to to).map { v =>
-      val feed = tableChanges(spark, root, v - 1, v, keyCols)
-      val dataAligned = outSchema.map { f =>
-        if (feed.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }
-      feed.select(dataAligned :+ col("_change_type"): _*)
+      align(tableChanges(spark, root, v - 1, v, keyCols), outSchema.add("_change_type", StringType))
         .withColumn("_commit_version", lit(v))
     }.reduce(_.unionByName(_))
   }
+
+  /** The `(from, to]` change feed: the snapshot at `to` as `insert` rows
+    * stamped `_commit_version = to` when `from <= 0` (a consumer's
+    * bootstrap), else the [[changesSince]] walk.
+    */
+  private[graft] def changeSlice(
+      spark: SparkSession,
+      root: String,
+      from: Long,
+      to: Long,
+      keyCols: Seq[String]): DataFrame =
+    if (from <= 0)
+      readVersion(spark, root, to)
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", lit(to))
+    else changesSince(spark, root, from, to, keyCols)
 
   /** Checkpointed incremental CDC consumption — the scheduled-job analog
     * of a streaming change feed (the same drain-and-stop shape as
@@ -4172,13 +3546,7 @@ object LakeTable {
       case None => Some((0L, s0.version))
     }
     window.foreach { case (from, to) =>
-      val feed =
-        if (from == 0L)
-          readVersion(spark, root, to)
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(to))
-        else changesSince(spark, root, from, to, keyCols)
-      f(feed)
+      f(changeSlice(spark, root, from, to, keyCols))
       // commit the offset only after f returned: crash inside f ->
       // replay. The new offset lands under a VERSIONED name before any
       // old one is touched — there is no window in which the checkpoint
@@ -4607,7 +3975,7 @@ object LakeTable {
     expiredEntries.map(_.rel).collect {
       case r if r.startsWith("data/") => r.split('/')(1)
     }.distinct.filterNot(retainedBatches.contains).foreach { b =>
-      val d = new Path(new Path(dataRoot(root), "index"), b)
+      val d = LakeStats.sidecarDir(root, b)
       if (df.exists(d)) {
         val inner = df.listFiles(d, true)
         val n = Iterator.continually(inner).takeWhile(_.hasNext).map(_.next())
@@ -4702,7 +4070,7 @@ object LakeTable {
     val liveBatches = live.collect {
       case rel if rel.startsWith("data/") => rel.split('/')(1)
     }
-    val idxDir = new Path(dataRoot(root), "index")
+    val idxDir = LakeStats.sidecarDir(root)
     if (f.exists(idxDir)) {
       f.listStatus(idxDir).foreach { s =>
         if (s.isDirectory && s.getModificationTime < cutoff &&

@@ -426,11 +426,13 @@ object MatView {
           s"past ${v.legs.map(_.version).mkString("/")} concurrently)")
       m.copy(props = m.props ++ v1.props)
     }
-    val source =
-      if (v.deltaOnly) deltaSource(changes, v.keys, v.aggs)
-      else dirtySource(spark, v1, heads.head, changes)
+    // the dirty keys feed the fact read's key fold and the merge source:
+    // persisted so the delta terms evaluate once
+    val dirty =
+      if (v.deltaOnly) None
+      else Some(changes.select(v.keys.map(col): _*).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val stored = storedCols(v.aggs)
-    inheritWidenings(spark, mvRoot, meta, v.keys ++ stored, source)
 
     // matched groups: dead (post-refresh cnt NULL or <= 0) delete,
     // live update; unseen-but-live groups insert. The __s_cnt guard on
@@ -444,11 +446,16 @@ object MatView {
         (v.keys.map(k => k -> col(s"__s_$k")) ++
           stored.map(c => c -> insertValue(v.deltaOnly, c))).toMap)))
     try {
-      // nullSafeKeys: GROUP BY treats NULL as a real group — the view
-      // merge must match it, or every refresh re-inserts the NULL group
-      LakeTable.mergeClauses(
-        spark, mvRoot, source, v.keys, matched, notMatched, Nil,
-        partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
+      try {
+        val source = dirty.fold(deltaSource(changes, v.keys, v.aggs))(
+          dirtySource(spark, v1, heads.head, _))
+        inheritWidenings(spark, mvRoot, meta, v.keys ++ stored, source)
+        // nullSafeKeys: GROUP BY treats NULL as a real group — the view
+        // merge must match it, or every refresh re-inserts the NULL group
+        LakeTable.mergeClauses(
+          spark, mvRoot, source, v.keys, matched, notMatched, Nil,
+          partitionCol = meta.partitionCol, metaUpdate = stamp, nullSafeKeys = true)
+      } finally dirty.foreach(_.unpersist())
       v1.fact.version
     } catch {
       case _: StaleRefresh =>
@@ -509,8 +516,8 @@ object MatView {
         g.columns.filterNot(keys.contains).toSeq.map(c => col(c).as(s"__s_$c")): _*)
   }
 
-  /** Dirty-group source: the DISTINCT touched keys of the delta terms,
-    * re-aggregated from the sources AT THE PINNED heads (`v` carries the
+  /** Dirty-group source: `dirty`, the DISTINCT touched keys of the delta
+    * terms, re-aggregated from the sources AT THE PINNED heads (`v` carries the
     * head watermarks; groups the window killed come back with NULL
     * aggregates → DELETE). One rescan for both view shapes: the fact read
     * is entry-pruned (stats/Bloom) by the dirty PHYSICAL fact-side keys,
@@ -524,9 +531,8 @@ object MatView {
       spark: SparkSession,
       v: ViewDef,
       factHead: LakeTable.Snapshot,
-      changes: DataFrame): DataFrame = {
+      dirty: DataFrame): DataFrame = {
     val keys = v.keys
-    val dirty = changes.select(keys.map(col): _*).distinct()
     def keyEq(l: String, r: String): Column =
       keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
     val dim1 = v.dim.map(j => read(spark, j.leg))

@@ -1,8 +1,5 @@
 package graft.operators
 
-import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
-import java.time.format.DateTimeFormatter
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.functions._
@@ -22,7 +19,9 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, Sh
   * [[column]] (the write path's Catalyst expression), [[apply]] (the
   * planner/pruner evaluating a literal, and the streaming writer
   * deriving a row's directory), and the manifest's recorded partition
-  * strings. Temporal renders are fixed-width UTC formats, so partition-
+  * strings. Both faces render through [[LakeStats]] in its zone (UTC,
+  * whatever the session's): identity is the codec's cell, and temporal
+  * transforms are one fixed-width `date_format` expression, so partition-
   * space STRING order equals time order and a time-range predicate maps
   * to one contiguous partition-string range. NULL source → NULL value
   * (the writer's null-partition sentinel takes over), including for
@@ -32,10 +31,6 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, Sh
 private[graft] object PartitionFn {
 
   val Identity = "identity"
-
-  private val DayFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd")
-  private val MonthFmt = DateTimeFormatter.ofPattern("yyyy-MM")
-  private val HourFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd-HH")
 
   def parse(fn: String): (String, Int) = fn.split(":", 2) match {
     case Array(n) => (n, 0)
@@ -61,70 +56,47 @@ private[graft] object PartitionFn {
     * (NULL iff the source is NULL).
     */
   def column(fn: String, c: Column, dt: DataType): Column = parse(fn) match {
-    case (Identity, _) => c.cast("string")
-    case ("days", _) => date_format(c, "yyyy-MM-dd")
-    case ("months", _) => date_format(c, "yyyy-MM")
-    case ("hours", _) => date_format(c, "yyyy-MM-dd-HH")
+    case (Identity, _) => LakeStats.encodeColumn(c)
+    case ("days", _) => LakeStats.formatColumn(c, dt, "yyyy-MM-dd")
+    case ("months", _) => LakeStats.formatColumn(c, dt, "yyyy-MM")
+    case ("hours", _) => LakeStats.formatColumn(c, dt, "yyyy-MM-dd-HH")
     case ("bucket", n) =>
-      when(c.isNotNull, pmod(hash(c), lit(n)).cast("string"))
+      when(c.isNotNull, LakeStats.encodeColumn(pmod(hash(c), lit(n))))
     case ("truncate", n) =>
       if (dt == StringType) substring(c, 1, n)
-      else (c - pmod(c, lit(n))).cast("string")
+      else LakeStats.encodeColumn(c - pmod(c, lit(n)))
   }
 
   /** The planner/row face: fn over a catalyst-internal value (DateType
     * days-since-epoch Int, TimestampType epoch micros Long, StringType
     * UTF8String). Must equal what [[column]] writes. null → null.
     */
-  def apply(fn: String, dt: DataType, v: Any): String = {
-    if (v == null) return null
-    parse(fn) match {
-      case (Identity, _) => renderIdentity(dt, v)
-      case ("days", _) => localDateTime(dt, v).toLocalDate.format(DayFmt)
-      case ("months", _) => localDateTime(dt, v).toLocalDate.format(MonthFmt)
-      case ("hours", _) => localDateTime(dt, v).format(HourFmt)
-      case ("bucket", n) =>
-        val h = new Murmur3Hash(Seq(Literal.create(v, dt))).eval(null).asInstanceOf[Int]
-        (((h % n) + n) % n).toString
-      case ("truncate", n) =>
-        dt match {
-          case StringType =>
-            // Spark's substring() counts CODE POINTS, not UTF-16 units —
-            // supplementary-plane chars (surrogate pairs) must not be
-            // split or double-counted, or this face disagrees with the
-            // write path's substring(c, 1, n) and pruning goes unsound
-            val s = v.toString
-            if (s.codePointCount(0, s.length) <= n) s
-            else s.substring(0, s.offsetByCodePoints(0, n))
-          case _ =>
-            val l = v.asInstanceOf[Number].longValue()
-            (l - (((l % n) + n) % n)).toString
-        }
-    }
-  }
+  def apply(fn: String, dt: DataType, v: Any): String =
+    if (v == null) null else renderer(fn, dt)(v)
 
-  // identity must render exactly like the write path's cast-to-string
-  // (dates/timestamps as calendar strings, not their internal integers).
-  // Delegating to Cast itself — with the engine's pinned UTC session
-  // zone — makes three-face parity hold by construction: timestamps
-  // render "2024-01-01 00:00:00", not Instant's ISO "…T…Z" form.
-  private def renderIdentity(dt: DataType, v: Any): String = {
-    val r = org.apache.spark.sql.catalyst.expressions
-      .Cast(Literal.create(v, dt), StringType, Some("UTC")).eval(null)
-    if (r == null) null else r.toString
-  }
-
-  private def localDateTime(dt: DataType, v: Any): LocalDateTime = dt match {
-    case DateType =>
-      LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).atStartOfDay()
-    case TimestampType =>
-      val micros = v.asInstanceOf[Long]
-      val secs = Math.floorDiv(micros, 1000000L)
-      val nanos = Math.floorMod(micros, 1000000L) * 1000L
-      LocalDateTime.ofInstant(Instant.ofEpochSecond(secs, nanos), ZoneOffset.UTC)
-    case other =>
-      throw new IllegalArgumentException(
-        s"graft-lake: temporal partition transform over ${other.simpleString}")
+  /** [[apply]] bound once for many non-null values (a writer's rows). */
+  def renderer(fn: String, dt: DataType): Any => String = parse(fn) match {
+    case (Identity, _) => LakeStats.encoder(dt)
+    case ("days", _) => LakeStats.formatter(dt, "yyyy-MM-dd")
+    case ("months", _) => LakeStats.formatter(dt, "yyyy-MM")
+    case ("hours", _) => LakeStats.formatter(dt, "yyyy-MM-dd-HH")
+    case ("bucket", n) => v =>
+      val h = new Murmur3Hash(Seq(Literal.create(v, dt))).eval(null).asInstanceOf[Int]
+      (((h % n) + n) % n).toString
+    case ("truncate", n) =>
+      dt match {
+        case StringType => v =>
+          // Spark's substring() counts CODE POINTS, not UTF-16 units —
+          // supplementary-plane chars (surrogate pairs) must not be
+          // split or double-counted, or this face disagrees with the
+          // write path's substring(c, 1, n) and pruning goes unsound
+          val s = v.toString
+          if (s.codePointCount(0, s.length) <= n) s
+          else s.substring(0, s.offsetByCodePoints(0, n))
+        case _ => v =>
+          val l = v.asInstanceOf[Number].longValue()
+          (l - (((l % n) + n) % n)).toString
+      }
   }
 
   /** Is partition-space string order consistent with source order (so a

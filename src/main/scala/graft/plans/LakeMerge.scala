@@ -617,23 +617,20 @@ object LakeDmlStrategy extends SparkStrategy {
         def mk(b: (Option[Expression], Option[Map[String, Expression]])): LakeTable.MergeBranch =
           LakeTable.MergeBranch(b._1.map(toCol),
             b._2.map(_.map { case (k, v) => k -> toCol(v) }))
-        // persisted HERE, before the cardinality check, so the check and
-        // the merge evaluate the source once (mergeClauses leaves a
-        // caller's cache alone)
+        // the cardinality check is ALWAYS required on the general path,
+        // even with no MATCHED clause: mergeClauses' full-outer join
+        // replicates a matched TARGET row once per duplicate source key
+        // (Delta permits dup UNMATCHED inserts; we trade that corner for a
+        // crisp refusal instead of corruption). It reads the source
+        // before anything is written, from the cache the merge's key fold
+        // builds; the cache spans the statement, retries included.
         val src = GraftColumnBridge.ofRows(spark, srcPlan)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // ALWAYS required on the general path, even with no MATCHED
-          // clause: mergeClauses' full-outer join replicates a matched
-          // TARGET row once per duplicate source key, so an insert-only
-          // merge with a dup-keyed source would silently duplicate target
-          // rows (Delta permits dup UNMATCHED inserts; we trade that
-          // corner for a crisp refusal instead of corruption)
-          cardinalityCheck(src, keyCols)
-          LakeTable.mergeClauses(
-            spark, t.root, src, keyCols, mBr.map(mk), nBr.map(mk), sBr.map(mk),
-            t.meta.partitionCol)
-        } finally { src.unpersist(); () }
+        try LakeTable.mergeClausesChecked(
+          spark, t.root, src, keyCols, mBr.map(mk), nBr.map(mk), sBr.map(mk),
+          t.meta.partitionCol, metaUpdate = identity, nullSafeKeys = false, maxRetries = 3,
+          preCommit = () => (), sourceCheck = cardinalityCheck(_, keyCols))
+        finally { src.unpersist(); () }
       }
     })
   }

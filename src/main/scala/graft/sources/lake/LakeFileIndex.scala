@@ -9,13 +9,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{
   PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
-import org.apache.spark.sql.types.{
-  BooleanType, DataType, DateType, NumericType, StringType, StructType, TimestampNTZType,
-  TimestampType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{BooleanType, DataType, NumericType, StringType, StructType}
 import scala.util.control.NonFatal
 
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 import graft.operators.LakeTable.{Entry, TableMeta}
 
 /** The lake table's [[FileIndex]] — the planning half of the
@@ -49,7 +46,8 @@ import graft.operators.LakeTable.{Entry, TableMeta}
   * plus `k IN (…)` on Bloom columns for a narrow batch) and the lost-
   * commit rebase check it feeds, a matview's `readVersionForKeys`, and
   * `readPoint`/`readRange`, so a predicate skips the same files whichever
-  * verb carries it.
+  * verb carries it. Literals become cells, and cells compare, through
+  * [[graft.operators.LakeStats]]'s codec.
   *
   * Pruning is strictly conservative: only bare attr-vs-literal
   * comparisons, IN/INSET, and null tests on the partition column
@@ -201,40 +199,20 @@ class LakeFileIndex(
   private def partVal(e: Entry): Option[String] =
     if (e.part == LakeTable.NullPartition) None else Some(e.part)
 
-  /** Render a literal/internal value into the manifest's string space
-    * (stats are `cast("string")` renderings in the engine's pinned UTC
-    * session zone; partition values likewise). Numbers and strings
-    * render directly; dates, timestamps and booleans through Spark's own
-    * cast to string, so "2020-01-01 00:00:00" meets the stat it was
-    * written as — a date or timestamp only inside years 0000-9999, where
-    * its rendering orders lexically. Binaries, other types and
-    * cross-family literals return None (no pruning). Literals arrive
-    * typed to the column (scan pushdown, or
-    * [[LakeFileIndex.resolvedConjuncts]] for DML, MERGE and the read
-    * helpers).
+  /** Whether cells [mn, mx] can meet [lo, hi] (an absent bound is
+    * unbounded on that side).
     */
-  private def render(colDt: DataType, v: Any): Option[String] = (colDt, v) match {
-    case (_, null) => None
-    case (_: NumericType, n: java.lang.Number) => Some(n.toString)
-    case (_: NumericType, d: org.apache.spark.sql.types.Decimal) => Some(d.toString)
-    case (StringType, s: UTF8String) => Some(s.toString)
-    case (StringType, s: String) => Some(s)
-    case (BooleanType, _: Boolean) => Some(v.toString)
-    case (DateType, _: Int) | (TimestampType | TimestampNTZType, _: Long) =>
-      Some(Cast(Literal(v, colDt), StringType, Some("UTC")).eval().toString)
-        .filter(LakeTable.fourDigitYear)
-    case _ => None
-  }
+  private def meets(dt: DataType, mn: String, mx: String, lo: Option[String],
+      hi: Option[String]): Boolean =
+    lo.forall(l => LakeStats.compare(dt, mx, l) >= 0) &&
+      hi.forall(h => LakeStats.compare(dt, mn, h) <= 0)
 
   /** Keep entries whose partition value can lie in [lo,hi] (NULL never
     * satisfies a comparison).
     */
   private def partRange(lo: Option[String], hi: Option[String]): EPred = {
-    val dt = meta.schema.fields.find(_.name.equalsIgnoreCase(meta.partitionCol))
-      .map(_.dataType).getOrElse(StringType)
-    e => partVal(e).exists(v =>
-      lo.forall(l => LakeTable.cmpStat(dt, v, l) >= 0) &&
-        hi.forall(h => LakeTable.cmpStat(dt, v, h) <= 0))
+    val dt = fieldType(meta.partitionCol).getOrElse(StringType)
+    e => partVal(e).exists(v => meets(dt, v, v, lo, hi))
   }
 
   /** Keep entries whose recorded [min,max] on stats column `sc` can
@@ -245,9 +223,7 @@ class LakeFileIndex(
     val idx = meta.statsCols.indexOf(sc)
     val dt = meta.schema(sc).dataType
     e => e.stats.lift(idx) match {
-      case Some((Some(mn), Some(mx))) =>
-        lo.forall(l => LakeTable.cmpStat(dt, mx, l) >= 0) &&
-          hi.forall(h => LakeTable.cmpStat(dt, mn, h) <= 0)
+      case Some((Some(mn), Some(mx))) => meets(dt, mn, mx, lo, hi)
       case _ => true
     }
   }
@@ -265,16 +241,15 @@ class LakeFileIndex(
 
   // ---- hidden-partitioning pruning (transform space) -----------------
 
-  /** Compare two PARTITION-SPACE strings under the table's transform:
-    * temporal formats and string prefixes order lexicographically;
-    * integral truncate renders integers, compared numerically.
+  /** The type PARTITION-SPACE strings compare as under the table's
+    * transform: temporal formats and string prefixes as strings; integral
+    * truncate renders integers, compared numerically.
     */
-  private def fnSpaceCmp(x: String, y: String): Int = {
-    val numeric = graft.operators.PartitionFn.parse(meta.partitionFn)._1 == "truncate" &&
-      fieldType(meta.partitionCol).exists(_.isInstanceOf[NumericType])
-    if (numeric) LakeTable.cmpStat(org.apache.spark.sql.types.LongType, x, y)
-    else x.compareTo(y)
-  }
+  private def fnSpaceType: DataType =
+    if (graft.operators.PartitionFn.parse(meta.partitionFn)._1 == "truncate" &&
+      fieldType(meta.partitionCol).exists(_.isInstanceOf[NumericType]))
+      org.apache.spark.sql.types.LongType
+    else StringType
 
   /** Source-column range [rawLo, rawHi] mapped into partition space —
     * valid only for MONOTONIC transforms (fn(lo) <= part <= fn(hi)).
@@ -287,8 +262,10 @@ class LakeFileIndex(
         val lo = rawLo.map(v => graft.operators.PartitionFn(meta.partitionFn, dt, v))
         val hi = rawHi.map(v => graft.operators.PartitionFn(meta.partitionFn, dt, v))
         if ((lo.isEmpty && hi.isEmpty) || lo.contains(null) || hi.contains(null)) None
-        else Some((e: Entry) => partVal(e).exists(v =>
-          lo.forall(l => fnSpaceCmp(v, l) >= 0) && hi.forall(h => fnSpaceCmp(v, h) <= 0)))
+        else {
+          val st = fnSpaceType
+          Some((e: Entry) => partVal(e).exists(v => meets(st, v, v, lo, hi)))
+        }
       } catch { case _: Exception => None } // unmappable literal: no pruning
     }
 
@@ -313,8 +290,13 @@ class LakeFileIndex(
     case _ => None
   }
 
+  /** A literal as a cell of attribute `nm`'s type ([[LakeStats.encodeLiteral]]);
+    * literals arrive typed to the column (scan pushdown, or
+    * [[LakeFileIndex.resolvedConjuncts]] for DML, MERGE and the read
+    * helpers).
+    */
   private def renderedFor(nm: String, v: Any): Option[String] =
-    fieldType(nm).flatMap(dt => render(dt, v))
+    fieldType(nm).flatMap(dt => LakeStats.encodeLiteral(dt, v))
 
   // Bloom sidecars, loaded once per column per index instance (plan-time
   // metadata read, bounded by the snapshot's sidecar volume)
@@ -324,7 +306,7 @@ class LakeFileIndex(
   private def bloomsFor(bc: String): Map[String, org.apache.spark.util.sketch.BloomFilter] =
     synchronized {
       bloomCache.getOrElseUpdate(bc,
-        LakeTable.loadBlooms(spark, root, meta.bloomNamesFor(bc)))
+        LakeStats.loadBlooms(spark, root, meta.bloomNamesFor(bc)))
     }
 
   private def bloomName(nm: String): Option[String] =
@@ -340,14 +322,12 @@ class LakeFileIndex(
     bloomName(nm).flatMap { bc =>
       if (raws.isEmpty || raws.contains(null)) None
       else {
-        val hashes = raws.map(v => LakeTable.bloomHashInternal(dt, v))
+        val hashes = raws.map(v => LakeStats.bloomHash(dt, v))
         val map = bloomsFor(bc)
         if (map.isEmpty) None
         else Some((e: Entry) => map.get(e.rel).forall(bf => hashes.exists(bf.mightContainLong)))
       }
     }
-
-  private def canonNum(s: String): String = LakeFileIndex.canonNum(s)
 
   /** Equality/IN probe on attribute `a` over literal values `raws`:
     * exact partition membership, stats [min,max] envelope, and Bloom
@@ -367,24 +347,24 @@ class LakeFileIndex(
             // cast-to-string partition value is "0.0", yet Spark equality
             // holds (-0.0 == 0.0). For numeric partitions both sides are
             // canonicalized ONCE (decimal-normal form; equal under
-            // cmpStat iff canonically equal), so membership stays an
+            // LakeStats.compare iff canonically equal), so membership stays an
             // O(1) hash probe per entry instead of |IN-set| x entries
             // comparisons on the planning path; strings keep the plain
             // string set.
             val dt = fieldType(meta.partitionCol).getOrElse(StringType)
             val numeric = dt.isInstanceOf[NumericType]
             val set =
-              if (numeric) rendered.flatten.map(canonNum).toSet
+              if (numeric) rendered.flatten.map(LakeStats.canonNum).toSet
               else rendered.flatten.toSet
             Some((e: Entry) =>
-              partVal(e).exists(v => set.contains(if (numeric) canonNum(v) else v)))
+              partVal(e).exists(v => set.contains(if (numeric) LakeStats.canonNum(v) else v)))
           }
           else statsName(nm).map { sc =>
             val set = rendered.flatten.toSet
             val dt = meta.schema.fields.find(_.name.equalsIgnoreCase(sc))
               .map(_.dataType).getOrElse(StringType)
-            val lo = set.reduce((x, y) => if (LakeTable.cmpStat(dt, x, y) <= 0) x else y)
-            val hi = set.reduce((x, y) => if (LakeTable.cmpStat(dt, x, y) >= 0) x else y)
+            val lo = set.reduce((x, y) => if (LakeStats.compare(dt, x, y) <= 0) x else y)
+            val hi = set.reduce((x, y) => if (LakeStats.compare(dt, x, y) >= 0) x else y)
             statsRange(sc, Some(lo), Some(hi))
           }
         }
@@ -444,22 +424,6 @@ class LakeFileIndex(
 }
 
 object LakeFileIndex {
-
-  /** Canonical form of a numeric rendering: decimal-normal ("-0.0",
-    * "0.00" and "0" all map to "0"), so two renderings are canonically
-    * equal iff [[LakeTable.cmpStat]] orders them equal — the law the
-    * O(1) partition-IN membership depends on (LakeIndexProps pins it
-    * over randomized renderings). Non-finite renderings canonicalize
-    * through Double.toString ("NaN"/"Infinity" are already canonical);
-    * anything unparseable keeps its raw form.
-    */
-  private[lake] def canonNum(s: String): String =
-    try BigDecimal(s).bigDecimal.stripTrailingZeros.toPlainString
-    catch {
-      case _: NumberFormatException =>
-        try java.lang.Double.toString(java.lang.Double.parseDouble(s))
-        catch { case _: NumberFormatException => s }
-    }
 
   /** `predicate` (unresolved, by column name) as conjuncts resolved over
     * `schema` with literal casts folded, as a scan would type them:

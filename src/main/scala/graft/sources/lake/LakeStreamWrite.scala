@@ -8,14 +8,13 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
 import org.apache.spark.sql.connector.write.{
   DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.LakeTable
@@ -68,7 +67,6 @@ class LakeStreamingWrite(root: String, schema: StructType, queryId: String)
       .prepareWrite(spark, job, Map.empty, meta.schema)
     new LakeStreamWriterFactory(
       s"${graft.operators.LakeTable.dataRoot(root)}/data/$currentBatch", meta.schema, partIdx, meta.partitionFn,
-      spark.sessionState.conf.sessionLocalTimeZone,
       new SerializableConfiguration(job.getConfiguration), factory)
   }
 
@@ -93,7 +91,6 @@ private[lake] class LakeStreamWriterFactory(
     schema: StructType,
     partIdx: Int,
     partitionFn: String,
-    timeZone: String,
     conf: SerializableConfiguration,
     factory: OutputWriterFactory)
   extends StreamingDataWriterFactory {
@@ -101,7 +98,7 @@ private[lake] class LakeStreamWriterFactory(
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new LakeStreamDataWriter(
-      batchDir, schema, partIdx, partitionFn, timeZone, conf, factory,
+      batchDir, schema, partIdx, partitionFn, conf, factory,
       partitionId, taskId, epochId)
 }
 
@@ -118,7 +115,6 @@ private[lake] class LakeStreamDataWriter(
     schema: StructType,
     partIdx: Int,
     partitionFn: String,
-    timeZone: String,
     conf: SerializableConfiguration,
     factory: OutputWriterFactory,
     partitionId: Int,
@@ -127,9 +123,7 @@ private[lake] class LakeStreamDataWriter(
   extends DataWriter[InternalRow] {
 
   private val partDt = schema(partIdx).dataType
-  private val partCast = Cast(
-    BoundReference(partIdx, partDt, nullable = true),
-    StringType, Some(timeZone))
+  private val render = graft.operators.PartitionFn.renderer(partitionFn, partDt)
   private val ctx = new TaskAttemptContextImpl(conf.value,
     new TaskAttemptID(new TaskID(new JobID("graft-stream", 0), TaskType.MAP,
       partitionId), taskId.toInt))
@@ -137,13 +131,12 @@ private[lake] class LakeStreamDataWriter(
   private val open = mutable.Map.empty[String, (OutputWriter, Path, Path)]
 
   override def write(row: InternalRow): Unit = {
-    // transform-partitioned tables derive the directory value with the
-    // SAME PartitionFn the batch writer and the pruner use — the three
-    // faces must agree bit-for-bit or pruning goes unsound
+    // the directory value comes from the SAME PartitionFn the batch
+    // writer and the pruner use — the three faces must agree
+    // bit-for-bit or pruning goes unsound
     val pv =
-      if (partitionFn == graft.operators.PartitionFn.Identity) partCast.eval(row)
-      else if (row.isNullAt(partIdx)) null
-      else graft.operators.PartitionFn(partitionFn, partDt, row.get(partIdx, partDt))
+      if (row.isNullAt(partIdx)) null
+      else render(row.get(partIdx, partDt))
     val dirName =
       if (pv == null) LakeTable.NullPartition
       else ExternalCatalogUtils.escapePathName(pv.toString)

@@ -3,19 +3,17 @@ package graft.sources.lake
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{
-  MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 
 /** The catalog table's Scan layer: batch scans delegate verbatim to
   * Spark's [[ParquetScanBuilder]]/[[ParquetScan]] over the manifest
@@ -51,18 +49,11 @@ class LakeScanBuilder(
   // re-applies every filter above the scan, so results are identical
   private val (dvEntries, cleanEntries) = entries.partition(_.dv.isDefined)
 
-  private val delegate = ParquetScanBuilder(
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-    new LakeFileIndex(spark, root, meta, cleanEntries),
-    GraftLake.nullable(meta.schema), GraftLake.nullable(meta.schema), options)
+  private val delegate = LakeScan.builder(spark, root, meta, cleanEntries, options)
 
   private val dvDelegate =
     if (dvEntries.isEmpty) None
-    else Some(ParquetScanBuilder(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      new LakeFileIndex(spark, root, meta, dvEntries),
-      GraftLake.nullable(meta.schema), GraftLake.nullable(meta.schema),
-      CaseInsensitiveStringMap.empty()))
+    else Some(LakeScan.builder(spark, root, meta, dvEntries))
 
   private var sawFilters = false
   // what Spark pushed, replayed verbatim when a runtime filter re-plans
@@ -115,9 +106,9 @@ class LakeScanBuilder(
     *     bounds (a missing cell could HIDE the extremum — all-null
     *     files and legacy manifests refuse), NO entry carries a
     *     deletion vector (a deleted row may BE the recorded extremum),
-    *     and the rendered bound casts back to the column type exactly
-    *     (the whitelist below; stats are typed min/max rendered with
-    *     cast-to-string, which round-trips for these types). SQL
+    *     and the cell decodes back to the column type exactly (the
+    *     whitelist below; [[LakeStats.decode]] round-trips its cells
+    *     for these types, in UTC whatever the session zone). SQL
     *     MIN/MAX ignore nulls, exactly like per-file typed min/max.
     *   - GROUP BY: exactly the partition column under IDENTITY
     *     partitioning (files carry one value each, so per-partition
@@ -137,7 +128,6 @@ class LakeScanBuilder(
     import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, CountStar, Max, Min}
     import org.apache.spark.sql.types._
     if (sawFilters) return None
-    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
 
     def field(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
@@ -151,12 +141,6 @@ class LakeScanBuilder(
       case _: DecimalType => true
       case _ => false
     }
-    def typed(dt: DataType, s: String): Option[Any] = {
-      val v = Cast(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(s),
-        StringType), dt, zone).eval(null)
-      Option(v)
-    }
-
     // grouping: none (one global group) or exactly the identity
     // partition column
     val groupField: Option[StructField] = agg.groupByExpressions.toSeq match {
@@ -185,20 +169,9 @@ class LakeScanBuilder(
     /** Some(value or null) = answerable over `es`; None = refuse. */
     def extreme(f: StructField, isMin: Boolean, es: Seq[LakeTable.Entry]): Option[Any] = {
       val idx = meta.statsCols.indexWhere(_.equalsIgnoreCase(f.name))
-      if (idx < 0 || !exact(f.dataType)) return None
-      if (es.exists(_.dv.isDefined)) return None
-      if (es.isEmpty) return Some(null)
-      val bounds = es.map { e =>
-        e.stats.lift(idx) match {
-          case Some((Some(mn), Some(mx))) => typed(f.dataType, if (isMin) mn else mx)
-          case _ => None
-        }
-      }
-      if (bounds.exists(_.isEmpty)) return None
-      val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-        .getInterpretedOrdering(f.dataType)
-      Some(bounds.flatten.reduce((a, b) =>
-        if ((ord.compare(a, b) <= 0) == isMin) a else b))
+      if (idx < 0 || !exact(f.dataType) || es.exists(_.dv.isDefined)) None
+      else if (es.isEmpty) Some(null)
+      else LakeStats.extreme(f.dataType, es.map(_.stats.lift(idx)), isMin)
     }
     def value(op: AggregateFunc, es: Seq[LakeTable.Entry]): Option[Any] = op match {
       case _: CountStar =>
@@ -224,7 +197,7 @@ class LakeScanBuilder(
       case Some(f) => entries.groupBy(_.part).toSeq.map { case (p, es) =>
         val key =
           if (p == LakeTable.NullPartition) null
-          else typed(f.dataType, p).getOrElse(return None)
+          else LakeStats.decode(f.dataType, p).getOrElse(return None)
         (Seq(key), es)
       }
     }
@@ -336,13 +309,12 @@ class LakeScan(
       else new LakeFileIndex(spark, root, meta, all).pruneEntries(pushedData)
     val bytes = if (kept.exists(_.bytes.isEmpty)) None else Some(kept.flatMap(_.bytes).sum)
     val rows = if (kept.exists(_.rows.isEmpty)) None else Some(kept.flatMap(_.liveRows).sum)
-    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
     // write-time per-batch histograms folded over the PRUNED entry list
     // (liveness-scaled): CBO's skew signal beyond min/max — only loaded
     // when CBO will read it, and only for numeric stats columns
     val hists: Map[String, (Double, Double, Array[Double])] =
       if (!spark.sessionState.conf.cboEnabled) Map.empty
-      else graft.operators.LakeTable.tableHistograms(spark, root, kept,
+      else LakeStats.tableHistograms(spark, root, kept,
         meta.statsCols.filter(c => meta.schema.fields
           .find(_.name.equalsIgnoreCase(c))
           .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])))
@@ -351,37 +323,25 @@ class LakeScan(
       meta.statsCols.zipWithIndex.flatMap { case (c, i) =>
         meta.schema.fields.find(_.name.equalsIgnoreCase(c)).flatMap { f =>
           val cells = kept.map(_.stats.lift(i))
-          if (kept.isEmpty || cells.exists(x => !x.exists(p => p._1.isDefined && p._2.isDefined)))
-            None
-          else {
-            def v(s: String): Option[Any] = Option(Cast(Literal(
-              org.apache.spark.unsafe.types.UTF8String.fromString(s),
-              org.apache.spark.sql.types.StringType), f.dataType, zone).eval(null))
-            val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-              .getInterpretedOrdering(f.dataType)
-            val mins = cells.map(x => v(x.get._1.get))
-            val maxs = cells.map(x => v(x.get._2.get))
-            val v2Hist = hists.get(c).orElse(
-              hists.find(_._1.equalsIgnoreCase(c)).map(_._2)).flatMap {
-              case (lo, hi, counts) => LakeScan.equiHeight(lo, hi, counts)
-            }
-            if (mins.exists(_.isEmpty) || maxs.exists(_.isEmpty)) None
-            else Some(
-              org.apache.spark.sql.connector.expressions.Expressions.column(f.name) ->
-                new ColumnStatistics {
-                  override def min(): java.util.Optional[Object] = java.util.Optional.of(
-                    mins.flatten.reduce((a, b) => if (ord.compare(a, b) <= 0) a else b)
-                      .asInstanceOf[Object])
-                  override def max(): java.util.Optional[Object] = java.util.Optional.of(
-                    maxs.flatten.reduce((a, b) => if (ord.compare(a, b) >= 0) a else b)
-                      .asInstanceOf[Object])
-                  override def histogram(): java.util.Optional[
-                      org.apache.spark.sql.connector.read.colstats.Histogram] =
-                    v2Hist.fold(java.util.Optional.empty[
-                      org.apache.spark.sql.connector.read.colstats.Histogram]())(
-                      java.util.Optional.of)
-                })
+          val v2Hist = hists.get(c).orElse(
+            hists.find(_._1.equalsIgnoreCase(c)).map(_._2)).flatMap {
+            case (lo, hi, counts) => LakeScan.equiHeight(lo, hi, counts)
           }
+          for {
+            mn <- LakeStats.extreme(f.dataType, cells, isMin = true)
+            mx <- LakeStats.extreme(f.dataType, cells, isMin = false)
+          } yield org.apache.spark.sql.connector.expressions.Expressions.column(f.name) ->
+            new ColumnStatistics {
+              override def min(): java.util.Optional[Object] =
+                java.util.Optional.of(mn.asInstanceOf[Object])
+              override def max(): java.util.Optional[Object] =
+                java.util.Optional.of(mx.asInstanceOf[Object])
+              override def histogram(): java.util.Optional[
+                  org.apache.spark.sql.connector.read.colstats.Histogram] =
+                v2Hist.fold(java.util.Optional.empty[
+                  org.apache.spark.sql.connector.read.colstats.Histogram]())(
+                  java.util.Optional.of)
+            }
         }
       }.toMap
     new org.apache.spark.sql.connector.read.Statistics {
@@ -457,12 +417,11 @@ class LakeScan(
       val bucketed = graft.operators.PartitionFn.parse(spjFn)._1 == "bucket"
       val dt = meta.schema.fields
         .find(_.name.equalsIgnoreCase(spjCol)).get.dataType
-      val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
       def keyRow(part: String): InternalRow = InternalRow(
         if (part == LakeTable.NullPartition) null
         else if (bucketed) part.toInt
-        else Cast(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(part),
-          org.apache.spark.sql.types.StringType), dt, zone).eval(null))
+        else LakeStats.decode(dt, part).getOrElse(throw new IllegalStateException(
+          s"graft-lake SPJ: partition value $part does not decode as ${dt.simpleString}")))
       val files = b.planInputPartitions().flatMap {
         case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp.files
         case other => throw new IllegalStateException(
@@ -512,10 +471,7 @@ class LakeScan(
       // pushed filters, same pruned read schema) — only the file list
       // shrank. DV'd entries are left unfiltered (conservative; their
       // scan re-applies every predicate above anyway).
-      val b = ParquetScanBuilder(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        new LakeFileIndex(spark, root, meta, kept),
-        GraftLake.nullable(meta.schema), GraftLake.nullable(meta.schema), options)
+      val b = LakeScan.builder(spark, root, meta, kept, options)
       b.pushFilters(pushedData)
       prunedSchema.foreach(b.pruneColumns)
       runtimeDelegate = b.build().asInstanceOf[ParquetScan]
@@ -558,6 +514,18 @@ class LakeScan(
 }
 
 private[graft] object LakeScan {
+
+  /** Spark's parquet scan builder over exactly `entries` of the table. */
+  def builder(
+      spark: SparkSession,
+      root: String,
+      meta: LakeTable.TableMeta,
+      entries: Seq[LakeTable.Entry],
+      options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty()): ParquetScanBuilder =
+    ParquetScanBuilder(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      new LakeFileIndex(spark, root, meta, entries),
+      GraftLake.nullable(meta.schema), GraftLake.nullable(meta.schema), options)
 
   /** Equi-width fold → the EQUI-HEIGHT histogram the v2/catalyst stats
     * interface expects (height = rows per bin): walk the cells cutting
@@ -664,53 +632,13 @@ class LakeMicroBatchStream(
     startingVersion: Long,
     skipChangeCommits: Boolean,
     maxVersionsPerTrigger: Option[Long])
-  extends MicroBatchStream
-  with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  private val window = new VersionWindow(spark, root)
-
-  private def ver(o: Offset): Long = o match {
-    case l: LongOffset => l.offset
-    case other => other.json.trim.toLong
-  }
-
-  @volatile private var pinnedVersion: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    pinnedVersion = Some(LakeTable.snapshot(spark, root).version)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def initialOffset(): Offset = LongOffset(startingVersion)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = Option(start).map(ver).getOrElse(startingVersion)
-    val end = window.nextEndVersion(from, pinnedVersion, maxVersionsPerTrigger)
-    if (end > 0) LongOffset(end) else null
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val v = LakeTable.snapshot(spark, root).version
-    if (v > startingVersion) LongOffset(v) else null
-  }
-
-  override def deserializeOffset(json: String): Offset = LongOffset(json.trim.toLong)
+  extends VersionOffsetStream(spark, root, startingVersion, maxVersionsPerTrigger) {
 
   /** A ParquetScan over exactly `entries` (the per-batch or template
     * planning unit — same vectorized read stack as the batch face).
     */
   private def scanOf(entries: Seq[LakeTable.Entry]): ParquetScan =
-    ParquetScanBuilder(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      new LakeFileIndex(spark, root, meta, entries),
-      GraftLake.nullable(meta.schema), GraftLake.nullable(meta.schema),
-      CaseInsensitiveStringMap.empty())
-      .build().asInstanceOf[ParquetScan]
+    LakeScan.builder(spark, root, meta, entries).build().asInstanceOf[ParquetScan]
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     // a mid-stream ALTER COLUMN TYPE refuses crisply (restart picks up
@@ -728,8 +656,6 @@ class LakeMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory = factory
 
   override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
 }
 
 /** The catalog CDF face: `graft.db.t.__changes` is a derived READ-ONLY
@@ -821,8 +747,6 @@ class LakeChangesScan(
 
 /** Shared slice materialization for the catalog CDF faces. */
 private[lake] object LakeCdf {
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions.{col, lit}
 
   /** One JVM-scoped staging root for BATCH reads, deleted on shutdown;
     * inside it, slices are keyed by (table root, version window) so
@@ -851,30 +775,8 @@ private[lake] object LakeCdf {
     s"$batchStageRoot/$key/v$from-$to"
   }
 
-  /** The `(from, to]` change slice aligned to `schema` (`from <= 0` =
-    * snapshot-as-inserts bootstrap at `to` — the processChanges
-    * contract).
-    */
-  def sliceFrame(
-      spark: SparkSession,
-      root: String,
-      from: Long,
-      to: Long,
-      keyCols: Seq[String],
-      schema: StructType): DataFrame = {
-    val batch =
-      if (from <= 0)
-        LakeTable.readVersion(spark, root, to)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(to))
-      else LakeTable.changesSince(spark, root, from, to, keyCols)
-    batch.select(schema.map { f =>
-      (if (batch.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-  }
-
-  /** Write the slice to `dir` exactly once: a dir whose `_SUCCESS`
+  /** Write the `(from, to]` change slice ([[LakeTable.changeSlice]]),
+    * aligned to `schema`, to `dir` exactly once: a dir whose `_SUCCESS`
     * marker exists is reused verbatim (restart replay), anything else —
     * absent or half-written — is rewritten from the immutable manifests.
     */
@@ -889,7 +791,7 @@ private[lake] object LakeCdf {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      sliceFrame(spark, root, from, to, keyCols, schema)
+      LakeTable.align(LakeTable.changeSlice(spark, root, from, to, keyCols), schema)
         .write.mode("overwrite").parquet(dir)
   }
 
@@ -908,9 +810,8 @@ private[lake] object LakeCdf {
   }
 }
 
-/** Micro-batch change feed on manifest-version offsets (same
-  * [[VersionWindow]] admission core as the append stream — pinned end
-  * under Trigger.AvailableNow, `maxVersionsPerTrigger` bounding, crash
+/** Micro-batch change feed on manifest-version offsets (the
+  * [[VersionOffsetStream]] core the append stream shares; crash
   * determinism from immutable manifests + staged slices).
   */
 class LakeCdfMicroBatchStream(
@@ -921,47 +822,12 @@ class LakeCdfMicroBatchStream(
     startingVersion: Long,
     maxVersionsPerTrigger: Option[Long],
     stageDir: String)
-  extends MicroBatchStream
-  with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  private val window = new VersionWindow(spark, root)
-
-  private def ver(o: Offset): Long = o match {
-    case l: LongOffset => l.offset
-    case other => other.json.trim.toLong
-  }
-
-  @volatile private var pinnedVersion: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    pinnedVersion = Some(LakeTable.snapshot(spark, root).version)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def initialOffset(): Offset = LongOffset(startingVersion)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = Option(start).map(ver).getOrElse(startingVersion)
-    val end = window.nextEndVersion(from, pinnedVersion, maxVersionsPerTrigger)
-    if (end > 0) LongOffset(end) else null
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val v = LakeTable.snapshot(spark, root).version
-    if (v > startingVersion) LongOffset(v) else null
-  }
-
-  override def deserializeOffset(json: String): Offset = LongOffset(json.trim.toLong)
+  extends VersionOffsetStream(spark, root, startingVersion, maxVersionsPerTrigger) {
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (from, to) = (ver(start), ver(end))
     // a mid-stream ALTER COLUMN TYPE refuses crisply here too — without
-    // this, sliceFrame's cast-to-captured-schema fails with a low-level
+    // this, the slice's cast-to-captured-schema fails with a low-level
     // ANSI cast error on out-of-range widened values instead of the
     // restart instruction (narrow→wide at the batch end passes: the
     // slice casts UP, which is the supported direction)
@@ -993,6 +859,4 @@ class LakeCdfMicroBatchStream(
       }
     }
   }
-
-  override def stop(): Unit = ()
 }

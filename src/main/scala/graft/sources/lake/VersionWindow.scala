@@ -1,6 +1,9 @@
 package graft.sources.lake
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.read.streaming.{
+  MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
 import graft.operators.LakeTable
 
@@ -112,4 +115,54 @@ private[lake] class VersionWindow(spark: SparkSession, root: String) {
     val capped = maxVersionsPerTrigger.fold(avail)(m => math.min(avail, from + math.max(1L, m)))
     if (capped > from) capped else -1L
   }
+}
+
+/** The offset and admission core of both micro-batch faces (added files,
+  * change slices): manifest-version offsets, the Trigger.AvailableNow
+  * pin and `maxVersionsPerTrigger` ([[VersionWindow.nextEndVersion]]).
+  * A face plans and commits the `(start, end]` window.
+  */
+abstract class VersionOffsetStream(
+    spark: SparkSession,
+    root: String,
+    startingVersion: Long,
+    maxVersionsPerTrigger: Option[Long])
+  extends MicroBatchStream
+  with SupportsAdmissionControl
+  with SupportsTriggerAvailableNow {
+
+  protected val window = new VersionWindow(spark, root)
+
+  protected def ver(o: Offset): Long = o match {
+    case l: LongOffset => l.offset
+    case other => other.json.trim.toLong
+  }
+
+  @volatile private var pinnedVersion: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinnedVersion = Some(LakeTable.snapshot(spark, root).version)
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  override def initialOffset(): Offset = LongOffset(startingVersion)
+
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = Option(start).map(ver).getOrElse(startingVersion)
+    val end = window.nextEndVersion(from, pinnedVersion, maxVersionsPerTrigger)
+    if (end > 0) LongOffset(end) else null
+  }
+
+  override def reportLatestOffset(): Offset = {
+    val v = LakeTable.snapshot(spark, root).version
+    if (v > startingVersion) LongOffset(v) else null
+  }
+
+  override def deserializeOffset(json: String): Offset = LongOffset(json.trim.toLong)
+
+  override def stop(): Unit = ()
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 
 /** Manifest-fed CBO column histograms: each batch write records an
   * equi-width histogram per numeric stats column in its index sidecar;
@@ -84,7 +84,7 @@ class CboHistogramSpec extends SparkSpec {
     assert(LakeTable.readPoint(spark, root, "k", 777L).count() === 1)
     // histogram recorded for the numeric col only
     val snap = LakeTable.snapshot(spark, root)
-    val hs = LakeTable.tableHistograms(spark, root, snap.entries, Seq("k", "name"))
+    val hs = LakeStats.tableHistograms(spark, root, snap.entries, Seq("k", "name"))
     assert(hs.contains("k") && !hs.contains("name"), s"got ${hs.keySet}")
     val (lo, hi, counts) = hs("k")
     assert(lo === 0.0 && hi === 1999.0)

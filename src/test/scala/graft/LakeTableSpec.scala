@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.operators.{CommitConflict, LakeTable}
+import graft.operators.{CommitConflict, LakeStats, LakeTable}
 
 /** Transactional copy-on-write MERGE (LakeTable): content correctness is
   * hash-checked by q130's oracle; this spec pins the TRANSACTIONAL
@@ -805,6 +805,20 @@ class LakeTableSpec extends SparkSpec {
       s"readRange returned ${got.count()} rows, the filtered read 1")
     // the bound still skips the file that lies wholly before it
     assert(pruned(root, s0, col("ts").between(lit(lo), lit(hi))).map(_.part).toSet === Set("a"))
+
+    // stats cells are UTC whatever the writing session's zone: a table
+    // written under America/Los_Angeles keeps its row for both faces
+    val t0 = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+    val laRoot = freshRoot()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      LakeTable.init(spark, laRoot,
+        spark.range(1).select(col("id").as("k"), lit("a").as("p"), lit(t0).as("ts")),
+        "p", statsCol = Some("ts"))
+      assert(LakeTable.readRange(spark, laRoot, t0, t0).count() === 1)
+      assert(spark.read.format("graft-lake").load(laRoot).where(col("ts") === lit(t0))
+        .count() === 1)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
   test("merge keyed on an identity partition column prunes its probe as a SELECT does") {
@@ -1380,10 +1394,10 @@ class LakeTableSpec extends SparkSpec {
 
   test("cmpStat: non-finite stat renderings compare in double order instead of throwing") {
     import org.apache.spark.sql.types.DoubleType
-    assert(LakeTable.cmpStat(DoubleType, "Infinity", "3.5") > 0)
-    assert(LakeTable.cmpStat(DoubleType, "-Infinity", "3.5") < 0)
-    assert(LakeTable.cmpStat(DoubleType, "NaN", "Infinity") > 0) // NaN greatest (Spark sort order)
-    assert(LakeTable.cmpStat(DoubleType, "-0.0", "0.0") === 0)
+    assert(LakeStats.compare(DoubleType, "Infinity", "3.5") > 0)
+    assert(LakeStats.compare(DoubleType, "-Infinity", "3.5") < 0)
+    assert(LakeStats.compare(DoubleType, "NaN", "Infinity") > 0) // NaN greatest (Spark sort order)
+    assert(LakeStats.compare(DoubleType, "-0.0", "0.0") === 0)
     // end-to-end: a file whose stats include Infinity prunes without error
     import spark.implicits._
     val root = freshRoot()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 
 /** ALTER COLUMN TYPE — metadata-only TYPE WIDENING (the Iceberg
   * promotion model). Pins the three correctness hazards the feature
@@ -102,10 +102,10 @@ class TypeWideningSpec extends SparkSpec {
 
     // the stale sidecar (hashes of INTs) would exclude at least one
     // key's LONG hash — exactly the false prune the rekey prevents
-    val stale = LakeTable.loadBlooms(spark, root, Seq("k"))
+    val stale = LakeStats.loadBlooms(spark, root, Seq("k"))
     assert(stale.nonEmpty, "fixture must have written a sidecar")
     val wouldFalsePrune = (1 to 64).filter { i =>
-      val h = LakeTable.bloomHashInternal(LongType, i.toLong)
+      val h = LakeStats.bloomHash(LongType, i.toLong)
       stale.values.forall(!_.mightContainLong(h))
     }
     assert(wouldFalsePrune.nonEmpty,
@@ -123,7 +123,7 @@ class TypeWideningSpec extends SparkSpec {
 
     // post-widening appends index under the NEW key and prune again
     LakeTable.append(spark, root, Seq((1000L, "a", "dX")).toDF("k", "p", "s"))
-    val fresh = LakeTable.loadBlooms(spark, root, Seq("k#w2"))
+    val fresh = LakeStats.loadBlooms(spark, root, Seq("k#w2"))
     assert(fresh.nonEmpty, "post-widening write must index under the new key")
     val s2 = LakeTable.snapshot(spark, root)
     val pruned = s2.entries.filter(

@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import org.apache.spark.sql.types._
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 
 /** Property checks for the TYPE WIDENING primitives — no Spark session,
   * pure value-level laws the engine's pruning correctness rides on:
@@ -48,7 +48,7 @@ object WideningProps extends Properties("graft.widening") {
 
   property("rewidenStat is the exact float->double widening") =
     forAll(genFloat) { f =>
-      val rewritten = LakeTable.rewidenStat(renderF(f), FloatType, DoubleType)
+      val rewritten = LakeStats.rewiden(renderF(f), FloatType, DoubleType)
       val parsed = java.lang.Double.parseDouble(rewritten)
       java.lang.Double.compare(parsed, f.toDouble) == 0 ||
         (parsed.isNaN && f.isNaN)
@@ -57,8 +57,8 @@ object WideningProps extends Properties("graft.widening") {
   property("cmpStat over rewritten stats orders exactly like the true widened value") =
     forAll(genFloat, genDouble) { (f, b) =>
       (!f.isNaN && !b.isNaN) ==> {
-        val stat = LakeTable.rewidenStat(renderF(f), FloatType, DoubleType)
-        val got = LakeTable.cmpStat(DoubleType, stat, renderD(b))
+        val stat = LakeStats.rewiden(renderF(f), FloatType, DoubleType)
+        val got = LakeStats.compare(DoubleType, stat, renderD(b))
         val want = java.lang.Double.compare(f.toDouble, b)
         math.signum(got) == math.signum(want) ||
           // -0.0 vs 0.0: cmpStat's decimal compare says equal — the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.operators.LakeTable
+import graft.operators.{LakeStats, LakeTable}
 import graft.operators.LakeTable.{Entry, TableMeta}
 
 /** Soundness property for the connector's manifest pruning: over random
@@ -102,11 +102,11 @@ class LakeIndexProps extends SparkSpec {
     }
     (1 to 5000).foreach { _ =>
       val (a, b) = (rendering(), rendering())
-      val canonEq = LakeFileIndex.canonNum(a) == LakeFileIndex.canonNum(b)
-      val statEq = LakeTable.cmpStat(DoubleType, a, b) == 0
+      val canonEq = LakeStats.canonNum(a) == LakeStats.canonNum(b)
+      val statEq = LakeStats.compare(DoubleType, a, b) == 0
       assert(canonEq === statEq,
-        s"law broken for a=$a b=$b: canon(${LakeFileIndex.canonNum(a)}, " +
-          s"${LakeFileIndex.canonNum(b)}) vs cmpStat=${LakeTable.cmpStat(DoubleType, a, b)}")
+        s"law broken for a=$a b=$b: canon(${LakeStats.canonNum(a)}, " +
+          s"${LakeStats.canonNum(b)}) vs cmpStat=${LakeStats.compare(DoubleType, a, b)}")
     }
   }
 
@@ -135,7 +135,7 @@ class LakeIndexProps extends SparkSpec {
     import spark.implicits._
     files.map { case (e, rows) =>
       val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-      rows.flatMap(_.k).foreach(k => bf.putLong(LakeTable.bloomHashInternal(LongType, k)))
+      rows.flatMap(_.k).foreach(k => bf.putLong(LakeStats.bloomHash(LongType, k)))
       val out = new java.io.ByteArrayOutputStream()
       bf.writeTo(out)
       (e.rel, "k", out.toByteArray)

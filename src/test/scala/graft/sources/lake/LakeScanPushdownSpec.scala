@@ -71,6 +71,16 @@ class LakeScanPushdownSpec extends SparkSpec {
     // DataFrame face pushes identically
     assertMetadataOnly(spark.table(lt).agg(count(lit(1)), min("k"), max("price")))
 
+    // the cells are UTC: a session in another zone reads the instant a
+    // scan reads
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val la = spark.sql(s"SELECT max(ts) AS m FROM $lt")
+      assertMetadataOnly(la)
+      assert(la.head.getTimestamp(0) ===
+        LakeTable.read(spark, root).agg(max("ts")).head.getTimestamp(0))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+
     // time travel answers from THAT version's manifest
     val v1 = spark.sql(s"SELECT count(*) AS c, max(k) AS m FROM $lt VERSION AS OF 2")
     assertMetadataOnly(v1)

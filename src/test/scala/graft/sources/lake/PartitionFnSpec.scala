@@ -306,5 +306,21 @@ class PartitionFnSpec extends SparkSpec {
     // pre-epoch timestamps floor correctly (floorDiv, not truncation)
     val preEpoch = java.time.Instant.parse("1969-12-31T23:30:00Z").toEpochMilli * 1000L
     assert(PartitionFn("days", TimestampType, preEpoch) === "1969-12-31")
+
+    // the write path renders in UTC whatever the session zone: under
+    // America/Los_Angeles the written partition value is the planner's,
+    // and an equality read keeps the row
+    val t0 = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+    val t0Micros = t0.getTime * 1000L
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try Seq(PartitionFn.Identity, "days").foreach { fn =>
+      val root = freshRoot()
+      LakeTable.init(spark, root, spark.range(1).select(col("id").as("k"), lit(t0).as("ts")),
+        "ts", partitionFn = fn)
+      assert(LakeTable.snapshot(spark, root).entries.map(_.part) ===
+        Seq(PartitionFn(fn, TimestampType, t0Micros)), fn)
+      assert(spark.read.format("graft-lake").load(root).where(col("ts") === lit(t0))
+        .count() === 1, fn)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 }
